@@ -50,6 +50,18 @@ import org.apache.spark.sql.functions.{bit_xor, col, count, lit, xxhash64}
   * §7.1 consecutive-inflation rule to the `run` array to tell them apart.
   */
 object Bench {
+
+  /** `x` with `decimals` fixed decimals for the JSON lines, in
+    * `Locale.ROOT`: under a comma-decimal default locale the `f`
+    * interpolator would print `1,500` — invalid JSON, and a value the
+    * baseline regex reads as `1`. */
+  private[graft] def fixed(x: Double, decimals: Int): String =
+    String.format(java.util.Locale.ROOT, s"%.${decimals}f", Double.box(x))
+
+  /** The contract's `queries` map: name -> best seconds at 1 ms. */
+  private[graft] def queriesJson(names: Seq[String], best: Map[String, Double]): String =
+    names.map(n => "\"" + n + "\":" + fixed(best(n), 3)).mkString("{", ",", "}")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -128,7 +140,7 @@ object Bench {
     }.toMap
     // %.3f: 1 ms resolution is far below the 0.5 s regression floor and
     // halves the printed map (the driver keeps a small stdout tail)
-    val qs = names.map(n => "\"" + n + "\":" + f"${best(n)}%.3f").mkString("{", ",", "}")
+    val qs = queriesJson(names, best)
     val runArr = trace.map { case (idx, r, n, s, f) =>
       s"""{"i":$idx,"r":$r,"q":"$n","sec":$s,"err":$f}"""
     }.mkString("[", ",", "]")
@@ -140,7 +152,7 @@ object Bench {
       trace.filter(_._2 == r).map(_._4).sum)
     val failedQs = names.filter(best(_) < 0)
     val slowest = names.sortBy(n => -best(n)).take(10)
-      .map(n => s"""{"q":"$n","sec":${f"${best(n)}%.2f"}}""")
+      .map(n => s"""{"q":"$n","sec":${fixed(best(n), 2)}}""")
     val baselinePath = java.nio.file.Paths.get("tools/bench_baseline.json")
     val baseMap: Map[String, Double] =
       if (java.nio.file.Files.exists(baselinePath)) {
@@ -154,7 +166,7 @@ object Bench {
     val regressions = names.flatMap { n =>
       baseMap.get(n).collect {
         case b if best(n) >= 0 && best(n) > 1.5 * b && best(n) - b > 0.5 =>
-          s"""{"q":"$n","sec":${f"${best(n)}%.2f"},"base":${f"$b%.2f"}}"""
+          s"""{"q":"$n","sec":${fixed(best(n), 2)},"base":${fixed(b, 2)}}"""
       }
     }
     // Drop the full per-query artifact beside the baseline on FULL runs:
@@ -169,7 +181,7 @@ object Bench {
       try {
         java.nio.file.Files.createDirectories(lastPath.getParent)
         java.nio.file.Files.write(lastPath,
-          (s"""{"sf":"$sfDir","runs":$nRuns,"total":${f"$total%.1f"},""" +
+          (s"""{"sf":"$sfDir","runs":$nRuns,"total":${fixed(total, 1)},""" +
             s""""queries":$qs,"run":$runArr}""" + "\n").getBytes)
       } catch { case t: Throwable =>
         System.err.println(s"[bench] bench_last write failed: ${t.getMessage}")
@@ -181,8 +193,8 @@ object Bench {
         (s"""{"sf":"$sfDir","runs":$nRuns,"queries":$qs}""" + "\n").getBytes)
       System.err.println(s"[bench] baseline written: $baselinePath")
     }
-    println(s"""{"metric":"summary","value":${f"$total%.1f"},"unit":"sec","total":${f"$total%.1f"},""" +
-      s""""run_totals":[${runTotals.map(t => f"$t%.1f").mkString(",")}],""" +
+    println(s"""{"metric":"summary","value":${fixed(total, 1)},"unit":"sec","total":${fixed(total, 1)},""" +
+      s""""run_totals":[${runTotals.map(fixed(_, 1)).mkString(",")}],""" +
       s""""failed":[${failedQs.map("\"" + _ + "\"").mkString(",")}],""" +
       s""""slowest":[${slowest.mkString(",")}],""" +
       s""""regressions":[${regressions.mkString(",")}],""" +

@@ -2723,36 +2723,37 @@ object SparkEntry {
       // FIVE times (append batch, delete keys, upsert batch twice,
       // upsert keys) — each a serial events scan+filter (the
       // multi-consumer re-scan rule; paired A/B measured −0.9 s,
-      // concentrated in the upsert commit). Freed in the finally.
+      // concentrated in the upsert commit). Freed in the inner finally,
+      // also when a commit or snapshot read throws.
       val ev = events(s, d)
         .filter(col("ts") < to_timestamp(lit("2024-01-08")))
         .select("event_id", "user_id", "event_type", "ts")
         .localCheckpoint(true)
-      val v1 = Snapshots.commitAppend(s, path, ev, "ts")
-      val v2 = Snapshots.commitDeleteKeys(s, path, "user_id",
-        ev.select(col("user_id")).filter(col("user_id") % 97 === 0))
-      val batch = ev.filter(col("event_id") % 1000 === 0)
-      val v3 = Snapshots.commitUpsert(s, path,
-        batch.withColumn("user_id", col("user_id") + 1L)
-          .unionByName(batch.withColumn("event_id",
-            col("event_id") + 1000000000L)),
-        "ts", "event_id")
-      val report = Seq(v1, v2, v3).map { v =>
-        Snapshots.readSnapshot(s, path, v)
-          .groupBy(col("y").cast(LongType).as("y"),
-            col("m").cast(LongType).as("m"), col("d").cast(LongType).as("d"))
-          .agg(count(lit(1)).as("n_rows"), sum(col("user_id")).as("sum_uid"))
-          .withColumn("version", lit(v))
-      }.reduce(_ unionByName _)
-        .select("version", "y", "m", "d", "n_rows", "sum_uid")
-        // the report is versions × days — collect it off the temp lake so
-        // the returned frame doesn't read paths the finally block deletes
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-          r.getLong(3), r.getLong(4), r.getLong(5)))
-      // every consumer of the checkpointed events slice has run
-      org.apache.spark.sql.graft.Bridge.unpersistCheckpoints(ev)
-      report.toSeq.toDF("version", "y", "m", "d", "n_rows", "sum_uid")
-        .orderBy("version", "y", "m", "d")
+      try {
+        val v1 = Snapshots.commitAppend(s, path, ev, "ts")
+        val v2 = Snapshots.commitDeleteKeys(s, path, "user_id",
+          ev.select(col("user_id")).filter(col("user_id") % 97 === 0))
+        val batch = ev.filter(col("event_id") % 1000 === 0)
+        val v3 = Snapshots.commitUpsert(s, path,
+          batch.withColumn("user_id", col("user_id") + 1L)
+            .unionByName(batch.withColumn("event_id",
+              col("event_id") + 1000000000L)),
+          "ts", "event_id")
+        val report = Seq(v1, v2, v3).map { v =>
+          Snapshots.readSnapshot(s, path, v)
+            .groupBy(col("y").cast(LongType).as("y"),
+              col("m").cast(LongType).as("m"), col("d").cast(LongType).as("d"))
+            .agg(count(lit(1)).as("n_rows"), sum(col("user_id")).as("sum_uid"))
+            .withColumn("version", lit(v))
+        }.reduce(_ unionByName _)
+          .select("version", "y", "m", "d", "n_rows", "sum_uid")
+          // the report is versions × days — collect it off the temp lake so
+          // the returned frame doesn't read paths the finally block deletes
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+            r.getLong(3), r.getLong(4), r.getLong(5)))
+        report.toSeq.toDF("version", "y", "m", "d", "n_rows", "sum_uid")
+          .orderBy("version", "y", "m", "d")
+      } finally org.apache.spark.sql.graft.Bridge.unpersistCheckpoints(ev)
     } finally {
       val p = new org.apache.hadoop.fs.Path(path)
       p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)

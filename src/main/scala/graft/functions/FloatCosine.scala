@@ -10,7 +10,7 @@ import org.apache.spark.sql.types._
   * ONE pass accumulates dot, |a|^2 and |b|^2 together (vs three separate
   * array traversals when composed from dot products). Returns NULL for a
   * zero-norm side. Fast path only — engine-reproducible emitted values
-  * come from the decimal [[graft.functions.dotExact]] pipeline. */
+  * come from the exact [[DotExact]] kernel (`cosineExact`). */
 case class FloatCosine(left: Expression, right: Expression)
     extends BinaryExpression {
 

@@ -14,8 +14,9 @@ import org.apache.spark.sql.types._
   * (SURVEY.md §2 #28-30): the interpreted `zip_with`+`aggregate`
   * formulation (higher-order functions don't codegen) measured ~10x
   * slower at sf0.1. IEEE double accumulation in element order — fast
-  * path only; the emitted, engine-reproducible values still come from
-  * the exact decimal [[graft.functions.dotExact]].
+  * path only; the emitted, engine-reproducible values come from the
+  * exact [[DotExact]] kernel (per-product DECIMAL(28,12) rounding, exact
+  * sum).
   */
 case class FloatDotProduct(left: Expression, right: Expression)
     extends BinaryExpression {

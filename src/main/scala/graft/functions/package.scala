@@ -72,21 +72,13 @@ package object functions {
 
   // ---- vector math (embeddings are array<float>) ----
 
-  /** Exact dot product: per-element double multiply (bit-deterministic),
-    * then order-independent decimal accumulation, emitted as DOUBLE.
-    * Stays inside codegen'd higher-order functions — no UDF. */
+  /** Exact dot product of two `array<float>` / `array<double>` columns:
+    * per-element double multiply (bit-deterministic), each product rounded
+    * to DECIMAL(28,12), order-independent exact accumulation, emitted as
+    * DOUBLE. The native codegen'd [[DotExact]] kernel. */
   def dotExact(a: Column, b: Column): Column = {
-    val products = zip_with(a, b, (x, y) =>
-      (x.cast(DoubleType) * y.cast(DoubleType)).cast(DecimalType(28, 12)))
-    // accumulate at (28,12): the add is computed exactly at (29,12) and the
-    // cast back only trims integer headroom (|sum| << 10^16), so no digit is
-    // ever rounded. A (38,12) accumulator would make Spark widen the add to
-    // (38,11), silently rounding the 12th decimal.
-    aggregate(
-      products,
-      lit(java.math.BigDecimal.ZERO).cast(DecimalType(28, 12)),
-      (acc, x) => (acc + x).cast(DecimalType(28, 12))
-    ).cast(DoubleType)
+    import org.apache.spark.sql.graft.Bridge.{column, expression}
+    column(DotExact(expression(a), expression(b)))
   }
 
   /** L2 norm via the exact dot product. */

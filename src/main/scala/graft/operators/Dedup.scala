@@ -944,9 +944,10 @@ object Dedup {
     val e = emb.select(col(idCol), col(blockCol), col(vecCol))
     // two-phase threshold: a codegen'd double cosine prunes the candidate
     // pairs (error vs the exact value is ~1e-14 relative; the 1e-6 margin
-    // is orders of magnitude safe), then the exact decimal cosine — the
-    // reproducible value we emit — runs only on survivors. At sf0.1 this
-    // cuts the interpreted-decimal work ~10000x.
+    // is orders of magnitude safe), then the exact cosine — the
+    // reproducible value we emit, three DotExact passes with per-product
+    // decimal rounding against the prefilter's one plain double pass —
+    // runs only on survivors.
     e.as("a")
       .join(e.as("b"),
         col(s"a.$blockCol") === col(s"b.$blockCol") &&

@@ -10,6 +10,11 @@ import org.apache.spark.sql.classic.ExpressionUtils
   * (Spark itself exposes no public constructor for a Column backed by a
   * custom Expression). */
 object Bridge {
+
+  /** Dependency levels [[isCheckpointBacked]] searches below a LogicalRDD
+    * (a checkpoint's narrow derivatives sit one or two levels down). */
+  val CheckpointWalkDepth = 8
+
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
@@ -48,12 +53,25 @@ object Bridge {
     * unpersist loop) must NOT pass through, or multi-pass builders
     * re-execute per pass / fail on missing checkpoint blocks. The walk
     * mirrors [[unpersistCheckpoints]]: the wrapped RDD may be a narrow
-    * derivative of the persisted one. */
+    * derivative of the persisted one. It is breadth-first, visits each
+    * RDD once (a diamond-shaped lineage would otherwise be walked once
+    * per path, exponential in its depth) and stops
+    * [[CheckpointWalkDepth]] levels down: a persisted ancestor deeper
+    * than that reads as "not backed", and the caller makes its own copy. */
   def isCheckpointBacked(df: DataFrame): Boolean = {
     import org.apache.spark.sql.catalyst.plans.logical.{Filter, Project}
-    def persisted(r: org.apache.spark.rdd.RDD[_]): Boolean =
-      r.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE ||
-        r.dependencies.exists(d => persisted(d.rdd))
+    def persisted(root: org.apache.spark.rdd.RDD[_]): Boolean = {
+      val seen = scala.collection.mutable.HashSet(root.id)
+      var level: Seq[org.apache.spark.rdd.RDD[_]] = Seq(root)
+      var depth = 0
+      var found = false
+      while (!found && level.nonEmpty && depth <= CheckpointWalkDepth) {
+        found = level.exists(_.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE)
+        level = level.flatMap(_.dependencies.map(_.rdd)).filter(r => seen.add(r.id))
+        depth += 1
+      }
+      found
+    }
     def walk(p: LogicalPlan): Boolean = p match {
       case lr: org.apache.spark.sql.execution.LogicalRDD => persisted(lr.rdd)
       case pr: Project => walk(pr.child)
