@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session factory used by tests and benchmarks.
+/** The one session factory: tests, Bench, Verify and the other mains.
   *
   * Scale posture: AQE on (runtime re-plan, skew-join splitting), shuffle
   * partitions sized to the local core count (on a real cluster this is
@@ -23,22 +23,21 @@ object GraftSession {
     * created parent dir is removed on JVM exit (Spark deletes its own
     * blockmgr/spark-* children but not the parent we made), so repeated
     * runs don't accumulate empty dirs in /dev/shm. */
-  private[graft] def scratchDir(): String = {
+  private[graft] def scratchDir(): String =
     // SPARK_GRAFT_SCRATCH redirects spill for shuffle-heavy one-offs whose
     // intermediate exceeds RAM-backed tmpfs (a SIGKILLed JVM also skips the
     // cleanup hook, so runs that may be OOM-killed should not spill to shm)
-    sys.env.get("SPARK_GRAFT_SCRATCH") match {
-      case Some(dir) => tempDir(java.nio.file.Paths.get(dir), "graft-local")
-      case None =>
-        val shm = java.nio.file.Paths.get("/dev/shm")
-        val minFree = 8L << 30
-        val base =
-          if (java.nio.file.Files.isWritable(shm) &&
-              shm.toFile.getUsableSpace >= minFree) shm
-          else java.nio.file.Paths.get(sys.props("java.io.tmpdir"))
-        tempDir(base, "graft-local")
+    tempDir(baseDir(sys.env.get("SPARK_GRAFT_SCRATCH")), "graft-local")
+
+  /** `dir` when set, else tmpfs when it has >= 8 GiB free, else
+    * `java.io.tmpdir` — the headroom rule [[scratchDir]] documents. */
+  private def baseDir(dir: Option[String]): java.nio.file.Path =
+    dir.map(java.nio.file.Paths.get(_)).getOrElse {
+      val shm = java.nio.file.Paths.get("/dev/shm")
+      if (java.nio.file.Files.isWritable(shm) &&
+          shm.toFile.getUsableSpace >= (8L << 30)) shm
+      else java.nio.file.Paths.get(sys.props("java.io.tmpdir"))
     }
-  }
 
   /** Temp dir removed on JVM exit — Spark cleans its own children but
     * never the parent, and the warehouse dir not at all. Registered via
@@ -63,18 +62,8 @@ object GraftSession {
     // (scratchDir's documented escape hatch): OOM-prone runs route
     // fixture tables to disk, and a SIGKILLed JVM can't pin stale
     // graft-warehouse dirs in RAM-backed tmpfs with no env recourse
-    sys.env.get("SPARK_GRAFT_WAREHOUSE")
-        .orElse(sys.env.get("SPARK_GRAFT_SCRATCH")) match {
-      case Some(dir) =>
-        tempDir(java.nio.file.Paths.get(dir), "graft-warehouse")
-      case None =>
-        val shm = java.nio.file.Paths.get("/dev/shm")
-        val base =
-          if (java.nio.file.Files.isWritable(shm) &&
-              shm.toFile.getUsableSpace >= (8L << 30)) shm
-          else java.nio.file.Paths.get(sys.props("java.io.tmpdir"))
-        tempDir(base, "graft-warehouse")
-    }
+    tempDir(baseDir(sys.env.get("SPARK_GRAFT_WAREHOUSE")
+      .orElse(sys.env.get("SPARK_GRAFT_SCRATCH"))), "graft-warehouse")
 
   def local(cores: Int = 4, appName: String = "graft"): SparkSession = {
     val spark = SparkSession

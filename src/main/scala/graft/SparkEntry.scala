@@ -3340,14 +3340,19 @@ object SparkEntry {
     * concurrent jobs FIFO, back-filling executor cores that a single
     * serial build chain leaves idle. Results are unchanged — every build
     * is deterministic, and thread scheduling only reorders WHEN equal
-    * work happens. */
-  private def parallelBuilt(fams: Seq[(String, () => DataFrame)])
+    * work happens.
+    *
+    * Every build is awaited before the first failure (in input order) is
+    * rethrown: a sibling still running would otherwise land its jobs and
+    * checkpoints after the caller's cleanup sweep. */
+  private[graft] def parallelBuilt(fams: Seq[(String, () => DataFrame)])
       : Seq[(String, DataFrame)] = {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
     implicit val ec: ExecutionContext = ExecutionContext.global
     fams.map { case (n, f) => n -> Future(f()) }
-      .map { case (n, fut) => n -> Await.result(fut, Duration.Inf) }
+      .map { case (n, fut) => n -> Await.ready(fut, Duration.Inf).value.get }
+      .map { case (n, built) => n -> built.get }
   }
 
   private val annK = 10
@@ -5647,276 +5652,6 @@ object SparkEntry {
         min(col("l_linenumber")).cast("long").as("min_linenumber"),
         max(col("l_linenumber")).cast("long").as("max_linenumber"))
 
-  // ------------------------------------------------------------------
-  // Registry
-  // ------------------------------------------------------------------
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q1_pricing_summary" -> (q1PricingSummary _),
-    "q3_top_unshipped" -> (q3TopUnshipped _),
-    "q5_nation_revenue" -> (q5NationRevenue _),
-    "counts_by_country" -> (countsByCountry _),
-    "counts_by_country_salted" -> (countsByCountrySalted _),
-    "histogram_values" -> (histogramValues _),
-    "topk_names" -> (topkNames _),
-    "topk_per_group" -> (topkPerGroup _),
-    "segment_distribution" -> (segmentDistribution _),
-    "sales_cube" -> (salesCube _),
-    "q7_nation_trade" -> (q7NationTrade _),
-    "q4_priority_late" -> (q4PriorityLate _),
-    "order_pivot" -> (orderPivot _),
-    "weighted_sample" -> (weightedSample _),
-    "negative_samples" -> (negativeSamples _),
-    "pareto_front" -> (paretoFront _),
-    "feature_ntile" -> (featureNtile _),
-    "pagerank" -> (pagerankQ _),
-    "graph_transitivity" -> (graphTransitivity _),
-    "ngram_diversity" -> (ngramDiversity _),
-    "ngram_diversity_hashed" -> (ngramDiversityHashed _),
-    "hop_distance" -> (hopDistanceQ _),
-    "rolling_active_users" -> (rollingActiveUsers _),
-    "rolling_active_users_approx" -> (rollingActiveUsersApprox _),
-    "event_transitions" -> (eventTransitions _),
-    "attribution_last_touch" -> (attributionLastTouch _),
-    "top_paths" -> (topPaths _),
-    "record_linkage" -> (recordLinkage _),
-    "min_cost_supplier" -> (minCostSupplier _),
-    "basket_pairs" -> (basketPairs _),
-    "dq_freshness" -> (dqFreshness _),
-    "table_profile" -> (tableProfileQ _),
-    "id_gaps" -> (idGapsQ _),
-    "clean_pipeline" -> (cleanPipeline _),
-    "dedup_keep_first" -> (dedupKeepFirstQ _),
-    "dq_report" -> (dqReport _),
-    "dq_referential" -> (dqReferential _),
-    "dedup_clusters" -> (dedupClusters _),
-    "dedup_clusters_lsh" -> (dedupClustersLsh _),
-    "dim_customer" -> (dimCustomer _),
-    "dim_date" -> (dimDate _),
-    "fact_orders" -> (factOrders _),
-    "fact_multi_role" -> (factMultiRole _),
-    "incremental_interval" -> (incrementalInterval _),
-    "upsert_do_nothing" -> (upsertDoNothingQ _),
-    "upsert_do_update" -> (upsertDoUpdateQ _),
-    "json_extract_events" -> (jsonExtractEvents _),
-    "hourly_rollup" -> (hourlyRollup _),
-    "hourly_gapfill" -> (hourlyGapfill _),
-    "audience_overlap" -> (audienceOverlap _),
-    "sessionize" -> (sessionize _),
-    "session_incidents" -> (sessionIncidents _),
-    "events_twap" -> (eventsTwap _),
-    "events_ohlc" -> (eventsOhlc _),
-    "user_decay_score" -> (userDecayScore _),
-    "dedup_exact" -> (dedupExact _),
-    "dedup_exact_normalized" -> (dedupExactNormalized _),
-    "funnel_conversion" -> (funnelConversion _),
-    "funnel_windowed" -> (funnelWindowed _),
-    "cohort_retention" -> (cohortRetention _),
-    "quality_filter" -> (qualityFilter _),
-    "quality_filter_approx" -> (qualityFilterApprox _),
-    "price_percentiles" -> (pricePercentiles _),
-    "price_percentiles_approx" -> (pricePercentilesApprox _),
-    "price_quantile_sketch" -> (priceQuantileSketch _),
-    "dedup_ngram_jaccard" -> (dedupNgramJaccard _),
-    "dedup_ngram_jaccard_capped" -> (dedupNgramJaccardCapped _),
-    "fact_orders_hashsk" -> (factOrdersHashSk _),
-    "dedup_minhash" -> (dedupMinhash _),
-    "dedup_minhash_capped" -> (dedupMinhashCapped _),
-    "dedup_simhash" -> (dedupSimhash _),
-    "dedup_embedding" -> (dedupEmbedding _),
-    "dedup_semantic" -> (dedupSemantic _),
-    "sim_topk" -> (simTopK _),
-    "sim_lsh_topk" -> (simLshTopK _),
-    "sim_lsh_multi_topk" -> (simLshMultiTopK _),
-    "bitext_mine" -> (bitextMine _),
-    "text_langid" -> (textLangId _),
-    "langid_eval" -> (langidEval _),
-    "lang_balance" -> (langBalance _),
-    "quality_normalize" -> (qualityNormalize _),
-    "split_balance" -> (splitBalance _),
-    "text_quality" -> (textQuality _),
-    "text_readability" -> (textReadability _),
-    "quality_classifier" -> (qualityClassifier _),
-    "quality_ensemble" -> (qualityEnsemble _),
-    "quality_calibration" -> (qualityCalibration _),
-    "dedup_eval" -> (dedupEval _),
-    "ann_eval" -> (annEval _),
-    "ann_eval_cached" -> (annEvalCached _),
-    "source_overlap" -> (sourceOverlapQ _),
-    "merge_changelog" -> (mergeChangelogQ _),
-    "skew_report" -> (skewReportQ _),
-    "classifier_agreement" -> (classifierAgreement _),
-    "split_leakfree" -> (splitLeakfree _),
-    "events_seasonal" -> (eventsSeasonal _),
-    "text_lz_complexity" -> (textLzComplexity _),
-    "text_tokens" -> (textTokens _),
-    "text_subwords" -> (textSubwords _),
-    "subword_vocab" -> (subwordVocab _),
-    "text_subwords_learned" -> (textSubwordsLearned _),
-    "text_fingerprint" -> (textFingerprint _),
-    "text_heavy_hitters" -> (textHeavyHitters _),
-    "text_heavy_hitters_approx" -> (textHeavyHittersApprox _),
-    "text_repetition" -> (textRepetition _),
-    "text_entropy" -> (textEntropy _),
-    "lm_score" -> (lmScoreQ _),
-    "lm_score_cached" -> (lmScoreCachedQ _),
-    "corpus_stats" -> (corpusStats _),
-    "doc_chunks_cdc" -> (docChunksCdc _),
-    "pii_scrub" -> (piiScrubQ _),
-    "k_anonymity" -> (kAnonymity _),
-    "doc_chunks" -> (docChunks _),
-    "corpus_mix" -> (corpusMix _),
-    "epoch_plan" -> (epochPlanQ _),
-    "mix_temperature" -> (mixTemperatureQ _),
-    "dq_benford" -> (dqBenford _),
-    "pack_sequences" -> (packSequencesQ _),
-    "pack_sequences_sharded" -> (packSequencesShardedQ _),
-    "kmeans_centroids" -> (kmeansCentroidsQ _),
-    "tfidf_top_terms" -> (tfidfTopTerms _),
-    "bm25_topk" -> (bm25TopKQ _),
-    "text_winnow" -> (textWinnow _),
-    "distinct_users" -> (distinctUsers _),
-    "distinct_users_approx" -> (distinctUsersApprox _),
-    "distinct_users_sketched" -> (distinctUsersSketched _),
-    "sample_stratified" -> (sampleStratified _),
-    "split_assign" -> (splitAssign _),
-    "multimodal_features" -> (multimodalFeatures _),
-    "multimodal_frames" -> (multimodalFrames _),
-    "multimodal_resize" -> (multimodalResize _),
-    "staged_partitioned_write" -> (stagedPartitionedWrite _),
-    "csv_roundtrip" -> (csvRoundtrip _),
-    "orc_roundtrip" -> (orcRoundtrip _),
-    "jsonl_roundtrip" -> (jsonlRoundtrip _),
-    "variant_extract" -> (variantExtract _),
-    "schema_evolution" -> (schemaEvolution _),
-    "scrape_profiles" -> (scrapeProfiles _),
-    "decontaminate" -> (decontaminateQ _),
-    "decontaminate_bloom" -> (decontaminateBloomQ _),
-    "ngram_contamination" -> (ngramContaminationQ _),
-    "boilerplate_passages" -> (boilerplatePassages _),
-    "repeated_spans" -> (repeatedSpansQ _),
-    "repeated_spans_w3" -> (repeatedSpansW3 _),
-    "dedup_substring" -> (dedupSubstring _),
-    "bucketed_join" -> (bucketedJoin _),
-    "dsir_weights" -> (dsirWeightsQ _),
-    "decontaminate_jaccard" -> (decontaminateJaccard _),
-    "decontaminate_winnow" -> (decontaminateWinnow _),
-    "contamination_report" -> (contaminationReport _),
-    "decontaminate_minhash" -> (decontaminateMinhash _),
-    "decontaminate_semantic" -> (decontaminateSemanticQ _),
-    "embedding_centroids" -> (embeddingCentroids _),
-    "sim_ivf_topk" -> (simIvfTopK _),
-    "pq_ann_topk" -> (pqAnnTopK _),
-    "sim_ivfpq_topk" -> (simIvfPqTopK _),
-    "sim_ivfpq_residual" -> (simIvfPqResidualTopK _),
-    "asof_join" -> (asofJoinQ _),
-    "range_join" -> (rangeJoinQ _),
-    "zorder_layout" -> (zorderLayoutQ _),
-    "hilbert_layout" -> (hilbertLayoutQ _),
-    "hilbert_layout_3d" -> (hilbertLayout3dQ _),
-    "dedup_incremental" -> (dedupIncremental _),
-    "dedup_keep_best" -> (dedupKeepBest _),
-    "dedup_keep_best_cached" -> (dedupKeepBestCached _),
-    "events_rolling" -> (eventsRolling _),
-    "events_spike" -> (eventsSpike _),
-    "events_ewma" -> (eventsEwma _),
-    "events_mad" -> (eventsMad _),
-    "events_cusum" -> (eventsCusum _),
-    "dedup_containment" -> (dedupContainment _),
-    "shuffle_shards" -> (shuffleShardsQ _),
-    "corpus_drift" -> (corpusDrift _),
-    "value_drift" -> (valueDrift _),
-    "value_psi" -> (valuePsi _),
-    "zorder_scan" -> (zorderScan _),
-    "hilbert_scan" -> (hilbertScan _),
-    "hilbert_scan_3d" -> (hilbertScan3d _),
-    "embedding_quantize" -> (embeddingQuantize _),
-    "collocations_pmi" -> (collocationsPmi _),
-    "skipgram_pairs" -> (skipgramPairsQ _),
-    "snapshot_diff" -> (snapshotDiffQ _),
-    "staged_delete" -> (stagedDelete _),
-    "mor_delete" -> (morDelete _),
-    "time_travel" -> (timeTravel _),
-    "length_buckets" -> (lengthBucketsQ _),
-    "embedding_outliers" -> (embeddingOutliersQ _),
-    "embedding_pca" -> (embeddingPca _),
-    "asof_join_forward" -> (asofJoinForwardQ _),
-    "asof_join_nearest" -> (asofJoinNearestQ _),
-    "asof_join_tolerance" -> (asofJoinToleranceQ _),
-    "dim_scd2" -> (dimScd2 _),
-    "pack_sequences_bfd" -> (packSequencesBfdQ _),
-    "subword_coverage" -> (subwordCoverage _),
-    "fact_scd2_lookup" -> (factScd2Lookup _),
-    "hybrid_topk" -> (hybridTopK _),
-    "ranking_agreement" -> (rankingAgreement _),
-    "curation_pipeline" -> (curationPipeline _),
-    "sessionize_native" -> (sessionizeNative _),
-    "events_trend" -> (eventsTrend _),
-    "events_trend_robust" -> (eventsTrendRobust _),
-    "value_ks" -> (valueKs _),
-    "value_ks_binned" -> (valueKsBinned _),
-    "numeric_corr" -> (numericCorr _),
-    "token_cms" -> (tokenCms _),
-    "diverse_sample" -> (diverseSample _),
-    "q8_market_share" -> (q8MarketShare _),
-    "q14_promo_share" -> (q14PromoShare _),
-    "q17_small_qty" -> (q17SmallQty _),
-    "q18_big_orders" -> (q18BigOrders _),
-    "q19_disjunctive" -> (q19Disjunctive _),
-    "q21_waiting_suppliers" -> (q21WaitingSuppliers _),
-    "q22_idle_customers" -> (q22IdleCustomers _),
-    "q9_product_profit" -> (q9ProductProfit _),
-    "q10_returns" -> (q10Returns _),
-    "q16_supplier_counts" -> (q16SupplierCounts _),
-    "q2_min_cost_region" -> (q2MinCostRegion _),
-    "q11_important_parts" -> (q11ImportantParts _),
-    "q20_excess_shippers" -> (q20ExcessShippers _),
-    "q6_forecast_revenue" -> (q6ForecastRevenue _),
-    "q12_late_priority" -> (q12LatePriority _),
-    "q13_order_distribution" -> (q13OrderDistribution _),
-    "q15_top_supplier" -> (q15TopSupplier _),
-    "price_winsorize" -> (priceWinsorize _),
-    "multimodal_phash" -> (multimodalPhash _),
-    "dq_rules" -> (dqRules _),
-    "customer_rfm" -> (customerRfm _),
-    "dedup_tau_curve" -> (dedupTauCurve _),
-    "dedup_minhash_incremental" -> (dedupMinhashIncremental _),
-    "dedup_cluster_sizes" -> (dedupClusterSizes _),
-    "supplier_scorecard" -> (supplierScorecard _),
-    "monitor_report" -> (monitorReport _),
-    "events_acf" -> (eventsAcf _),
-    "source_concentration" -> (sourceConcentration _),
-    "blocklist_hits" -> (blocklistHits _),
-    "url_dedup" -> (urlDedup _),
-    "parquet_stats_agg" -> (parquetStatsAgg _),
-    "value_mwu" -> (valueMwu _),
-    "decontaminate_url" -> (decontaminateUrl _),
-    "events_changepoint" -> (eventsChangepoint _),
-    "binary_ingest" -> (binaryIngest _),
-    "sim_ivf_filtered" -> (simIvfFiltered _),
-    "sim_ivf_incremental" -> (simIvfIncremental _),
-    "events_xcorr" -> (eventsXcorr _),
-    "schema_drift" -> (schemaDrift _),
-    "bootstrap_stats" -> (bootstrapStats _),
-    "pseudonymize" -> (pseudonymizeQ _),
-    "token_spectrum" -> (tokenSpectrum _),
-    "dataset_card" -> (datasetCard _),
-    "l_diversity" -> (lDiversity _),
-    "t_closeness" -> (tCloseness _),
-    "dpp_scan" -> (dppScan _),
-    "bloom_join" -> (bloomJoin _),
-    "source_keyness" -> (sourceKeyness _),
-    "skew_join" -> (skewJoin _),
-    "dp_release" -> (dpRelease _),
-    "crypto_shred" -> (cryptoShred _),
-    "crypto_shred_gcm" -> (cryptoShredGcm _),
-    "cbo_reorder" -> (cboReorder _),
-    "observed_load" -> (observedLoad _),
-    "events_interpolate" -> (eventsInterpolate _),
-    "ann_dim_tradeoff" -> (annDimTradeoff _),
-    "text_nfc" -> (textNfc _)
-  )
-
   /** Shared by `decontaminate` and `decontaminate_bloom` — the bloom path
     * is exact (the filter only prunes the join input). */
   private val decontaminateOracle: String =
@@ -5932,358 +5667,143 @@ object SparkEntry {
       |WHERE t.doc_id % 50 != 0
       |GROUP BY t.doc_id ORDER BY t.doc_id""".stripMargin
 
-  // the cached lm_score variant changes only the physical plan (persisted
-  // count tables), never the result — same oracle by construction; same
-  // for the keep_best variant (precomputed vs in-query clusters)
-  def oracleSql: Map[String, String] =
-    oracleSqlLit +
-      ("lm_score_cached" -> oracleSqlLit("lm_score")) +
-      ("dedup_keep_best_cached" -> oracleSqlLit("dedup_keep_best")) +
-      // the Hilbert read path returns the same box rows as the Morton
-      // one — both layouts are semantically invisible by construction
-      ("hilbert_scan" -> oracleSqlLit("zorder_scan")) +
-      // the hashed rollup keys differ but the REPORT is identical unless
-      // a per-source 64-bit shingle collision exists — the gate's
-      // hash-equality against the string oracle IS that check
-      ("ngram_diversity_hashed" -> oracleSqlLit("ngram_diversity")) +
-      ("pagerank" -> graft.operators.Graph.pageRankIntSql(
-        pagerankEdgesCte, iters = 5, k = 100)) +
-      ("hop_distance" -> graft.operators.Graph.hopDistanceSql(
-        pagerankEdgesCte,
-        "SELECT DISTINCT l_partkey AS node FROM lineitem WHERE l_partkey < 10",
-        maxHops = 4)) +
-      ("table_profile" -> Quality.tableProfileSql("orders", orderProfileCols)) +
-      ("numeric_corr" -> Quality.corrMatrixSql("lineitem", corrCols)) +
-      ("dq_rules" -> Quality.checkRulesSql("orders", orderRules)) +
-      ("events_acf" -> Quality.acfSql("events", "ts", "event_type", acfLags)) +
-      ("events_xcorr" -> Quality.xcorrSql("events", "ts", "event_type",
-        "purchase", "click", maxLag = 6)) +
-      ("source_concentration" ->
-        Quality.concentrationSql("documents", "source")) +
-      ("blocklist_hits" -> blocklistOracle) +
-      ("url_dedup" -> urlDedupOracle) +
-      ("decontaminate_url" -> decontaminateUrlOracle) +
-      ("bootstrap_stats" -> bootstrapOracle) +
-      ("l_diversity" ->
-        """WITH c1 AS (SELECT source, n_chars // 100 AS b, COUNT(*) g,
-          |            CAST(COUNT(DISTINCT lang) AS BIGINT) l
-          |           FROM documents GROUP BY 1, 2),
-          |c2 AS (SELECT source, n_chars // 1000 AS b, COUNT(*) g,
-          |       CAST(COUNT(DISTINCT lang) AS BIGINT) l
-          |      FROM documents GROUP BY 1, 2),
-          |a1 AS (SELECT 'chars_100' AS level, COUNT(*) n_classes,
-          |       CAST(MIN(l) AS BIGINT) min_l,
-          |       CAST(SUM(CASE WHEN l = 1 THEN 1 ELSE 0 END) AS BIGINT) n_l1_classes,
-          |       CAST(SUM(CASE WHEN l = 1 THEN g ELSE 0 END) AS BIGINT) n_l1_rows,
-          |       CAST(SUM(l) AS BIGINT) sum_l FROM c1),
-          |a2 AS (SELECT 'chars_1000' AS level, COUNT(*) n_classes,
-          |       CAST(MIN(l) AS BIGINT) min_l,
-          |       CAST(SUM(CASE WHEN l = 1 THEN 1 ELSE 0 END) AS BIGINT) n_l1_classes,
-          |       CAST(SUM(CASE WHEN l = 1 THEN g ELSE 0 END) AS BIGINT) n_l1_rows,
-          |       CAST(SUM(l) AS BIGINT) sum_l FROM c2)
-          |SELECT level, n_classes, min_l, n_l1_classes, n_l1_rows, sum_l,
-          | CAST(sum_l AS DOUBLE) / CAST(n_classes AS DOUBLE) AS mean_l
-          |FROM (SELECT * FROM a1 UNION ALL SELECT * FROM a2)
-          |ORDER BY level""".stripMargin) +
-      ("t_closeness" -> {
-        // one generated fragment per generalization level, tag-suffixed
-        // CTE names hoisted into ONE top-level WITH (DuckDB rejects WITH
-        // inside a FROM-subquery — the value_mwu layout rule)
-        def lvl(b: Int, tag: String, name: String): String =
-          s"""cells$tag AS (SELECT source, n_chars // $b AS sb, lang,
-             |              COUNT(*) c FROM documents GROUP BY 1, 2, 3),
-             |cls$tag AS (SELECT source, sb, CAST(SUM(c) AS BIGINT) g
-             |           FROM cells$tag GROUP BY 1, 2),
-             |lg$tag AS (SELECT lang, CAST(SUM(c) AS BIGINT) nv
-             |          FROM cells$tag GROUP BY 1),
-             |tot$tag AS (SELECT CAST(SUM(nv) AS BIGINT) nn FROM lg$tag),
-             |grid$tag AS (SELECT k.source, k.sb, k.g, l.lang, l.nv, t.nn,
-             |             COALESCE(ce.c, 0) AS c
-             |            FROM cls$tag k CROSS JOIN lg$tag l
-             |            CROSS JOIN tot$tag t
-             |            LEFT JOIN cells$tag ce ON ce.source = k.source
-             |             AND ce.sb = k.sb AND ce.lang = l.lang),
-             |pc$tag AS (SELECT source, sb, g, nn,
-             |           SUM(ABS(c*nn - nv*g)) num
-             |          FROM grid$tag GROUP BY 1, 2, 3, 4),
-             |a$tag AS (SELECT '$name' AS level, COUNT(*) n_classes,
-             |          CAST(SUM(CASE WHEN 5*num > 2*g*nn THEN 1 ELSE 0 END)
-             |            AS BIGINT) n_breach,
-             |          MAX(CAST(num AS DOUBLE) /
-             |            (CAST(g AS DOUBLE)*CAST(nn AS DOUBLE)*2.0)) max_t
-             |         FROM pc$tag)""".stripMargin
-        s"""WITH ${lvl(100, "h", "chars_100")},
-           |${lvl(1000, "k", "chars_1000")}
-           |SELECT * FROM (SELECT * FROM ah UNION ALL SELECT * FROM ak)
-           |ORDER BY level""".stripMargin
-      }) +
-      ("dpp_scan" ->
-        """WITH cal AS (SELECT CAST(year(ts) AS BIGINT) y,
-          |             CAST(month(ts) AS BIGINT) m,
-          |             CAST(day(ts) AS BIGINT) d, COUNT(*) n
-          |            FROM events GROUP BY 1, 2, 3),
-          |tot AS (SELECT CAST(SUM(n) AS BIGINT) nn, COUNT(*) nd FROM cal),
-          |busy AS (SELECT y, m, d FROM cal CROSS JOIN tot
-          |         WHERE n * nd > nn)
-          |SELECT e.y, e.m, e.d, COUNT(*) AS n,
-          | CAST(SUM(CAST(e.value AS DECIMAL(18,2))) AS DOUBLE) AS total
-          |FROM (SELECT CAST(year(ts) AS BIGINT) y, CAST(month(ts) AS BIGINT) m,
-          |      CAST(day(ts) AS BIGINT) d, value FROM events) e
-          |JOIN busy ON e.y = busy.y AND e.m = busy.m AND e.d = busy.d
-          |GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin) +
-      ("bloom_join" ->
-        """SELECT l_returnflag, COUNT(*) AS n,
-          | CAST(SUM(CAST(l_extendedprice*(1-l_discount) AS DECIMAL(28,6)))
-          |   AS DOUBLE) AS revenue
-          |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-          |WHERE o_orderpriority = '1-URGENT'
-          |GROUP BY 1 ORDER BY 1""".stripMargin) +
-      ("source_keyness" ->
-        // every float expression mirrors the Spark column order exactly;
-        // only ln carries engine ulp risk, absorbed by round(z, 6) (the
-        // tfidf convention)
-        """WITH st AS (SELECT source,
-          |            unnest(regexp_split_to_array(lower(text), '\s+')) AS term
-          |           FROM documents),
-          |tf AS (SELECT source, term, COUNT(*) c FROM st GROUP BY 1, 2),
-          |tot AS (SELECT term, CAST(SUM(c) AS BIGINT) cw FROM tf
-          |        GROUP BY 1 HAVING CAST(SUM(c) AS BIGINT) >= 5),
-          |stot AS (SELECT source, CAST(SUM(c) AS BIGINT) nst FROM tf GROUP BY 1),
-          |gtot AS (SELECT CAST(SUM(nst) AS BIGINT) nnt FROM stot),
-          |s AS (SELECT tf.source, tf.term, tf.c, tot.cw, stot.nst, gtot.nnt,
-          |       100.0 * CAST(tot.cw AS DOUBLE) / CAST(gtot.nnt AS DOUBLE) AS aw,
-          |       CAST(tot.cw - tf.c AS DOUBLE) AS rest_c,
-          |       CAST(gtot.nnt - stot.nst AS DOUBLE) AS rest_n
-          |      FROM tf JOIN tot USING (term) JOIN stot USING (source)
-          |      CROSS JOIN gtot),
-          |z AS (SELECT source, term, c, cw, round(
-          |       (ln((CAST(c AS DOUBLE) + aw)
-          |           / (CAST(nst AS DOUBLE) + 100.0 - CAST(c AS DOUBLE) - aw))
-          |      - ln((rest_c + aw) / (rest_n + 100.0 - rest_c - aw)))
-          |      / sqrt(1.0 / (CAST(c AS DOUBLE) + aw)
-          |           + 1.0 / (rest_c + aw)), 6) AS z
-          |      FROM s)
-          |SELECT source, term, c, cw, z FROM z
-          |QUALIFY row_number() OVER (PARTITION BY source
-          |                           ORDER BY z DESC, term) <= 15
-          |ORDER BY source, z DESC, term""".stripMargin) +
-      ("skew_join" ->
-        """WITH e AS (SELECT CASE WHEN user_id % 10 < 6 THEN 0
-          |                  ELSE user_id END AS k, value FROM events),
-          |dim AS (SELECT c_custkey AS k, c_nationkey FROM customer)
-          |SELECT e.k % 7 AS kb, COUNT(*) AS n,
-          | CAST(SUM(CAST(e.value AS DECIMAL(18,2))) AS DOUBLE) AS total,
-          | CAST(SUM(CAST(dim.c_nationkey AS BIGINT)) AS BIGINT) AS nation_weight
-          |FROM e JOIN dim ON e.k = dim.k
-          |GROUP BY 1 ORDER BY 1""".stripMargin) +
-      ("dp_release" ->
-        """WITH c AS (SELECT source, COUNT(*) n_true FROM documents GROUP BY 1),
-          |h AS (SELECT source, n_true,
-          |      (CAST(CAST(concat('0x', substr(md5('dp-v1:' || source), 1, 8))
-          |         AS BIGINT) AS DOUBLE) + 0.5) / 4294967296.0 AS u
-          |      FROM c)
-          |SELECT source, n_true,
-          | round(CAST(n_true AS DOUBLE)
-          |   + (-1.0) * sign(u - 0.5) * ln(1.0 - 2.0 * abs(u - 0.5)), 6)
-          |   AS released_eps1,
-          | round(CAST(n_true AS DOUBLE)
-          |   + (-10.0) * sign(u - 0.5) * ln(1.0 - 2.0 * abs(u - 0.5)), 6)
-          |   AS released_eps01
-          |FROM h ORDER BY source""".stripMargin) +
-      ("cbo_reorder" ->
-        """SELECT o_orderpriority, COUNT(*) AS n,
-          | CAST(SUM(CAST(l_extendedprice*(1-l_discount) AS DECIMAL(28,6)))
-          |   AS DOUBLE) AS revenue
-          |FROM lineitem
-          |JOIN orders ON l_orderkey = o_orderkey
-          |JOIN customer ON o_custkey = c_custkey
-          |WHERE c_mktsegment = 'BUILDING'
-          |GROUP BY 1 ORDER BY 1""".stripMargin) +
-      ("observed_load" ->
-        """SELECT COUNT(*) AS n_rows,
-          | CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value,
-          | CAST(SUM(CASE WHEN user_id IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-          |   AS null_users,
-          | strftime(MIN(ts), '%Y-%m-%d %H:%M:%S') AS min_ts,
-          | strftime(MAX(ts), '%Y-%m-%d %H:%M:%S') AS max_ts
-          |FROM events""".stripMargin) +
-      ("events_interpolate" ->
-        """WITH hourly AS (
-          | SELECT date_trunc('hour', ts) h, event_type, COUNT(*) n
-          | FROM events GROUP BY 1, 2),
-          |gapped AS (SELECT * FROM hourly
-          |           WHERE (epoch(h)::BIGINT // 3600) % 5 != 2),
-          |bounds AS (SELECT MIN(h) lo, MAX(h) hi FROM gapped),
-          |spine AS (SELECT unnest(generate_series(lo, hi, INTERVAL 1 HOUR)) AS h
-          |          FROM bounds),
-          |grid AS (SELECT s.h, t.event_type FROM spine s
-          |         CROSS JOIN (SELECT DISTINCT event_type FROM gapped) t),
-          |j AS (SELECT g.h, g.event_type, hh.n,
-          |       last_value(hh.n IGNORE NULLS) OVER
-          |        (PARTITION BY g.event_type ORDER BY g.h
-          |         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS pv,
-          |       last_value(CASE WHEN hh.n IS NOT NULL THEN g.h END IGNORE NULLS)
-          |        OVER (PARTITION BY g.event_type ORDER BY g.h
-          |         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS pt,
-          |       first_value(hh.n IGNORE NULLS) OVER
-          |        (PARTITION BY g.event_type ORDER BY g.h
-          |         ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS nv,
-          |       first_value(CASE WHEN hh.n IS NOT NULL THEN g.h END IGNORE NULLS)
-          |        OVER (PARTITION BY g.event_type ORDER BY g.h
-          |         ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS nt
-          |      FROM grid g LEFT JOIN gapped hh
-          |       ON g.h = hh.h AND g.event_type = hh.event_type)
-          |SELECT strftime(h, '%Y-%m-%d %H:%M:%S') AS hour_start, event_type,
-          | n AS observed,
-          | CASE WHEN n IS NOT NULL THEN CAST(n AS DOUBLE)
-          |      WHEN pv IS NOT NULL AND nv IS NOT NULL THEN
-          |       CAST(pv AS DOUBLE)
-          |        + CAST((nv - pv) * date_diff('hour', pt, h) AS DOUBLE)
-          |          / CAST(date_diff('hour', pt, nt) AS DOUBLE)
-          |      ELSE NULL END AS v_interp
-          |FROM j ORDER BY hour_start, event_type""".stripMargin) +
-      ("text_nfc" ->
-        // generated from the SAME planted-form constants the query embeds
-        s"""WITH e AS (SELECT doc_id, source,
-           |           text || CASE WHEN doc_id % 3 = 0 THEN '$nfcDecomposed'
-           |                        WHEN doc_id % 3 = 1 THEN '$nfcPrecomposed'
-           |                        ELSE '' END AS text
-           |          FROM documents),
-           |n AS (SELECT source, text, nfc_normalize(text) AS nfc FROM e)
-           |SELECT source, COUNT(*) AS n_docs,
-           | CAST(SUM(CASE WHEN nfc <> text THEN 1 ELSE 0 END) AS BIGINT)
-           |   AS n_changed,
-           | CAST(SUM(CAST(concat('0x', substr(md5(nfc), 1, 8)) AS BIGINT))
-           |   AS BIGINT) AS nfc_hash_sum,
-           | CAST(COUNT(DISTINCT text) AS BIGINT) AS n_raw_distinct,
-           | CAST(COUNT(DISTINCT nfc) AS BIGINT) AS n_nfc_distinct
-           |FROM n GROUP BY 1 ORDER BY 1""".stripMargin) +
-      ("pseudonymize" ->
-        """SELECT substr(sha256('pepper-v1:' || CAST(user_id AS VARCHAR)), 1, 16) AS user_pseudo,
-          | COUNT(*) AS n_events,
-          | CAST(COUNT(DISTINCT event_type) AS BIGINT) AS n_types
-          |FROM events GROUP BY 1 ORDER BY 1""".stripMargin) +
-      ("token_spectrum" ->
-        """WITH toks AS (SELECT unnest(regexp_split_to_array(text, '\s+')) AS t FROM documents),
-          |tok AS (SELECT t, COUNT(*) c FROM toks WHERE t <> '' GROUP BY t),
-          |b AS (SELECT CASE WHEN c = 1 THEN 1 WHEN c <= 10 THEN 2
-          |       WHEN c <= 100 THEN 11 WHEN c <= 1000 THEN 101
-          |       WHEN c <= 10000 THEN 1001 ELSE 10001 END AS band_lo, c FROM tok)
-          |SELECT CAST(band_lo AS BIGINT) AS band_lo, COUNT(*) AS n_types,
-          | CAST(SUM(c) AS BIGINT) AS n_occurrences
-          |FROM b GROUP BY 1 ORDER BY 1""".stripMargin) +
-      ("dataset_card" ->
-        """WITH base AS (SELECT COUNT(*) AS n_docs,
-          | CAST(SUM(len(regexp_split_to_array(text, '\s+'))) AS BIGINT) AS n_tokens,
-          | CAST(SUM(n_chars) AS BIGINT) AS n_chars,
-          | quantile_cont(n_chars, 0.5) AS p50_chars,
-          | CAST(COUNT(DISTINCT source) AS BIGINT) AS n_sources,
-          | CAST(COUNT(DISTINCT lang) AS BIGINT) AS n_langs FROM documents),
-          |c AS (SELECT source, COUNT(*) c FROM documents GROUP BY 1),
-          |r AS (SELECT c, row_number() OVER (ORDER BY c, source) i FROM c),
-          |s AS (SELECT CAST(COUNT(*) AS BIGINT) n, SUM(CAST(c AS HUGEINT)) t,
-          |      SUM(CAST(i AS HUGEINT)*c) sic, SUM(CAST(c AS HUGEINT)*c) scc FROM r),
-          |conc AS (SELECT
-          | CASE WHEN n*t = 0 THEN NULL
-          |  ELSE CAST(CAST(2*sic-(n+1)*t AS VARCHAR) AS DOUBLE)
-          |       / CAST(CAST(n*t AS VARCHAR) AS DOUBLE) END AS gini_source,
-          | CASE WHEN t*t = 0 THEN NULL
-          |  ELSE CAST(CAST(scc AS VARCHAR) AS DOUBLE)
-          |       / CAST(CAST(t*t AS VARCHAR) AS DOUBLE) END AS hhi_source FROM s),
-          |top AS (SELECT source AS top_source, c AS tc FROM c
-          |        ORDER BY c DESC, source LIMIT 1)
-          |SELECT n_docs, n_tokens, n_chars, p50_chars, n_sources, n_langs,
-          | gini_source, hhi_source, top_source,
-          | CAST(tc AS DOUBLE) / CAST(n_docs AS DOUBLE) AS top_source_share
-          |FROM base, conc, top""".stripMargin) +
-      ("schema_drift" ->
-        """WITH s1 AS (SELECT COUNT(*) n FROM orders WHERE o_orderkey % 2 = 0),
-          |s2 AS (SELECT COUNT(*) n FROM orders WHERE o_orderkey % 2 = 1)
-          |SELECT * FROM (
-          |SELECT 'o_orderkey' AS col_name, 'bigint' AS dtype_v1,
-          | 'bigint' AS dtype_v2, s1.n AS n_v1, CAST(0 AS BIGINT) AS nulls_v1,
-          | s2.n AS n_v2, CAST(0 AS BIGINT) AS nulls_v2, 'stable' AS status
-          |FROM s1, s2
-          |UNION ALL
-          |SELECT 'o_totalprice', 'double', 'double', s1.n, 0, s2.n, 0, 'stable'
-          |FROM s1, s2
-          |UNION ALL
-          |SELECT 'o_orderpriority', NULL, 'string', NULL, NULL, s2.n,
-          | (SELECT CAST(SUM(CASE WHEN o_orderpriority IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-          |  FROM orders WHERE o_orderkey % 2 = 1), 'added'
-          |FROM s1, s2
-          |) ORDER BY col_name""".stripMargin) +
-      ("events_changepoint" ->
-        Quality.changepointSql("events", "ts", "event_type")) +
-      // the blobs ARE the text bytes (deterministic staging), so the
-      // oracle recomputes file counts and byte totals from the parquet
-      // truth; n_match == n_files is the integrity assertion
-      ("binary_ingest" ->
-        """SELECT source, COUNT(*) AS n_files,
-          | CAST(SUM(strlen(text)) AS BIGINT) AS total_bytes,
-          | COUNT(*) AS n_match
-          |FROM documents GROUP BY source ORDER BY source""".stripMargin) +
-      ("value_mwu" -> Quality.mwuSql("events", "event_type", "value",
-        Seq(("click", "view"), ("click", "error")))) +
-      ("parquet_stats_agg" ->
-        """SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
-          | CAST(MIN(l_orderkey) AS BIGINT) AS min_orderkey,
-          | CAST(MAX(l_orderkey) AS BIGINT) AS max_orderkey,
-          | CAST(MIN(l_suppkey) AS BIGINT) AS min_suppkey,
-          | CAST(MAX(l_suppkey) AS BIGINT) AS max_suppkey,
-          | CAST(MIN(l_linenumber) AS BIGINT) AS min_linenumber,
-          | CAST(MAX(l_linenumber) AS BIGINT) AS max_linenumber
-          |FROM lineitem""".stripMargin) +
-      // the proven row-25 Jaccard-pair CTEs reduced to an edge list,
-      // chained into the shared census body (one source, two engines)
-      ("graph_transitivity" ->
-        ("""WITH toks AS (SELECT doc_id, regexp_split_to_array(text, '\s+') w FROM documents),
-           |sh AS (SELECT DISTINCT doc_id, array_to_string(w[i.i:i.i+2], ' ') AS sh
-           |       FROM toks, unnest(generate_series(1, len(w)-2)) i(i) WHERE len(w) >= 3),
-           |sz AS (SELECT doc_id, COUNT(*) n_sh FROM sh GROUP BY 1),
-           |pairs AS (SELECT a.doc_id d1, b.doc_id d2, COUNT(*) common
-           |          FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id GROUP BY 1, 2),
-           |edges AS (SELECT d1, d2 FROM pairs JOIN sz x ON d1 = x.doc_id JOIN sz y ON d2 = y.doc_id
-           |          WHERE CAST(common AS DOUBLE) / (x.n_sh + y.n_sh - common) >= 0.5),
-           |""".stripMargin + graft.operators.Graph.transitivitySql))
+  /** Shared by `lm_score` and `lm_score_cached`: the cached variant
+    * changes only the physical plan (persisted count tables), never
+    * the result — same oracle by construction. */
+  private val lmScoreOracle: String =
+    """WITH toks AS (SELECT doc_id, regexp_split_to_array(text, '\s+') w FROM documents),
+      |bi AS (SELECT doc_id, array_to_string(w[i.i:i.i+1], ' ') AS bg
+      |       FROM toks, unnest(generate_series(1, len(w)-1)) i(i) WHERE len(w) >= 2),
+      |uni AS (SELECT u.w AS w FROM toks, unnest(w) u(w)),
+      |c2 AS (SELECT bg, COUNT(*) AS c2 FROM bi GROUP BY bg),
+      |c1 AS (SELECT w, COUNT(*) AS c1 FROM uni GROUP BY w),
+      |v AS (SELECT COUNT(*) AS v FROM c1)
+      |SELECT b.doc_id, COUNT(*) AS n_bigrams,
+      | CAST(SUM(CAST(round(-ln((COALESCE(c2.c2, 0) + 0.5)
+      |     / (COALESCE(c1.c1, 0) + 0.5 * v.v)), 6) AS DECIMAL(28,12))) AS DOUBLE)
+      |   / COUNT(*) AS nll
+      |FROM bi b LEFT JOIN c2 ON b.bg = c2.bg
+      | LEFT JOIN c1 ON split_part(b.bg, ' ', 1) = c1.w, v
+      |GROUP BY b.doc_id ORDER BY b.doc_id""".stripMargin
 
-  /** UNTIMED per-query preparation Bench runs before starting the clock —
-    * for queries whose real-world cost excludes an input another pipeline
+  /** Shared by `dedup_keep_best` and `dedup_keep_best_cached`
+    * (precomputed vs in-query clusters — same result). */
+  private val keepBestOracle: String =
+    """WITH RECURSIVE toks AS (SELECT doc_id, regexp_split_to_array(text, '\s+') w FROM documents),
+      |sh AS (SELECT DISTINCT doc_id, array_to_string(w[i.i:i.i+2], ' ') AS sh
+      |       FROM toks, unnest(generate_series(1, len(w)-2)) i(i) WHERE len(w) >= 3),
+      |sz AS (SELECT doc_id, COUNT(*) n_sh FROM sh GROUP BY 1),
+      |cnt AS (SELECT a.doc_id d1, b.doc_id d2, COUNT(*) common
+      |        FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id GROUP BY 1, 2),
+      |pairs AS (SELECT d1, d2 FROM cnt JOIN sz x ON d1 = x.doc_id JOIN sz y ON d2 = y.doc_id
+      |          WHERE CAST(common AS DOUBLE) / (x.n_sh + y.n_sh - common) >= 0.5),
+      |edges AS (SELECT d1 a, d2 b FROM pairs UNION SELECT d2, d1 FROM pairs),
+      |reach(id, r) AS (
+      | SELECT a, a FROM edges
+      | UNION
+      | SELECT reach.id, edges.b FROM reach JOIN edges ON reach.r = edges.a
+      |),
+      |comp AS (SELECT id AS doc_id, MIN(r) AS canonical_id FROM reach GROUP BY id),
+      |q AS (SELECT doc_id,
+      |  least(CAST(len(regexp_split_to_array(text, '\s+')) AS DOUBLE) / 50.0, 1.0) * 0.5
+      |   + CAST(len(list_filter(regexp_split_to_array(lower(text), '\s+'),
+      |       x -> x IN ('the','a','of','and','to','in','is','was','for','on'))) AS DOUBLE)
+      |     / CAST(len(regexp_split_to_array(text, '\s+')) AS DOUBLE) * 0.5 AS quality_score
+      | FROM documents),
+      |j AS (SELECT comp.canonical_id, comp.doc_id, q.quality_score
+      |      FROM comp JOIN q USING (doc_id)),
+      |w AS (SELECT canonical_id, doc_id, quality_score,
+      |       row_number() OVER (PARTITION BY canonical_id
+      |         ORDER BY quality_score DESC, doc_id) AS rn,
+      |       max(quality_score) OVER (PARTITION BY canonical_id) AS best_score,
+      |       count(*) OVER (PARTITION BY canonical_id) AS cluster_size
+      |      FROM j)
+      |SELECT canonical_id, doc_id AS best_id, best_score,
+      | CAST(cluster_size AS BIGINT) AS cluster_size
+      |FROM w WHERE rn = 1 ORDER BY canonical_id""".stripMargin
+
+  /** Shared by `zorder_scan` and `hilbert_scan`. The z-order READ path is
+    * layout-invisible: the same box over the RAW table (the Spark side
+    * read it back from the z-clustered files). The Hilbert read path
+    * returns the same box rows as the Morton one — both layouts are
+    * semantically invisible by construction. */
+  private val boxScanOracle: String =
+    """WITH dims AS (
+      | SELECT l_orderkey, l_linenumber,
+      |  CAST(concat('0x', substr(md5(concat(CAST(l_orderkey AS VARCHAR), ':', CAST(l_linenumber AS VARCHAR), ':a')), 1, 8)) AS BIGINT) % 1024 AS a,
+      |  CAST(concat('0x', substr(md5(concat(CAST(l_orderkey AS VARCHAR), ':', CAST(l_linenumber AS VARCHAR), ':b')), 1, 8)) AS BIGINT) % 1024 AS b
+      | FROM lineitem)
+      |SELECT l_orderkey, l_linenumber, a, b FROM dims
+      |WHERE a BETWEEN 384 AND 639 AND b BETWEEN 256 AND 511
+      |ORDER BY l_orderkey, l_linenumber""".stripMargin
+
+  /** Shared by `ngram_diversity` and `ngram_diversity_hashed`: the
+    * hashed rollup keys differ but the REPORT is identical unless a
+    * per-source 64-bit shingle collision exists — the gate's
+    * hash-equality against the string oracle IS that check. */
+  private val ngramDiversityOracle: String =
+    """WITH toks AS (SELECT source, regexp_split_to_array(text, '\s+') w FROM documents),
+      |sh AS (SELECT source, array_to_string(w[i.i:i.i+2], ' ') AS sh
+      |       FROM toks, unnest(generate_series(1, len(w)-2)) i(i) WHERE len(w) >= 3),
+      |cnt AS (SELECT source, sh, COUNT(*) c FROM sh GROUP BY 1, 2)
+      |SELECT source, CAST(SUM(c) AS BIGINT) AS n_total, COUNT(*) AS n_distinct,
+      | CAST(SUM(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_singletons,
+      | CAST(COUNT(*) AS DOUBLE) / CAST(SUM(c) AS BIGINT) AS ttr
+      |FROM cnt GROUP BY source ORDER BY source""".stripMargin
+
+  // ------------------------------------------------------------------
+  // Registry
+  // ------------------------------------------------------------------
+
+  /** One registered query: the body, the DuckDB oracle SQL where the
+    * result is SQL-expressible (hash-exact against the Spark side), and
+    * an UNTIMED prepare hook Bench runs before starting the clock — for
+    * queries whose real-world cost excludes an input another pipeline
     * stage already produced (dedup_keep_best_cached consumes the dedup
-    * stage's cluster assignment). Verify and direct callers skip this;
-    * every prepared query must be result-identical without it. */
-  def prepares: Map[String, (SparkSession, String) => Unit] = Map(
-    "dedup_keep_best_cached" -> ((s: SparkSession, d: String) => {
-      val c = keepBestClusters(s, d).persist()
-      c.count()
-      c.createOrReplaceTempView(keepBestCacheView)
-    }),
-    // the standing coarse quantizer the incremental ingest assigns into
-    // (trained by a slow-cadence batch stage in production)
-    "sim_ivf_incremental" -> ((s: SparkSession, d: String) => {
-      val c = Similarity.kmeansCentroids(
-        embeddings(s, d).filter(col("vec_id") % 5 =!= 0),
-        "vec_id", "embedding", k = 8, iters = 3).persist()
-      c.count()
-      c.createOrReplaceTempView(ivfIncCacheView)
-    }),
-    // the exact baseline + all six index families' candidate frames —
-    // the index-build artifacts the cached eval scores (top-k-set-sized)
-    "ann_eval_cached" -> ((s: SparkSession, d: String) => {
-      val b = new AnnBuilds(s, d)
-      val e = b.exact().persist()
-      e.count()
-      e.createOrReplaceTempView(annCacheExact)
-      b.families.foreach { case (name, f) =>
-        val p = f().persist()
-        p.count()
-        p.createOrReplaceTempView(annCacheView(name))
-      }
-    })
-  )
+    * stage's cluster assignment). Verify and direct callers skip the
+    * hook; every prepared query must be result-identical without it. */
+  private[graft] final case class Q(
+      name: String,
+      run: (SparkSession, String) => DataFrame,
+      oracle: Option[String] = None,
+      prepare: Option[(SparkSession, String) => Unit] = None)
 
-  private lazy val oracleSqlLit: Map[String, String] = Map(
-    "q1_pricing_summary" ->
+  /** `qs`, once its names are known distinct: a repeated name would
+    * silently shadow the earlier entry in every projection below. */
+  private[graft] def distinctNames(qs: Seq[Q]): Seq[Q] = {
+    val dups = qs.groupBy(_.name).collect { case (n, g) if g.size > 1 => n }
+    require(dups.isEmpty, s"duplicate query names: ${dups.toSeq.sorted.mkString(", ")}")
+    qs
+  }
+
+  /** The `SPARK_GRAFT_ONLY` subset (comma-separated names), or None for
+    * every query. A name no query carries fails fast: a typo would
+    * otherwise time or dump nothing while the run still looks complete. */
+  private[graft] def only(spec: Option[String]): Option[Set[String]] =
+    spec.map { s =>
+      val names = s.split(",").toSet
+      val unknown = names -- queries.keySet
+      require(unknown.isEmpty,
+        s"SPARK_GRAFT_ONLY names no query: ${unknown.toSeq.sorted.mkString(", ")}")
+      names
+    }
+
+  // Projections of the registry. Hash maps on purpose: their iteration
+  // order depends only on the key set, and Verify runs the queries and
+  // writes oracle_sql.json in that order.
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map(q => q.name -> q.run).toMap
+  lazy val oracleSql: Map[String, String] =
+    registry.flatMap(q => q.oracle.map(q.name -> _)).toMap
+  lazy val prepares: Map[String, (SparkSession, String) => Unit] =
+    registry.flatMap(q => q.prepare.map(q.name -> _)).toMap
+
+  /** Every query, in one list: the only place that knows the names.
+    * Lazy and last in the object, so no entry can read a `val` that
+    * object initialization has not assigned yet (a strict `val` sees
+    * `null` there) and touching SparkEntry builds no oracle strings. */
+  private[graft] lazy val registry: Seq[Q] = distinctNames(Seq(
+    Q("q1_pricing_summary", q1PricingSummary, Some(
       """SELECT l_returnflag, l_linestatus,
         | CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
         | CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
@@ -6293,16 +5813,16 @@ object SparkEntry {
         | CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / COUNT(l_extendedprice) AS avg_price,
         | COUNT(*) AS count_order
         |FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-        |GROUP BY l_returnflag, l_linestatus ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    "q3_top_unshipped" ->
+        |GROUP BY l_returnflag, l_linestatus ORDER BY l_returnflag, l_linestatus""".stripMargin)),
+    Q("q3_top_unshipped", q3TopUnshipped, Some(
       """SELECT l_orderkey, strftime(o_orderdate, '%Y-%m-%d') AS orderdate, o_orderpriority,
         | CAST(SUM(CAST(l_extendedprice*(1-l_discount) AS DECIMAL(28,6))) AS DOUBLE) AS revenue
         |FROM customer, orders, lineitem
         |WHERE c_mktsegment = 'BUILDING' AND c_custkey = o_custkey AND l_orderkey = o_orderkey
         |  AND o_orderdate < TIMESTAMP '1998-03-15' AND l_shipdate > TIMESTAMP '1998-03-15'
         |GROUP BY l_orderkey, strftime(o_orderdate, '%Y-%m-%d'), o_orderpriority
-        |ORDER BY revenue DESC, l_orderkey LIMIT 10""".stripMargin,
-    "q5_nation_revenue" ->
+        |ORDER BY revenue DESC, l_orderkey LIMIT 10""".stripMargin)),
+    Q("q5_nation_revenue", q5NationRevenue, Some(
       """SELECT n_name,
         | CAST(SUM(CAST(l_extendedprice*(1-l_discount) AS DECIMAL(28,6))) AS DOUBLE) AS revenue
         |FROM customer, orders, lineitem, supplier, nation, region
@@ -6310,233 +5830,876 @@ object SparkEntry {
         |  AND c_nationkey = s_nationkey AND s_nationkey = n_nationkey
         |  AND n_regionkey = r_regionkey AND r_name = 'ASIA'
         |  AND o_orderdate >= TIMESTAMP '1996-01-01' AND o_orderdate < TIMESTAMP '1998-01-01'
-        |GROUP BY n_name ORDER BY revenue DESC, n_name""".stripMargin,
-    // three NTILE windows with custkey tie-breaks — the proven
-    // feature_ntile parity; monetary ranks on the decimal-exact sum
-    "customer_rfm" ->
-      """WITH c AS (
-        | SELECT o_custkey, MAX(o_orderdate) AS last_d, COUNT(*) AS frequency,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(28,6))) AS DOUBLE) AS monetary
-        | FROM orders GROUP BY 1),
-        |m AS (SELECT MAX(o_orderdate) AS max_d FROM orders),
-        |b AS (
-        | SELECT o_custkey,
-        |  CAST(DATE_DIFF('day', last_d, max_d) AS BIGINT) AS recency_days,
-        |  frequency, monetary
-        | FROM c, m),
-        |sc AS (
-        | SELECT o_custkey, recency_days, frequency, monetary,
-        |  CAST(6 - NTILE(5) OVER (ORDER BY recency_days, o_custkey) AS BIGINT) AS r_score,
-        |  CAST(NTILE(5) OVER (ORDER BY frequency, o_custkey) AS BIGINT) AS f_score,
-        |  CAST(NTILE(5) OVER (ORDER BY monetary, o_custkey) AS BIGINT) AS m_score
-        | FROM b)
-        |SELECT o_custkey, recency_days, frequency, monetary,
-        | r_score, f_score, m_score,
-        | r_score*100 + f_score*10 + m_score AS rfm
-        |FROM sc ORDER BY o_custkey""".stripMargin,
-
-    // bounds = the proven percentile<->quantile_cont parity; the clipped
-    // sum casts only 2-dp money to decimal, bounds enter via the fixed
-    // IEEE tail mid + n_lo*lo + n_hi*hi in this exact written order
-    "price_winsorize" ->
-      """WITH b AS (
-        | SELECT o_orderpriority,
-        |  quantile_cont(o_totalprice, 0.05) AS lo,
-        |  quantile_cont(o_totalprice, 0.95) AS hi
-        | FROM orders GROUP BY 1),
-        |w AS (
-        | SELECT o.o_orderpriority, lo, hi,
-        |  CASE WHEN o_totalprice < lo THEN 1 ELSE 0 END AS cl,
-        |  CASE WHEN o_totalprice > hi THEN 1 ELSE 0 END AS ch,
-        |  CASE WHEN o_totalprice >= lo AND o_totalprice <= hi
-        |       THEN o_totalprice ELSE 0.0 END AS mid
-        | FROM orders o JOIN b USING (o_orderpriority))
-        |SELECT o_orderpriority, COUNT(*) AS n,
-        | CAST(SUM(cl) AS BIGINT) AS n_clipped_lo,
-        | CAST(SUM(ch) AS BIGINT) AS n_clipped_hi,
-        | CAST(SUM(CAST(mid AS DECIMAL(28,6))) AS DOUBLE)
-        |  + CAST(SUM(cl) AS DOUBLE) * lo
-        |  + CAST(SUM(ch) AS DOUBLE) * hi AS sum_winsorized,
-        | lo AS p_lo, hi AS p_hi
-        |FROM w GROUP BY o_orderpriority, lo, hi
-        |ORDER BY o_orderpriority""".stripMargin,
-
-    // the proven q5 decimal-volume fragment, two-level: nation share of
-    // the region x part-type market per year
-    "q8_market_share" ->
-      """WITH base AS (
-        | SELECT EXTRACT(year FROM o_orderdate) AS o_year,
-        |  CAST(l_extendedprice*(1-l_discount) AS DECIMAL(28,6)) AS vol,
-        |  n2.n_name AS supp_nation
-        | FROM part, supplier, lineitem, orders, customer,
-        |      nation n1, nation n2, region
-        | WHERE p_partkey = l_partkey AND s_suppkey = l_suppkey
-        |  AND l_orderkey = o_orderkey AND o_custkey = c_custkey
-        |  AND c_nationkey = n1.n_nationkey AND n1.n_regionkey = r_regionkey
-        |  AND r_name = 'AMERICA' AND s_nationkey = n2.n_nationkey
-        |  AND o_orderdate >= TIMESTAMP '1995-01-01'
-        |  AND o_orderdate < TIMESTAMP '1997-01-01'
-        |  AND p_type = 'PROMO')
-        |SELECT o_year,
-        | CAST(SUM(CASE WHEN supp_nation = 'NATION_3' THEN vol
-        |               ELSE CAST(0 AS DECIMAL(28,6)) END) AS DOUBLE) AS nation_volume,
-        | CAST(SUM(vol) AS DOUBLE) AS total_volume,
-        | CASE WHEN SUM(vol) = 0 THEN NULL
-        |  ELSE CAST(SUM(CASE WHEN supp_nation = 'NATION_3' THEN vol
-        |                     ELSE CAST(0 AS DECIMAL(28,6)) END) AS DOUBLE)
-        |       / CAST(SUM(vol) AS DOUBLE) END AS mkt_share
-        |FROM base GROUP BY o_year ORDER BY o_year""".stripMargin,
-    "q14_promo_share" ->
-      """SELECT
-        | CAST(SUM(CASE WHEN p_type = 'PROMO'
-        |   THEN CAST(l_extendedprice*(1-l_discount) AS DECIMAL(28,6))
-        |   ELSE CAST(0 AS DECIMAL(28,6)) END) AS DOUBLE) AS promo_revenue,
-        | CAST(SUM(CAST(l_extendedprice*(1-l_discount) AS DECIMAL(28,6))) AS DOUBLE) AS total_revenue,
-        | CAST(SUM(CASE WHEN p_type = 'PROMO'
-        |   THEN CAST(l_extendedprice*(1-l_discount) AS DECIMAL(28,6))
-        |   ELSE CAST(0 AS DECIMAL(28,6)) END) AS DOUBLE)
-        |  / CAST(SUM(CAST(l_extendedprice*(1-l_discount) AS DECIMAL(28,6))) AS DOUBLE) AS promo_share
-        |FROM lineitem, part
-        |WHERE l_partkey = p_partkey
-        | AND l_shipdate >= TIMESTAMP '1997-01-01'
-        | AND l_shipdate < TIMESTAMP '1997-04-01'""".stripMargin,
-    "q17_small_qty" ->
-      """WITH li AS (
-        | SELECT l_partkey, l_quantity, l_extendedprice
-        | FROM lineitem, part
-        | WHERE l_partkey = p_partkey AND p_brand = 'Brand#11'),
-        |a AS (
-        | SELECT l_partkey AS ak,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE)/COUNT(l_quantity) AS avg_qty
-        | FROM li GROUP BY 1)
-        |SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(28,6))) AS DOUBLE) / 7.0 AS avg_yearly
-        |FROM li JOIN a ON li.l_partkey = a.ak
-        |WHERE l_quantity < 0.5 * avg_qty""".stripMargin,
-    "q18_big_orders" ->
-      """WITH q AS (
-        | SELECT l_orderkey,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-        | FROM lineitem GROUP BY 1
-        | HAVING CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) > 250)
-        |SELECT c_name, c_custkey, o_orderkey,
-        | strftime(o_orderdate, '%Y-%m-%d %H:%M:%S') AS orderdate,
-        | o_totalprice, sum_qty
-        |FROM q JOIN orders ON l_orderkey = o_orderkey
+        |GROUP BY n_name ORDER BY revenue DESC, n_name""".stripMargin)),
+    Q("counts_by_country", countsByCountry, Some(
+      """SELECT n_name, COUNT(*) AS n_customers
+        |FROM customer JOIN nation ON c_nationkey = n_nationkey
+        |GROUP BY n_name ORDER BY n_customers DESC, n_name""".stripMargin)),
+    Q("counts_by_country_salted", countsByCountrySalted, Some(
+      // salting is semantically invisible: the oracle is the PLAIN join
+      """SELECT n_name, COUNT(*) AS n_customers
+        |FROM customer JOIN nation ON c_nationkey = n_nationkey
+        |GROUP BY n_name ORDER BY n_customers DESC, n_name""".stripMargin)),
+    Q("histogram_values", histogramValues, Some(
+      """SELECT CAST(FLOOR(value/50.0) AS BIGINT) AS bucket, COUNT(*) AS n,
+        | MIN(value) AS bucket_min, MAX(value) AS bucket_max
+        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin)),
+    Q("topk_names", topkNames, Some(
+      """SELECT p_type AS name, COUNT(*) AS n FROM part
+        |GROUP BY p_type ORDER BY n DESC, name LIMIT 10""".stripMargin)),
+    Q("topk_per_group", topkPerGroup, Some(
+      """SELECT p_brand, p_partkey, p_retailprice FROM part
+        |QUALIFY row_number() OVER (PARTITION BY p_brand
+        |  ORDER BY p_retailprice DESC, p_partkey) <= 3
+        |ORDER BY p_brand, p_retailprice DESC, p_partkey""".stripMargin)),
+    Q("segment_distribution", segmentDistribution, Some(
+      """SELECT c_mktsegment AS segment, COUNT(*) AS n,
+        | CAST(COUNT(*) AS DOUBLE) / CAST(SUM(COUNT(*)) OVER () AS DOUBLE) AS share
+        |FROM customer GROUP BY c_mktsegment ORDER BY segment""".stripMargin)),
+    Q("sales_cube", salesCube, Some(
+      """SELECT COALESCE(o_orderstatus, '(all)') AS status,
+        | COALESCE(o_orderpriority, '(all)') AS priority,
+        | CAST(GROUPING(o_orderstatus) AS BIGINT) AS g_status,
+        | CAST(GROUPING(o_orderpriority) AS BIGINT) AS g_priority,
+        | COUNT(*) AS n_orders,
+        | CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
+        |FROM orders GROUP BY CUBE (o_orderstatus, o_orderpriority)
+        |ORDER BY g_status, g_priority, status, priority""".stripMargin)),
+    Q("q7_nation_trade", q7NationTrade, Some(
+      """WITH sup AS (SELECT s_suppkey, n_name AS supp_nation
+        |             FROM supplier JOIN nation ON s_nationkey = n_nationkey),
+        |cust AS (SELECT c_custkey, n_name AS cust_nation
+        |         FROM customer JOIN nation ON c_nationkey = n_nationkey)
+        |SELECT supp_nation, cust_nation,
+        | CAST(year(l_shipdate) AS BIGINT) AS ship_year,
+        | CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(28,6))) AS DOUBLE) AS revenue
+        |FROM lineitem
+        | JOIN orders ON l_orderkey = o_orderkey
+        | JOIN sup ON l_suppkey = s_suppkey
+        | JOIN cust ON o_custkey = c_custkey
+        |WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1998-01-01'
+        |  AND supp_nation <> cust_nation
+        |GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin)),
+    Q("q4_priority_late", q4PriorityLate, Some(
+      """SELECT o_orderpriority, COUNT(*) AS n_orders
+        |FROM orders o
+        |WHERE o_orderdate >= TIMESTAMP '1996-01-01' AND o_orderdate < TIMESTAMP '1996-04-01'
+        |  AND EXISTS (SELECT 1 FROM lineitem l
+        |              WHERE l.l_orderkey = o.o_orderkey
+        |                AND l.l_shipdate > o.o_orderdate + INTERVAL 90 DAY)
+        |GROUP BY 1 ORDER BY 1""".stripMargin)),
+    Q("order_pivot", orderPivot, Some(
+      """WITH o AS (SELECT strftime(o_orderdate, '%Y-%m') AS month,
+        |             o_orderstatus AS st,
+        |             CAST(o_totalprice AS DECIMAL(18,2)) AS p FROM orders)
+        |SELECT month,
+        | COUNT(*) FILTER (WHERE st = 'O') AS open_n,
+        | CAST(SUM(p) FILTER (WHERE st = 'O') AS DOUBLE) AS open_rev,
+        | COUNT(*) FILTER (WHERE st = 'F') AS done_n,
+        | CAST(SUM(p) FILTER (WHERE st = 'F') AS DOUBLE) AS done_rev,
+        | COUNT(*) FILTER (WHERE st = 'P') AS pend_n,
+        | CAST(SUM(p) FILTER (WHERE st = 'P') AS DOUBLE) AS pend_rev
+        |FROM o GROUP BY month ORDER BY month""".stripMargin)),
+    Q("weighted_sample", weightedSample, Some(
+      s"""WITH w AS (SELECT doc_id, source,
+        | CAST(${graft.operators.Curation.weightCaseSql("source", weightedSampleWeights, 1L)} AS BIGINT) AS weight,
+        | CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) AS u
+        | FROM documents)
+        |SELECT doc_id, source, weight, CAST(u // weight AS BIGINT) AS priority
+        |FROM w ORDER BY priority, doc_id LIMIT 150""".stripMargin)),
+    Q("negative_samples", negativeSamples, Some(
+      """WITH idx AS (SELECT doc_id, row_number() OVER (ORDER BY doc_id) AS i
+        |             FROM documents),
+        |n AS (SELECT COUNT(*) AS c FROM documents),
+        |anchors AS (SELECT doc_id AS a, i AS ai FROM idx WHERE doc_id % 10 = 0),
+        |cand AS (SELECT a, s.s AS slot, ai,
+        |    CAST(concat('0x', substr(md5(concat(CAST(a AS VARCHAR), ':',
+        |      CAST(s.s AS VARCHAR))), 1, 8)) AS BIGINT) % n.c + 1 AS draw, n.c AS c
+        |  FROM anchors, n, unnest(generate_series(1, 4)) s(s)),
+        |fixed AS (SELECT a, slot,
+        |    CASE WHEN draw = ai THEN draw % c + 1 ELSE draw END AS ci FROM cand)
+        |SELECT f.a AS anchor_id, CAST(f.slot AS INTEGER) AS slot,
+        | idx.doc_id AS neg_id
+        |FROM fixed f JOIN idx ON idx.i = f.ci
+        |ORDER BY anchor_id, slot""".stripMargin)),
+    Q("pareto_front", paretoFront, Some(
+      """SELECT p_partkey, p_size, p_retailprice FROM part a
+        |WHERE NOT EXISTS (
+        |  SELECT 1 FROM part b
+        |  WHERE b.p_size >= a.p_size AND b.p_retailprice <= a.p_retailprice
+        |    AND (b.p_size > a.p_size OR b.p_retailprice < a.p_retailprice))
+        |ORDER BY p_size DESC, p_retailprice, p_partkey""".stripMargin)),
+    Q("feature_ntile", featureNtile, Some(
+      """WITH r AS (SELECT o_totalprice AS v,
+        |             ntile(10) OVER (ORDER BY o_totalprice, o_orderkey) AS bucket
+        |           FROM orders)
+        |SELECT CAST(bucket AS BIGINT) AS bucket, COUNT(*) AS n_rows,
+        | MIN(v) AS lo, MAX(v) AS hi
+        |FROM r GROUP BY bucket ORDER BY bucket""".stripMargin)),
+    Q("pagerank", pagerankQ, Some(graft.operators.Graph.pageRankIntSql(
+      pagerankEdgesCte, iters = 5, k = 100))),
+    // the proven row-25 Jaccard-pair CTEs reduced to an edge list,
+    // chained into the shared census body (one source, two engines)
+    Q("graph_transitivity", graphTransitivity, Some(
+      ("""WITH toks AS (SELECT doc_id, regexp_split_to_array(text, '\s+') w FROM documents),
+         |sh AS (SELECT DISTINCT doc_id, array_to_string(w[i.i:i.i+2], ' ') AS sh
+         |       FROM toks, unnest(generate_series(1, len(w)-2)) i(i) WHERE len(w) >= 3),
+         |sz AS (SELECT doc_id, COUNT(*) n_sh FROM sh GROUP BY 1),
+         |pairs AS (SELECT a.doc_id d1, b.doc_id d2, COUNT(*) common
+         |          FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id GROUP BY 1, 2),
+         |edges AS (SELECT d1, d2 FROM pairs JOIN sz x ON d1 = x.doc_id JOIN sz y ON d2 = y.doc_id
+         |          WHERE CAST(common AS DOUBLE) / (x.n_sh + y.n_sh - common) >= 0.5),
+         |""".stripMargin + graft.operators.Graph.transitivitySql))),
+    Q("ngram_diversity", ngramDiversity, Some(ngramDiversityOracle)),
+    Q("ngram_diversity_hashed", ngramDiversityHashed, Some(ngramDiversityOracle)),
+    Q("hop_distance", hopDistanceQ, Some(graft.operators.Graph.hopDistanceSql(
+      pagerankEdgesCte,
+      "SELECT DISTINCT l_partkey AS node FROM lineitem WHERE l_partkey < 10",
+      maxHops = 4))),
+    Q("rolling_active_users", rollingActiveUsers, Some(
+      """WITH ud AS (SELECT DISTINCT CAST(ts AS DATE) AS day, user_id FROM events),
+        |days AS (SELECT DISTINCT day FROM ud),
+        |w AS (SELECT DISTINCT d.day AS wday, u.user_id
+        |      FROM ud u JOIN days d ON d.day BETWEEN u.day AND u.day + 6)
+        |SELECT strftime(wday, '%Y-%m-%d') AS day, COUNT(*) AS n_users
+        |FROM w GROUP BY wday ORDER BY day""".stripMargin)),
+    Q("rolling_active_users_approx", rollingActiveUsersApprox),
+    Q("event_transitions", eventTransitions, Some(
+      """WITH x AS (SELECT event_type,
+        |   lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_type
+        | FROM events),
+        |c AS (SELECT prev_type, event_type AS next_type, COUNT(*) AS n
+        |      FROM x WHERE prev_type IS NOT NULL GROUP BY 1, 2)
+        |SELECT prev_type, next_type, n,
+        | CAST(n AS DOUBLE) / CAST(SUM(n) OVER (PARTITION BY prev_type) AS DOUBLE) AS p
+        |FROM c ORDER BY prev_type, next_type""".stripMargin)),
+    Q("attribution_last_touch", attributionLastTouch, Some(
+      """WITH attr AS (
+        | SELECT event_type, value,
+        |   last_value(CASE WHEN event_type IN ('click','view') THEN event_type END IGNORE NULLS)
+        |     OVER (PARTITION BY user_id ORDER BY ts, event_id
+        |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS touch_type
+        | FROM events)
+        |SELECT COALESCE(touch_type, '(none)') AS touch_type, COUNT(*) AS n_purchases,
+        | CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS revenue
+        |FROM attr WHERE event_type = 'purchase'
+        |GROUP BY 1 ORDER BY 1""".stripMargin)),
+    Q("top_paths", topPaths, Some(
+      """WITH seq AS (
+        | SELECT event_type,
+        |   lag(event_type, 1) OVER w AS prev1,
+        |   lag(event_type, 2) OVER w AS prev2
+        | FROM events
+        | WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id))
+        |SELECT prev2 || '>' || prev1 || '>' || event_type AS path, COUNT(*) AS n
+        |FROM seq WHERE prev2 IS NOT NULL
+        |GROUP BY 1 ORDER BY n DESC, path LIMIT 20""".stripMargin)),
+    Q("record_linkage", recordLinkage, Some(
+      """SELECT a.c_custkey AS id1, a.c_name AS name1,
+        |       b.c_custkey AS id2, b.c_name AS name2,
+        |       CAST(levenshtein(a.c_name, b.c_name) AS BIGINT) AS dist
+        |FROM customer a JOIN customer b ON a.c_custkey < b.c_custkey
+        |WHERE levenshtein(a.c_name, b.c_name) <= 1
+        |ORDER BY id1, id2""".stripMargin)),
+    Q("min_cost_supplier", minCostSupplier, Some(
+      """WITH ps AS (SELECT l_partkey, l_suppkey,
+        |   CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS spend
+        | FROM lineitem GROUP BY 1, 2)
+        |SELECT l_partkey, l_suppkey AS best_suppkey, spend
+        |FROM ps
+        |QUALIFY row_number() OVER (PARTITION BY l_partkey ORDER BY spend, l_suppkey) = 1
+        |ORDER BY l_partkey""".stripMargin)),
+    Q("basket_pairs", basketPairs, Some(
+      """WITH items AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
+        |tot AS (SELECT COUNT(DISTINCT o) AS n_orders FROM items),
+        |freq AS (SELECT p, COUNT(*) AS n_p FROM items GROUP BY p),
+        |pr AS (SELECT a.p AS p1, b.p AS p2, COUNT(*) AS n_pair
+        |       FROM items a JOIN items b ON a.o = b.o AND a.p < b.p
+        |       GROUP BY 1, 2 HAVING COUNT(*) >= 3)
+        |SELECT pr.p1, pr.p2, pr.n_pair, f1.n_p AS n1, f2.n_p AS n2,
+        | (CAST(pr.n_pair AS DOUBLE) * tot.n_orders) / (CAST(f1.n_p AS DOUBLE) * f2.n_p) AS lift
+        |FROM pr JOIN freq f1 ON pr.p1 = f1.p JOIN freq f2 ON pr.p2 = f2.p
+        |CROSS JOIN tot
+        |ORDER BY lift DESC, p1, p2 LIMIT 50""".stripMargin)),
+    Q("dq_freshness", dqFreshness, Some(
+      """SELECT event_type,
+        | strftime(MAX(ts), '%Y-%m-%d %H:%M:%S') AS latest_ts,
+        | CAST((epoch_us(TIMESTAMP '2024-01-31 00:30:00') - epoch_us(MAX(ts))) // 60000000 AS BIGINT) AS lag_minutes,
+        | (epoch_us(TIMESTAMP '2024-01-31 00:30:00') - epoch_us(MAX(ts))) // 60000000 > 45 AS stale
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin)),
+    Q("table_profile", tableProfileQ, Some(Quality.tableProfileSql("orders", orderProfileCols))),
+    Q("id_gaps", idGapsQ, Some(
+      """WITH k AS (SELECT DISTINCT o_orderkey AS k FROM orders
+        |           WHERE o_orderkey % 97 <> 0 AND o_orderkey % 1000 <> 0),
+        |g AS (SELECT k, lag(k) OVER (ORDER BY k) AS pk FROM k)
+        |SELECT pk + 1 AS gap_start, k - 1 AS gap_end, k - pk - 1 AS n_missing
+        |FROM g WHERE pk IS NOT NULL AND k - pk > 1
+        |ORDER BY gap_start""".stripMargin)),
+    Q("clean_pipeline", cleanPipeline, Some(
+      // COALESCE mirrors fillNaValues(amount -> 0.0); QUALIFY mirrors
+      // dedupKeepFirst(event_id) — both previously absent, so equivalence
+      // silently rested on the testdata having no null values / dup ids
+      """SELECT event_id, user_id, event_type,
+        | strftime(ts, '%Y-%m-%d %H:%M:%S') AS event_ts,
+        | COALESCE(CASE WHEN value > 100 THEN 100.0 ELSE value END, 0.0) AS amount,
+        | CAST(props->>'$.k' AS BIGINT) AS k
+        |FROM events
+        |WHERE CAST(props->>'$.k' AS BIGINT) IS NOT NULL AND user_id IS NOT NULL
+        |QUALIFY row_number() OVER (PARTITION BY event_id ORDER BY ts, user_id, event_type) = 1
+        |ORDER BY event_id""".stripMargin)),
+    Q("dedup_keep_first", dedupKeepFirstQ, Some(
+      """SELECT user_id, event_type, event_id,
+        | strftime(ts, '%Y-%m-%d %H:%M:%S') AS first_ts, value
+        |FROM events
+        |QUALIFY row_number() OVER (PARTITION BY user_id, event_type ORDER BY ts, event_id) = 1
+        |ORDER BY user_id, event_type""".stripMargin)),
+    Q("dq_report", dqReport, Some(
+      """SELECT check_name, violations FROM (
+        | SELECT 'dup_natural_key' AS check_name,
+        |  CAST(COUNT(*) - COUNT(DISTINCT (l_orderkey, l_linenumber)) AS BIGINT) AS violations FROM lineitem
+        | UNION ALL
+        | SELECT 'null_l_quantity', CAST(COUNT(*) FILTER (l_quantity IS NULL) AS BIGINT) FROM lineitem
+        | UNION ALL
+        | SELECT 'null_l_shipdate', CAST(COUNT(*) FILTER (l_shipdate IS NULL) AS BIGINT) FROM lineitem
+        | UNION ALL
+        | SELECT 'null_l_extendedprice', CAST(COUNT(*) FILTER (l_extendedprice IS NULL) AS BIGINT) FROM lineitem
+        |) ORDER BY check_name""".stripMargin)),
+    Q("dq_referential", dqReferential, Some(
+      """SELECT check_name, violations FROM (
+        | SELECT 'lineitem_orphan_orderkey' AS check_name,
+        |  CAST(COUNT(*) FILTER (o_orderkey IS NULL) AS BIGINT) AS violations
+        | FROM lineitem LEFT JOIN orders ON l_orderkey = o_orderkey
+        | UNION ALL
+        | SELECT 'orders_orphan_custkey',
+        |  CAST(COUNT(*) FILTER (c_custkey IS NULL) AS BIGINT)
+        | FROM orders LEFT JOIN customer ON o_custkey = c_custkey
+        |) ORDER BY check_name""".stripMargin)),
+    Q("dedup_clusters", dedupClusters, Some(
+      """WITH RECURSIVE toks AS (SELECT doc_id, regexp_split_to_array(text, '\s+') w FROM documents),
+        |sh AS (SELECT DISTINCT doc_id, array_to_string(w[i.i:i.i+2], ' ') AS sh
+        |       FROM toks, unnest(generate_series(1, len(w)-2)) i(i) WHERE len(w) >= 3),
+        |sz AS (SELECT doc_id, COUNT(*) n_sh FROM sh GROUP BY 1),
+        |cnt AS (SELECT a.doc_id d1, b.doc_id d2, COUNT(*) common
+        |        FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id GROUP BY 1, 2),
+        |pairs AS (SELECT d1, d2 FROM cnt JOIN sz x ON d1 = x.doc_id JOIN sz y ON d2 = y.doc_id
+        |          WHERE CAST(common AS DOUBLE) / (x.n_sh + y.n_sh - common) >= 0.5),
+        |edges AS (SELECT d1 a, d2 b FROM pairs UNION SELECT d2, d1 FROM pairs),
+        |reach(id, r) AS (
+        | SELECT a, a FROM edges
+        | UNION
+        | SELECT reach.id, edges.b FROM reach JOIN edges ON reach.r = edges.a
+        |)
+        |SELECT id AS doc_id, MIN(r) AS canonical_id FROM reach
+        |GROUP BY id ORDER BY doc_id""".stripMargin)),
+    Q("dedup_clusters_lsh", dedupClustersLsh),
+    Q("dim_customer", dimCustomer, Some(
+      """SELECT CAST(dense_rank() OVER (ORDER BY c_custkey) AS BIGINT) AS customer_sk,
+        | c_custkey, c_name, c_nationkey, c_acctbal, c_mktsegment
+        |FROM customer ORDER BY customer_sk""".stripMargin)),
+    Q("dim_date", dimDate, Some(
+      """WITH r AS (SELECT CAST(MIN(o_orderdate) AS DATE) lo, CAST(MAX(o_orderdate) AS DATE) hi FROM orders),
+        | d AS (SELECT CAST(unnest(generate_series(lo, hi, INTERVAL 1 DAY)) AS DATE) AS fd FROM r)
+        |SELECT CAST(year(fd)*10000 + month(fd)*100 + day(fd) AS BIGINT) AS date_sk,
+        | strftime(fd, '%Y-%m-%d') AS full_date,
+        | CAST(day(fd) AS BIGINT) AS day, CAST(month(fd) AS BIGINT) AS month,
+        | CAST(year(fd) AS BIGINT) AS year, dayname(fd) AS week_day
+        |FROM d ORDER BY date_sk""".stripMargin)),
+    Q("fact_orders", factOrders, Some(
+      """WITH dimc AS (
+        | SELECT CAST(dense_rank() OVER (ORDER BY c_custkey) AS BIGINT) AS customer_sk, c_custkey
+        | FROM customer)
+        |SELECT o_orderkey, customer_sk,
+        | CAST(year(o_orderdate)*10000 + month(o_orderdate)*100 + day(o_orderdate) AS BIGINT) AS date_sk,
+        | o_orderstatus, o_totalprice
+        |FROM orders JOIN dimc ON o_custkey = c_custkey
+        |ORDER BY o_orderkey""".stripMargin)),
+    Q("fact_multi_role", factMultiRole, Some(
+      """WITH dimn AS (
+        | SELECT CAST(dense_rank() OVER (ORDER BY n_nationkey) AS BIGINT) AS nation_sk, n_nationkey
+        | FROM nation)
+        |SELECT l_orderkey, l_linenumber,
+        | cn.nation_sk AS cust_nation_sk, sn.nation_sk AS supp_nation_sk,
+        | CAST(year(o_orderdate)*10000 + month(o_orderdate)*100 + day(o_orderdate) AS BIGINT) AS date_sk,
+        | l_extendedprice
+        |FROM lineitem
+        | JOIN orders ON l_orderkey = o_orderkey
         | JOIN customer ON o_custkey = c_custkey
-        |ORDER BY o_totalprice DESC, o_orderkey LIMIT 100""".stripMargin,
-    "q19_disjunctive" ->
-      """SELECT CAST(SUM(CAST(l_extendedprice*(1-l_discount) AS DECIMAL(28,6))) AS DOUBLE) AS revenue
-        |FROM lineitem, part
-        |WHERE l_partkey = p_partkey AND (
-        | (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 5 AND l_quantity BETWEEN 1 AND 11)
-        | OR (p_brand = 'Brand#13' AND p_size BETWEEN 1 AND 10 AND l_quantity BETWEEN 10 AND 20)
-        | OR (p_brand = 'Brand#14' AND p_size BETWEEN 1 AND 15 AND l_quantity BETWEEN 20 AND 30))""".stripMargin,
-    "q21_waiting_suppliers" ->
-      """SELECT s_name, count(*) AS numwait
-        |FROM supplier, lineitem l1, orders
-        |WHERE s_suppkey = l1.l_suppkey AND o_orderkey = l1.l_orderkey
-        | AND o_orderstatus = 'F'
-        | AND l1.l_shipdate > o_orderdate + INTERVAL 60 DAY
-        | AND EXISTS (SELECT 1 FROM lineitem l2
-        |   WHERE l2.l_orderkey = l1.l_orderkey AND l2.l_suppkey <> l1.l_suppkey)
-        | AND NOT EXISTS (SELECT 1 FROM lineitem l3
-        |   WHERE l3.l_orderkey = l1.l_orderkey AND l3.l_suppkey <> l1.l_suppkey
-        |    AND l3.l_shipdate > o_orderdate + INTERVAL 60 DAY)
-        |GROUP BY s_name ORDER BY numwait DESC, s_name LIMIT 20""".stripMargin,
-    "q22_idle_customers" ->
-      """WITH a AS (
-        | SELECT CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE)/COUNT(c_acctbal) AS avg_bal
-        | FROM customer WHERE c_acctbal > 0)
-        |SELECT CAST(c_nationkey AS BIGINT) AS nationkey, COUNT(*) AS numcust,
-        | CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS totacctbal
-        |FROM customer, a
-        |WHERE c_acctbal > a.avg_bal
-        | AND NOT EXISTS (SELECT 1 FROM orders
-        |   WHERE o_custkey = c_custkey AND o_orderdate >= TIMESTAMP '2000-01-01')
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q9_product_profit" ->
-      """SELECT n_name AS nation, EXTRACT(year FROM o_orderdate) AS o_year,
-        | CAST(SUM(CAST(l_extendedprice*(1-l_discount) - p_retailprice*l_quantity*0.6 AS DECIMAL(28,6))) AS DOUBLE) AS sum_profit
-        |FROM lineitem, part, supplier, nation, orders
-        |WHERE l_partkey = p_partkey AND l_suppkey = s_suppkey
-        | AND s_nationkey = n_nationkey AND l_orderkey = o_orderkey
-        | AND p_name LIKE '%widget%'
-        |GROUP BY 1, 2 ORDER BY nation, o_year DESC""".stripMargin,
-    "q16_supplier_counts" ->
-      """SELECT p_brand, p_type, (p_size - 1) // 10 AS size_band,
-        | COUNT(DISTINCT l_suppkey) AS supplier_cnt
-        |FROM lineitem, part
-        |WHERE l_partkey = p_partkey AND p_type <> 'STANDARD'
-        | AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
-        |GROUP BY 1, 2, 3
-        |ORDER BY supplier_cnt DESC, p_brand, p_type, size_band""".stripMargin,
-    // MIN over doubles has no accumulation and the tie compare is IEEE
-    // equality on identical operands — engine-exact, no decimal dance
-    "q2_min_cost_region" ->
-      """WITH rs AS (
-        | SELECT s_suppkey, s_name, s_acctbal, n_name
-        | FROM supplier, nation, region
-        | WHERE s_nationkey = n_nationkey AND n_regionkey = r_regionkey
-        |  AND r_name = 'EUROPE'),
-        |pp AS (SELECT p_partkey FROM part WHERE p_size <= 10 AND p_type = 'LARGE'),
-        |cost AS (
-        | SELECT l_partkey, l_suppkey, MIN(l_extendedprice) AS min_cost
-        | FROM lineitem JOIN pp ON l_partkey = p_partkey
-        |  JOIN rs ON l_suppkey = s_suppkey
-        | GROUP BY 1, 2),
-        |best AS (SELECT l_partkey, MIN(min_cost) AS best_cost FROM cost GROUP BY 1)
-        |SELECT s_acctbal, s_name, n_name, l_partkey AS p_partkey, min_cost
-        |FROM cost JOIN best USING (l_partkey) JOIN rs ON l_suppkey = s_suppkey
-        |WHERE min_cost = best_cost
-        |ORDER BY s_acctbal DESC, n_name, s_name, p_partkey LIMIT 100""".stripMargin,
-    // the gate compares exact DECIMALs (value·1000 > total — integer
-    // cents both engines); the emitted value is the one decimal→double cast
-    "q11_important_parts" ->
-      """WITH rs AS (
-        | SELECT s_suppkey FROM supplier, nation, region
-        | WHERE s_nationkey = n_nationkey AND n_regionkey = r_regionkey
-        |  AND r_name = 'AFRICA'),
-        |v AS (
-        | SELECT l_partkey, SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS val
-        | FROM lineitem JOIN rs ON l_suppkey = s_suppkey GROUP BY 1),
-        |t AS (SELECT SUM(val) AS total FROM v)
-        |SELECT l_partkey AS p_partkey, CAST(val AS DOUBLE) AS value
-        |FROM v, t WHERE val * 1000 > total
-        |ORDER BY value DESC, p_partkey""".stripMargin,
-    // both conditional quantity sums are BIGINT (quantities are
-    // integer-valued doubles; CAST agrees on integers) — pure integer gate
-    "q20_excess_shippers" ->
-      """WITH pp AS (SELECT p_partkey FROM part WHERE p_size <= 25),
-        |pair AS (
-        | SELECT l_partkey, l_suppkey,
-        |  SUM(CASE WHEN year(l_shipdate) = 1997 THEN CAST(l_quantity AS BIGINT)
-        |      ELSE 0 END) AS q97,
-        |  SUM(CAST(l_quantity AS BIGINT)) AS qall
-        | FROM lineitem JOIN pp ON l_partkey = p_partkey GROUP BY 1, 2),
-        |ex AS (SELECT l_suppkey, COUNT(*) AS n_excess FROM pair
-        |       WHERE q97 > 0 AND 2 * q97 > qall GROUP BY 1)
-        |SELECT s_suppkey, s_name, n_excess
-        |FROM ex JOIN supplier ON l_suppkey = s_suppkey
-        | JOIN nation ON s_nationkey = n_nationkey
-        | JOIN region ON n_regionkey = r_regionkey
-        |WHERE r_name = 'ASIA'
-        |ORDER BY s_suppkey""".stripMargin,
-    "q10_returns" ->
-      """WITH pc AS (
-        | SELECT o_custkey,
-        |  CAST(SUM(CAST(l_extendedprice*(1-l_discount) AS DECIMAL(28,6))) AS DOUBLE) AS revenue
-        | FROM lineitem, orders
-        | WHERE l_orderkey = o_orderkey AND l_returnflag = 'R'
-        |  AND o_orderdate >= TIMESTAMP '1998-01-01'
-        |  AND o_orderdate < TIMESTAMP '1998-07-01'
-        | GROUP BY 1)
-        |SELECT c_custkey, c_name, revenue, c_acctbal, n_name
-        |FROM pc JOIN customer ON o_custkey = c_custkey
-        | JOIN nation ON c_nationkey = n_nationkey
-        |ORDER BY revenue DESC, c_custkey LIMIT 20""".stripMargin,
+        | JOIN supplier ON l_suppkey = s_suppkey
+        | JOIN dimn cn ON c_nationkey = cn.n_nationkey
+        | JOIN dimn sn ON s_nationkey = sn.n_nationkey
+        |ORDER BY l_orderkey, l_linenumber""".stripMargin)),
+    Q("incremental_interval", incrementalInterval, Some(
+      """SELECT CAST(year(ts) AS BIGINT) AS y, CAST(month(ts) AS BIGINT) AS m,
+        | CAST(day(ts) AS BIGINT) AS d, COUNT(*) AS n,
+        | CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total
+        |FROM events
+        |WHERE ts >= TIMESTAMP '2024-01-10' AND ts < TIMESTAMP '2024-01-12'
+        |GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin)),
+    Q("upsert_do_nothing", upsertDoNothingQ, Some(
+      """SELECT user_id, event_type, event_id,
+        | strftime(ts, '%Y-%m-%d %H:%M:%S') AS first_ts, value
+        |FROM events
+        |QUALIFY row_number() OVER (PARTITION BY user_id, event_type ORDER BY ts, event_id) = 1
+        |ORDER BY user_id, event_type""".stripMargin)),
+    Q("upsert_do_update", upsertDoUpdateQ, Some(
+      """SELECT user_id, event_type, event_id,
+        | strftime(ts, '%Y-%m-%d %H:%M:%S') AS last_ts, value
+        |FROM events
+        |QUALIFY row_number() OVER (PARTITION BY user_id, event_type ORDER BY ts DESC, event_id DESC) = 1
+        |ORDER BY user_id, event_type""".stripMargin)),
+    Q("json_extract_events", jsonExtractEvents, Some(
+      """SELECT event_type, CAST(SUM(CAST(props->>'$.k' AS BIGINT)) AS BIGINT) AS sum_k, COUNT(*) AS n
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin)),
+    Q("hourly_rollup", hourlyRollup, Some(
+      """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hour_start,
+        | event_type, COUNT(*) AS n,
+        | CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total
+        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
+    Q("hourly_gapfill", hourlyGapfill, Some(
+      """WITH hourly AS (
+        | SELECT date_trunc('hour', ts) h, event_type, COUNT(*) n,
+        |   CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*) AS avg_value
+        | FROM events GROUP BY 1, 2),
+        |bounds AS (SELECT MIN(h) lo, MAX(h) hi FROM hourly),
+        |spine AS (SELECT unnest(generate_series(lo, hi, INTERVAL 1 HOUR)) AS h FROM bounds),
+        |grid AS (SELECT s.h, t.event_type
+        |         FROM spine s CROSS JOIN (SELECT DISTINCT event_type FROM hourly) t)
+        |SELECT strftime(g.h, '%Y-%m-%d %H:%M:%S') AS hour_start, g.event_type,
+        | COALESCE(hh.n, 0) AS n,
+        | last_value(hh.avg_value IGNORE NULLS)
+        |   OVER (PARTITION BY g.event_type ORDER BY g.h
+        |         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS last_avg_value
+        |FROM grid g LEFT JOIN hourly hh ON g.h = hh.h AND g.event_type = hh.event_type
+        |ORDER BY hour_start, g.event_type""".stripMargin)),
+    Q("audience_overlap", audienceOverlap, Some(
+      """WITH ut AS (SELECT DISTINCT user_id, event_type FROM events)
+        |SELECT a.event_type AS t1, b.event_type AS t2, COUNT(*) AS n_users
+        |FROM ut a JOIN ut b ON a.user_id = b.user_id AND a.event_type <= b.event_type
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
+    Q("sessionize", sessionize, Some(
+      """WITH x AS (
+        | SELECT user_id, event_id, ts,
+        |  epoch_us(ts) - lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS gap
+        | FROM events),
+        |s AS (
+        | SELECT user_id, event_id, ts,
+        |  SUM(CASE WHEN gap IS NULL OR gap > 1800000000 THEN 1 ELSE 0 END)
+        |   OVER (PARTITION BY user_id ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING) AS session_id
+        | FROM x)
+        |SELECT user_id, CAST(session_id AS BIGINT) AS session_id, COUNT(*) AS n_events,
+        | strftime(MIN(ts), '%Y-%m-%d %H:%M:%S') AS session_start,
+        | strftime(MAX(ts), '%Y-%m-%d %H:%M:%S') AS session_end
+        |FROM s GROUP BY user_id, session_id ORDER BY user_id, session_id""".stripMargin)),
+    // the proven sessionize lag-gap CTE + the proven events_spike z-test
+    // CTE, joined on the half-open overlap predicate the responsibility-
+    // bin decomposition evaluates (sessions closed at last-event +1 us)
+    Q("session_incidents", sessionIncidents, Some(
+      """WITH x AS (
+        | SELECT user_id, event_id, ts,
+        |  epoch_us(ts) - lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS gap
+        | FROM events),
+        |s AS (
+        | SELECT user_id, event_id, ts,
+        |  SUM(CASE WHEN gap IS NULL OR gap > 1800000000 THEN 1 ELSE 0 END)
+        |   OVER (PARTITION BY user_id ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING) AS session_id
+        | FROM x),
+        |sess AS (
+        | SELECT user_id, CAST(session_id AS BIGINT) AS session_id,
+        |  MIN(ts) AS s_start, MAX(ts) AS s_last
+        | FROM s GROUP BY user_id, session_id),
+        |h AS (
+        | SELECT date_trunc('hour', ts) AS hour_ts, event_type, COUNT(*) AS cnt
+        | FROM events GROUP BY 1, 2),
+        |zx AS (
+        | SELECT hour_ts, event_type, cnt,
+        |  COUNT(*) OVER w AS n_prior, SUM(cnt) OVER w AS s_prior,
+        |  SUM(cnt * cnt) OVER w AS q_prior
+        | FROM h
+        | WINDOW w AS (PARTITION BY event_type ORDER BY hour_ts
+        |  ROWS BETWEEN 24 PRECEDING AND 1 PRECEDING)),
+        |win AS (
+        | SELECT event_type, hour_ts AS w_start, hour_ts + INTERVAL 1 HOUR AS w_end
+        | FROM zx
+        | WHERE n_prior >= 8 AND n_prior * cnt > s_prior
+        |  AND (n_prior - 1) * (n_prior * cnt - s_prior) * (n_prior * cnt - s_prior)
+        |      > 9 * n_prior * (n_prior * q_prior - s_prior * s_prior))
+        |SELECT user_id, session_id,
+        | strftime(s_start, '%Y-%m-%d %H:%M:%S') AS session_start,
+        | strftime(s_last, '%Y-%m-%d %H:%M:%S') AS session_end,
+        | event_type, strftime(w_start, '%Y-%m-%d %H:%M:%S') AS incident_hour
+        |FROM sess JOIN win
+        | ON s_start < w_end AND w_start < s_last + INTERVAL 1 MICROSECOND
+        |ORDER BY user_id, session_id, event_type, incident_hour""".stripMargin)),
+    // weights are exact integer micros; value*dt is ONE IEEE multiply on
+    // both engines, summed in DECIMAL (order-independent), one final
+    // IEEE division — the §6 parity form
+    Q("events_twap", eventsTwap, Some(
+      """WITH x AS (
+        | SELECT event_type, value,
+        |  epoch_us(lead(ts) OVER (PARTITION BY event_type ORDER BY ts, event_id))
+        |   - epoch_us(ts) AS dt
+        | FROM events)
+        |SELECT event_type,
+        | COUNT(dt) AS n_obs,
+        | CAST(SUM(dt) AS BIGINT) AS total_dt_us,
+        | CAST(SUM(CAST(value * dt AS DECIMAL(28,6))) AS DOUBLE)
+        |  / CAST(SUM(dt) AS DOUBLE) AS twap,
+        | CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) / COUNT(value) AS plain_mean
+        |FROM x GROUP BY event_type ORDER BY event_type""".stripMargin)),
+    // OHLC: positional endpoints via full-tie-break row_numbers (ts,
+    // event_id — unique), identical ranks in both engines; values reach
+    // the output untouched, so parity is pure ordering
+    Q("events_ohlc", eventsOhlc, Some(
+      """WITH b AS (
+        | SELECT event_type, date_trunc('hour', ts) AS h, value,
+        |  ROW_NUMBER() OVER (PARTITION BY event_type, date_trunc('hour', ts)
+        |                     ORDER BY ts, event_id) AS ra,
+        |  ROW_NUMBER() OVER (PARTITION BY event_type, date_trunc('hour', ts)
+        |                     ORDER BY ts DESC, event_id DESC) AS rd
+        | FROM events WHERE value IS NOT NULL)
+        |SELECT event_type, strftime(h, '%Y-%m-%d %H:%M:%S') AS hour_start,
+        | COUNT(*) AS n,
+        | MAX(CASE WHEN ra = 1 THEN value END) AS open,
+        | MAX(value) AS high,
+        | MIN(value) AS low,
+        | MAX(CASE WHEN rd = 1 THEN value END) AS close
+        |FROM b GROUP BY 1, 2 ORDER BY event_type, hour_start""".stripMargin)),
+    // integer-exact decay: BIGINT shift weights (engines agree on <<),
+    // DECIMAL(18,2) value, exact scaled sum; the only float ops are the
+    // final cast + one exact power-of-two division
+    Q("user_decay_score", userDecayScore, Some(
+      """WITH a AS (SELECT max(ts) AS mx FROM events),
+        |x AS (
+        | SELECT user_id, value,
+        |  CAST((epoch_us(mx) - epoch_us(ts)) // 3600000000 AS BIGINT) AS age_h
+        | FROM events, a)
+        |SELECT user_id, COUNT(*) AS n_events,
+        | CAST(MIN(age_h) AS BIGINT) AS freshest_age_h,
+        | CAST(SUM(CASE WHEN age_h <= 40
+        |   THEN CAST(value AS DECIMAL(18,2)) * (CAST(1 AS BIGINT) << CAST(40 - age_h AS INT))
+        |   END) AS DOUBLE) / 1099511627776.0 AS decay_score
+        |FROM x GROUP BY user_id ORDER BY user_id""".stripMargin)),
+    Q("dedup_exact", dedupExact, Some(
+      """SELECT min(doc_id) AS canonical_id, md5(text) AS content_hash, COUNT(*) AS group_size
+        |FROM documents GROUP BY md5(text) ORDER BY canonical_id""".stripMargin)),
+    Q("dedup_exact_normalized", dedupExactNormalized, Some(
+      """SELECT min(doc_id) AS canonical_id,
+        | md5(trim(regexp_replace(regexp_replace(lower(text), '[[:punct:]]', ' ', 'g'), '\s+', ' ', 'g'))) AS content_hash,
+        | COUNT(*) AS group_size
+        |FROM documents GROUP BY 2 ORDER BY canonical_id""".stripMargin)),
+    Q("funnel_conversion", funnelConversion, Some(
+      """WITH fc AS (SELECT user_id, MIN(ts) AS first_click FROM events
+        |            WHERE event_type = 'click' GROUP BY 1),
+        |p AS (SELECT user_id, ts FROM events WHERE event_type = 'purchase')
+        |SELECT fc.user_id, strftime(fc.first_click, '%Y-%m-%d %H:%M:%S') AS first_click,
+        | CAST(MAX(CASE WHEN p.ts >= fc.first_click THEN 1 ELSE 0 END) AS BIGINT) AS converted
+        |FROM fc LEFT JOIN p ON p.user_id = fc.user_id
+        |GROUP BY fc.user_id, fc.first_click ORDER BY fc.user_id""".stripMargin)),
+    Q("funnel_windowed", funnelWindowed, Some(
+      """WITH v AS (SELECT user_id, MIN(ts) AS v_ts FROM events
+        |           WHERE event_type = 'view' GROUP BY 1),
+        |c AS (SELECT e.user_id, MIN(e.ts) AS c_ts
+        |      FROM events e JOIN v ON e.user_id = v.user_id
+        |      WHERE e.event_type = 'click'
+        |        AND e.ts >= v.v_ts AND e.ts <= v.v_ts + INTERVAL 1 HOUR
+        |      GROUP BY 1),
+        |p AS (SELECT e.user_id, MIN(e.ts) AS p_ts
+        |      FROM events e JOIN c ON e.user_id = c.user_id
+        |      WHERE e.event_type = 'purchase'
+        |        AND e.ts >= c.c_ts AND e.ts <= c.c_ts + INTERVAL 1 HOUR
+        |      GROUP BY 1)
+        |SELECT (SELECT COUNT(*) FROM v) AS n_view,
+        |       (SELECT COUNT(*) FROM c) AS n_click_1h,
+        |       (SELECT COUNT(*) FROM p) AS n_purchase_1h""".stripMargin)),
+    Q("cohort_retention", cohortRetention, Some(
+      """WITH fs AS (SELECT user_id, MIN(CAST(ts AS DATE)) AS cohort_day
+        |            FROM events GROUP BY 1),
+        |d AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events)
+        |SELECT strftime(fs.cohort_day, '%Y-%m-%d') AS cohort_day,
+        | CAST(d.day - fs.cohort_day AS BIGINT) AS day_offset,
+        | COUNT(*) AS active_users
+        |FROM d JOIN fs USING (user_id)
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
+    Q("quality_filter", qualityFilter, Some(
+      """WITH s AS (
+        | SELECT doc_id,
+        |  least(CAST(len(regexp_split_to_array(text, '\s+')) AS DOUBLE) / 50.0, 1.0) * 0.5
+        |   + CAST(len(list_filter(regexp_split_to_array(lower(text), '\s+'),
+        |       x -> x IN ('the','a','of','and','to','in','is','was','for','on'))) AS DOUBLE)
+        |     / CAST(len(regexp_split_to_array(text, '\s+')) AS DOUBLE) * 0.5 AS quality_score
+        | FROM documents),
+        |t AS (SELECT quantile_cont(quality_score, 0.25) AS thr FROM s)
+        |SELECT doc_id, quality_score FROM s, t
+        |WHERE quality_score >= thr ORDER BY doc_id""".stripMargin)),
+    Q("quality_filter_approx", qualityFilterApprox),
+    Q("price_percentiles", pricePercentiles, Some(
+      """SELECT l_returnflag,
+        | quantile_cont(l_extendedprice, 0.25) AS p25,
+        | quantile_cont(l_extendedprice, 0.5) AS p50,
+        | quantile_cont(l_extendedprice, 0.75) AS p75,
+        | quantile_cont(l_extendedprice, 0.95) AS p95
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)),
+    Q("price_percentiles_approx", pricePercentilesApprox),
+    // bottom-k merge is exact (semilattice), so the oracle computes the
+    // DIRECT bottom-k per flag: same md5 hex-prefix hash (the proven
+    // zorder_scan parity), same k smallest (h, v) multiset (row_number
+    // ties only between identical pairs), quantile_cont == the sketch's
+    // percentile-order interpolation (the proven parity)
+    Q("price_quantile_sketch", priceQuantileSketch, Some(
+      """WITH h AS (
+        | SELECT l_returnflag,
+        |  CAST(concat('0x', substr(md5(concat(CAST(l_orderkey AS VARCHAR), ':', CAST(l_linenumber AS VARCHAR))), 1, 8)) AS BIGINT) AS hh,
+        |  CAST(l_extendedprice AS DOUBLE) AS v
+        | FROM lineitem),
+        |r AS (SELECT l_returnflag, v,
+        |       row_number() OVER (PARTITION BY l_returnflag ORDER BY hh, v) AS rn
+        |      FROM h),
+        |n AS (SELECT l_returnflag, CAST(COUNT(*) AS BIGINT) AS n FROM h GROUP BY 1),
+        |s AS (SELECT l_returnflag,
+        |       quantile_cont(v, 0.25) AS p25_est,
+        |       quantile_cont(v, 0.5) AS p50_est,
+        |       quantile_cont(v, 0.95) AS p95_est
+        |      FROM r WHERE rn <= 256 GROUP BY 1)
+        |SELECT n.l_returnflag, n.n, s.p25_est, s.p50_est, s.p95_est
+        |FROM n JOIN s USING (l_returnflag) ORDER BY l_returnflag""".stripMargin)),
+    Q("dedup_ngram_jaccard", dedupNgramJaccard, Some(
+      """WITH toks AS (SELECT doc_id, regexp_split_to_array(text, '\s+') w FROM documents),
+        |sh AS (SELECT DISTINCT doc_id, array_to_string(w[i.i:i.i+2], ' ') AS sh
+        |       FROM toks, unnest(generate_series(1, len(w)-2)) i(i) WHERE len(w) >= 3),
+        |sz AS (SELECT doc_id, COUNT(*) n_sh FROM sh GROUP BY 1),
+        |pairs AS (SELECT a.doc_id d1, b.doc_id d2, COUNT(*) common
+        |          FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id GROUP BY 1, 2)
+        |SELECT d1, d2, common,
+        | CAST(common AS DOUBLE) / (x.n_sh + y.n_sh - common) AS jaccard
+        |FROM pairs JOIN sz x ON d1 = x.doc_id JOIN sz y ON d2 = y.doc_id
+        |WHERE CAST(common AS DOUBLE) / (x.n_sh + y.n_sh - common) >= 0.5
+        |ORDER BY d1, d2""".stripMargin)),
+    Q("dedup_ngram_jaccard_capped", dedupNgramJaccardCapped, Some(
+      """WITH toks AS (SELECT doc_id, regexp_split_to_array(text, '\s+') w FROM documents),
+        |sh0 AS (SELECT DISTINCT doc_id, array_to_string(w[i.i:i.i+2], ' ') AS sh
+        |        FROM toks, unnest(generate_series(1, len(w)-2)) i(i) WHERE len(w) >= 3),
+        |keep AS (SELECT sh FROM sh0 GROUP BY sh HAVING COUNT(*) <= 2),
+        |sh AS (SELECT sh0.doc_id, sh0.sh FROM sh0 JOIN keep USING (sh)),
+        |sz AS (SELECT doc_id, COUNT(*) n_sh FROM sh GROUP BY 1),
+        |pairs AS (SELECT a.doc_id d1, b.doc_id d2, COUNT(*) common
+        |          FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id GROUP BY 1, 2)
+        |SELECT d1, d2, common,
+        | CAST(common AS DOUBLE) / (x.n_sh + y.n_sh - common) AS jaccard
+        |FROM pairs JOIN sz x ON d1 = x.doc_id JOIN sz y ON d2 = y.doc_id
+        |WHERE CAST(common AS DOUBLE) / (x.n_sh + y.n_sh - common) >= 0.5
+        |ORDER BY d1, d2""".stripMargin)),
+    Q("fact_orders_hashsk", factOrdersHashSk, Some(
+      """SELECT o_orderkey, c_name
+        |FROM orders JOIN customer ON o_custkey = c_custkey
+        |ORDER BY o_orderkey""".stripMargin)),
+    Q("dedup_minhash", dedupMinhash),
+    Q("dedup_minhash_capped", dedupMinhashCapped),
+    Q("dedup_simhash", dedupSimhash),
+    Q("dedup_embedding", dedupEmbedding, Some(
+      """WITH nr AS (
+        | SELECT vec_id, label, embedding,
+        |  sqrt(CAST((SELECT SUM(CAST(CAST(u.x AS DOUBLE) * CAST(u.x AS DOUBLE) AS DECIMAL(28,12)))
+        |             FROM unnest(embedding) u(x)) AS DOUBLE)) AS nrm
+        | FROM embeddings)
+        |SELECT a.vec_id AS v1, b.vec_id AS v2,
+        | CAST((SELECT SUM(CAST(CAST(z.z[1] AS DOUBLE) * CAST(z.z[2] AS DOUBLE) AS DECIMAL(28,12)))
+        |       FROM unnest(list_zip(a.embedding, b.embedding)) z(z)) AS DOUBLE)
+        |   / (a.nrm * b.nrm) AS cosine
+        |FROM nr a JOIN nr b ON a.label = b.label AND a.vec_id < b.vec_id
+        |WHERE CAST((SELECT SUM(CAST(CAST(z.z[1] AS DOUBLE) * CAST(z.z[2] AS DOUBLE) AS DECIMAL(28,12)))
+        |       FROM unnest(list_zip(a.embedding, b.embedding)) z(z)) AS DOUBLE)
+        |   / (a.nrm * b.nrm) >= 0.35
+        |ORDER BY v1, v2""".stripMargin)),
+    Q("dedup_semantic", dedupSemantic),
+    Q("sim_topk", simTopK, Some(
+      """WITH nr AS (
+        | SELECT vec_id, embedding,
+        |  sqrt(CAST((SELECT SUM(CAST(CAST(u.x AS DOUBLE) * CAST(u.x AS DOUBLE) AS DECIMAL(28,12)))
+        |             FROM unnest(embedding) u(x)) AS DOUBLE)) AS nrm
+        | FROM embeddings),
+        |s AS (
+        | SELECT q.vec_id AS q_id, c.vec_id AS vec_id,
+        |  CAST((SELECT SUM(CAST(CAST(z.z[1] AS DOUBLE) * CAST(z.z[2] AS DOUBLE) AS DECIMAL(28,12)))
+        |        FROM unnest(list_zip(q.embedding, c.embedding)) z(z)) AS DOUBLE)
+        |    / (q.nrm * c.nrm) AS cosine
+        | FROM nr q JOIN nr c ON q.vec_id < 8 AND c.vec_id != q.vec_id)
+        |SELECT q_id, CAST(row_number() OVER (PARTITION BY q_id ORDER BY cosine DESC, vec_id) AS BIGINT) AS rk,
+        | vec_id, cosine
+        |FROM s
+        |QUALIFY row_number() OVER (PARTITION BY q_id ORDER BY cosine DESC, vec_id) <= 10
+        |ORDER BY q_id, rk""".stripMargin)),
+    Q("sim_lsh_topk", simLshTopK),
+    Q("sim_lsh_multi_topk", simLshMultiTopK),
+    // cosine construction copied from sim_topk; top-k means take the
+    // VARCHAR-mediated double->DECIMAL route (the embedding_centroids
+    // parity rule) so both engines accumulate identical decimals
+    Q("bitext_mine", bitextMine, Some(
+      """WITH nr AS (
+        | SELECT vec_id, label, embedding,
+        |  sqrt(CAST((SELECT SUM(CAST(CAST(u.x AS DOUBLE) * CAST(u.x AS DOUBLE) AS DECIMAL(28,12)))
+        |             FROM unnest(embedding) u(x)) AS DOUBLE)) AS nrm
+        | FROM embeddings),
+        |c AS (
+        | SELECT q.vec_id AS src_id, t.vec_id AS tgt_id,
+        |  CAST((SELECT SUM(CAST(CAST(z.z[1] AS DOUBLE) * CAST(z.z[2] AS DOUBLE) AS DECIMAL(28,12)))
+        |        FROM unnest(list_zip(q.embedding, t.embedding)) z(z)) AS DOUBLE)
+        |    / (q.nrm * t.nrm) AS cosine
+        | FROM nr q JOIN nr t
+        |   ON q.label % 2 = 0 AND q.vec_id < 32 AND t.label % 2 = 1
+        |      AND q.vec_id != t.vec_id),
+        |ax AS (SELECT src_id,
+        |   CAST(SUM(CAST(CAST(cosine AS VARCHAR) AS DECIMAL(28,12))) AS DOUBLE) / 4 AS a_src
+        | FROM (SELECT src_id, cosine,
+        |         row_number() OVER (PARTITION BY src_id ORDER BY cosine DESC, tgt_id) AS rn
+        |       FROM c)
+        | WHERE rn <= 4 GROUP BY src_id),
+        |ay AS (SELECT tgt_id,
+        |   CAST(SUM(CAST(CAST(cosine AS VARCHAR) AS DECIMAL(28,12))) AS DOUBLE) / 4 AS a_tgt
+        | FROM (SELECT tgt_id, cosine,
+        |         row_number() OVER (PARTITION BY tgt_id ORDER BY cosine DESC, src_id) AS rn
+        |       FROM c)
+        | WHERE rn <= 4 GROUP BY tgt_id),
+        |m AS (SELECT c.src_id, c.tgt_id, c.cosine,
+        |        c.cosine / ((ax.a_src + ay.a_tgt) / 2.0) AS margin
+        |      FROM c JOIN ax USING (src_id) JOIN ay USING (tgt_id)
+        |      WHERE (ax.a_src + ay.a_tgt) / 2.0 <> 0)
+        |SELECT src_id, tgt_id, cosine, margin FROM m
+        |ORDER BY margin DESC, src_id, tgt_id LIMIT 50""".stripMargin)),
+    Q("text_langid", textLangId, Some(
+      """WITH t AS (SELECT doc_id, regexp_split_to_array(lower(text), '\s+') w FROM documents),
+        |s AS (SELECT doc_id, len(w) AS nt,
+        | CAST(len(list_filter(w, x -> x IN ('der','die','das','und','zu','ein','eine','mit','von','nicht'))) AS BIGINT) hits_de,
+        | CAST(len(list_filter(w, x -> x IN ('the','a','of','and','to','in','is','was','for','on'))) AS BIGINT) hits_en,
+        | CAST(len(list_filter(w, x -> x IN ('el','la','de','y','que','un','una','por','con','los'))) AS BIGINT) hits_es,
+        | CAST(len(list_filter(w, x -> x IN ('le','la','de','et','que','un','une','pour','dans','les'))) AS BIGINT) hits_fr
+        | FROM t)
+        |SELECT doc_id, hits_de, hits_en, hits_es, hits_fr,
+        | CASE WHEN greatest(hits_de, hits_en, hits_es, hits_fr) = 0 THEN 'und'
+        |      WHEN hits_de = greatest(hits_de, hits_en, hits_es, hits_fr) THEN 'de'
+        |      WHEN hits_en = greatest(hits_de, hits_en, hits_es, hits_fr) THEN 'en'
+        |      WHEN hits_es = greatest(hits_de, hits_en, hits_es, hits_fr) THEN 'es'
+        |      ELSE 'fr' END AS pred_lang,
+        | CAST(greatest(hits_de, hits_en, hits_es, hits_fr) AS DOUBLE) / CAST(nt AS DOUBLE) AS lang_score
+        |FROM s ORDER BY doc_id""".stripMargin)),
+    // the proven text_langid CTE grouped against the corpus's own labels
+    Q("langid_eval", langidEval, Some(
+      """WITH t AS (SELECT doc_id, lang, regexp_split_to_array(lower(text), '\s+') w FROM documents),
+        |s AS (SELECT doc_id, lang,
+        | CAST(len(list_filter(w, x -> x IN ('der','die','das','und','zu','ein','eine','mit','von','nicht'))) AS BIGINT) hits_de,
+        | CAST(len(list_filter(w, x -> x IN ('the','a','of','and','to','in','is','was','for','on'))) AS BIGINT) hits_en,
+        | CAST(len(list_filter(w, x -> x IN ('el','la','de','y','que','un','una','por','con','los'))) AS BIGINT) hits_es,
+        | CAST(len(list_filter(w, x -> x IN ('le','la','de','et','que','un','une','pour','dans','les'))) AS BIGINT) hits_fr
+        | FROM t),
+        |p AS (SELECT lang,
+        | CASE WHEN greatest(hits_de, hits_en, hits_es, hits_fr) = 0 THEN 'und'
+        |      WHEN hits_de = greatest(hits_de, hits_en, hits_es, hits_fr) THEN 'de'
+        |      WHEN hits_en = greatest(hits_de, hits_en, hits_es, hits_fr) THEN 'en'
+        |      WHEN hits_es = greatest(hits_de, hits_en, hits_es, hits_fr) THEN 'es'
+        |      ELSE 'fr' END AS pred_lang
+        | FROM s),
+        |c AS (SELECT lang, pred_lang, COUNT(*) AS n FROM p GROUP BY 1, 2)
+        |SELECT lang, pred_lang, n,
+        | CAST(SUM(n) OVER (PARTITION BY lang) AS BIGINT) AS label_total,
+        | CAST(n AS DOUBLE) / CAST(SUM(n) OVER (PARTITION BY lang) AS DOUBLE) AS recall_share
+        |FROM c ORDER BY lang, pred_lang""".stripMargin)),
+    Q("lang_balance", langBalance, Some(
+      """WITH b AS (
+        | SELECT source, lang, COUNT(*) AS n_docs,
+        |  CAST(SUM(len(regexp_split_to_array(text, '\s+'))) AS BIGINT) AS n_tokens
+        | FROM documents GROUP BY 1, 2)
+        |SELECT source, lang, n_docs, n_tokens,
+        | CAST(n_docs AS DOUBLE) / CAST(SUM(n_docs) OVER (PARTITION BY source) AS DOUBLE) AS doc_share
+        |FROM b ORDER BY source, lang""".stripMargin)),
+    // the proven quality_score fragment + SQL-standard percent_rank
+    // ((rank-1)/(n-1): rank arithmetic + one IEEE division, engine-equal)
+    Q("quality_normalize", qualityNormalize, Some(
+      """WITH s AS (
+        | SELECT doc_id, source,
+        |  least(CAST(len(regexp_split_to_array(text, '\s+')) AS DOUBLE) / 50.0, 1.0) * 0.5
+        |   + CAST(len(list_filter(regexp_split_to_array(lower(text), '\s+'),
+        |       x -> x IN ('the','a','of','and','to','in','is','was','for','on'))) AS DOUBLE)
+        |     / CAST(len(regexp_split_to_array(text, '\s+')) AS DOUBLE) * 0.5 AS quality_score
+        | FROM documents)
+        |SELECT doc_id, source, quality_score,
+        | percent_rank() OVER w AS top_rank,
+        | CAST(percent_rank() OVER w <= 0.75 AS BIGINT) AS keep
+        |FROM s
+        |WINDOW w AS (PARTITION BY source ORDER BY quality_score DESC)
+        |ORDER BY doc_id""".stripMargin)),
+    // the proven split_leakfree chain + a (splits x sources) share rollup
+    Q("split_balance", splitBalance, Some(
+      """WITH RECURSIVE toks AS (SELECT doc_id, regexp_split_to_array(text, '\s+') w FROM documents),
+        |sh AS (SELECT DISTINCT doc_id, array_to_string(w[i.i:i.i+2], ' ') AS sh
+        |       FROM toks, unnest(generate_series(1, len(w)-2)) i(i) WHERE len(w) >= 3),
+        |sz AS (SELECT doc_id, COUNT(*) n_sh FROM sh GROUP BY 1),
+        |cnt AS (SELECT a.doc_id d1, b.doc_id d2, COUNT(*) common
+        |        FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id GROUP BY 1, 2),
+        |pairs AS (SELECT d1, d2 FROM cnt JOIN sz x ON d1 = x.doc_id JOIN sz y ON d2 = y.doc_id
+        |          WHERE CAST(common AS DOUBLE) / (x.n_sh + y.n_sh - common) >= 0.5),
+        |edges AS (SELECT d1 a, d2 b FROM pairs UNION SELECT d2, d1 FROM pairs),
+        |reach(id, r) AS (
+        | SELECT a, a FROM edges
+        | UNION
+        | SELECT reach.id, edges.b FROM reach JOIN edges ON reach.r = edges.a
+        |),
+        |comp AS (SELECT id AS doc_id, MIN(r) AS canonical_id FROM reach GROUP BY id),
+        |g AS (SELECT d.doc_id, d.source, COALESCE(c.canonical_id, d.doc_id) AS canon
+        |      FROM documents d LEFT JOIN comp c ON d.doc_id = c.doc_id),
+        |assg AS (SELECT doc_id, source,
+        |       CAST(concat('0x', substr(md5(CAST(canon AS VARCHAR)), 1, 8)) AS BIGINT) % 10 AS bucket
+        |      FROM g),
+        |c2 AS (SELECT CASE WHEN bucket < 8 THEN 'train' WHEN bucket < 9 THEN 'val'
+        |        ELSE 'test' END AS split, source, COUNT(*) AS n_docs
+        |       FROM assg GROUP BY 1, 2)
+        |SELECT split, source, n_docs,
+        | CAST(n_docs AS DOUBLE) / CAST(SUM(n_docs) OVER (PARTITION BY split) AS DOUBLE) AS split_share,
+        | CAST(SUM(n_docs) OVER (PARTITION BY source) AS DOUBLE)
+        |  / CAST(SUM(n_docs) OVER () AS DOUBLE) AS corpus_share
+        |FROM c2 ORDER BY split, source""".stripMargin)),
+    Q("text_quality", textQuality, Some(
+      """WITH s AS (
+        | SELECT doc_id,
+        |  CAST(length(text) AS BIGINT) AS n_chars_q,
+        |  CAST(len(regexp_split_to_array(text, '\s+')) AS BIGINT) AS n_tokens,
+        |  CAST(length(text) - length(regexp_replace(text, '[[:punct:]]', '', 'g')) AS BIGINT) AS n_punct,
+        |  CAST(length(text) - length(regexp_replace(text, '[0-9]', '', 'g')) AS BIGINT) AS n_digits,
+        |  CAST(len(list_filter(regexp_split_to_array(lower(text), '\s+'),
+        |    x -> x IN ('the','a','of','and','to','in','is','was','for','on'))) AS BIGINT) AS n_stopwords
+        | FROM documents)
+        |SELECT doc_id, n_chars_q, n_tokens, n_punct, n_digits, n_stopwords,
+        | CAST(n_chars_q - (n_tokens - 1) AS DOUBLE) / CAST(n_tokens AS DOUBLE) AS avg_token_len,
+        | CAST(n_stopwords AS DOUBLE) / CAST(n_tokens AS DOUBLE) AS stopword_ratio,
+        | CAST(n_punct AS DOUBLE) / CAST(n_chars_q AS DOUBLE) AS punct_ratio,
+        | least(CAST(n_tokens AS DOUBLE) / 50.0, 1.0) * 0.5
+        |   + CAST(n_stopwords AS DOUBLE) / CAST(n_tokens AS DOUBLE) * 0.5 AS quality_score
+        |FROM s ORDER BY doc_id""".stripMargin)),
+    // cleared-denominator Flesch (see TextAnalysis.readability): all
+    // counts and the readable flag are pure integers, the score one IEEE
+    // division both engines evaluate on identical operands
+    Q("text_readability", textReadability, Some(
+      """WITH s AS (
+        | SELECT doc_id,
+        |  CAST(len(regexp_split_to_array(text, '\s+')) AS BIGINT) AS n_words,
+        |  CAST(greatest(len(regexp_extract_all(text, '[.!?]+')), 1) AS BIGINT)
+        |    AS n_sentences,
+        |  CAST(len(regexp_extract_all(lower(text), '[aeiouy]+')) AS BIGINT)
+        |    AS n_syllables
+        | FROM documents)
+        |SELECT doc_id, n_words, n_sentences, n_syllables,
+        | CAST(206835*n_sentences*n_words - 1015*n_words*n_words
+        |      - 84600*n_syllables*n_sentences AS DOUBLE)
+        |   / CAST(1000*n_sentences*n_words AS DOUBLE) AS flesch,
+        | CAST(206835*n_sentences*n_words - 1015*n_words*n_words
+        |      - 84600*n_syllables*n_sentences
+        |      > 60 * 1000*n_sentences*n_words AS BIGINT) AS is_readable
+        |FROM s ORDER BY doc_id""".stripMargin)),
+    Q("quality_classifier", qualityClassifier, Some(
+      """WITH toks AS (SELECT doc_id,
+        |   list_filter(regexp_split_to_array(lower(text), '\s+'), x -> x <> '') AS w
+        | FROM documents),
+        |t AS (SELECT doc_id, unnest(w) AS tok FROM toks),
+        |sc AS (SELECT doc_id,
+        |   SUM(((CAST(concat('0x', substr(md5(tok), 1, 8)) AS BIGINT) % 64)
+        |        * 2654435761) % 21 - 10) AS s
+        | FROM t GROUP BY doc_id)
+        |SELECT k.doc_id, CAST(len(k.w) AS BIGINT) AS n_tokens,
+        | CAST(COALESCE(sc.s, 0) AS BIGINT) AS score,
+        | COALESCE(sc.s, 0) >= 0 AS keep
+        |FROM toks k LEFT JOIN sc USING (doc_id) ORDER BY k.doc_id""".stripMargin)),
+    // every fragment below is copied verbatim from an already-green
+    // oracle row (text_quality / quality_classifier / text_repetition) —
+    // the curation_pipeline compose-from-proven-fragments rule
+    Q("quality_ensemble", qualityEnsemble, Some(
+      """WITH s AS (
+        | SELECT doc_id,
+        |  CAST(len(regexp_split_to_array(text, '\s+')) AS BIGINT) AS n_tokens,
+        |  CAST(len(list_filter(regexp_split_to_array(lower(text), '\s+'),
+        |    x -> x IN ('the','a','of','and','to','in','is','was','for','on'))) AS BIGINT) AS n_stopwords
+        | FROM documents),
+        |q AS (SELECT doc_id,
+        |  least(CAST(n_tokens AS DOUBLE) / 50.0, 1.0) * 0.5
+        |    + CAST(n_stopwords AS DOUBLE) / CAST(n_tokens AS DOUBLE) * 0.5 AS quality_score
+        | FROM s),
+        |ct AS (SELECT doc_id, unnest(list_filter(regexp_split_to_array(lower(text), '\s+'),
+        |         x -> x <> '')) AS tok FROM documents),
+        |sc AS (SELECT doc_id,
+        |   SUM(((CAST(concat('0x', substr(md5(tok), 1, 8)) AS BIGINT) % 64)
+        |        * 2654435761) % 21 - 10) AS s
+        | FROM ct GROUP BY doc_id),
+        |clf AS (SELECT d.doc_id, CAST(COALESCE(sc.s, 0) AS BIGINT) AS clf_score
+        |        FROM documents d LEFT JOIN sc USING (doc_id)),
+        |rp AS (SELECT doc_id,
+        |   CAST(len(w) - len(list_distinct(w)) AS DOUBLE) / NULLIF(CAST(len(w) AS DOUBLE), 0) AS dup_frac
+        | FROM (SELECT doc_id, regexp_split_to_array(text, '\s+') w FROM documents)),
+        |v AS (SELECT q.doc_id, q.quality_score, clf.clf_score, rp.dup_frac,
+        |   CAST(CASE WHEN q.quality_score >= 0.5 THEN 1 ELSE 0 END
+        |     + CASE WHEN clf.clf_score >= 0 THEN 1 ELSE 0 END
+        |     + CASE WHEN rp.dup_frac <= 0.2 THEN 1 ELSE 0 END AS BIGINT) AS votes
+        | FROM q JOIN clf USING (doc_id) JOIN rp USING (doc_id))
+        |SELECT doc_id, quality_score, clf_score, dup_frac, votes,
+        | votes >= 2 AS keep
+        |FROM v ORDER BY doc_id""".stripMargin)),
+    Q("quality_calibration", qualityCalibration, Some(
+      // chains the PROVEN quality_classifier score CTE and quality_filter
+      // gate fragment verbatim (§6 oracle-chaining rule)
+      """WITH toks AS (SELECT doc_id,
+        |   list_filter(regexp_split_to_array(lower(text), '\s+'), x -> x <> '') AS w
+        | FROM documents),
+        |t AS (SELECT doc_id, unnest(w) AS tok FROM toks),
+        |sc AS (SELECT doc_id,
+        |   SUM(((CAST(concat('0x', substr(md5(tok), 1, 8)) AS BIGINT) % 64)
+        |        * 2654435761) % 21 - 10) AS s
+        | FROM t GROUP BY doc_id),
+        |q AS (
+        | SELECT doc_id,
+        |  least(CAST(len(regexp_split_to_array(text, '\s+')) AS DOUBLE) / 50.0, 1.0) * 0.5
+        |   + CAST(len(list_filter(regexp_split_to_array(lower(text), '\s+'),
+        |       x -> x IN ('the','a','of','and','to','in','is','was','for','on'))) AS DOUBLE)
+        |     / CAST(len(regexp_split_to_array(text, '\s+')) AS DOUBLE) * 0.5 AS quality_score
+        | FROM documents),
+        |thr AS (SELECT quantile_cont(quality_score, 0.25) AS thr FROM q),
+        |j AS (SELECT k.doc_id, COALESCE(sc.s, 0) AS clf_score, q.quality_score
+        |      FROM toks k LEFT JOIN sc USING (doc_id) JOIN q USING (doc_id)),
+        |b AS (SELECT (clf_score + 100000) // 10 AS band,
+        |       CASE WHEN quality_score >= thr THEN 1 ELSE 0 END AS passed
+        |      FROM j, thr)
+        |SELECT CAST(band * 10 - 100000 AS BIGINT) AS band_lo,
+        | COUNT(*) AS n_docs, CAST(SUM(passed) AS BIGINT) AS n_pass,
+        | CAST(SUM(passed) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS pass_rate
+        |FROM b GROUP BY band ORDER BY band_lo""".stripMargin)),
+    Q("dedup_eval", dedupEval),
+    Q("ann_eval", annEval),
+    Q("ann_eval_cached", annEvalCached,
+      // the exact baseline + all six index families' candidate frames —
+      // the index-build artifacts the cached eval scores (top-k-set-sized)
+      prepare = Some((s: SparkSession, d: String) => {
+        val b = new AnnBuilds(s, d)
+        val e = b.exact().persist()
+        e.count()
+        e.createOrReplaceTempView(annCacheExact)
+        b.families.foreach { case (name, f) =>
+          val p = f().persist()
+          p.count()
+          p.createOrReplaceTempView(annCacheView(name))
+        }
+      })),
+    // the proven dedup_ngram_jaccard CTE skeleton lifted to source keys;
+    // ratios are single IEEE divides of exact integer counts
+    Q("source_overlap", sourceOverlapQ, Some(
+      """WITH toks AS (SELECT source, regexp_split_to_array(text, '\s+') w FROM documents),
+        |sh AS (SELECT DISTINCT source, array_to_string(w[i.i:i.i+2], ' ') AS sh
+        |       FROM toks, unnest(generate_series(1, len(w)-2)) i(i) WHERE len(w) >= 3),
+        |sz AS (SELECT source, COUNT(*) n_sh FROM sh GROUP BY 1),
+        |p AS (SELECT a.source s1, b.source s2, COUNT(*) common
+        |      FROM sh a JOIN sh b ON a.sh = b.sh AND a.source < b.source GROUP BY 1, 2)
+        |SELECT s1, s2, common, x.n_sh AS n1, y.n_sh AS n2,
+        | CAST(common AS DOUBLE) / (x.n_sh + y.n_sh - common) AS jaccard,
+        | CAST(common AS DOUBLE) / LEAST(x.n_sh, y.n_sh) AS containment
+        |FROM p JOIN sz x ON s1 = x.source JOIN sz y ON s2 = y.source
+        |ORDER BY s1, s2""".stripMargin)),
     // replays the union + last-writer-wins window exactly: version desc,
     // changelog-beats-base on ties, delete filter on the winner row
-    "merge_changelog" ->
+    Q("merge_changelog", mergeChangelogQ, Some(
       """WITH base AS (
         | SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice,
         |  o_orderdate, o_orderpriority, o_orderdate AS v_ts,
@@ -6562,10 +6725,10 @@ object SparkEntry {
         |SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice,
         | strftime(o_orderdate, '%Y-%m-%d %H:%M:%S') AS orderdate,
         | o_orderpriority, strftime(v_ts, '%Y-%m-%d %H:%M:%S') AS version_ts
-        |FROM r WHERE rn = 1 AND op <> 'D' ORDER BY o_orderkey""".stripMargin,
+        |FROM r WHERE rn = 1 AND op <> 'D' ORDER BY o_orderkey""".stripMargin)),
     // share/cum_share are IEEE ops in rank order — fixed order on both
     // engines, so the doubles are bit-identical
-    "skew_report" ->
+    Q("skew_report", skewReportQ, Some(
       """WITH c AS (SELECT user_id AS key, COUNT(*) AS cnt FROM events GROUP BY 1),
         |t AS (SELECT CAST(SUM(cnt) AS BIGINT) AS total, COUNT(*) AS n_keys FROM c),
         |k AS (SELECT key, cnt FROM c ORDER BY cnt DESC, key LIMIT 20)
@@ -6577,25 +6740,11 @@ object SparkEntry {
         |   AND CURRENT ROW) AS cum_share
         |FROM k, t
         |WINDOW w AS (ORDER BY cnt DESC, key)
-        |ORDER BY rank""".stripMargin,
-    // the proven dedup_ngram_jaccard CTE skeleton lifted to source keys;
-    // ratios are single IEEE divides of exact integer counts
-    "source_overlap" ->
-      """WITH toks AS (SELECT source, regexp_split_to_array(text, '\s+') w FROM documents),
-        |sh AS (SELECT DISTINCT source, array_to_string(w[i.i:i.i+2], ' ') AS sh
-        |       FROM toks, unnest(generate_series(1, len(w)-2)) i(i) WHERE len(w) >= 3),
-        |sz AS (SELECT source, COUNT(*) n_sh FROM sh GROUP BY 1),
-        |p AS (SELECT a.source s1, b.source s2, COUNT(*) common
-        |      FROM sh a JOIN sh b ON a.sh = b.sh AND a.source < b.source GROUP BY 1, 2)
-        |SELECT s1, s2, common, x.n_sh AS n1, y.n_sh AS n2,
-        | CAST(common AS DOUBLE) / (x.n_sh + y.n_sh - common) AS jaccard,
-        | CAST(common AS DOUBLE) / LEAST(x.n_sh, y.n_sh) AS containment
-        |FROM p JOIN sz x ON s1 = x.source JOIN sz y ON s2 = y.source
-        |ORDER BY s1, s2""".stripMargin,
+        |ORDER BY rank""".stripMargin)),
     // chains the PROVEN quality_classifier score + quality_filter gate
     // fragments (the calibration oracle's CTEs verbatim), then the kappa
     // arithmetic in the same all-BIGINT form the Spark side evaluates
-    "classifier_agreement" ->
+    Q("classifier_agreement", classifierAgreement, Some(
       """WITH toks AS (SELECT doc_id,
         |   list_filter(regexp_split_to_array(lower(text), '\s+'), x -> x <> '') AS w
         | FROM documents),
@@ -6625,11 +6774,11 @@ object SparkEntry {
         | CAST(n11 + n00 AS DOUBLE) / CAST(n_docs AS DOUBLE) AS po,
         | CAST(n_docs*(n11 + n00) - ((n11+n10)*(n11+n01) + (n01+n00)*(n10+n00)) AS DOUBLE)
         |  / CAST(n_docs*n_docs - ((n11+n10)*(n11+n01) + (n01+n00)*(n10+n00)) AS DOUBLE) AS kappa
-        |FROM m""".stripMargin,
+        |FROM m""".stripMargin)),
     // the PROVEN dedup_clusters component CTE chained into the PROVEN
     // split_assign md5-bucket fragment; COALESCE defaults singletons to
     // their own id exactly like assignSplits' sparse-mapping contract
-    "split_leakfree" ->
+    Q("split_leakfree", splitLeakfree, Some(
       """WITH RECURSIVE toks AS (SELECT doc_id, regexp_split_to_array(text, '\s+') w FROM documents),
         |sh AS (SELECT DISTINCT doc_id, array_to_string(w[i.i:i.i+2], ' ') AS sh
         |       FROM toks, unnest(generate_series(1, len(w)-2)) i(i) WHERE len(w) >= 3),
@@ -6652,10 +6801,10 @@ object SparkEntry {
         |      FROM g)
         |SELECT doc_id, canon AS split_key, CAST(bucket AS BIGINT) AS bucket,
         | CASE WHEN bucket < 8 THEN 'train' WHEN bucket < 9 THEN 'val' ELSE 'test' END AS split
-        |FROM b ORDER BY doc_id""".stripMargin,
+        |FROM b ORDER BY doc_id""".stripMargin)),
     // the events_spike z-test SQL with the (type, hour-of-day) composite
     // partition key and the weekly trailing frame
-    "events_seasonal" ->
+    Q("events_seasonal", eventsSeasonal, Some(
       """WITH h AS (
         | SELECT date_trunc('hour', ts) AS hour_ts, event_type, COUNT(*) AS cnt
         | FROM events GROUP BY 1, 2),
@@ -6678,259 +6827,593 @@ object SparkEntry {
         |  AND (n_prior - 1) * (n_prior * cnt - s_prior) * (n_prior * cnt - s_prior)
         |      > 9 * n_prior * (n_prior * q_prior - s_prior * s_prior)
         |  AS BIGINT) AS is_spike
-        |FROM x ORDER BY hour_start, season_key""".stripMargin,
-    "q6_forecast_revenue" ->
-      """SELECT CAST(SUM(CAST(l_extendedprice*l_discount AS DECIMAL(28,6))) AS DOUBLE) AS revenue
-        |FROM lineitem
-        |WHERE l_shipdate >= TIMESTAMP '1997-01-01'
-        | AND l_shipdate < TIMESTAMP '1998-01-01'
-        | AND l_discount BETWEEN 0.05 AND 0.07
-        | AND l_quantity < 24""".stripMargin,
-    "q12_late_priority" ->
-      """SELECT l_returnflag,
-        | CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-        |   THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-        | CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-        |   THEN 0 ELSE 1 END) AS BIGINT) AS low_line_count
-        |FROM lineitem, orders
-        |WHERE l_orderkey = o_orderkey
-        | AND l_shipdate >= TIMESTAMP '1997-01-01'
-        | AND l_shipdate < TIMESTAMP '1998-01-01'
-        | AND l_shipdate > o_orderdate + INTERVAL 45 DAY
-        |GROUP BY 1 ORDER BY l_returnflag""".stripMargin,
-    "q13_order_distribution" ->
-      """WITH pc AS (
-        | SELECT o_custkey, COUNT(*) AS c_count FROM orders
-        | WHERE o_orderpriority <> '1-URGENT' GROUP BY 1)
-        |SELECT COALESCE(c_count, 0) AS c_count, COUNT(*) AS custdist
-        |FROM customer LEFT JOIN pc ON c_custkey = o_custkey
-        |GROUP BY 1 ORDER BY custdist DESC, c_count DESC""".stripMargin,
-    "q15_top_supplier" ->
-      """WITH rev AS (
-        | SELECT l_suppkey,
-        |  SUM(CAST(l_extendedprice*(1-l_discount) AS DECIMAL(28,6))) AS total_revenue_d
-        | FROM lineitem
-        | WHERE l_shipdate >= TIMESTAMP '1997-01-01'
-        |  AND l_shipdate < TIMESTAMP '1997-04-01'
-        | GROUP BY 1)
-        |SELECT l_suppkey AS suppkey, s_name,
-        | CAST(total_revenue_d AS DOUBLE) AS total_revenue
-        |FROM rev JOIN supplier ON l_suppkey = s_suppkey
-        |WHERE total_revenue_d = (SELECT MAX(total_revenue_d) FROM rev)
-        |ORDER BY suppkey""".stripMargin,
-    "counts_by_country" ->
-      """SELECT n_name, COUNT(*) AS n_customers
-        |FROM customer JOIN nation ON c_nationkey = n_nationkey
-        |GROUP BY n_name ORDER BY n_customers DESC, n_name""".stripMargin,
-    "counts_by_country_salted" ->
-      // salting is semantically invisible: the oracle is the PLAIN join
-      """SELECT n_name, COUNT(*) AS n_customers
-        |FROM customer JOIN nation ON c_nationkey = n_nationkey
-        |GROUP BY n_name ORDER BY n_customers DESC, n_name""".stripMargin,
-    "histogram_values" ->
-      """SELECT CAST(FLOOR(value/50.0) AS BIGINT) AS bucket, COUNT(*) AS n,
-        | MIN(value) AS bucket_min, MAX(value) AS bucket_max
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-    "topk_names" ->
-      """SELECT p_type AS name, COUNT(*) AS n FROM part
-        |GROUP BY p_type ORDER BY n DESC, name LIMIT 10""".stripMargin,
-    "topk_per_group" ->
-      """SELECT p_brand, p_partkey, p_retailprice FROM part
-        |QUALIFY row_number() OVER (PARTITION BY p_brand
-        |  ORDER BY p_retailprice DESC, p_partkey) <= 3
-        |ORDER BY p_brand, p_retailprice DESC, p_partkey""".stripMargin,
-    "segment_distribution" ->
-      """SELECT c_mktsegment AS segment, COUNT(*) AS n,
-        | CAST(COUNT(*) AS DOUBLE) / CAST(SUM(COUNT(*)) OVER () AS DOUBLE) AS share
-        |FROM customer GROUP BY c_mktsegment ORDER BY segment""".stripMargin,
-    "q7_nation_trade" ->
-      """WITH sup AS (SELECT s_suppkey, n_name AS supp_nation
-        |             FROM supplier JOIN nation ON s_nationkey = n_nationkey),
-        |cust AS (SELECT c_custkey, n_name AS cust_nation
-        |         FROM customer JOIN nation ON c_nationkey = n_nationkey)
-        |SELECT supp_nation, cust_nation,
-        | CAST(year(l_shipdate) AS BIGINT) AS ship_year,
-        | CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(28,6))) AS DOUBLE) AS revenue
-        |FROM lineitem
-        | JOIN orders ON l_orderkey = o_orderkey
-        | JOIN sup ON l_suppkey = s_suppkey
-        | JOIN cust ON o_custkey = c_custkey
-        |WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1998-01-01'
-        |  AND supp_nation <> cust_nation
-        |GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin,
-    "q4_priority_late" ->
-      """SELECT o_orderpriority, COUNT(*) AS n_orders
-        |FROM orders o
-        |WHERE o_orderdate >= TIMESTAMP '1996-01-01' AND o_orderdate < TIMESTAMP '1996-04-01'
-        |  AND EXISTS (SELECT 1 FROM lineitem l
-        |              WHERE l.l_orderkey = o.o_orderkey
-        |                AND l.l_shipdate > o.o_orderdate + INTERVAL 90 DAY)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    // the proven decimal-volume + INTERVAL fragments; LIMIT after the
-    // deterministic (revenue DESC, suppkey) order
-    "supplier_scorecard" ->
-      """WITH j AS (
-        | SELECT l_suppkey,
-        |  CAST(l_extendedprice*(1-l_discount) AS DECIMAL(28,6)) AS vol,
-        |  CASE WHEN l_shipdate > o_orderdate + INTERVAL 60 DAY
-        |       THEN 1 ELSE 0 END AS late
-        | FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-        |a AS (
-        | SELECT l_suppkey AS s_suppkey, COUNT(*) AS n_lines,
-        |  CAST(SUM(vol) AS DOUBLE) AS revenue,
-        |  CAST(SUM(late) AS BIGINT) AS n_late
-        | FROM j GROUP BY 1)
-        |SELECT a.s_suppkey, s.s_name, n_lines, revenue, n_late,
-        | CAST(n_late AS DOUBLE) / CAST(n_lines AS DOUBLE) AS late_frac
-        |FROM a JOIN supplier s ON a.s_suppkey = s.s_suppkey
-        |ORDER BY revenue DESC, a.s_suppkey LIMIT 20""".stripMargin,
-    "sales_cube" ->
-      """SELECT COALESCE(o_orderstatus, '(all)') AS status,
-        | COALESCE(o_orderpriority, '(all)') AS priority,
-        | CAST(GROUPING(o_orderstatus) AS BIGINT) AS g_status,
-        | CAST(GROUPING(o_orderpriority) AS BIGINT) AS g_priority,
-        | COUNT(*) AS n_orders,
-        | CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
-        |FROM orders GROUP BY CUBE (o_orderstatus, o_orderpriority)
-        |ORDER BY g_status, g_priority, status, priority""".stripMargin,
-    "order_pivot" ->
-      """WITH o AS (SELECT strftime(o_orderdate, '%Y-%m') AS month,
-        |             o_orderstatus AS st,
-        |             CAST(o_totalprice AS DECIMAL(18,2)) AS p FROM orders)
-        |SELECT month,
-        | COUNT(*) FILTER (WHERE st = 'O') AS open_n,
-        | CAST(SUM(p) FILTER (WHERE st = 'O') AS DOUBLE) AS open_rev,
-        | COUNT(*) FILTER (WHERE st = 'F') AS done_n,
-        | CAST(SUM(p) FILTER (WHERE st = 'F') AS DOUBLE) AS done_rev,
-        | COUNT(*) FILTER (WHERE st = 'P') AS pend_n,
-        | CAST(SUM(p) FILTER (WHERE st = 'P') AS DOUBLE) AS pend_rev
-        |FROM o GROUP BY month ORDER BY month""".stripMargin,
-    "weighted_sample" ->
-      s"""WITH w AS (SELECT doc_id, source,
-        | CAST(${graft.operators.Curation.weightCaseSql("source", weightedSampleWeights, 1L)} AS BIGINT) AS weight,
-        | CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) AS u
+        |FROM x ORDER BY hour_start, season_key""".stripMargin)),
+    Q("text_lz_complexity", textLzComplexity),
+    Q("text_tokens", textTokens, Some(
+      """SELECT doc_id,
+        | CAST(len(regexp_split_to_array(text, '\s+')) AS BIGINT) AS ws_tokens,
+        | CAST(len(list_distinct(regexp_split_to_array(text, '\s+'))) AS BIGINT) AS distinct_tokens,
+        | CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]')) AS BIGINT) AS bpe_tokens
+        |FROM documents ORDER BY doc_id""".stripMargin)),
+    Q("text_subwords", textSubwords, Some(
+      TextAnalysis.subwordsOracleSql(TextAnalysis.demoSubwordVocab))),
+    Q("subword_vocab", subwordVocab),
+    Q("text_subwords_learned", textSubwordsLearned),
+    Q("text_fingerprint", textFingerprint, Some(
+      """WITH toks AS (SELECT doc_id, regexp_split_to_array(text, '\s+') w FROM documents),
+        |sh AS (SELECT DISTINCT doc_id, md5(array_to_string(w[i.i:i.i+2], ' ')) AS sh_hash
+        |       FROM toks, unnest(generate_series(1, len(w)-2)) i(i) WHERE len(w) >= 3)
+        |SELECT doc_id,
+        | CAST(row_number() OVER (PARTITION BY doc_id ORDER BY sh_hash) AS BIGINT) AS rk,
+        | sh_hash
+        |FROM sh
+        |QUALIFY row_number() OVER (PARTITION BY doc_id ORDER BY sh_hash) <= 8
+        |ORDER BY doc_id, rk""".stripMargin)),
+    Q("text_heavy_hitters", textHeavyHitters, Some(
+      """WITH toks AS (SELECT unnest(regexp_split_to_array(text, '\s+')) AS tok FROM documents),
+        |tot AS (SELECT COUNT(*) AS t FROM toks)
+        |SELECT tok, COUNT(*) AS n FROM toks GROUP BY tok
+        |HAVING COUNT(*) > (SELECT t FROM tot) / 50.0
+        |ORDER BY n DESC, tok""".stripMargin)),
+    Q("text_heavy_hitters_approx", textHeavyHittersApprox),
+    Q("text_repetition", textRepetition, Some(
+      // ratios are single IEEE divides of integer counts — bit-identical
+      // across engines, no rounding convention needed; docs with no n-gram
+      // of a length yield NULL on both sides
+      """WITH t AS (SELECT doc_id, regexp_split_to_array(text, '\s+') w FROM documents),
+        |g AS (SELECT doc_id, w,
+        |  [array_to_string(w[i:i+1], ' ') for i in generate_series(1, len(w)-1)] AS g2,
+        |  [array_to_string(w[i:i+2], ' ') for i in generate_series(1, len(w)-2)] AS g3
+        |  FROM t)
+        |SELECT doc_id,
+        | CAST(len(w) AS BIGINT) AS n_tokens_r,
+        | CAST(len(w) - len(list_distinct(w)) AS DOUBLE) / NULLIF(CAST(len(w) AS DOUBLE), 0) AS dup_token_frac,
+        | CAST(len(g2) - len(list_distinct(g2)) AS DOUBLE) / NULLIF(CAST(len(g2) AS DOUBLE), 0) AS dup_2gram_frac,
+        | CAST(len(g3) - len(list_distinct(g3)) AS DOUBLE) / NULLIF(CAST(len(g3) AS DOUBLE), 0) AS dup_3gram_frac
+        |FROM g ORDER BY doc_id""".stripMargin)),
+    Q("text_entropy", textEntropy, Some(
+      // the lm_score parity convention: 6-dp-rounded lns, DECIMAL
+      // accumulation (10,0)×(18,6) stays inside DuckDB's exact 38-digit
+      // multiply, final subtract/divide in IEEE double on identical operands
+      """WITH toks AS (SELECT doc_id, u.w AS w
+        |  FROM (SELECT doc_id, regexp_split_to_array(text, '\s+') w FROM documents) t,
+        |       unnest(t.w) u(w)),
+        |c AS (SELECT doc_id, w, COUNT(*) AS c FROM toks GROUP BY 1, 2)
+        |SELECT doc_id, CAST(SUM(c) AS BIGINT) AS n_tokens, COUNT(*) AS n_distinct,
+        | round(ln(CAST(SUM(c) AS DOUBLE)), 6)
+        |  - CAST(SUM(CAST(c AS DECIMAL(10,0))
+        |      * CAST(round(ln(CAST(c AS DOUBLE)), 6) AS DECIMAL(18,6))) AS DOUBLE)
+        |    / SUM(c) AS entropy
+        |FROM c GROUP BY doc_id ORDER BY doc_id""".stripMargin)),
+    Q("lm_score", lmScoreQ, Some(lmScoreOracle)),
+    Q("lm_score_cached", lmScoreCachedQ, Some(lmScoreOracle)),
+    Q("corpus_stats", corpusStats, Some(
+      """WITH s AS (
+        | SELECT doc_id, source,
+        |  CAST(length(text) AS BIGINT) AS n_chars_q,
+        |  CAST(len(regexp_split_to_array(text, '\s+')) AS BIGINT) AS n_tokens,
+        |  CAST(len(list_filter(regexp_split_to_array(lower(text), '\s+'),
+        |    x -> x IN ('the','a','of','and','to','in','is','was','for','on'))) AS BIGINT) AS n_stopwords,
+        |  CAST(len(list_filter(regexp_split_to_array(lower(text), '\s+'),
+        |    x -> x IN ('der','die','das','und','zu','ein','eine','mit','von','nicht'))) AS BIGINT) AS hits_de,
+        |  CAST(len(list_filter(regexp_split_to_array(lower(text), '\s+'),
+        |    x -> x IN ('the','a','of','and','to','in','is','was','for','on'))) AS BIGINT) AS hits_en,
+        |  CAST(len(list_filter(regexp_split_to_array(lower(text), '\s+'),
+        |    x -> x IN ('el','la','de','y','que','un','una','por','con','los'))) AS BIGINT) AS hits_es,
+        |  CAST(len(list_filter(regexp_split_to_array(lower(text), '\s+'),
+        |    x -> x IN ('le','la','de','et','que','un','une','pour','dans','les'))) AS BIGINT) AS hits_fr
+        | FROM documents),
+        |q AS (SELECT source, n_chars_q, n_tokens,
+        |  least(CAST(n_tokens AS DOUBLE) / 50.0, 1.0) * 0.5
+        |    + CAST(n_stopwords AS DOUBLE) / CAST(n_tokens AS DOUBLE) * 0.5 AS quality_score,
+        |  CASE WHEN greatest(hits_de, hits_en, hits_es, hits_fr) = 0 THEN 'und'
+        |       WHEN hits_de = greatest(hits_de, hits_en, hits_es, hits_fr) THEN 'de'
+        |       WHEN hits_en = greatest(hits_de, hits_en, hits_es, hits_fr) THEN 'en'
+        |       WHEN hits_es = greatest(hits_de, hits_en, hits_es, hits_fr) THEN 'es'
+        |       ELSE 'fr' END AS pred_lang
+        | FROM s)
+        |SELECT source, COUNT(*) AS n_docs,
+        | CAST(SUM(n_tokens) AS BIGINT) AS n_tokens,
+        | CAST(SUM(n_chars_q) AS BIGINT) AS n_chars,
+        | CAST(SUM(CAST(CAST(quality_score AS VARCHAR) AS DECIMAL(28,12))) AS DOUBLE)
+        |   / COUNT(*) AS mean_quality,
+        | CAST(COUNT(DISTINCT pred_lang) AS BIGINT) AS n_langs
+        |FROM q GROUP BY source ORDER BY source""".stripMargin)),
+    Q("doc_chunks_cdc", docChunksCdc, Some(
+      """WITH t AS (SELECT doc_id, regexp_split_to_array(text, '\s+') w FROM documents),
+        |tok AS (SELECT doc_id, g.i - 1 AS pos, w[g.i] AS tok
+        |        FROM t, unnest(generate_series(1, len(w))) g(i)),
+        |b AS (SELECT doc_id, pos, tok,
+        |       CASE WHEN CAST(concat('0x', substr(md5(tok), 1, 8)) AS BIGINT) % 16 = 0
+        |            THEN 1 ELSE 0 END AS f
+        |      FROM tok),
+        |c AS (SELECT doc_id, pos, tok,
+        |       SUM(f) OVER (PARTITION BY doc_id ORDER BY pos
+        |                    ROWS UNBOUNDED PRECEDING) AS chunk_id
+        |      FROM b)
+        |SELECT doc_id, CAST(chunk_id AS BIGINT) AS chunk_id,
+        | md5(string_agg(tok, ' ' ORDER BY pos)) AS chunk_hash,
+        | COUNT(*) AS n_chunk_tokens
+        |FROM c GROUP BY doc_id, chunk_id ORDER BY doc_id, chunk_id""".stripMargin)),
+    Q("pii_scrub", piiScrubQ, Some(
+      // replacement order mirrors TextAnalysis.piiPatterns (email, ipv4,
+      // ssn, phone); each pattern is COUNTED on the text after the earlier
+      // patterns were replaced (progressive count = replacements actually
+      // made), exactly like scrubPii. DuckDB needs the explicit 'g' flag
+      // where Spark's regexp_replace is always global
+      """WITH base AS (
+        | SELECT doc_id, text || ' contact user' || CAST(doc_id AS VARCHAR)
+        |   || '@mail.example.com from 192.168.' || CAST(doc_id % 256 AS VARCHAR)
+        |   || '.17 call 555-867-5309' AS s0
+        | FROM documents),
+        |r1 AS (SELECT doc_id, s0,
+        |        regexp_replace(s0, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '[PII]', 'g') AS s1
+        |       FROM base),
+        |r2 AS (SELECT doc_id, s0, s1,
+        |        regexp_replace(s1, '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b', '[PII]', 'g') AS s2
+        |       FROM r1),
+        |r3 AS (SELECT doc_id, s0, s1, s2,
+        |        regexp_replace(s2, '\b\d{3}-\d{2}-\d{4}\b', '[PII]', 'g') AS s3
+        |       FROM r2),
+        |s AS (
+        | SELECT doc_id,
+        |  regexp_replace(s3, '\b\d{3}[- ]\d{3}[- ]\d{4}\b', '[PII]', 'g') AS scrubbed,
+        |  len(regexp_extract_all(s0, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}'))
+        |   + len(regexp_extract_all(s1, '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b'))
+        |   + len(regexp_extract_all(s2, '\b\d{3}-\d{2}-\d{4}\b'))
+        |   + len(regexp_extract_all(s3, '\b\d{3}[- ]\d{3}[- ]\d{4}\b')) AS n_pii
+        | FROM r3)
+        |SELECT doc_id, md5(scrubbed) AS scrub_hash, CAST(n_pii AS BIGINT) AS n_pii
+        |FROM s ORDER BY doc_id""".stripMargin)),
+    // DuckDB // == Spark DIV on non-negative BIGINTs (the §6 rule);
+    // SUM casts back to BIGINT (DuckDB widens BIGINT sums to HUGEINT)
+    Q("k_anonymity", kAnonymity, Some(
+      """WITH g1 AS (SELECT lang, source, n_chars // 100 AS b, COUNT(*) AS g
+        |            FROM documents GROUP BY 1, 2, 3),
+        |g2 AS (SELECT lang, source, n_chars // 1000 AS b, COUNT(*) AS g
+        |       FROM documents GROUP BY 1, 2, 3),
+        |b1 AS (SELECT 'chars_100' AS level,
+        |        CASE WHEN g = 1 THEN 'k=1' WHEN g < 5 THEN 'k<5'
+        |             WHEN g < 10 THEN 'k<10' ELSE 'k>=10' END AS band,
+        |        COUNT(*) AS n_classes, CAST(SUM(g) AS BIGINT) AS n_rows
+        |       FROM g1 GROUP BY 1, 2),
+        |b2 AS (SELECT 'chars_1000' AS level,
+        |        CASE WHEN g = 1 THEN 'k=1' WHEN g < 5 THEN 'k<5'
+        |             WHEN g < 10 THEN 'k<10' ELSE 'k>=10' END AS band,
+        |        COUNT(*) AS n_classes, CAST(SUM(g) AS BIGINT) AS n_rows
+        |       FROM g2 GROUP BY 1, 2)
+        |SELECT * FROM b1 UNION ALL SELECT * FROM b2
+        |ORDER BY level, band""".stripMargin)),
+    Q("doc_chunks", docChunks, Some(
+      """WITH t AS (SELECT doc_id, regexp_split_to_array(text, '\s+') w FROM documents),
+        |c AS (SELECT doc_id, s, array_to_string(w[s:s+31], ' ') AS chunk
+        |      FROM t, unnest(generate_series(1, greatest(len(w) - 32 + 1, 1), 24)) st(s))
+        |SELECT doc_id, CAST((s - 1) // 24 AS BIGINT) AS chunk_id,
+        | CAST(len(regexp_split_to_array(chunk, '\s+')) AS BIGINT) AS n_chunk_tokens,
+        | md5(chunk) AS chunk_hash
+        |FROM c ORDER BY doc_id, chunk_id""".stripMargin)),
+    Q("corpus_mix", corpusMix, Some(
+      // FLOOR mirrors Spark's double->long truncation of weight * 2^32 (a
+      // bare CAST would round-to-nearest in DuckDB); weights are eighths so
+      // the product is exact in double on both engines anyway
+      """SELECT doc_id, source FROM documents
+        |WHERE CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT)
+        |  < CAST(FLOOR((CASE source WHEN 'src0' THEN 1.0 WHEN 'src1' THEN 0.75
+        |                 WHEN 'src2' THEN 0.5 WHEN 'src3' THEN 0.25
+        |                 ELSE 0.375 END) * 4294967296) AS BIGINT)
+        |ORDER BY doc_id""".stripMargin)),
+    Q("epoch_plan", epochPlanQ, Some(
+      s"""WITH t AS (SELECT source,
+        |   CAST(SUM(len(regexp_split_to_array(text, '\\s+'))) AS BIGINT) AS n_tokens
+        | FROM documents GROUP BY source),
+        |w AS (SELECT source, n_tokens,
+        |   CAST(${graft.operators.Curation.weightCaseSql("source", weightedSampleWeights, 1L)} AS BIGINT) AS weight
+        | FROM t),
+        |s AS (SELECT SUM(weight) AS sw FROM w)
+        |SELECT source, n_tokens, weight,
+        | CAST((1000000 * weight) // s.sw AS BIGINT) AS target_tokens,
+        | CAST(((1000000 * weight) // s.sw + n_tokens - 1) // n_tokens AS BIGINT) AS epochs
+        |FROM w, s ORDER BY source""".stripMargin)),
+    // slot weight recomputed arithmetically from TextAnalysis.knuthWeights'
+    // closed form: ((slot * 2654435761) % 21) - 10, slot = md5-prefix % 64
+    // sqrt is IEEE-correctly-rounded on both engines; the weight sum is
+    // exact decimal (VARCHAR-routed cast on the DuckDB side — the
+    // embedding_centroids parity rule); shares/targets are IEEE ops on
+    // identical operands
+    Q("mix_temperature", mixTemperatureQ, Some(
+      """WITH t AS (SELECT source,
+        |   CAST(SUM(len(regexp_split_to_array(text, '\s+'))) AS BIGINT) AS n_tokens
+        | FROM documents GROUP BY source),
+        |w AS (SELECT source, n_tokens,
+        |   sqrt(CAST(n_tokens AS DOUBLE)) AS weight FROM t),
+        |s AS (SELECT
+        |   CAST(SUM(CAST(CAST(weight AS VARCHAR) AS DECIMAL(28,12))) AS DOUBLE) AS sw,
+        |   SUM(n_tokens) AS sn FROM w)
+        |SELECT source, n_tokens, weight,
+        | CAST(n_tokens AS DOUBLE) / CAST(sn AS DOUBLE) AS natural_share,
+        | weight / sw AS temp_share,
+        | CAST(floor((weight / sw) * CAST(2000000 AS DOUBLE)) AS BIGINT) AS target_tokens
+        |FROM w, s ORDER BY source""".stripMargin)),
+    Q("dq_benford", dqBenford, Some(
+      graft.operators.Quality.benfordSql("orders", "o_totalprice"))),
+    Q("pack_sequences", packSequencesQ, Some(
+      """WITH t AS (SELECT doc_id, source, regexp_split_to_array(text, '\s+') w FROM documents),
+        |c AS (SELECT doc_id, source, s, array_to_string(w[s:s+31], ' ') AS chunk
+        |      FROM t, unnest(generate_series(1, greatest(len(w) - 32 + 1, 1), 24)) st(s)),
+        |x AS (SELECT source, doc_id, CAST((s - 1) // 24 AS BIGINT) AS chunk_id,
+        |       CAST(len(regexp_split_to_array(chunk, '\s+')) AS BIGINT) AS n_chunk_tokens
+        |      FROM c),
+        |p AS (SELECT source, doc_id, chunk_id, n_chunk_tokens,
+        |       SUM(n_chunk_tokens) OVER (PARTITION BY source ORDER BY doc_id, chunk_id
+        |         ROWS UNBOUNDED PRECEDING) AS cum
+        |      FROM x)
+        |SELECT source, doc_id, chunk_id, n_chunk_tokens,
+        | CAST(FLOOR((cum - n_chunk_tokens) / 512) AS BIGINT) AS seq_id
+        |FROM p ORDER BY source, doc_id, chunk_id""".stripMargin)),
+    Q("pack_sequences_sharded", packSequencesShardedQ, Some(
+      // shard = big-endian parse of the first 8 md5 hex chars of doc_id,
+      // mod 8 — the hex-prefix parse equals Spark's conv(..., 16, 10)
+      """WITH t AS (SELECT doc_id, source, regexp_split_to_array(text, '\s+') w FROM documents),
+        |c AS (SELECT doc_id, source, s, array_to_string(w[s:s+31], ' ') AS chunk
+        |      FROM t, unnest(generate_series(1, greatest(len(w) - 32 + 1, 1), 24)) st(s)),
+        |x AS (SELECT source, doc_id,
+        |       CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) % 8 AS shard,
+        |       CAST((s - 1) // 24 AS BIGINT) AS chunk_id,
+        |       CAST(len(regexp_split_to_array(chunk, '\s+')) AS BIGINT) AS n_chunk_tokens
+        |      FROM c),
+        |p AS (SELECT source, shard, doc_id, chunk_id, n_chunk_tokens,
+        |       SUM(n_chunk_tokens) OVER (PARTITION BY source, shard ORDER BY doc_id, chunk_id
+        |         ROWS UNBOUNDED PRECEDING) AS cum
+        |      FROM x)
+        |SELECT source, shard, doc_id, chunk_id, n_chunk_tokens,
+        | CAST(FLOOR((cum - n_chunk_tokens) / 512) AS BIGINT) AS seq_id
+        |FROM p ORDER BY source, shard, doc_id, chunk_id""".stripMargin)),
+    Q("kmeans_centroids", kmeansCentroidsQ),
+    Q("tfidf_top_terms", tfidfTopTerms, Some(
+      // round(.., 6) on BOTH sides: ln may differ in the last ulp between
+      // engines; the ranking compares the rounded score so rank sets agree
+      """WITH toks AS (SELECT doc_id, unnest(regexp_split_to_array(lower(text), '\s+')) AS term
+        |              FROM documents),
+        |tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM toks GROUP BY 1, 2),
+        |dfreq AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY 1),
+        |n AS (SELECT COUNT(*) AS n FROM documents),
+        |s AS (SELECT doc_id, term, tf, df,
+        |        round(tf * (ln((n + 1.0) / (df + 1)) + 1), 6) AS tfidf
+        |      FROM tf JOIN dfreq USING (term) CROSS JOIN n)
+        |SELECT doc_id, term, tf, df, tfidf FROM s
+        |QUALIFY row_number() OVER (PARTITION BY doc_id ORDER BY tfidf DESC, term) <= 3
+        |ORDER BY doc_id, tfidf DESC, term""".stripMargin)),
+    Q("bm25_topk", bm25TopKQ, Some(
+      """WITH toks AS (SELECT doc_id, regexp_split_to_array(lower(text), '\s+') w FROM documents),
+        |tok AS (SELECT doc_id, u.g AS term FROM toks, unnest(w) u(g)),
+        |tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM tok GROUP BY doc_id, term),
+        |dl AS (SELECT doc_id, COUNT(*) AS dl FROM tok GROUP BY doc_id),
+        |s AS (SELECT COUNT(*) AS n, SUM(dl) AS toks FROM dl),
+        |dfq AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY term),
+        |q AS (SELECT DISTINCT doc_id AS q_id, term FROM tok WHERE doc_id < 8),
+        |sc AS (SELECT q.q_id, tf.doc_id,
+        |        ROUND((ln((CAST(s.n AS DOUBLE) - CAST(dfq.df AS DOUBLE) + CAST(0.5 AS DOUBLE))
+        |              / (CAST(dfq.df AS DOUBLE) + CAST(0.5 AS DOUBLE)) + CAST(1.0 AS DOUBLE))
+        |           * (CAST(tf.tf AS DOUBLE) * (CAST(1.2 AS DOUBLE) + CAST(1.0 AS DOUBLE))))
+        |          / (CAST(tf.tf AS DOUBLE) + CAST(1.2 AS DOUBLE)
+        |             * ((CAST(1.0 AS DOUBLE) - CAST(0.75 AS DOUBLE)) + CAST(0.75 AS DOUBLE)
+        |                * (CAST(dl.dl AS DOUBLE) / (CAST(s.toks AS DOUBLE) / CAST(s.n AS DOUBLE))))), 6) AS sv
+        |       FROM tf JOIN q USING (term) JOIN dl USING (doc_id)
+        |        JOIN dfq ON tf.term = dfq.term, s),
+        |agg AS (SELECT q_id, doc_id, CAST(SUM(CAST(sv AS DECIMAL(28,12))) AS DOUBLE) AS score
+        |        FROM sc GROUP BY q_id, doc_id),
+        |r AS (SELECT q_id, doc_id, score,
+        |        ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY score DESC, doc_id) AS rn FROM agg)
+        |SELECT q_id, doc_id, score FROM r WHERE rn <= 10
+        |ORDER BY q_id, score DESC, doc_id""".stripMargin)),
+    Q("text_winnow", textWinnow, Some(
+      """WITH toks AS (SELECT doc_id, regexp_split_to_array(text, '\s+') w FROM documents),
+        |g AS (SELECT doc_id, CAST(i.i AS BIGINT) AS pos,
+        |        CAST(concat('0x', substr(md5(array_to_string(w[i.i:i.i+3], ' ')), 1, 8)) AS BIGINT) AS h
+        |      FROM toks, unnest(generate_series(1, len(w)-3)) i(i) WHERE len(w) >= 4),
+        |x AS (SELECT doc_id, pos, h,
+        |  (CASE WHEN LAG(h,1) OVER dw >= h THEN 1 ELSE 0 END
+        |   + CASE WHEN LAG(h,1) OVER dw >= h AND LAG(h,2) OVER dw >= h THEN 1 ELSE 0 END
+        |   + CASE WHEN LAG(h,1) OVER dw >= h AND LAG(h,2) OVER dw >= h
+        |          AND LAG(h,3) OVER dw >= h THEN 1 ELSE 0 END) AS llen,
+        |  (CASE WHEN LEAD(h,1) OVER dw > h THEN 1 ELSE 0 END
+        |   + CASE WHEN LEAD(h,1) OVER dw > h AND LEAD(h,2) OVER dw > h THEN 1 ELSE 0 END
+        |   + CASE WHEN LEAD(h,1) OVER dw > h AND LEAD(h,2) OVER dw > h
+        |          AND LEAD(h,3) OVER dw > h THEN 1 ELSE 0 END) AS rlen,
+        |  MAX(pos) OVER (PARTITION BY doc_id) AS m
+        |  FROM g WINDOW dw AS (PARTITION BY doc_id ORDER BY pos))
+        |SELECT doc_id, pos, h AS gram_hash FROM x
+        |WHERE GREATEST(1, pos - 3, pos - llen) <= LEAST(pos + rlen, m) - 3
+        |ORDER BY doc_id, pos""".stripMargin)),
+    Q("distinct_users", distinctUsers, Some(
+      """SELECT event_type, COUNT(DISTINCT user_id) AS n_users, COUNT(*) AS n_events
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin)),
+    Q("distinct_users_approx", distinctUsersApprox),
+    Q("distinct_users_sketched", distinctUsersSketched),
+    Q("sample_stratified", sampleStratified, Some(
+      """SELECT source, doc_id, md5(concat_ws('|', doc_id, text)) AS rnd
+        |FROM documents
+        |QUALIFY row_number() OVER (PARTITION BY source
+        |  ORDER BY md5(concat_ws('|', doc_id, text)), doc_id) <= 3
+        |ORDER BY source, rnd, doc_id""".stripMargin)),
+    Q("split_assign", splitAssign, Some(
+      """WITH g AS (SELECT doc_id, min(doc_id) OVER (PARTITION BY md5(text)) AS canon
+        |           FROM documents),
+        |b AS (SELECT doc_id, canon,
+        |       CAST(concat('0x', substr(md5(CAST(canon AS VARCHAR)), 1, 8)) AS BIGINT) % 10 AS bucket
+        |      FROM g)
+        |SELECT doc_id, canon AS split_key, CAST(bucket AS BIGINT) AS bucket,
+        | CASE WHEN bucket < 8 THEN 'train' WHEN bucket < 9 THEN 'val' ELSE 'test' END AS split
+        |FROM b ORDER BY doc_id""".stripMargin)),
+    Q("multimodal_features", multimodalFeatures, Some(
+      // header = big-endian fold of the first (up to) 4 PAYLOAD BYTES,
+      // byte-exact as a hex-prefix parse — no ASCII or length->=4
+      // assumption (the old ascii(substr(...)) formulation diverged on
+      // multibyte chars and on documents shorter than 4 chars)
+      """WITH b AS (
+        | SELECT doc_id, source, octet_length(encode(text)) AS byte_len, md5(text) AS digest,
+        |  CASE WHEN length(text) = 0 THEN 0
+        |       ELSE CAST(concat('0x', substr(hex(encode(text)), 1, 8)) AS BIGINT) END AS header
         | FROM documents)
-        |SELECT doc_id, source, weight, CAST(u // weight AS BIGINT) AS priority
-        |FROM w ORDER BY priority, doc_id LIMIT 150""".stripMargin,
-    "rolling_active_users" ->
-      """WITH ud AS (SELECT DISTINCT CAST(ts AS DATE) AS day, user_id FROM events),
-        |days AS (SELECT DISTINCT day FROM ud),
-        |w AS (SELECT DISTINCT d.day AS wday, u.user_id
-        |      FROM ud u JOIN days d ON d.day BETWEEN u.day AND u.day + 6)
-        |SELECT strftime(wday, '%Y-%m-%d') AS day, COUNT(*) AS n_users
-        |FROM w GROUP BY wday ORDER BY day""".stripMargin,
-    "event_transitions" ->
-      """WITH x AS (SELECT event_type,
-        |   lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_type
-        | FROM events),
-        |c AS (SELECT prev_type, event_type AS next_type, COUNT(*) AS n
-        |      FROM x WHERE prev_type IS NOT NULL GROUP BY 1, 2)
-        |SELECT prev_type, next_type, n,
-        | CAST(n AS DOUBLE) / CAST(SUM(n) OVER (PARTITION BY prev_type) AS DOUBLE) AS p
-        |FROM c ORDER BY prev_type, next_type""".stripMargin,
-    "attribution_last_touch" ->
-      """WITH attr AS (
-        | SELECT event_type, value,
-        |   last_value(CASE WHEN event_type IN ('click','view') THEN event_type END IGNORE NULLS)
-        |     OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS touch_type
+        |SELECT doc_id, 'text/plain' AS media_type, source,
+        | CAST(byte_len AS BIGINT) AS byte_len, digest,
+        | CAST(header AS BIGINT) AS header,
+        | CAST(64 + header % 1857 AS BIGINT) AS width,
+        | CAST(64 + byte_len % 1017 AS BIGINT) AS height
+        |FROM b ORDER BY doc_id""".stripMargin)),
+    Q("multimodal_frames", multimodalFrames, Some(
+      """WITH b AS (
+        | SELECT doc_id, octet_length(encode(text)) AS byte_len,
+        |  CASE WHEN length(text) = 0 THEN 0
+        |       ELSE CAST(concat('0x', substr(hex(encode(text)), 1, 8)) AS BIGINT) END AS header
+        | FROM documents),
+        |f AS (SELECT doc_id, header, 1 + byte_len % 240 AS n_frames FROM b),
+        |s AS (SELECT doc_id, header, n_frames,
+        |       CAST(ceil(CAST(n_frames AS DOUBLE) / 8) AS BIGINT) AS stride FROM f)
+        |SELECT doc_id, CAST(g.g AS BIGINT) AS frame_idx,
+        | CAST(g.g * 33 AS BIGINT) AS ts_ms,
+        | CAST((header + g.g * 2654435761) % 256 AS BIGINT) AS luma
+        |FROM s, unnest(generate_series(0, n_frames - 1, stride)) g(g)
+        |ORDER BY doc_id, frame_idx""".stripMargin)),
+    Q("multimodal_resize", multimodalResize, Some(
+      """WITH b AS (
+        | SELECT doc_id, octet_length(encode(text)) AS byte_len,
+        |  CASE WHEN length(text) = 0 THEN 0
+        |       ELSE CAST(concat('0x', substr(hex(encode(text)), 1, 8)) AS BIGINT) END AS header
+        | FROM documents),
+        |d AS (SELECT doc_id, 64 + header % 1857 AS width, 64 + byte_len % 1017 AS height FROM b)
+        |SELECT doc_id, CAST(width AS BIGINT) AS width, CAST(height AS BIGINT) AS height,
+        | CAST(CASE WHEN greatest(width, height) <= 256 THEN width
+        |      ELSE width * 256 // greatest(width, height) END AS BIGINT) AS rs_width,
+        | CAST(CASE WHEN greatest(width, height) <= 256 THEN height
+        |      ELSE height * 256 // greatest(width, height) END AS BIGINT) AS rs_height
+        |FROM d ORDER BY doc_id""".stripMargin)),
+    Q("staged_partitioned_write", stagedPartitionedWrite, Some(
+      """SELECT CAST(year(ts) AS BIGINT) AS y, CAST(month(ts) AS BIGINT) AS m,
+        | CAST(day(ts) AS BIGINT) AS d, COUNT(*) AS n,
+        | CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total
+        |FROM events GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin)),
+    Q("csv_roundtrip", csvRoundtrip, Some(
+      // parquet truth + the 3 injected bad lines as the "(corrupt)" row:
+      // hash equality proves the CSV round trip loses nothing and the
+      // corrupt capture is exact
+      """SELECT c_mktsegment AS segment, COUNT(*) AS n,
+        | CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS total_bal
+        |FROM customer GROUP BY 1
+        |UNION ALL SELECT '(corrupt)', 3, NULL
+        |ORDER BY 1""".stripMargin)),
+    // parquet truth over the same pushed date predicate: hash equality
+    // proves longs/doubles/strings/timestamps survived the ORC round trip
+    Q("orc_roundtrip", orcRoundtrip, Some(
+      """SELECT o_orderpriority, COUNT(*) AS n,
+        | CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_price
+        |FROM orders WHERE o_orderdate >= TIMESTAMP '1997-01-01'
+        |GROUP BY 1 ORDER BY 1""".stripMargin)),
+    // parquet truth + the 2 injected bad lines; the 32-bit md5-prefix
+    // hash sum (the proven hex-prefix fragment) proves every text byte
+    // survived JSON string escaping
+    Q("jsonl_roundtrip", jsonlRoundtrip, Some(
+      """SELECT source, COUNT(*) AS n,
+        | CAST(SUM(CAST(concat('0x', substr(md5(text), 1, 8)) AS BIGINT)) AS BIGINT)
+        |  AS text_hash_sum
+        |FROM documents GROUP BY 1
+        |UNION ALL SELECT '(corrupt)', 2, NULL
+        |ORDER BY 1""".stripMargin)),
+    // the synthesized JSON is integer-rendered-only, so the text is
+    // byte-identical in both engines; the heterogeneous field `x`
+    // surfaces as TRY_CAST value-or-null on both sides
+    Q("variant_extract", variantExtract, Some(
+      """WITH j AS (
+        | SELECT '{"u":{"id":' || user_id || ',"seg":"' || event_type ||
+        |  '"},"m":[' || json_extract_string(props, '$.k') || ',' ||
+        |  (event_id % 7) || '],"x":' ||
+        |  CASE WHEN event_id % 2 = 1 THEN CAST(user_id AS VARCHAR)
+        |       ELSE '"' || event_type || '"' END || '}' AS js
         | FROM events)
-        |SELECT COALESCE(touch_type, '(none)') AS touch_type, COUNT(*) AS n_purchases,
-        | CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS revenue
-        |FROM attr WHERE event_type = 'purchase'
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "top_paths" ->
-      """WITH seq AS (
-        | SELECT event_type,
-        |   lag(event_type, 1) OVER w AS prev1,
-        |   lag(event_type, 2) OVER w AS prev2
-        | FROM events
-        | WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id))
-        |SELECT prev2 || '>' || prev1 || '>' || event_type AS path, COUNT(*) AS n
-        |FROM seq WHERE prev2 IS NOT NULL
-        |GROUP BY 1 ORDER BY n DESC, path LIMIT 20""".stripMargin,
-    "ngram_diversity" ->
-      """WITH toks AS (SELECT source, regexp_split_to_array(text, '\s+') w FROM documents),
-        |sh AS (SELECT source, array_to_string(w[i.i:i.i+2], ' ') AS sh
+        |SELECT json_extract_string(js, '$.u.seg') AS seg, COUNT(*) AS n,
+        | CAST(SUM(CAST(json_extract(js, '$.u.id') AS BIGINT)) AS BIGINT) AS sum_uid,
+        | CAST(SUM(CAST(json_extract(js, '$.m[0]') AS BIGINT)) AS BIGINT) AS sum_k,
+        | CAST(SUM(CAST(json_extract(js, '$.m[1]') AS BIGINT)) AS BIGINT) AS sum_m1,
+        | COUNT(TRY_CAST(json_extract_string(js, '$.x') AS BIGINT)) AS n_x_numeric,
+        | CAST(SUM(TRY_CAST(json_extract_string(js, '$.x') AS BIGINT)) AS BIGINT)
+        |  AS sum_x_numeric
+        |FROM j GROUP BY 1 ORDER BY 1""".stripMargin)),
+    // parquet truth recomputed by the same parity split: batch 1 landed
+    // without o_orderpriority, so its column stats must be null/zero
+    Q("schema_evolution", schemaEvolution, Some(
+      """SELECT CAST(CASE WHEN o_orderkey % 2 = 0 THEN 1 ELSE 2 END AS BIGINT) AS batch,
+        | COUNT(*) AS n,
+        | CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_price,
+        | COUNT(CASE WHEN o_orderkey % 2 = 1 THEN o_orderpriority END) AS n_priority,
+        | COUNT(DISTINCT CASE WHEN o_orderkey % 2 = 1 THEN o_orderpriority END)
+        |  AS n_priorities
+        |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin)),
+    Q("scrape_profiles", scrapeProfiles, Some(
+      """SELECT c_custkey AS profile_id, 'player_' || c_custkey AS name,
+        | c_custkey % 3 AS visibility, c_custkey % 100 AS steam_level
+        |FROM customer WHERE c_custkey % 97 != 0 ORDER BY profile_id""".stripMargin)),
+    Q("decontaminate", decontaminateQ, Some(decontaminateOracle)),
+    // bit-identical by construction (bloom prunes, the exact join
+    // decides) — the SAME oracle checks the scale path
+    Q("decontaminate_bloom", decontaminateBloomQ, Some(decontaminateOracle)),
+    Q("ngram_contamination", ngramContaminationQ, Some(
+      """WITH toks AS (SELECT doc_id, regexp_split_to_array(text, '\s+') w FROM documents),
+        |sh AS (SELECT DISTINCT doc_id, array_to_string(w[i.i:i.i+2], ' ') AS g
         |       FROM toks, unnest(generate_series(1, len(w)-2)) i(i) WHERE len(w) >= 3),
-        |cnt AS (SELECT source, sh, COUNT(*) c FROM sh GROUP BY 1, 2)
-        |SELECT source, CAST(SUM(c) AS BIGINT) AS n_total, COUNT(*) AS n_distinct,
-        | CAST(SUM(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_singletons,
-        | CAST(COUNT(*) AS DOUBLE) / CAST(SUM(c) AS BIGINT) AS ttr
-        |FROM cnt GROUP BY source ORDER BY source""".stripMargin,
-    "record_linkage" ->
-      """SELECT a.c_custkey AS id1, a.c_name AS name1,
-        |       b.c_custkey AS id2, b.c_name AS name2,
-        |       CAST(levenshtein(a.c_name, b.c_name) AS BIGINT) AS dist
-        |FROM customer a JOIN customer b ON a.c_custkey < b.c_custkey
-        |WHERE levenshtein(a.c_name, b.c_name) <= 1
-        |ORDER BY id1, id2""".stripMargin,
-    "dq_freshness" ->
-      """SELECT event_type,
-        | strftime(MAX(ts), '%Y-%m-%d %H:%M:%S') AS latest_ts,
-        | CAST((epoch_us(TIMESTAMP '2024-01-31 00:30:00') - epoch_us(MAX(ts))) // 60000000 AS BIGINT) AS lag_minutes,
-        | (epoch_us(TIMESTAMP '2024-01-31 00:30:00') - epoch_us(MAX(ts))) // 60000000 > 45 AS stale
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "id_gaps" ->
-      """WITH k AS (SELECT DISTINCT o_orderkey AS k FROM orders
-        |           WHERE o_orderkey % 97 <> 0 AND o_orderkey % 1000 <> 0),
-        |g AS (SELECT k, lag(k) OVER (ORDER BY k) AS pk FROM k)
-        |SELECT pk + 1 AS gap_start, k - 1 AS gap_end, k - pk - 1 AS n_missing
-        |FROM g WHERE pk IS NOT NULL AND k - pk > 1
-        |ORDER BY gap_start""".stripMargin,
-    "basket_pairs" ->
-      """WITH items AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-        |tot AS (SELECT COUNT(DISTINCT o) AS n_orders FROM items),
-        |freq AS (SELECT p, COUNT(*) AS n_p FROM items GROUP BY p),
-        |pr AS (SELECT a.p AS p1, b.p AS p2, COUNT(*) AS n_pair
-        |       FROM items a JOIN items b ON a.o = b.o AND a.p < b.p
-        |       GROUP BY 1, 2 HAVING COUNT(*) >= 3)
-        |SELECT pr.p1, pr.p2, pr.n_pair, f1.n_p AS n1, f2.n_p AS n2,
-        | (CAST(pr.n_pair AS DOUBLE) * tot.n_orders) / (CAST(f1.n_p AS DOUBLE) * f2.n_p) AS lift
-        |FROM pr JOIN freq f1 ON pr.p1 = f1.p JOIN freq f2 ON pr.p2 = f2.p
-        |CROSS JOIN tot
-        |ORDER BY lift DESC, p1, p2 LIMIT 50""".stripMargin,
-    "min_cost_supplier" ->
-      """WITH ps AS (SELECT l_partkey, l_suppkey,
-        |   CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS spend
-        | FROM lineitem GROUP BY 1, 2)
-        |SELECT l_partkey, l_suppkey AS best_suppkey, spend
-        |FROM ps
-        |QUALIFY row_number() OVER (PARTITION BY l_partkey ORDER BY spend, l_suppkey) = 1
-        |ORDER BY l_partkey""".stripMargin,
-    "feature_ntile" ->
-      """WITH r AS (SELECT o_totalprice AS v,
-        |             ntile(10) OVER (ORDER BY o_totalprice, o_orderkey) AS bucket
-        |           FROM orders)
-        |SELECT CAST(bucket AS BIGINT) AS bucket, COUNT(*) AS n_rows,
-        | MIN(v) AS lo, MAX(v) AS hi
-        |FROM r GROUP BY bucket ORDER BY bucket""".stripMargin,
-    "pareto_front" ->
-      """SELECT p_partkey, p_size, p_retailprice FROM part a
-        |WHERE NOT EXISTS (
-        |  SELECT 1 FROM part b
-        |  WHERE b.p_size >= a.p_size AND b.p_retailprice <= a.p_retailprice
-        |    AND (b.p_size > a.p_size OR b.p_retailprice < a.p_retailprice))
-        |ORDER BY p_size DESC, p_retailprice, p_partkey""".stripMargin,
-    "negative_samples" ->
-      """WITH idx AS (SELECT doc_id, row_number() OVER (ORDER BY doc_id) AS i
-        |             FROM documents),
-        |n AS (SELECT COUNT(*) AS c FROM documents),
-        |anchors AS (SELECT doc_id AS a, i AS ai FROM idx WHERE doc_id % 10 = 0),
-        |cand AS (SELECT a, s.s AS slot, ai,
-        |    CAST(concat('0x', substr(md5(concat(CAST(a AS VARCHAR), ':',
-        |      CAST(s.s AS VARCHAR))), 1, 8)) AS BIGINT) % n.c + 1 AS draw, n.c AS c
-        |  FROM anchors, n, unnest(generate_series(1, 4)) s(s)),
-        |fixed AS (SELECT a, slot,
-        |    CASE WHEN draw = ai THEN draw % c + 1 ELSE draw END AS ci FROM cand)
-        |SELECT f.a AS anchor_id, CAST(f.slot AS INTEGER) AS slot,
-        | idx.doc_id AS neg_id
-        |FROM fixed f JOIN idx ON idx.i = f.ci
-        |ORDER BY anchor_id, slot""".stripMargin,
+        |train AS (SELECT DISTINCT g FROM sh WHERE doc_id % 50 != 0),
+        |bench AS (SELECT doc_id, g FROM sh WHERE doc_id % 50 = 0)
+        |SELECT b.doc_id, COUNT(*) AS n_ngrams,
+        | CAST(SUM(CASE WHEN t.g IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hit,
+        | CAST(CAST(SUM(CASE WHEN t.g IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE)
+        |   / CAST(COUNT(*) AS DOUBLE) AS DOUBLE) AS contamination
+        |FROM bench b LEFT JOIN train t ON b.g = t.g
+        |GROUP BY b.doc_id ORDER BY b.doc_id""".stripMargin)),
+    Q("boilerplate_passages", boilerplatePassages, Some(
+      """WITH t AS (SELECT doc_id, regexp_split_to_array(text, '\s+') w FROM documents),
+        |p AS (SELECT doc_id, CAST((s-1)//3 AS BIGINT) AS pid,
+        |        array_to_string(w[s:s+2], ' ') AS ptext
+        |      FROM t, unnest(generate_series(1, greatest(len(w), 1), 3)) st(s)),
+        |hot AS (SELECT ptext FROM p GROUP BY ptext
+        |        HAVING COUNT(DISTINCT doc_id) > 3)
+        |SELECT p.doc_id,
+        | COALESCE(string_agg(CASE WHEN h.ptext IS NULL THEN p.ptext END,
+        |   ' ' ORDER BY p.pid), '') AS text_clean,
+        | CAST(SUM(CASE WHEN h.ptext IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
+        | CAST(SUM(CASE WHEN h.ptext IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_dropped
+        |FROM p LEFT JOIN hot h ON p.ptext = h.ptext
+        |GROUP BY p.doc_id ORDER BY p.doc_id""".stripMargin)),
+    Q("repeated_spans", repeatedSpansQ, Some(
+      """WITH toks AS (SELECT doc_id, regexp_split_to_array(text, '\s+') w FROM documents),
+        |win AS (SELECT doc_id, CAST(i.i AS BIGINT) AS pos,
+        |          array_to_string(w[i.i:i.i+5], ' ') AS g
+        |        FROM toks, unnest(generate_series(1, len(w)-5)) i(i) WHERE len(w) >= 6),
+        |hot AS (SELECT g FROM win GROUP BY g HAVING COUNT(DISTINCT doc_id) >= 2),
+        |f AS (SELECT win.doc_id, win.pos FROM win JOIN hot USING (g)),
+        |pe AS (SELECT doc_id, pos,
+        |         MAX(pos + 6) OVER (PARTITION BY doc_id ORDER BY pos
+        |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_end
+        |       FROM f),
+        |isl AS (SELECT doc_id, pos,
+        |          SUM(CASE WHEN prev_end IS NULL OR pos > prev_end THEN 1 ELSE 0 END)
+        |            OVER (PARTITION BY doc_id ORDER BY pos) AS island
+        |        FROM pe)
+        |SELECT doc_id, MIN(pos) AS span_start, MAX(pos) + 6 AS span_end,
+        | COUNT(*) AS n_windows
+        |FROM isl GROUP BY doc_id, island ORDER BY doc_id, span_start""".stripMargin)),
+    Q("repeated_spans_w3", repeatedSpansW3, Some(
+      """WITH toks AS (SELECT doc_id, regexp_split_to_array(text, '\s+') w FROM documents),
+        |win AS (SELECT doc_id, CAST(i.i AS BIGINT) AS pos,
+        |          array_to_string(w[i.i:i.i+2], ' ') AS g
+        |        FROM toks, unnest(generate_series(1, len(w)-2)) i(i) WHERE len(w) >= 3),
+        |hot AS (SELECT g FROM win GROUP BY g HAVING COUNT(DISTINCT doc_id) >= 2),
+        |f AS (SELECT win.doc_id, win.pos FROM win JOIN hot USING (g)),
+        |pe AS (SELECT doc_id, pos,
+        |         MAX(pos + 3) OVER (PARTITION BY doc_id ORDER BY pos
+        |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_end
+        |       FROM f),
+        |isl AS (SELECT doc_id, pos,
+        |          SUM(CASE WHEN prev_end IS NULL OR pos > prev_end THEN 1 ELSE 0 END)
+        |            OVER (PARTITION BY doc_id ORDER BY pos) AS island
+        |        FROM pe)
+        |SELECT doc_id, MIN(pos) AS span_start, MAX(pos) + 3 AS span_end,
+        | COUNT(*) AS n_windows
+        |FROM isl GROUP BY doc_id, island ORDER BY doc_id, span_start""".stripMargin)),
+    Q("dedup_substring", dedupSubstring, Some(
+      """WITH toks AS (SELECT doc_id, regexp_split_to_array(text, '\s+') w FROM documents),
+        |win AS (SELECT doc_id, CAST(i.i AS BIGINT) AS pos,
+        |          array_to_string(w[i.i:i.i+5], ' ') AS g
+        |        FROM toks, unnest(generate_series(1, len(w)-5)) i(i) WHERE len(w) >= 6),
+        |hot AS (SELECT g FROM win GROUP BY g HAVING COUNT(DISTINCT doc_id) >= 2),
+        |f AS (SELECT win.doc_id, win.pos FROM win JOIN hot USING (g)),
+        |pe AS (SELECT doc_id, pos,
+        |         MAX(pos + 6) OVER (PARTITION BY doc_id ORDER BY pos
+        |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_end
+        |       FROM f),
+        |isl AS (SELECT doc_id, pos,
+        |          SUM(CASE WHEN prev_end IS NULL OR pos > prev_end THEN 1 ELSE 0 END)
+        |            OVER (PARTITION BY doc_id ORDER BY pos) AS island
+        |        FROM pe),
+        |spans AS (SELECT doc_id, MIN(pos) AS s, MAX(pos) + 6 AS e
+        |          FROM isl GROUP BY doc_id, island),
+        |agg AS (SELECT doc_id, COUNT(*) AS ns, SUM(e - s) AS nm
+        |        FROM spans GROUP BY doc_id)
+        |SELECT t.doc_id, CAST(len(t.w) AS BIGINT) AS n_tokens,
+        | CAST(COALESCE(a.ns, 0) AS BIGINT) AS n_spans,
+        | CAST(COALESCE(a.nm, 0) AS BIGINT) AS n_masked,
+        | CAST(COALESCE(a.nm, 0) AS DOUBLE) / CAST(len(t.w) AS DOUBLE) AS masked_frac
+        |FROM toks t LEFT JOIN agg a USING (doc_id) ORDER BY t.doc_id""".stripMargin)),
+    Q("bucketed_join", bucketedJoin, Some(
+      """SELECT o_orderkey, COUNT(*) AS n_items,
+        | CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
+        | CAST(SUM(CAST(l_extendedprice*(1-l_discount) AS DECIMAL(28,6))) AS DOUBLE) AS revenue
+        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+        |GROUP BY o_orderkey ORDER BY o_orderkey""".stripMargin)),
+    Q("dsir_weights", dsirWeightsQ, Some(
+      """WITH toks AS (SELECT doc_id, source, regexp_split_to_array(text, '\s+') w FROM documents),
+        |uni AS (SELECT doc_id, source, u.g AS g FROM toks, unnest(w) u(g)),
+        |bi AS (SELECT doc_id, source, array_to_string(w[i.i:i.i+1], ' ') AS g
+        |       FROM toks, unnest(generate_series(1, len(w)-1)) i(i) WHERE len(w) >= 2),
+        |g AS (SELECT doc_id, source, g FROM uni UNION ALL SELECT doc_id, source, g FROM bi),
+        |gb AS (SELECT doc_id,
+        |         source IN ('src0','src1','src2','src3') AS t,
+        |         CAST(concat('0x', substr(md5(g), 1, 8)) AS BIGINT) % 4096 AS b
+        |       FROM g),
+        |cnt AS (SELECT b, SUM(CASE WHEN t THEN 1 ELSE 0 END) AS ct,
+        |               SUM(CASE WHEN NOT t THEN 1 ELSE 0 END) AS cr
+        |        FROM gb GROUP BY b),
+        |tot AS (SELECT SUM(ct) AS nt, SUM(cr) AS nr FROM cnt)
+        |SELECT gb.doc_id, COUNT(*) AS n_feats,
+        | CAST(SUM(CAST(round(ln(
+        |     (CAST(cnt.ct + 1 AS DOUBLE) / CAST(tot.nt + 4096 AS DOUBLE))
+        |   / (CAST(cnt.cr + 1 AS DOUBLE) / CAST(tot.nr + 4096 AS DOUBLE))), 6)
+        |   AS DECIMAL(28,12))) AS DOUBLE) AS dsir_score
+        |FROM gb JOIN cnt ON gb.b = cnt.b, tot
+        |GROUP BY gb.doc_id ORDER BY gb.doc_id""".stripMargin)),
+    Q("decontaminate_jaccard", decontaminateJaccard, Some(
+      """WITH toks AS (SELECT doc_id, regexp_split_to_array(text, '\s+') w FROM documents),
+        |sh AS (SELECT DISTINCT doc_id, array_to_string(w[i.i:i.i+2], ' ') AS sh
+        |       FROM toks, unnest(generate_series(1, len(w)-2)) i(i) WHERE len(w) >= 3),
+        |sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
+        |c AS (SELECT t.doc_id AS t_id, b.doc_id AS b_id, COUNT(*) AS common
+        |      FROM sh t JOIN sh b ON t.sh = b.sh
+        |      WHERE t.doc_id % 10 != 0 AND b.doc_id % 10 = 0
+        |      GROUP BY 1, 2)
+        |SELECT c.t_id, c.b_id, CAST(c.common AS BIGINT) AS common,
+        | CAST(c.common AS DOUBLE) / (st.n + sb.n - c.common) AS jaccard
+        |FROM c JOIN sz st ON c.t_id = st.doc_id JOIN sz sb ON c.b_id = sb.doc_id
+        |WHERE CAST(c.common AS DOUBLE) / (st.n + sb.n - c.common) >= 0.5
+        |ORDER BY c.t_id, c.b_id""".stripMargin)),
+    Q("decontaminate_winnow", decontaminateWinnow, Some(
+      """WITH toks AS (SELECT doc_id, regexp_split_to_array(text, '\s+') w FROM documents),
+        |g AS (SELECT doc_id, CAST(i.i AS BIGINT) AS pos,
+        |        CAST(concat('0x', substr(md5(array_to_string(w[i.i:i.i+3], ' ')), 1, 8)) AS BIGINT) AS h
+        |      FROM toks, unnest(generate_series(1, len(w)-3)) i(i) WHERE len(w) >= 4),
+        |x AS (SELECT doc_id, pos, h,
+        |  (CASE WHEN LAG(h,1) OVER dw >= h THEN 1 ELSE 0 END
+        |   + CASE WHEN LAG(h,1) OVER dw >= h AND LAG(h,2) OVER dw >= h THEN 1 ELSE 0 END
+        |   + CASE WHEN LAG(h,1) OVER dw >= h AND LAG(h,2) OVER dw >= h
+        |          AND LAG(h,3) OVER dw >= h THEN 1 ELSE 0 END) AS llen,
+        |  (CASE WHEN LEAD(h,1) OVER dw > h THEN 1 ELSE 0 END
+        |   + CASE WHEN LEAD(h,1) OVER dw > h AND LEAD(h,2) OVER dw > h THEN 1 ELSE 0 END
+        |   + CASE WHEN LEAD(h,1) OVER dw > h AND LEAD(h,2) OVER dw > h
+        |          AND LEAD(h,3) OVER dw > h THEN 1 ELSE 0 END) AS rlen,
+        |  MAX(pos) OVER (PARTITION BY doc_id) AS m
+        |  FROM g WINDOW dw AS (PARTITION BY doc_id ORDER BY pos)),
+        |wf AS (SELECT DISTINCT doc_id, h FROM x
+        |       WHERE GREATEST(1, pos - 3, pos - llen) <= LEAST(pos + rlen, m) - 3),
+        |t AS (SELECT doc_id AS t_id, h FROM wf WHERE doc_id % 10 != 0),
+        |b AS (SELECT doc_id AS b_id, h FROM wf WHERE doc_id % 10 = 0),
+        |bs AS (SELECT b_id, COUNT(*) AS nb FROM b GROUP BY b_id),
+        |p AS (SELECT t_id, b_id, COUNT(*) AS shared
+        |      FROM t JOIN b USING (h) GROUP BY t_id, b_id)
+        |SELECT p.t_id, p.b_id, p.shared,
+        | CAST(p.shared AS DOUBLE) / CAST(bs.nb AS DOUBLE) AS containment
+        |FROM p JOIN bs USING (b_id) WHERE p.shared >= 2
+        |ORDER BY p.t_id, p.b_id""".stripMargin)),
     // three proven detector fragments (decontaminate %50→%10 adapted,
     // decontaminate_jaccard, decontaminate_winnow) reduced to flag SETS
     // and full-outer-joined — the compose-from-proven-fragments rule
-    "contamination_report" ->
+    Q("contamination_report", contaminationReport, Some(
       """WITH toks AS (SELECT doc_id, regexp_split_to_array(text, '\s+') w FROM documents),
         |esh AS (SELECT DISTINCT doc_id, md5(array_to_string(w[i.i:i.i+2], ' ')) AS h
         |        FROM toks, unnest(generate_series(1, len(w)-2)) i(i) WHERE len(w) >= 3),
@@ -6981,737 +7464,495 @@ object SparkEntry {
         | CAST(f_jaccard AS BIGINT) AS f_jaccard,
         | CAST(f_winnow AS BIGINT) AS f_winnow,
         | CAST(f_exact + f_jaccard + f_winnow AS BIGINT) AS n_methods
-        |FROM f ORDER BY doc_id""".stripMargin,
-    // every fragment below is copied verbatim from an already-green
-    // oracle row (text_quality / quality_classifier / text_repetition) —
-    // the curation_pipeline compose-from-proven-fragments rule
-    "quality_ensemble" ->
-      """WITH s AS (
-        | SELECT doc_id,
-        |  CAST(len(regexp_split_to_array(text, '\s+')) AS BIGINT) AS n_tokens,
-        |  CAST(len(list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |    x -> x IN ('the','a','of','and','to','in','is','was','for','on'))) AS BIGINT) AS n_stopwords
-        | FROM documents),
-        |q AS (SELECT doc_id,
-        |  least(CAST(n_tokens AS DOUBLE) / 50.0, 1.0) * 0.5
-        |    + CAST(n_stopwords AS DOUBLE) / CAST(n_tokens AS DOUBLE) * 0.5 AS quality_score
-        | FROM s),
-        |ct AS (SELECT doc_id, unnest(list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |         x -> x <> '')) AS tok FROM documents),
-        |sc AS (SELECT doc_id,
-        |   SUM(((CAST(concat('0x', substr(md5(tok), 1, 8)) AS BIGINT) % 64)
-        |        * 2654435761) % 21 - 10) AS s
-        | FROM ct GROUP BY doc_id),
-        |clf AS (SELECT d.doc_id, CAST(COALESCE(sc.s, 0) AS BIGINT) AS clf_score
-        |        FROM documents d LEFT JOIN sc USING (doc_id)),
-        |rp AS (SELECT doc_id,
-        |   CAST(len(w) - len(list_distinct(w)) AS DOUBLE) / NULLIF(CAST(len(w) AS DOUBLE), 0) AS dup_frac
-        | FROM (SELECT doc_id, regexp_split_to_array(text, '\s+') w FROM documents)),
-        |v AS (SELECT q.doc_id, q.quality_score, clf.clf_score, rp.dup_frac,
-        |   CAST(CASE WHEN q.quality_score >= 0.5 THEN 1 ELSE 0 END
-        |     + CASE WHEN clf.clf_score >= 0 THEN 1 ELSE 0 END
-        |     + CASE WHEN rp.dup_frac <= 0.2 THEN 1 ELSE 0 END AS BIGINT) AS votes
-        | FROM q JOIN clf USING (doc_id) JOIN rp USING (doc_id))
-        |SELECT doc_id, quality_score, clf_score, dup_frac, votes,
-        | votes >= 2 AS keep
-        |FROM v ORDER BY doc_id""".stripMargin,
-    // slot weight recomputed arithmetically from TextAnalysis.knuthWeights'
-    // closed form: ((slot * 2654435761) % 21) - 10, slot = md5-prefix % 64
-    // sqrt is IEEE-correctly-rounded on both engines; the weight sum is
-    // exact decimal (VARCHAR-routed cast on the DuckDB side — the
-    // embedding_centroids parity rule); shares/targets are IEEE ops on
-    // identical operands
-    "mix_temperature" ->
-      """WITH t AS (SELECT source,
-        |   CAST(SUM(len(regexp_split_to_array(text, '\s+'))) AS BIGINT) AS n_tokens
-        | FROM documents GROUP BY source),
-        |w AS (SELECT source, n_tokens,
-        |   sqrt(CAST(n_tokens AS DOUBLE)) AS weight FROM t),
-        |s AS (SELECT
-        |   CAST(SUM(CAST(CAST(weight AS VARCHAR) AS DECIMAL(28,12))) AS DOUBLE) AS sw,
-        |   SUM(n_tokens) AS sn FROM w)
-        |SELECT source, n_tokens, weight,
-        | CAST(n_tokens AS DOUBLE) / CAST(sn AS DOUBLE) AS natural_share,
-        | weight / sw AS temp_share,
-        | CAST(floor((weight / sw) * CAST(2000000 AS DOUBLE)) AS BIGINT) AS target_tokens
-        |FROM w, s ORDER BY source""".stripMargin,
-    "dq_benford" ->
-      graft.operators.Quality.benfordSql("orders", "o_totalprice"),
-    "epoch_plan" ->
-      s"""WITH t AS (SELECT source,
-        |   CAST(SUM(len(regexp_split_to_array(text, '\\s+'))) AS BIGINT) AS n_tokens
-        | FROM documents GROUP BY source),
-        |w AS (SELECT source, n_tokens,
-        |   CAST(${graft.operators.Curation.weightCaseSql("source", weightedSampleWeights, 1L)} AS BIGINT) AS weight
-        | FROM t),
-        |s AS (SELECT SUM(weight) AS sw FROM w)
-        |SELECT source, n_tokens, weight,
-        | CAST((1000000 * weight) // s.sw AS BIGINT) AS target_tokens,
-        | CAST(((1000000 * weight) // s.sw + n_tokens - 1) // n_tokens AS BIGINT) AS epochs
-        |FROM w, s ORDER BY source""".stripMargin,
-    "quality_classifier" ->
-      """WITH toks AS (SELECT doc_id,
-        |   list_filter(regexp_split_to_array(lower(text), '\s+'), x -> x <> '') AS w
-        | FROM documents),
-        |t AS (SELECT doc_id, unnest(w) AS tok FROM toks),
-        |sc AS (SELECT doc_id,
-        |   SUM(((CAST(concat('0x', substr(md5(tok), 1, 8)) AS BIGINT) % 64)
-        |        * 2654435761) % 21 - 10) AS s
-        | FROM t GROUP BY doc_id)
-        |SELECT k.doc_id, CAST(len(k.w) AS BIGINT) AS n_tokens,
-        | CAST(COALESCE(sc.s, 0) AS BIGINT) AS score,
-        | COALESCE(sc.s, 0) >= 0 AS keep
-        |FROM toks k LEFT JOIN sc USING (doc_id) ORDER BY k.doc_id""".stripMargin,
-    "quality_calibration" ->
-      // chains the PROVEN quality_classifier score CTE and quality_filter
-      // gate fragment verbatim (§6 oracle-chaining rule)
-      """WITH toks AS (SELECT doc_id,
-        |   list_filter(regexp_split_to_array(lower(text), '\s+'), x -> x <> '') AS w
-        | FROM documents),
-        |t AS (SELECT doc_id, unnest(w) AS tok FROM toks),
-        |sc AS (SELECT doc_id,
-        |   SUM(((CAST(concat('0x', substr(md5(tok), 1, 8)) AS BIGINT) % 64)
-        |        * 2654435761) % 21 - 10) AS s
-        | FROM t GROUP BY doc_id),
-        |q AS (
-        | SELECT doc_id,
-        |  least(CAST(len(regexp_split_to_array(text, '\s+')) AS DOUBLE) / 50.0, 1.0) * 0.5
-        |   + CAST(len(list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |       x -> x IN ('the','a','of','and','to','in','is','was','for','on'))) AS DOUBLE)
-        |     / CAST(len(regexp_split_to_array(text, '\s+')) AS DOUBLE) * 0.5 AS quality_score
-        | FROM documents),
-        |thr AS (SELECT quantile_cont(quality_score, 0.25) AS thr FROM q),
-        |j AS (SELECT k.doc_id, COALESCE(sc.s, 0) AS clf_score, q.quality_score
-        |      FROM toks k LEFT JOIN sc USING (doc_id) JOIN q USING (doc_id)),
-        |b AS (SELECT (clf_score + 100000) // 10 AS band,
-        |       CASE WHEN quality_score >= thr THEN 1 ELSE 0 END AS passed
-        |      FROM j, thr)
-        |SELECT CAST(band * 10 - 100000 AS BIGINT) AS band_lo,
-        | COUNT(*) AS n_docs, CAST(SUM(passed) AS BIGINT) AS n_pass,
-        | CAST(SUM(passed) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS pass_rate
-        |FROM b GROUP BY band ORDER BY band_lo""".stripMargin,
-    "clean_pipeline" ->
-      // COALESCE mirrors fillNaValues(amount -> 0.0); QUALIFY mirrors
-      // dedupKeepFirst(event_id) — both previously absent, so equivalence
-      // silently rested on the testdata having no null values / dup ids
-      """SELECT event_id, user_id, event_type,
-        | strftime(ts, '%Y-%m-%d %H:%M:%S') AS event_ts,
-        | COALESCE(CASE WHEN value > 100 THEN 100.0 ELSE value END, 0.0) AS amount,
-        | CAST(props->>'$.k' AS BIGINT) AS k
+        |FROM f ORDER BY doc_id""".stripMargin)),
+    Q("decontaminate_minhash", decontaminateMinhash),
+    Q("decontaminate_semantic", decontaminateSemanticQ),
+    Q("embedding_centroids", embeddingCentroids, Some(
+      // the double -> VARCHAR -> DECIMAL route makes DuckDB round the
+      // shortest-roundtrip decimal repr like Spark's Cast does; DuckDB's
+      // native double->decimal goes through double arithmetic and can be
+      // off by 1 ulp at the 12th decimal
+      """SELECT label, CAST(pos - 1 AS BIGINT) AS pos,
+        | CAST(SUM(CAST(CAST(CAST(x AS DOUBLE) AS VARCHAR) AS DECIMAL(28,12))) AS DOUBLE) / COUNT(x) AS centroid
+        |FROM (SELECT label, unnest(embedding) AS x,
+        |      generate_subscripts(embedding, 1) AS pos FROM embeddings)
+        |GROUP BY label, pos ORDER BY label, pos""".stripMargin)),
+    Q("sim_ivf_topk", simIvfTopK),
+    Q("pq_ann_topk", pqAnnTopK),
+    Q("sim_ivfpq_topk", simIvfPqTopK),
+    Q("sim_ivfpq_residual", simIvfPqResidualTopK),
+    Q("asof_join", asofJoinQ, Some(
+      """WITH c AS (SELECT user_id, ts, event_id AS click_id FROM events WHERE event_type = 'click'
+        |           QUALIFY row_number() OVER (PARTITION BY user_id, ts ORDER BY event_id DESC) = 1),
+        |p AS (SELECT event_id, user_id, ts, value FROM events WHERE event_type = 'purchase')
+        |SELECT p.event_id, p.user_id, strftime(p.ts, '%Y-%m-%d %H:%M:%S') AS ts,
+        | strftime(c.ts, '%Y-%m-%d %H:%M:%S') AS asof_ts, c.click_id AS asof_click_id
+        |FROM p ASOF LEFT JOIN c ON p.user_id = c.user_id AND p.ts >= c.ts
+        |ORDER BY p.event_id""".stripMargin)),
+    Q("range_join", rangeJoinQ, Some(
+      """WITH c AS (SELECT user_id, event_id AS click_id, ts AS start_ts,
+        |            ts + INTERVAL 30 MINUTE AS end_ts
+        |           FROM events WHERE event_type = 'click'),
+        |p AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase')
+        |SELECT p.event_id, p.user_id, strftime(p.ts, '%Y-%m-%d %H:%M:%S') AS ts,
+        | c.click_id, strftime(c.start_ts, '%Y-%m-%d %H:%M:%S') AS click_ts
+        |FROM p JOIN c ON p.user_id = c.user_id
+        |  AND p.ts >= c.start_ts AND p.ts < c.end_ts
+        |ORDER BY p.event_id, c.click_id""".stripMargin)),
+    // the interleave expression is generated by the SAME code path the
+    // Spark side documents (Layout.zvalueSql) — dialect-common BIGINT
+    // bit ops only, so both engines evaluate the identical formula
+    Q("zorder_layout", zorderLayoutQ, Some(
+      s"""SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey,
+         | ${Layout.zvalueSql(Seq("l_partkey", "l_suppkey"), 20)} AS zval
+         |FROM lineitem
+         |ORDER BY zval, l_orderkey, l_linenumber""".stripMargin)),
+    // the Hilbert automaton as generated chained CTEs (Layout.hilbertSql)
+    // — same formula-parity trick, per-level state columns instead of one
+    // scalar expression (the state chain would blow up 2^bits inlined)
+    Q("hilbert_layout", hilbertLayoutQ, Some(
+      (Layout.hilbertSql("lineitem",
+        Seq("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey"),
+        "l_partkey", "l_suppkey", bits = 20) +
+        "\nORDER BY hval, l_orderkey, l_linenumber"))),
+    // k=3: the generated-automaton CTE chain with the 12-state row
+    // lookup rendered as a CASE ladder (same BIGINT bit ops both
+    // engines compute identically)
+    Q("hilbert_layout_3d", hilbertLayout3dQ, Some(
+      (Layout.hilbert3Sql("lineitem",
+        Seq("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey"),
+        "l_partkey", "l_suppkey", "l_orderkey", bits = 20) +
+        "\nORDER BY hval, l_orderkey, l_linenumber"))),
+    Q("dedup_incremental", dedupIncremental, Some(
+      """WITH t AS (SELECT doc_id, regexp_split_to_array(text, '\s+') w FROM documents),
+        |c AS (SELECT doc_id, CAST((s - 1) // 8 AS BIGINT) AS chunk_id,
+        |       md5(array_to_string(w[s:s+15], ' ')) AS chunk_hash
+        |      FROM t, unnest(generate_series(1, greatest(len(w) - 16 + 1, 1), 8)) st(s)),
+        |new AS (SELECT * FROM c WHERE doc_id % 5 < 2),
+        |idx AS (SELECT DISTINCT chunk_hash FROM c WHERE doc_id % 5 >= 2)
+        |SELECT doc_id, chunk_id, chunk_hash,
+        | CASE WHEN chunk_hash IN (SELECT chunk_hash FROM idx) THEN 'dup_of_index'
+        |      WHEN row_number() OVER (PARTITION BY chunk_hash ORDER BY doc_id, chunk_id) > 1
+        |        THEN 'dup_in_batch'
+        |      ELSE 'kept' END AS status
+        |FROM new ORDER BY doc_id, chunk_id""".stripMargin)),
+    Q("dedup_keep_best", dedupKeepBest, Some(keepBestOracle)),
+    Q("dedup_keep_best_cached", dedupKeepBestCached, Some(keepBestOracle),
+      prepare = Some((s: SparkSession, d: String) => {
+        val c = keepBestClusters(s, d).persist()
+        c.count()
+        c.createOrReplaceTempView(keepBestCacheView)
+      })),
+    // the RANGE frame is anchored on integer epoch seconds in both
+    // engines, so peer groups match exactly; the windowed sum uses the
+    // hourly_rollup DECIMAL(18,2) parity convention
+    Q("events_rolling", eventsRolling, Some(
+      """SELECT event_id, user_id, epoch_us(ts) // 1000000 AS unix_sec,
+        | COUNT(*) OVER w AS n_trailing,
+        | CAST(SUM(CAST(value AS DECIMAL(18,2))) OVER w AS DOUBLE) AS total_trailing
         |FROM events
-        |WHERE CAST(props->>'$.k' AS BIGINT) IS NOT NULL AND user_id IS NOT NULL
-        |QUALIFY row_number() OVER (PARTITION BY event_id ORDER BY ts, user_id, event_type) = 1
-        |ORDER BY event_id""".stripMargin,
-    "dedup_keep_first" ->
-      """SELECT user_id, event_type, event_id,
-        | strftime(ts, '%Y-%m-%d %H:%M:%S') AS first_ts, value
-        |FROM events
-        |QUALIFY row_number() OVER (PARTITION BY user_id, event_type ORDER BY ts, event_id) = 1
-        |ORDER BY user_id, event_type""".stripMargin,
-    "dq_report" ->
-      """SELECT check_name, violations FROM (
-        | SELECT 'dup_natural_key' AS check_name,
-        |  CAST(COUNT(*) - COUNT(DISTINCT (l_orderkey, l_linenumber)) AS BIGINT) AS violations FROM lineitem
-        | UNION ALL
-        | SELECT 'null_l_quantity', CAST(COUNT(*) FILTER (l_quantity IS NULL) AS BIGINT) FROM lineitem
-        | UNION ALL
-        | SELECT 'null_l_shipdate', CAST(COUNT(*) FILTER (l_shipdate IS NULL) AS BIGINT) FROM lineitem
-        | UNION ALL
-        | SELECT 'null_l_extendedprice', CAST(COUNT(*) FILTER (l_extendedprice IS NULL) AS BIGINT) FROM lineitem
-        |) ORDER BY check_name""".stripMargin,
-    "dq_referential" ->
-      """SELECT check_name, violations FROM (
-        | SELECT 'lineitem_orphan_orderkey' AS check_name,
-        |  CAST(COUNT(*) FILTER (o_orderkey IS NULL) AS BIGINT) AS violations
-        | FROM lineitem LEFT JOIN orders ON l_orderkey = o_orderkey
-        | UNION ALL
-        | SELECT 'orders_orphan_custkey',
-        |  CAST(COUNT(*) FILTER (c_custkey IS NULL) AS BIGINT)
-        | FROM orders LEFT JOIN customer ON o_custkey = c_custkey
-        |) ORDER BY check_name""".stripMargin,
-    "dedup_clusters" ->
-      """WITH RECURSIVE toks AS (SELECT doc_id, regexp_split_to_array(text, '\s+') w FROM documents),
-        |sh AS (SELECT DISTINCT doc_id, array_to_string(w[i.i:i.i+2], ' ') AS sh
-        |       FROM toks, unnest(generate_series(1, len(w)-2)) i(i) WHERE len(w) >= 3),
-        |sz AS (SELECT doc_id, COUNT(*) n_sh FROM sh GROUP BY 1),
-        |cnt AS (SELECT a.doc_id d1, b.doc_id d2, COUNT(*) common
-        |        FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id GROUP BY 1, 2),
-        |pairs AS (SELECT d1, d2 FROM cnt JOIN sz x ON d1 = x.doc_id JOIN sz y ON d2 = y.doc_id
-        |          WHERE CAST(common AS DOUBLE) / (x.n_sh + y.n_sh - common) >= 0.5),
-        |edges AS (SELECT d1 a, d2 b FROM pairs UNION SELECT d2, d1 FROM pairs),
-        |reach(id, r) AS (
-        | SELECT a, a FROM edges
-        | UNION
-        | SELECT reach.id, edges.b FROM reach JOIN edges ON reach.r = edges.a
-        |)
-        |SELECT id AS doc_id, MIN(r) AS canonical_id FROM reach
-        |GROUP BY id ORDER BY doc_id""".stripMargin,
-    // row 52's proven component CTE + two rollups; singletons = docs in
-    // no pair, emitted as the size-1 row
-    "dedup_cluster_sizes" ->
-      """WITH RECURSIVE toks AS (SELECT doc_id, regexp_split_to_array(text, '\s+') w FROM documents),
-        |sh AS (SELECT DISTINCT doc_id, array_to_string(w[i.i:i.i+2], ' ') AS sh
-        |       FROM toks, unnest(generate_series(1, len(w)-2)) i(i) WHERE len(w) >= 3),
-        |sz AS (SELECT doc_id, COUNT(*) n_sh FROM sh GROUP BY 1),
-        |cnt AS (SELECT a.doc_id d1, b.doc_id d2, COUNT(*) common
-        |        FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id GROUP BY 1, 2),
-        |pairs AS (SELECT d1, d2 FROM cnt JOIN sz x ON d1 = x.doc_id JOIN sz y ON d2 = y.doc_id
-        |          WHERE CAST(common AS DOUBLE) / (x.n_sh + y.n_sh - common) >= 0.5),
-        |edges AS (SELECT d1 a, d2 b FROM pairs UNION SELECT d2, d1 FROM pairs),
-        |reach(id, r) AS (
-        | SELECT a, a FROM edges
-        | UNION
-        | SELECT reach.id, edges.b FROM reach JOIN edges ON reach.r = edges.a
-        |),
-        |comp AS (SELECT id AS doc_id, MIN(r) AS canonical_id FROM reach GROUP BY id),
-        |sizes AS (SELECT canonical_id, CAST(COUNT(*) AS BIGINT) AS cluster_size
-        |          FROM comp GROUP BY 1),
-        |hist AS (SELECT cluster_size, CAST(COUNT(*) AS BIGINT) AS n_clusters
-        |         FROM sizes GROUP BY 1),
-        |singles AS (SELECT CAST(1 AS BIGINT) AS cluster_size,
-        |  CAST((SELECT COUNT(*) FROM documents) - (SELECT COUNT(*) FROM comp) AS BIGINT) AS n_clusters)
-        |SELECT * FROM (SELECT * FROM hist UNION ALL SELECT * FROM singles)
-        |ORDER BY cluster_size""".stripMargin,
-    "dim_customer" ->
-      """SELECT CAST(dense_rank() OVER (ORDER BY c_custkey) AS BIGINT) AS customer_sk,
-        | c_custkey, c_name, c_nationkey, c_acctbal, c_mktsegment
-        |FROM customer ORDER BY customer_sk""".stripMargin,
-    "dim_date" ->
-      """WITH r AS (SELECT CAST(MIN(o_orderdate) AS DATE) lo, CAST(MAX(o_orderdate) AS DATE) hi FROM orders),
-        | d AS (SELECT CAST(unnest(generate_series(lo, hi, INTERVAL 1 DAY)) AS DATE) AS fd FROM r)
-        |SELECT CAST(year(fd)*10000 + month(fd)*100 + day(fd) AS BIGINT) AS date_sk,
-        | strftime(fd, '%Y-%m-%d') AS full_date,
-        | CAST(day(fd) AS BIGINT) AS day, CAST(month(fd) AS BIGINT) AS month,
-        | CAST(year(fd) AS BIGINT) AS year, dayname(fd) AS week_day
-        |FROM d ORDER BY date_sk""".stripMargin,
-    "fact_orders" ->
-      """WITH dimc AS (
-        | SELECT CAST(dense_rank() OVER (ORDER BY c_custkey) AS BIGINT) AS customer_sk, c_custkey
-        | FROM customer)
-        |SELECT o_orderkey, customer_sk,
-        | CAST(year(o_orderdate)*10000 + month(o_orderdate)*100 + day(o_orderdate) AS BIGINT) AS date_sk,
-        | o_orderstatus, o_totalprice
-        |FROM orders JOIN dimc ON o_custkey = c_custkey
-        |ORDER BY o_orderkey""".stripMargin,
-    "fact_multi_role" ->
-      """WITH dimn AS (
-        | SELECT CAST(dense_rank() OVER (ORDER BY n_nationkey) AS BIGINT) AS nation_sk, n_nationkey
-        | FROM nation)
-        |SELECT l_orderkey, l_linenumber,
-        | cn.nation_sk AS cust_nation_sk, sn.nation_sk AS supp_nation_sk,
-        | CAST(year(o_orderdate)*10000 + month(o_orderdate)*100 + day(o_orderdate) AS BIGINT) AS date_sk,
-        | l_extendedprice
-        |FROM lineitem
-        | JOIN orders ON l_orderkey = o_orderkey
-        | JOIN customer ON o_custkey = c_custkey
-        | JOIN supplier ON l_suppkey = s_suppkey
-        | JOIN dimn cn ON c_nationkey = cn.n_nationkey
-        | JOIN dimn sn ON s_nationkey = sn.n_nationkey
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "incremental_interval" ->
-      """SELECT CAST(year(ts) AS BIGINT) AS y, CAST(month(ts) AS BIGINT) AS m,
-        | CAST(day(ts) AS BIGINT) AS d, COUNT(*) AS n,
-        | CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total
-        |FROM events
-        |WHERE ts >= TIMESTAMP '2024-01-10' AND ts < TIMESTAMP '2024-01-12'
-        |GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin,
-    "upsert_do_nothing" ->
-      """SELECT user_id, event_type, event_id,
-        | strftime(ts, '%Y-%m-%d %H:%M:%S') AS first_ts, value
-        |FROM events
-        |QUALIFY row_number() OVER (PARTITION BY user_id, event_type ORDER BY ts, event_id) = 1
-        |ORDER BY user_id, event_type""".stripMargin,
-    "upsert_do_update" ->
-      """SELECT user_id, event_type, event_id,
-        | strftime(ts, '%Y-%m-%d %H:%M:%S') AS last_ts, value
-        |FROM events
-        |QUALIFY row_number() OVER (PARTITION BY user_id, event_type ORDER BY ts DESC, event_id DESC) = 1
-        |ORDER BY user_id, event_type""".stripMargin,
-    "json_extract_events" ->
-      """SELECT event_type, CAST(SUM(CAST(props->>'$.k' AS BIGINT)) AS BIGINT) AS sum_k, COUNT(*) AS n
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "hourly_rollup" ->
-      """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hour_start,
-        | event_type, COUNT(*) AS n,
-        | CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total
-        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    // OHLC: positional endpoints via full-tie-break row_numbers (ts,
-    // event_id — unique), identical ranks in both engines; values reach
-    // the output untouched, so parity is pure ordering
-    "events_ohlc" ->
-      """WITH b AS (
-        | SELECT event_type, date_trunc('hour', ts) AS h, value,
-        |  ROW_NUMBER() OVER (PARTITION BY event_type, date_trunc('hour', ts)
-        |                     ORDER BY ts, event_id) AS ra,
-        |  ROW_NUMBER() OVER (PARTITION BY event_type, date_trunc('hour', ts)
-        |                     ORDER BY ts DESC, event_id DESC) AS rd
-        | FROM events WHERE value IS NOT NULL)
-        |SELECT event_type, strftime(h, '%Y-%m-%d %H:%M:%S') AS hour_start,
-        | COUNT(*) AS n,
-        | MAX(CASE WHEN ra = 1 THEN value END) AS open,
-        | MAX(value) AS high,
-        | MIN(value) AS low,
-        | MAX(CASE WHEN rd = 1 THEN value END) AS close
-        |FROM b GROUP BY 1, 2 ORDER BY event_type, hour_start""".stripMargin,
-
-    "hourly_gapfill" ->
-      """WITH hourly AS (
-        | SELECT date_trunc('hour', ts) h, event_type, COUNT(*) n,
-        |   CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*) AS avg_value
-        | FROM events GROUP BY 1, 2),
-        |bounds AS (SELECT MIN(h) lo, MAX(h) hi FROM hourly),
-        |spine AS (SELECT unnest(generate_series(lo, hi, INTERVAL 1 HOUR)) AS h FROM bounds),
-        |grid AS (SELECT s.h, t.event_type
-        |         FROM spine s CROSS JOIN (SELECT DISTINCT event_type FROM hourly) t)
-        |SELECT strftime(g.h, '%Y-%m-%d %H:%M:%S') AS hour_start, g.event_type,
-        | COALESCE(hh.n, 0) AS n,
-        | last_value(hh.avg_value IGNORE NULLS)
-        |   OVER (PARTITION BY g.event_type ORDER BY g.h
-        |         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS last_avg_value
-        |FROM grid g LEFT JOIN hourly hh ON g.h = hh.h AND g.event_type = hh.event_type
-        |ORDER BY hour_start, g.event_type""".stripMargin,
-    "audience_overlap" ->
-      """WITH ut AS (SELECT DISTINCT user_id, event_type FROM events)
-        |SELECT a.event_type AS t1, b.event_type AS t2, COUNT(*) AS n_users
-        |FROM ut a JOIN ut b ON a.user_id = b.user_id AND a.event_type <= b.event_type
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "sessionize" ->
-      """WITH x AS (
-        | SELECT user_id, event_id, ts,
-        |  epoch_us(ts) - lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS gap
-        | FROM events),
-        |s AS (
-        | SELECT user_id, event_id, ts,
-        |  SUM(CASE WHEN gap IS NULL OR gap > 1800000000 THEN 1 ELSE 0 END)
-        |   OVER (PARTITION BY user_id ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING) AS session_id
-        | FROM x)
-        |SELECT user_id, CAST(session_id AS BIGINT) AS session_id, COUNT(*) AS n_events,
-        | strftime(MIN(ts), '%Y-%m-%d %H:%M:%S') AS session_start,
-        | strftime(MAX(ts), '%Y-%m-%d %H:%M:%S') AS session_end
-        |FROM s GROUP BY user_id, session_id ORDER BY user_id, session_id""".stripMargin,
-    // integer-exact decay: BIGINT shift weights (engines agree on <<),
-    // DECIMAL(18,2) value, exact scaled sum; the only float ops are the
-    // final cast + one exact power-of-two division
-    "user_decay_score" ->
-      """WITH a AS (SELECT max(ts) AS mx FROM events),
-        |x AS (
-        | SELECT user_id, value,
-        |  CAST((epoch_us(mx) - epoch_us(ts)) // 3600000000 AS BIGINT) AS age_h
-        | FROM events, a)
-        |SELECT user_id, COUNT(*) AS n_events,
-        | CAST(MIN(age_h) AS BIGINT) AS freshest_age_h,
-        | CAST(SUM(CASE WHEN age_h <= 40
-        |   THEN CAST(value AS DECIMAL(18,2)) * (CAST(1 AS BIGINT) << CAST(40 - age_h AS INT))
-        |   END) AS DOUBLE) / 1099511627776.0 AS decay_score
-        |FROM x GROUP BY user_id ORDER BY user_id""".stripMargin,
-    // weights are exact integer micros; value*dt is ONE IEEE multiply on
-    // both engines, summed in DECIMAL (order-independent), one final
-    // IEEE division — the §6 parity form
-    "events_twap" ->
-      """WITH x AS (
-        | SELECT event_type, value,
-        |  epoch_us(lead(ts) OVER (PARTITION BY event_type ORDER BY ts, event_id))
-        |   - epoch_us(ts) AS dt
-        | FROM events)
-        |SELECT event_type,
-        | COUNT(dt) AS n_obs,
-        | CAST(SUM(dt) AS BIGINT) AS total_dt_us,
-        | CAST(SUM(CAST(value * dt AS DECIMAL(28,6))) AS DOUBLE)
-        |  / CAST(SUM(dt) AS DOUBLE) AS twap,
-        | CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) / COUNT(value) AS plain_mean
-        |FROM x GROUP BY event_type ORDER BY event_type""".stripMargin,
-    // the proven sessionize lag-gap CTE + the proven events_spike z-test
-    // CTE, joined on the half-open overlap predicate the responsibility-
-    // bin decomposition evaluates (sessions closed at last-event +1 us)
-    "session_incidents" ->
-      """WITH x AS (
-        | SELECT user_id, event_id, ts,
-        |  epoch_us(ts) - lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS gap
-        | FROM events),
-        |s AS (
-        | SELECT user_id, event_id, ts,
-        |  SUM(CASE WHEN gap IS NULL OR gap > 1800000000 THEN 1 ELSE 0 END)
-        |   OVER (PARTITION BY user_id ORDER BY ts, event_id ROWS UNBOUNDED PRECEDING) AS session_id
-        | FROM x),
-        |sess AS (
-        | SELECT user_id, CAST(session_id AS BIGINT) AS session_id,
-        |  MIN(ts) AS s_start, MAX(ts) AS s_last
-        | FROM s GROUP BY user_id, session_id),
-        |h AS (
+        |WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts) // 1000000
+        | RANGE BETWEEN 86399 PRECEDING AND CURRENT ROW)
+        |ORDER BY event_id""".stripMargin)),
+    Q("events_spike", eventsSpike, Some(
+      """WITH h AS (
         | SELECT date_trunc('hour', ts) AS hour_ts, event_type, COUNT(*) AS cnt
         | FROM events GROUP BY 1, 2),
-        |zx AS (
+        |x AS (
         | SELECT hour_ts, event_type, cnt,
-        |  COUNT(*) OVER w AS n_prior, SUM(cnt) OVER w AS s_prior,
+        |  COUNT(*) OVER w AS n_prior,
+        |  SUM(cnt) OVER w AS s_prior,
         |  SUM(cnt * cnt) OVER w AS q_prior
         | FROM h
         | WINDOW w AS (PARTITION BY event_type ORDER BY hour_ts
-        |  ROWS BETWEEN 24 PRECEDING AND 1 PRECEDING)),
-        |win AS (
-        | SELECT event_type, hour_ts AS w_start, hour_ts + INTERVAL 1 HOUR AS w_end
-        | FROM zx
-        | WHERE n_prior >= 8 AND n_prior * cnt > s_prior
+        |  ROWS BETWEEN 24 PRECEDING AND 1 PRECEDING))
+        |SELECT strftime(hour_ts, '%Y-%m-%d %H:%M:%S') AS hour_start,
+        | event_type, cnt, n_prior, s_prior, q_prior,
+        | CAST(n_prior >= 8 AND n_prior * cnt > s_prior
         |  AND (n_prior - 1) * (n_prior * cnt - s_prior) * (n_prior * cnt - s_prior)
-        |      > 9 * n_prior * (n_prior * q_prior - s_prior * s_prior))
-        |SELECT user_id, session_id,
-        | strftime(s_start, '%Y-%m-%d %H:%M:%S') AS session_start,
-        | strftime(s_last, '%Y-%m-%d %H:%M:%S') AS session_end,
-        | event_type, strftime(w_start, '%Y-%m-%d %H:%M:%S') AS incident_hour
-        |FROM sess JOIN win
-        | ON s_start < w_end AND w_start < s_last + INTERVAL 1 MICROSECOND
-        |ORDER BY user_id, session_id, event_type, incident_hour""".stripMargin,
-    // session_window semantics: a gap of exactly the duration starts a
-    // NEW session ([start, last+gap) half-open) -> `>=` here where the
-    // lag-form oracle uses `>`; session_end = last event + gap
-    "sessionize_native" ->
-      """WITH x AS (
-        | SELECT user_id, ts,
-        |  epoch_us(ts) - lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts) AS gap
-        | FROM events),
-        |s AS (
-        | SELECT user_id, ts,
-        |  SUM(CASE WHEN gap IS NULL OR gap >= 1800000000 THEN 1 ELSE 0 END)
-        |   OVER (PARTITION BY user_id ORDER BY ts ROWS UNBOUNDED PRECEDING) AS sid
-        | FROM x),
-        |g AS (SELECT user_id, sid, COUNT(*) AS n_events, MIN(ts) AS t0,
-        |       MAX(ts) + INTERVAL 30 MINUTE AS t1
-        |      FROM s GROUP BY user_id, sid)
-        |SELECT user_id, strftime(t0, '%Y-%m-%d %H:%M:%S') AS session_start,
-        | strftime(t1, '%Y-%m-%d %H:%M:%S') AS session_end, n_events
-        |FROM g ORDER BY user_id, session_start""".stripMargin,
-
-    "dedup_exact" ->
-      """SELECT min(doc_id) AS canonical_id, md5(text) AS content_hash, COUNT(*) AS group_size
-        |FROM documents GROUP BY md5(text) ORDER BY canonical_id""".stripMargin,
-    "dedup_exact_normalized" ->
-      """SELECT min(doc_id) AS canonical_id,
-        | md5(trim(regexp_replace(regexp_replace(lower(text), '[[:punct:]]', ' ', 'g'), '\s+', ' ', 'g'))) AS content_hash,
-        | COUNT(*) AS group_size
-        |FROM documents GROUP BY 2 ORDER BY canonical_id""".stripMargin,
-    "funnel_conversion" ->
-      """WITH fc AS (SELECT user_id, MIN(ts) AS first_click FROM events
-        |            WHERE event_type = 'click' GROUP BY 1),
-        |p AS (SELECT user_id, ts FROM events WHERE event_type = 'purchase')
-        |SELECT fc.user_id, strftime(fc.first_click, '%Y-%m-%d %H:%M:%S') AS first_click,
-        | CAST(MAX(CASE WHEN p.ts >= fc.first_click THEN 1 ELSE 0 END) AS BIGINT) AS converted
-        |FROM fc LEFT JOIN p ON p.user_id = fc.user_id
-        |GROUP BY fc.user_id, fc.first_click ORDER BY fc.user_id""".stripMargin,
-    "funnel_windowed" ->
-      """WITH v AS (SELECT user_id, MIN(ts) AS v_ts FROM events
-        |           WHERE event_type = 'view' GROUP BY 1),
-        |c AS (SELECT e.user_id, MIN(e.ts) AS c_ts
-        |      FROM events e JOIN v ON e.user_id = v.user_id
-        |      WHERE e.event_type = 'click'
-        |        AND e.ts >= v.v_ts AND e.ts <= v.v_ts + INTERVAL 1 HOUR
-        |      GROUP BY 1),
-        |p AS (SELECT e.user_id, MIN(e.ts) AS p_ts
-        |      FROM events e JOIN c ON e.user_id = c.user_id
-        |      WHERE e.event_type = 'purchase'
-        |        AND e.ts >= c.c_ts AND e.ts <= c.c_ts + INTERVAL 1 HOUR
-        |      GROUP BY 1)
-        |SELECT (SELECT COUNT(*) FROM v) AS n_view,
-        |       (SELECT COUNT(*) FROM c) AS n_click_1h,
-        |       (SELECT COUNT(*) FROM p) AS n_purchase_1h""".stripMargin,
-    "cohort_retention" ->
-      """WITH fs AS (SELECT user_id, MIN(CAST(ts AS DATE)) AS cohort_day
-        |            FROM events GROUP BY 1),
-        |d AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events)
-        |SELECT strftime(fs.cohort_day, '%Y-%m-%d') AS cohort_day,
-        | CAST(d.day - fs.cohort_day AS BIGINT) AS day_offset,
-        | COUNT(*) AS active_users
-        |FROM d JOIN fs USING (user_id)
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "quality_filter" ->
-      """WITH s AS (
-        | SELECT doc_id,
-        |  least(CAST(len(regexp_split_to_array(text, '\s+')) AS DOUBLE) / 50.0, 1.0) * 0.5
-        |   + CAST(len(list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |       x -> x IN ('the','a','of','and','to','in','is','was','for','on'))) AS DOUBLE)
-        |     / CAST(len(regexp_split_to_array(text, '\s+')) AS DOUBLE) * 0.5 AS quality_score
-        | FROM documents),
-        |t AS (SELECT quantile_cont(quality_score, 0.25) AS thr FROM s)
-        |SELECT doc_id, quality_score FROM s, t
-        |WHERE quality_score >= thr ORDER BY doc_id""".stripMargin,
-    "price_percentiles" ->
-      """SELECT l_returnflag,
-        | quantile_cont(l_extendedprice, 0.25) AS p25,
-        | quantile_cont(l_extendedprice, 0.5) AS p50,
-        | quantile_cont(l_extendedprice, 0.75) AS p75,
-        | quantile_cont(l_extendedprice, 0.95) AS p95
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    // bottom-k merge is exact (semilattice), so the oracle computes the
-    // DIRECT bottom-k per flag: same md5 hex-prefix hash (the proven
-    // zorder_scan parity), same k smallest (h, v) multiset (row_number
-    // ties only between identical pairs), quantile_cont == the sketch's
-    // percentile-order interpolation (the proven parity)
-    "price_quantile_sketch" ->
+        |      > 9 * n_prior * (n_prior * q_prior - s_prior * s_prior)
+        |  AS BIGINT) AS is_spike
+        |FROM x ORDER BY hour_start, event_type""".stripMargin)),
+    // replays Quality.ewmaFromBuckets' integer recurrence exactly:
+    // s' = (7*s + n*256) // 8 with every operand non-negative (// floors,
+    // JVM division truncates — they agree only on non-negatives)
+    Q("events_ewma", eventsEwma, Some(
+      """WITH RECURSIVE h AS (
+        | SELECT event_type, date_trunc('hour', ts) AS b, COUNT(*) AS n
+        | FROM events GROUP BY 1, 2),
+        |idx AS (
+        | SELECT event_type, b, n,
+        |  ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY b) AS i
+        | FROM h),
+        |walk AS (
+        | SELECT event_type, b, n, i, CAST(n * 256 AS BIGINT) AS s, FALSE AS spike
+        | FROM idx WHERE i = 1
+        | UNION ALL
+        | SELECT x.event_type, x.b, x.n, x.i,
+        |  CAST((7 * w.s + x.n * 256) // 8 AS BIGINT),
+        |  x.n * 256 > 2 * w.s
+        | FROM walk w JOIN idx x ON x.event_type = w.event_type AND x.i = w.i + 1)
+        |SELECT event_type, strftime(b, '%Y-%m-%d %H:%M:%S') AS hour_start,
+        | n, s AS ewma_scaled, CAST(spike AS BIGINT) AS is_spike
+        |FROM walk ORDER BY event_type, hour_start""".stripMargin)),
+    // the z-test evaluated in exact BIGINT arithmetic (see
+    // Quality.spikes) — no float mean/stddev to diverge between engines
+    Q("events_mad", eventsMad, Some(
       """WITH h AS (
-        | SELECT l_returnflag,
-        |  CAST(concat('0x', substr(md5(concat(CAST(l_orderkey AS VARCHAR), ':', CAST(l_linenumber AS VARCHAR))), 1, 8)) AS BIGINT) AS hh,
-        |  CAST(l_extendedprice AS DOUBLE) AS v
-        | FROM lineitem),
-        |r AS (SELECT l_returnflag, v,
-        |       row_number() OVER (PARTITION BY l_returnflag ORDER BY hh, v) AS rn
-        |      FROM h),
-        |n AS (SELECT l_returnflag, CAST(COUNT(*) AS BIGINT) AS n FROM h GROUP BY 1),
-        |s AS (SELECT l_returnflag,
-        |       quantile_cont(v, 0.25) AS p25_est,
-        |       quantile_cont(v, 0.5) AS p50_est,
-        |       quantile_cont(v, 0.95) AS p95_est
-        |      FROM r WHERE rn <= 256 GROUP BY 1)
-        |SELECT n.l_returnflag, n.n, s.p25_est, s.p50_est, s.p95_est
-        |FROM n JOIN s USING (l_returnflag) ORDER BY l_returnflag""".stripMargin,
-    "dedup_ngram_jaccard" ->
-      """WITH toks AS (SELECT doc_id, regexp_split_to_array(text, '\s+') w FROM documents),
-        |sh AS (SELECT DISTINCT doc_id, array_to_string(w[i.i:i.i+2], ' ') AS sh
-        |       FROM toks, unnest(generate_series(1, len(w)-2)) i(i) WHERE len(w) >= 3),
-        |sz AS (SELECT doc_id, COUNT(*) n_sh FROM sh GROUP BY 1),
-        |pairs AS (SELECT a.doc_id d1, b.doc_id d2, COUNT(*) common
-        |          FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id GROUP BY 1, 2)
-        |SELECT d1, d2, common,
-        | CAST(common AS DOUBLE) / (x.n_sh + y.n_sh - common) AS jaccard
-        |FROM pairs JOIN sz x ON d1 = x.doc_id JOIN sz y ON d2 = y.doc_id
-        |WHERE CAST(common AS DOUBLE) / (x.n_sh + y.n_sh - common) >= 0.5
-        |ORDER BY d1, d2""".stripMargin,
-    // the proven jaccard fragment verbatim + a band-bounded rollup;
-    // floor(j*10) on identical doubles is identical in both engines
-    "dedup_tau_curve" ->
-      """WITH toks AS (SELECT doc_id, regexp_split_to_array(text, '\s+') w FROM documents),
-        |sh AS (SELECT DISTINCT doc_id, array_to_string(w[i.i:i.i+2], ' ') AS sh
-        |       FROM toks, unnest(generate_series(1, len(w)-2)) i(i) WHERE len(w) >= 3),
-        |sz AS (SELECT doc_id, COUNT(*) n_sh FROM sh GROUP BY 1),
-        |pairs AS (SELECT a.doc_id d1, b.doc_id d2, COUNT(*) common
-        |          FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id GROUP BY 1, 2),
-        |j AS (SELECT CAST(common AS DOUBLE) / (x.n_sh + y.n_sh - common) AS jaccard
-        |      FROM pairs JOIN sz x ON d1 = x.doc_id JOIN sz y ON d2 = y.doc_id
-        |      WHERE CAST(common AS DOUBLE) / (x.n_sh + y.n_sh - common) >= 0.5)
-        |SELECT CAST(FLOOR(jaccard * 10) AS BIGINT) AS bucket,
-        | COUNT(*) AS n_pairs, MIN(jaccard) AS j_min, MAX(jaccard) AS j_max
-        |FROM j GROUP BY 1 ORDER BY bucket""".stripMargin,
-    "dedup_ngram_jaccard_capped" ->
-      """WITH toks AS (SELECT doc_id, regexp_split_to_array(text, '\s+') w FROM documents),
-        |sh0 AS (SELECT DISTINCT doc_id, array_to_string(w[i.i:i.i+2], ' ') AS sh
-        |        FROM toks, unnest(generate_series(1, len(w)-2)) i(i) WHERE len(w) >= 3),
-        |keep AS (SELECT sh FROM sh0 GROUP BY sh HAVING COUNT(*) <= 2),
-        |sh AS (SELECT sh0.doc_id, sh0.sh FROM sh0 JOIN keep USING (sh)),
-        |sz AS (SELECT doc_id, COUNT(*) n_sh FROM sh GROUP BY 1),
-        |pairs AS (SELECT a.doc_id d1, b.doc_id d2, COUNT(*) common
-        |          FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id GROUP BY 1, 2)
-        |SELECT d1, d2, common,
-        | CAST(common AS DOUBLE) / (x.n_sh + y.n_sh - common) AS jaccard
-        |FROM pairs JOIN sz x ON d1 = x.doc_id JOIN sz y ON d2 = y.doc_id
-        |WHERE CAST(common AS DOUBLE) / (x.n_sh + y.n_sh - common) >= 0.5
-        |ORDER BY d1, d2""".stripMargin,
-    "fact_orders_hashsk" ->
-      """SELECT o_orderkey, c_name
-        |FROM orders JOIN customer ON o_custkey = c_custkey
-        |ORDER BY o_orderkey""".stripMargin,
-    "dedup_embedding" ->
-      """WITH nr AS (
-        | SELECT vec_id, label, embedding,
-        |  sqrt(CAST((SELECT SUM(CAST(CAST(u.x AS DOUBLE) * CAST(u.x AS DOUBLE) AS DECIMAL(28,12)))
-        |             FROM unnest(embedding) u(x)) AS DOUBLE)) AS nrm
-        | FROM embeddings)
-        |SELECT a.vec_id AS v1, b.vec_id AS v2,
-        | CAST((SELECT SUM(CAST(CAST(z.z[1] AS DOUBLE) * CAST(z.z[2] AS DOUBLE) AS DECIMAL(28,12)))
-        |       FROM unnest(list_zip(a.embedding, b.embedding)) z(z)) AS DOUBLE)
-        |   / (a.nrm * b.nrm) AS cosine
-        |FROM nr a JOIN nr b ON a.label = b.label AND a.vec_id < b.vec_id
-        |WHERE CAST((SELECT SUM(CAST(CAST(z.z[1] AS DOUBLE) * CAST(z.z[2] AS DOUBLE) AS DECIMAL(28,12)))
-        |       FROM unnest(list_zip(a.embedding, b.embedding)) z(z)) AS DOUBLE)
-        |   / (a.nrm * b.nrm) >= 0.35
-        |ORDER BY v1, v2""".stripMargin,
-    // cosine construction copied from sim_topk; top-k means take the
-    // VARCHAR-mediated double->DECIMAL route (the embedding_centroids
-    // parity rule) so both engines accumulate identical decimals
-    "bitext_mine" ->
-      """WITH nr AS (
-        | SELECT vec_id, label, embedding,
-        |  sqrt(CAST((SELECT SUM(CAST(CAST(u.x AS DOUBLE) * CAST(u.x AS DOUBLE) AS DECIMAL(28,12)))
-        |             FROM unnest(embedding) u(x)) AS DOUBLE)) AS nrm
-        | FROM embeddings),
-        |c AS (
-        | SELECT q.vec_id AS src_id, t.vec_id AS tgt_id,
-        |  CAST((SELECT SUM(CAST(CAST(z.z[1] AS DOUBLE) * CAST(z.z[2] AS DOUBLE) AS DECIMAL(28,12)))
-        |        FROM unnest(list_zip(q.embedding, t.embedding)) z(z)) AS DOUBLE)
-        |    / (q.nrm * t.nrm) AS cosine
-        | FROM nr q JOIN nr t
-        |   ON q.label % 2 = 0 AND q.vec_id < 32 AND t.label % 2 = 1
-        |      AND q.vec_id != t.vec_id),
-        |ax AS (SELECT src_id,
-        |   CAST(SUM(CAST(CAST(cosine AS VARCHAR) AS DECIMAL(28,12))) AS DOUBLE) / 4 AS a_src
-        | FROM (SELECT src_id, cosine,
-        |         row_number() OVER (PARTITION BY src_id ORDER BY cosine DESC, tgt_id) AS rn
-        |       FROM c)
-        | WHERE rn <= 4 GROUP BY src_id),
-        |ay AS (SELECT tgt_id,
-        |   CAST(SUM(CAST(CAST(cosine AS VARCHAR) AS DECIMAL(28,12))) AS DOUBLE) / 4 AS a_tgt
-        | FROM (SELECT tgt_id, cosine,
-        |         row_number() OVER (PARTITION BY tgt_id ORDER BY cosine DESC, src_id) AS rn
-        |       FROM c)
-        | WHERE rn <= 4 GROUP BY tgt_id),
-        |m AS (SELECT c.src_id, c.tgt_id, c.cosine,
-        |        c.cosine / ((ax.a_src + ay.a_tgt) / 2.0) AS margin
-        |      FROM c JOIN ax USING (src_id) JOIN ay USING (tgt_id)
-        |      WHERE (ax.a_src + ay.a_tgt) / 2.0 <> 0)
-        |SELECT src_id, tgt_id, cosine, margin FROM m
-        |ORDER BY margin DESC, src_id, tgt_id LIMIT 50""".stripMargin,
-    "sim_topk" ->
-      """WITH nr AS (
-        | SELECT vec_id, embedding,
-        |  sqrt(CAST((SELECT SUM(CAST(CAST(u.x AS DOUBLE) * CAST(u.x AS DOUBLE) AS DECIMAL(28,12)))
-        |             FROM unnest(embedding) u(x)) AS DOUBLE)) AS nrm
-        | FROM embeddings),
+        | SELECT date_trunc('hour', ts) AS hour_ts, event_type, COUNT(*) AS cnt
+        | FROM events GROUP BY 1, 2),
+        |r AS (
+        | SELECT h.*, row_number() OVER (PARTITION BY event_type ORDER BY hour_ts) AS rn
+        | FROM h),
+        |p AS (
+        | SELECT c.hour_ts, c.event_type, c.cnt, pr.cnt AS p_cnt
+        | FROM r c LEFT JOIN r pr ON pr.event_type = c.event_type
+        |  AND pr.rn BETWEEN c.rn - 24 AND c.rn - 1),
+        |m AS (
+        | SELECT hour_ts, event_type, cnt, COUNT(p_cnt) AS n_prior,
+        |  CAST(2 * median(p_cnt) AS BIGINT) AS med2
+        | FROM p GROUP BY 1, 2, 3),
+        |f AS (
+        | SELECT p.hour_ts, p.event_type,
+        |  CAST(2 * median(abs(2 * p.p_cnt - m.med2)) AS BIGINT) AS mad4
+        | FROM p JOIN m ON p.hour_ts = m.hour_ts AND p.event_type = m.event_type
+        | GROUP BY 1, 2)
+        |SELECT strftime(m.hour_ts, '%Y-%m-%d %H:%M:%S') AS hour_start,
+        | m.event_type, m.cnt, m.n_prior, m.med2, f.mad4,
+        | CAST(m.n_prior >= 8 AND 4 * m.cnt > 2 * m.med2 + 5 * f.mad4 AS BIGINT)
+        |  AS is_anomaly
+        |FROM m JOIN f ON m.hour_ts = f.hour_ts AND m.event_type = f.event_type
+        |ORDER BY hour_start, m.event_type""".stripMargin)),
+    // the CUSUM recurrence closed to prefix-sum − running-min (see
+    // Quality.cusum) — all BIGINT in the ×2-median scale, no float to
+    // diverge between engines
+    Q("events_cusum", eventsCusum, Some(
+      """WITH h AS (
+        | SELECT date_trunc('hour', ts) AS hour_ts, event_type, COUNT(*) AS cnt
+        | FROM events GROUP BY 1, 2),
+        |m AS (
+        | SELECT hour_ts, event_type, cnt,
+        |  CAST(2 * median(cnt) OVER (PARTITION BY event_type) AS BIGINT) AS med2
+        | FROM h),
+        |p AS (
+        | SELECT hour_ts, event_type, cnt, med2,
+        |  CAST(SUM(2 * cnt - med2 - 2) OVER w AS BIGINT) AS p2
+        | FROM m
+        | WINDOW w AS (PARTITION BY event_type ORDER BY hour_ts
+        |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
         |s AS (
-        | SELECT q.vec_id AS q_id, c.vec_id AS vec_id,
-        |  CAST((SELECT SUM(CAST(CAST(z.z[1] AS DOUBLE) * CAST(z.z[2] AS DOUBLE) AS DECIMAL(28,12)))
-        |        FROM unnest(list_zip(q.embedding, c.embedding)) z(z)) AS DOUBLE)
-        |    / (q.nrm * c.nrm) AS cosine
-        | FROM nr q JOIN nr c ON q.vec_id < 8 AND c.vec_id != q.vec_id)
-        |SELECT q_id, CAST(row_number() OVER (PARTITION BY q_id ORDER BY cosine DESC, vec_id) AS BIGINT) AS rk,
-        | vec_id, cosine
-        |FROM s
-        |QUALIFY row_number() OVER (PARTITION BY q_id ORDER BY cosine DESC, vec_id) <= 10
-        |ORDER BY q_id, rk""".stripMargin,
-    "text_langid" ->
-      """WITH t AS (SELECT doc_id, regexp_split_to_array(lower(text), '\s+') w FROM documents),
-        |s AS (SELECT doc_id, len(w) AS nt,
-        | CAST(len(list_filter(w, x -> x IN ('der','die','das','und','zu','ein','eine','mit','von','nicht'))) AS BIGINT) hits_de,
-        | CAST(len(list_filter(w, x -> x IN ('the','a','of','and','to','in','is','was','for','on'))) AS BIGINT) hits_en,
-        | CAST(len(list_filter(w, x -> x IN ('el','la','de','y','que','un','una','por','con','los'))) AS BIGINT) hits_es,
-        | CAST(len(list_filter(w, x -> x IN ('le','la','de','et','que','un','une','pour','dans','les'))) AS BIGINT) hits_fr
-        | FROM t)
-        |SELECT doc_id, hits_de, hits_en, hits_es, hits_fr,
-        | CASE WHEN greatest(hits_de, hits_en, hits_es, hits_fr) = 0 THEN 'und'
-        |      WHEN hits_de = greatest(hits_de, hits_en, hits_es, hits_fr) THEN 'de'
-        |      WHEN hits_en = greatest(hits_de, hits_en, hits_es, hits_fr) THEN 'en'
-        |      WHEN hits_es = greatest(hits_de, hits_en, hits_es, hits_fr) THEN 'es'
-        |      ELSE 'fr' END AS pred_lang,
-        | CAST(greatest(hits_de, hits_en, hits_es, hits_fr) AS DOUBLE) / CAST(nt AS DOUBLE) AS lang_score
-        |FROM s ORDER BY doc_id""".stripMargin,
-    // the proven text_langid CTE grouped against the corpus's own labels
-    "langid_eval" ->
-      """WITH t AS (SELECT doc_id, lang, regexp_split_to_array(lower(text), '\s+') w FROM documents),
-        |s AS (SELECT doc_id, lang,
-        | CAST(len(list_filter(w, x -> x IN ('der','die','das','und','zu','ein','eine','mit','von','nicht'))) AS BIGINT) hits_de,
-        | CAST(len(list_filter(w, x -> x IN ('the','a','of','and','to','in','is','was','for','on'))) AS BIGINT) hits_en,
-        | CAST(len(list_filter(w, x -> x IN ('el','la','de','y','que','un','una','por','con','los'))) AS BIGINT) hits_es,
-        | CAST(len(list_filter(w, x -> x IN ('le','la','de','et','que','un','une','pour','dans','les'))) AS BIGINT) hits_fr
-        | FROM t),
-        |p AS (SELECT lang,
-        | CASE WHEN greatest(hits_de, hits_en, hits_es, hits_fr) = 0 THEN 'und'
-        |      WHEN hits_de = greatest(hits_de, hits_en, hits_es, hits_fr) THEN 'de'
-        |      WHEN hits_en = greatest(hits_de, hits_en, hits_es, hits_fr) THEN 'en'
-        |      WHEN hits_es = greatest(hits_de, hits_en, hits_es, hits_fr) THEN 'es'
-        |      ELSE 'fr' END AS pred_lang
-        | FROM s),
-        |c AS (SELECT lang, pred_lang, COUNT(*) AS n FROM p GROUP BY 1, 2)
-        |SELECT lang, pred_lang, n,
-        | CAST(SUM(n) OVER (PARTITION BY lang) AS BIGINT) AS label_total,
-        | CAST(n AS DOUBLE) / CAST(SUM(n) OVER (PARTITION BY lang) AS DOUBLE) AS recall_share
-        |FROM c ORDER BY lang, pred_lang""".stripMargin,
-    "lang_balance" ->
-      """WITH b AS (
-        | SELECT source, lang, COUNT(*) AS n_docs,
-        |  CAST(SUM(len(regexp_split_to_array(text, '\s+'))) AS BIGINT) AS n_tokens
-        | FROM documents GROUP BY 1, 2)
-        |SELECT source, lang, n_docs, n_tokens,
-        | CAST(n_docs AS DOUBLE) / CAST(SUM(n_docs) OVER (PARTITION BY source) AS DOUBLE) AS doc_share
-        |FROM b ORDER BY source, lang""".stripMargin,
-    // the proven quality_score fragment + SQL-standard percent_rank
-    // ((rank-1)/(n-1): rank arithmetic + one IEEE division, engine-equal)
-    "quality_normalize" ->
-      """WITH s AS (
-        | SELECT doc_id, source,
-        |  least(CAST(len(regexp_split_to_array(text, '\s+')) AS DOUBLE) / 50.0, 1.0) * 0.5
-        |   + CAST(len(list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |       x -> x IN ('the','a','of','and','to','in','is','was','for','on'))) AS DOUBLE)
-        |     / CAST(len(regexp_split_to_array(text, '\s+')) AS DOUBLE) * 0.5 AS quality_score
-        | FROM documents)
-        |SELECT doc_id, source, quality_score,
-        | percent_rank() OVER w AS top_rank,
-        | CAST(percent_rank() OVER w <= 0.75 AS BIGINT) AS keep
-        |FROM s
-        |WINDOW w AS (PARTITION BY source ORDER BY quality_score DESC)
-        |ORDER BY doc_id""".stripMargin,
-    // the proven split_leakfree chain + a (splits x sources) share rollup
-    "split_balance" ->
-      """WITH RECURSIVE toks AS (SELECT doc_id, regexp_split_to_array(text, '\s+') w FROM documents),
+        | SELECT hour_ts, event_type, cnt, med2,
+        |  p2 - LEAST(MIN(p2) OVER w, 0) AS cusum2
+        | FROM p
+        | WINDOW w AS (PARTITION BY event_type ORDER BY hour_ts
+        |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
+        |SELECT strftime(hour_ts, '%Y-%m-%d %H:%M:%S') AS hour_start,
+        | event_type, cnt, med2, cusum2, CAST(cusum2 > 12 AS BIGINT) AS is_shift
+        |FROM s ORDER BY event_type, hour_start""".stripMargin)),
+    // containment shares the jaccard CTE skeleton; only the denominator
+    // (LEAST of the two distinct-shingle counts) and threshold change
+    Q("dedup_containment", dedupContainment, Some(
+      """WITH toks AS (SELECT doc_id, regexp_split_to_array(text, '\s+') w FROM documents),
         |sh AS (SELECT DISTINCT doc_id, array_to_string(w[i.i:i.i+2], ' ') AS sh
         |       FROM toks, unnest(generate_series(1, len(w)-2)) i(i) WHERE len(w) >= 3),
         |sz AS (SELECT doc_id, COUNT(*) n_sh FROM sh GROUP BY 1),
-        |cnt AS (SELECT a.doc_id d1, b.doc_id d2, COUNT(*) common
-        |        FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id GROUP BY 1, 2),
-        |pairs AS (SELECT d1, d2 FROM cnt JOIN sz x ON d1 = x.doc_id JOIN sz y ON d2 = y.doc_id
-        |          WHERE CAST(common AS DOUBLE) / (x.n_sh + y.n_sh - common) >= 0.5),
-        |edges AS (SELECT d1 a, d2 b FROM pairs UNION SELECT d2, d1 FROM pairs),
-        |reach(id, r) AS (
-        | SELECT a, a FROM edges
-        | UNION
-        | SELECT reach.id, edges.b FROM reach JOIN edges ON reach.r = edges.a
-        |),
-        |comp AS (SELECT id AS doc_id, MIN(r) AS canonical_id FROM reach GROUP BY id),
-        |g AS (SELECT d.doc_id, d.source, COALESCE(c.canonical_id, d.doc_id) AS canon
-        |      FROM documents d LEFT JOIN comp c ON d.doc_id = c.doc_id),
-        |assg AS (SELECT doc_id, source,
-        |       CAST(concat('0x', substr(md5(CAST(canon AS VARCHAR)), 1, 8)) AS BIGINT) % 10 AS bucket
-        |      FROM g),
-        |c2 AS (SELECT CASE WHEN bucket < 8 THEN 'train' WHEN bucket < 9 THEN 'val'
-        |        ELSE 'test' END AS split, source, COUNT(*) AS n_docs
-        |       FROM assg GROUP BY 1, 2)
-        |SELECT split, source, n_docs,
-        | CAST(n_docs AS DOUBLE) / CAST(SUM(n_docs) OVER (PARTITION BY split) AS DOUBLE) AS split_share,
-        | CAST(SUM(n_docs) OVER (PARTITION BY source) AS DOUBLE)
-        |  / CAST(SUM(n_docs) OVER () AS DOUBLE) AS corpus_share
-        |FROM c2 ORDER BY split, source""".stripMargin,
-    "text_quality" ->
-      """WITH s AS (
-        | SELECT doc_id,
-        |  CAST(length(text) AS BIGINT) AS n_chars_q,
-        |  CAST(len(regexp_split_to_array(text, '\s+')) AS BIGINT) AS n_tokens,
-        |  CAST(length(text) - length(regexp_replace(text, '[[:punct:]]', '', 'g')) AS BIGINT) AS n_punct,
-        |  CAST(length(text) - length(regexp_replace(text, '[0-9]', '', 'g')) AS BIGINT) AS n_digits,
-        |  CAST(len(list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |    x -> x IN ('the','a','of','and','to','in','is','was','for','on'))) AS BIGINT) AS n_stopwords
+        |pairs AS (SELECT a.doc_id d1, b.doc_id d2, COUNT(*) common
+        |          FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id GROUP BY 1, 2)
+        |SELECT d1, d2, common,
+        | CAST(common AS DOUBLE) / LEAST(x.n_sh, y.n_sh) AS containment
+        |FROM pairs JOIN sz x ON d1 = x.doc_id JOIN sz y ON d2 = y.doc_id
+        |WHERE CAST(common AS DOUBLE) / LEAST(x.n_sh, y.n_sh) >= 0.8
+        |ORDER BY d1, d2""".stripMargin)),
+    // the same md5 hex-prefix uniform draw as split_assign, keyed on
+    // (doc_id ':' seed) so a different seed is an independent permutation
+    Q("shuffle_shards", shuffleShardsQ, Some(
+      """WITH h AS (
+        | SELECT doc_id, source,
+        |  CAST(concat('0x', substr(md5(concat(CAST(doc_id AS VARCHAR), ':42')), 1, 8)) AS BIGINT) AS k
         | FROM documents)
-        |SELECT doc_id, n_chars_q, n_tokens, n_punct, n_digits, n_stopwords,
-        | CAST(n_chars_q - (n_tokens - 1) AS DOUBLE) / CAST(n_tokens AS DOUBLE) AS avg_token_len,
-        | CAST(n_stopwords AS DOUBLE) / CAST(n_tokens AS DOUBLE) AS stopword_ratio,
-        | CAST(n_punct AS DOUBLE) / CAST(n_chars_q AS DOUBLE) AS punct_ratio,
-        | least(CAST(n_tokens AS DOUBLE) / 50.0, 1.0) * 0.5
-        |   + CAST(n_stopwords AS DOUBLE) / CAST(n_tokens AS DOUBLE) * 0.5 AS quality_score
-        |FROM s ORDER BY doc_id""".stripMargin,
-    // cleared-denominator Flesch (see TextAnalysis.readability): all
-    // counts and the readable flag are pure integers, the score one IEEE
-    // division both engines evaluate on identical operands
-    "text_readability" ->
-      """WITH s AS (
-        | SELECT doc_id,
-        |  CAST(len(regexp_split_to_array(text, '\s+')) AS BIGINT) AS n_words,
-        |  CAST(greatest(len(regexp_extract_all(text, '[.!?]+')), 1) AS BIGINT)
-        |    AS n_sentences,
-        |  CAST(len(regexp_extract_all(lower(text), '[aeiouy]+')) AS BIGINT)
-        |    AS n_syllables
-        | FROM documents)
-        |SELECT doc_id, n_words, n_sentences, n_syllables,
-        | CAST(206835*n_sentences*n_words - 1015*n_words*n_words
-        |      - 84600*n_syllables*n_sentences AS DOUBLE)
-        |   / CAST(1000*n_sentences*n_words AS DOUBLE) AS flesch,
-        | CAST(206835*n_sentences*n_words - 1015*n_words*n_words
-        |      - 84600*n_syllables*n_sentences
-        |      > 60 * 1000*n_sentences*n_words AS BIGINT) AS is_readable
-        |FROM s ORDER BY doc_id""".stripMargin,
-    "text_tokens" ->
-      """SELECT doc_id,
-        | CAST(len(regexp_split_to_array(text, '\s+')) AS BIGINT) AS ws_tokens,
-        | CAST(len(list_distinct(regexp_split_to_array(text, '\s+'))) AS BIGINT) AS distinct_tokens,
-        | CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]')) AS BIGINT) AS bpe_tokens
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "text_subwords" ->
-      TextAnalysis.subwordsOracleSql(TextAnalysis.demoSubwordVocab),
+        |SELECT doc_id, source, k % 8 AS shard,
+        | CAST(row_number() OVER (PARTITION BY k % 8 ORDER BY k, doc_id) AS BIGINT) AS pos
+        |FROM h ORDER BY shard, pos""".stripMargin)),
+    // TV distance with the divisions cleared: the numerator
+    // Σ|o·N − c·ng| + ng·(N − Σc_present) is pure BIGINT on both
+    // engines; only the final ratio is a double (identical operands →
+    // identical IEEE result). Token stream and md5 bucketing mirror the
+    // dsir oracle idiom.
+    Q("corpus_drift", corpusDrift, Some(
+      """WITH tok AS (
+        | SELECT source, unnest(regexp_split_to_array(text, '\s+')) AS t FROM documents),
+        |bk AS (
+        | SELECT source,
+        |  CAST(concat('0x', substr(md5(t), 1, 8)) AS BIGINT) % 4096 AS b
+        | FROM tok),
+        |cnt AS (SELECT source, b, COUNT(*) AS o FROM bk GROUP BY 1, 2),
+        |x AS (
+        | SELECT source, b, o,
+        |  SUM(o) OVER (PARTITION BY b) AS c,
+        |  SUM(o) OVER (PARTITION BY source) AS ng,
+        |  SUM(o) OVER () AS N
+        | FROM cnt)
+        |SELECT source, CAST(MAX(ng) AS BIGINT) AS n_tokens,
+        | CAST(SUM(ABS(o*N - c*ng)) + MAX(ng) * (MAX(N) - SUM(c)) AS DOUBLE)
+        |   / (2.0 * MAX(ng) * MAX(N)) AS tv_distance
+        |FROM x GROUP BY source ORDER BY source""".stripMargin)),
+    // same TV skeleton as corpus_drift over fixed-width numeric bins:
+    // floor(value·16) on identical doubles is identical in both engines
+    Q("value_drift", valueDrift, Some(
+      """WITH bk AS (
+        | SELECT event_type, CAST(FLOOR(value * 16) AS BIGINT) AS b FROM events),
+        |cnt AS (SELECT event_type, b, COUNT(*) AS o FROM bk GROUP BY 1, 2),
+        |x AS (
+        | SELECT event_type, b, o,
+        |  SUM(o) OVER (PARTITION BY b) AS c,
+        |  SUM(o) OVER (PARTITION BY event_type) AS ng,
+        |  SUM(o) OVER () AS N
+        | FROM cnt)
+        |SELECT event_type, CAST(MAX(ng) AS BIGINT) AS n_obs,
+        | CAST(SUM(ABS(o*N - c*ng)) + MAX(ng) * (MAX(N) - SUM(c)) AS DOUBLE)
+        |   / (2.0 * MAX(ng) * MAX(N)) AS tv_distance
+        |FROM x GROUP BY event_type ORDER BY event_type""".stripMargin)),
+    // PSI with cleared denominators (see Quality.psiFromCounts): BIGINT
+    // u/v cross-products, 6-dp-rounded ln of their double ratio, DECIMAL
+    // accumulation, one final IEEE division per source
+    Q("value_psi", valuePsi, Some(
+      """WITH bk AS (
+        | SELECT event_type, CAST(FLOOR(value * 16) AS BIGINT) AS b FROM events),
+        |cnt AS (SELECT event_type, b, CAST(COUNT(*) AS BIGINT) AS o
+        |        FROM bk GROUP BY 1, 2),
+        |pool AS (SELECT b, CAST(SUM(o) AS BIGINT) AS c FROM cnt GROUP BY 1),
+        |srcs AS (SELECT event_type, CAST(SUM(o) AS BIGINT) AS ng FROM cnt GROUP BY 1),
+        |tot AS (SELECT CAST(SUM(c) AS BIGINT) AS N, COUNT(*) AS B FROM pool),
+        |grid AS (
+        | SELECT s.event_type, s.ng, p.c, COALESCE(cnt.o, 0) AS o, t.N, t.B
+        | FROM srcs s CROSS JOIN pool p
+        |  LEFT JOIN cnt ON cnt.event_type = s.event_type AND cnt.b = p.b
+        |  CROSS JOIN tot t),
+        |term AS (
+        | SELECT event_type, ng, N, B,
+        |  CAST((o+1)*(N+B) - (c+1)*(ng+B) AS DECIMAL(18,0))
+        |   * CAST(round(ln(CAST((o+1)*(N+B) AS DOUBLE)
+        |                   / CAST((c+1)*(ng+B) AS DOUBLE)), 6)
+        |       AS DECIMAL(18,6)) AS t
+        | FROM grid)
+        |SELECT event_type, MAX(ng) AS n_obs,
+        | CAST(SUM(t) AS DOUBLE)
+        |   / CAST((MAX(ng)+MAX(B)) * (MAX(N)+MAX(B)) AS DOUBLE) AS psi,
+        | CAST(CAST(SUM(t) AS DOUBLE)
+        |   / CAST((MAX(ng)+MAX(B)) * (MAX(N)+MAX(B)) AS DOUBLE) > 0.2 AS BIGINT)
+        |  AS is_shifted
+        |FROM term GROUP BY event_type ORDER BY event_type""".stripMargin)),
+    Q("zorder_scan", zorderScan, Some(boxScanOracle)),
+    Q("hilbert_scan", hilbertScan, Some(boxScanOracle)),
+    // the 3-D Hilbert READ path is layout-invisible too: the same 3-D
+    // box over the RAW table (the Spark side read it back from the
+    // hilbert3-clustered files)
+    Q("hilbert_scan_3d", hilbertScan3d, Some(
+      """WITH dims AS (
+        | SELECT l_orderkey, l_linenumber,
+        |  CAST(concat('0x', substr(md5(concat(CAST(l_orderkey AS VARCHAR), ':', CAST(l_linenumber AS VARCHAR), ':a')), 1, 8)) AS BIGINT) % 128 AS a,
+        |  CAST(concat('0x', substr(md5(concat(CAST(l_orderkey AS VARCHAR), ':', CAST(l_linenumber AS VARCHAR), ':b')), 1, 8)) AS BIGINT) % 128 AS b,
+        |  CAST(concat('0x', substr(md5(concat(CAST(l_orderkey AS VARCHAR), ':', CAST(l_linenumber AS VARCHAR), ':c')), 1, 8)) AS BIGINT) % 128 AS c
+        | FROM lineitem)
+        |SELECT l_orderkey, l_linenumber, a, b, c FROM dims
+        |WHERE a BETWEEN 32 AND 63 AND b BETWEEN 64 AND 95 AND c BETWEEN 96 AND 127
+        |ORDER BY l_orderkey, l_linenumber""".stripMargin)),
+    // SQ8: min/max of FLOATs are exact, and the scale/floor arithmetic is
+    // IEEE double with the association order written identically on both
+    // sides — integer codes, no decimal dance needed
+    Q("embedding_quantize", embeddingQuantize, Some(
+      """WITH e AS (SELECT vec_id, unnest(embedding) AS x,
+        |             generate_subscripts(embedding, 1) AS pos FROM embeddings),
+        |s AS (SELECT pos, MIN(x) AS mn, MAX(x) AS mx FROM e GROUP BY pos)
+        |SELECT e.vec_id, CAST(e.pos - 1 AS BIGINT) AS pos,
+        | CASE WHEN s.mx = s.mn THEN CAST(0 AS BIGINT)
+        |      ELSE CAST(LEAST(FLOOR(((CAST(e.x AS DOUBLE) - CAST(s.mn AS DOUBLE)) * 255.0) / (CAST(s.mx AS DOUBLE) - CAST(s.mn AS DOUBLE))), 255.0) AS BIGINT) END AS code
+        |FROM e JOIN s USING (pos)
+        |ORDER BY vec_id, pos""".stripMargin)),
+    // lift ranks identically to PMI (log is monotone) without a log()
+    // whose libm rounding could differ between engines; the double
+    // arithmetic has integer inputs and a fixed association order
+    Q("collocations_pmi", collocationsPmi, Some(
+      """WITH t AS (SELECT list_filter(regexp_split_to_array(lower(text), '\s+'),
+        |             x -> x <> '') AS w FROM documents),
+        |uni AS (SELECT tok, COUNT(*) AS c_tok
+        |        FROM (SELECT unnest(w) AS tok FROM t) GROUP BY tok),
+        |bg AS (SELECT w1, w2, COUNT(*) AS c_bg FROM (
+        |         SELECT w[i.i] AS w1, w[i.i + 1] AS w2
+        |         FROM t, unnest(generate_series(1, len(w) - 1)) i(i)
+        |         WHERE len(w) >= 2)
+        |       GROUP BY w1, w2 HAVING COUNT(*) >= 5),
+        |tot AS (SELECT CAST(SUM(len(w)) AS BIGINT) AS n_tok,
+        |               CAST(SUM(GREATEST(len(w) - 1, 0)) AS BIGINT) AS m_big FROM t)
+        |SELECT bg.w1, bg.w2, bg.c_bg, u1.c_tok AS c1, u2.c_tok AS c2,
+        | ((CAST(bg.c_bg AS DOUBLE) * tot.n_tok) * tot.n_tok) / ((CAST(tot.m_big AS DOUBLE) * u1.c_tok) * u2.c_tok) AS lift
+        |FROM bg JOIN uni u1 ON bg.w1 = u1.tok JOIN uni u2 ON bg.w2 = u2.tok
+        |CROSS JOIN tot
+        |ORDER BY lift DESC, w1, w2 LIMIT 50""".stripMargin)),
+    Q("skipgram_pairs", skipgramPairsQ, Some(
+      """WITH t AS (SELECT list_filter(regexp_split_to_array(lower(text), '\s+'),
+        |             x -> x <> '') AS w FROM documents),
+        |pairs AS (SELECT w[i.i] AS w1, w[i.i + d.d] AS w2
+        |          FROM t, unnest(generate_series(1, 3)) d(d),
+        |               unnest(generate_series(1, len(w) - d.d)) i(i)
+        |          WHERE len(w) > d.d)
+        |SELECT w1, w2, COUNT(*) AS n FROM pairs
+        |GROUP BY 1, 2 ORDER BY n DESC, w1, w2 LIMIT 30""".stripMargin)),
+    Q("snapshot_diff", snapshotDiffQ, Some(
+      """WITH base AS (SELECT doc_id, md5(concat_ws(chr(1), text, source)) AS fp
+        |              FROM documents WHERE doc_id % 7 <> 0),
+        |cur AS (SELECT doc_id, md5(concat_ws(chr(1),
+        |          CASE WHEN doc_id % 3 = 0 THEN concat(text, ' [rev2]') ELSE text END,
+        |          source)) AS fp
+        |        FROM documents WHERE doc_id % 5 <> 0)
+        |SELECT doc_id, status FROM (
+        | SELECT COALESCE(base.doc_id, cur.doc_id) AS doc_id,
+        |  CASE WHEN base.fp IS NULL THEN 'added'
+        |       WHEN cur.fp IS NULL THEN 'removed'
+        |       WHEN base.fp <> cur.fp THEN 'changed'
+        |       ELSE 'unchanged' END AS status
+        | FROM base FULL OUTER JOIN cur ON base.doc_id = cur.doc_id)
+        |WHERE status <> 'unchanged'
+        |ORDER BY doc_id""".stripMargin)),
+    // the erasure report recomputed arithmetically from raw events — the
+    // Spark side counts REAL lake partitions before/after the rewrite, so
+    // any pruning/overwrite defect lands as a count mismatch here
+    Q("staged_delete", stagedDelete, Some(
+      """WITH e AS (
+        | SELECT year(ts) AS yy, month(ts) AS mm, day(ts) AS dd, user_id
+        | FROM events),
+        |a AS (
+        | SELECT yy, mm, dd, CAST(COUNT(*) AS BIGINT) AS rows_before,
+        |  CAST(SUM(CASE WHEN user_id % 97 = 0 THEN 1 ELSE 0 END) AS BIGINT)
+        |   AS rows_deleted
+        | FROM e GROUP BY 1, 2, 3)
+        |SELECT yy AS y, mm AS m, dd AS d, rows_before, rows_deleted,
+        | rows_before - rows_deleted AS rows_after
+        |FROM a WHERE rows_deleted > 0 ORDER BY y, m, d""".stripMargin)),
+    // the merge-on-read survivors: both accumulated delete vectors applied
+    Q("mor_delete", morDelete, Some(
+      """WITH e AS (
+        | SELECT year(ts) AS yy, month(ts) AS mm, day(ts) AS dd, user_id
+        | FROM events)
+        |SELECT yy AS y, mm AS m, dd AS d, CAST(COUNT(*) AS BIGINT) AS n_rows
+        |FROM e WHERE user_id % 97 <> 0 AND user_id % 89 <> 0
+        |GROUP BY 1, 2, 3 ORDER BY y, m, d""".stripMargin)),
+    // replay the three lake versions arithmetically: v1 = everything,
+    // v2 = post-erasure survivors, v3 = v2 minus the upsert batch's keys
+    // plus the batch (updates with user_id+1, inserts re-keyed +1e9);
+    // SUM(BIGINT) is HUGEINT in DuckDB -> cast back (the proven rule)
+    Q("time_travel", timeTravel, Some(
+      """WITH e AS (
+        | SELECT event_id, user_id, year(ts) AS yy, month(ts) AS mm,
+        |  day(ts) AS dd
+        | FROM events WHERE ts < TIMESTAMP '2024-01-08'),
+        |v2 AS (SELECT * FROM e WHERE user_id % 97 <> 0),
+        |b AS (SELECT event_id, user_id + 1 AS user_id, yy, mm, dd
+        |      FROM e WHERE event_id % 1000 = 0
+        |      UNION ALL
+        |      SELECT event_id + 1000000000, user_id, yy, mm, dd
+        |      FROM e WHERE event_id % 1000 = 0),
+        |v3 AS (SELECT * FROM v2
+        |       WHERE event_id NOT IN (SELECT event_id FROM b)
+        |       UNION ALL SELECT * FROM b),
+        |u AS (SELECT 1 AS version, yy, mm, dd, user_id FROM e
+        |      UNION ALL SELECT 2, yy, mm, dd, user_id FROM v2
+        |      UNION ALL SELECT 3, yy, mm, dd, user_id FROM v3)
+        |SELECT CAST(version AS BIGINT) AS version, yy AS y, mm AS m,
+        | dd AS d, COUNT(*) AS n_rows, CAST(SUM(user_id) AS BIGINT) AS sum_uid
+        |FROM u GROUP BY 1, 2, 3, 4 ORDER BY version, y, m, d""".stripMargin)),
+    Q("length_buckets", lengthBucketsQ, Some(
+      """WITH d AS (SELECT len(regexp_split_to_array(text, '\s+')) AS n FROM documents),
+        |b AS (SELECT n,
+        |  CASE WHEN n <= 16 THEN 16 WHEN n <= 32 THEN 32 WHEN n <= 64 THEN 64
+        |       WHEN n <= 128 THEN 128 WHEN n <= 256 THEN 256 WHEN n <= 512 THEN 512
+        |       ELSE 1024 END AS bucket FROM d)
+        |SELECT CAST(bucket AS BIGINT) AS bucket, COUNT(*) AS n_docs,
+        | CAST(SUM(LEAST(n, 1024)) AS BIGINT) AS kept_tokens,
+        | CAST(COUNT(*) * bucket AS BIGINT) AS padded_tokens,
+        | CAST(SUM(bucket - LEAST(n, 1024)) AS BIGINT) AS waste_tokens,
+        | CAST(SUM(GREATEST(n - 1024, 0)) AS BIGINT) AS truncated_tokens
+        |FROM b GROUP BY bucket ORDER BY bucket""".stripMargin)),
+    // same decimal-parity route as embedding_centroids: VARCHAR-mediated
+    // double->DECIMAL casts make DuckDB round like Spark's Cast
+    Q("embedding_outliers", embeddingOutliersQ, Some(
+      """WITH e AS (SELECT vec_id, unnest(embedding) AS x,
+        |             generate_subscripts(embedding, 1) AS pos FROM embeddings),
+        |m AS (SELECT pos,
+        |        CAST(SUM(CAST(CAST(CAST(x AS DOUBLE) AS VARCHAR) AS DECIMAL(28,12))) AS DOUBLE) / COUNT(x) AS mu
+        |      FROM e GROUP BY pos),
+        |d AS (SELECT e.vec_id,
+        |        CAST(SUM(CAST(CAST((CAST(e.x AS DOUBLE) - m.mu) * (CAST(e.x AS DOUBLE) - m.mu) AS VARCHAR) AS DECIMAL(28,12))) AS DOUBLE) AS dist2
+        |      FROM e JOIN m USING (pos) GROUP BY e.vec_id)
+        |SELECT vec_id, dist2 FROM d
+        |ORDER BY dist2 DESC, vec_id LIMIT 20""".stripMargin)),
+    Q("embedding_pca", embeddingPca),
+    // forward direction: DuckDB ASOF with p.ts <= c.ts picks the earliest
+    // click at-or-after the purchase, matching the forward window frame
+    Q("asof_join_forward", asofJoinForwardQ, Some(
+      """WITH c AS (SELECT user_id, ts, event_id AS click_id FROM events WHERE event_type = 'click'
+        |           QUALIFY row_number() OVER (PARTITION BY user_id, ts ORDER BY event_id ASC) = 1),
+        |p AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase')
+        |SELECT p.event_id, p.user_id, strftime(p.ts, '%Y-%m-%d %H:%M:%S') AS ts,
+        | strftime(c.ts, '%Y-%m-%d %H:%M:%S') AS asof_ts, c.click_id AS asof_click_id
+        |FROM p ASOF LEFT JOIN c ON p.user_id = c.user_id AND p.ts <= c.ts
+        |ORDER BY p.event_id""".stripMargin)),
+    // nearest: both directional ASOF picks computed, the closer (exact
+    // integer microseconds) wins, equal distance resolves backward
+    Q("asof_join_nearest", asofJoinNearestQ, Some(
+      """WITH c AS (SELECT user_id, ts, event_id AS click_id FROM events WHERE event_type = 'click'
+        |           QUALIFY row_number() OVER (PARTITION BY user_id, ts ORDER BY event_id DESC) = 1),
+        |p AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase'),
+        |b AS (SELECT p.event_id, c.ts AS b_ts, c.click_id AS b_id
+        |      FROM p ASOF LEFT JOIN c ON p.user_id = c.user_id AND p.ts >= c.ts),
+        |f AS (SELECT p.event_id, c.ts AS f_ts, c.click_id AS f_id
+        |      FROM p ASOF LEFT JOIN c ON p.user_id = c.user_id AND p.ts < c.ts),
+        |j AS (SELECT p.event_id, p.user_id, p.ts, b.b_ts, b.b_id, f.f_ts, f.f_id,
+        |       (f_ts IS NULL OR (b_ts IS NOT NULL AND
+        |        epoch_us(p.ts) - epoch_us(b_ts) <= epoch_us(f_ts) - epoch_us(p.ts))) AS use_b
+        |      FROM p JOIN b USING (event_id) JOIN f USING (event_id))
+        |SELECT event_id, user_id, strftime(ts, '%Y-%m-%d %H:%M:%S') AS ts,
+        | strftime(CASE WHEN use_b THEN b_ts ELSE f_ts END, '%Y-%m-%d %H:%M:%S') AS asof_ts,
+        | CASE WHEN use_b THEN b_id ELSE f_id END AS asof_click_id
+        |FROM j ORDER BY event_id""".stripMargin)),
+    Q("asof_join_tolerance", asofJoinToleranceQ, Some(
+      """WITH c AS (SELECT user_id, ts, event_id AS click_id FROM events WHERE event_type = 'click'
+        |           QUALIFY row_number() OVER (PARTITION BY user_id, ts ORDER BY event_id DESC) = 1),
+        |p AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase')
+        |SELECT p.event_id, p.user_id, strftime(p.ts, '%Y-%m-%d %H:%M:%S') AS ts,
+        | CASE WHEN c.ts >= p.ts - INTERVAL 30 MINUTE THEN strftime(c.ts, '%Y-%m-%d %H:%M:%S') END AS asof_ts,
+        | CASE WHEN c.ts >= p.ts - INTERVAL 30 MINUTE THEN c.click_id END AS asof_click_id
+        |FROM p ASOF LEFT JOIN c ON p.user_id = c.user_id AND p.ts >= c.ts
+        |ORDER BY p.event_id""".stripMargin)),
+    Q("dim_scd2", dimScd2, Some(
+      """WITH cur AS (SELECT c_custkey, c_mktsegment,
+        |              DATE '1990-01-01' AS o_vf FROM customer),
+        |ch AS (SELECT c_custkey, 'MACHINERY' AS seg, DATE '2024-06-01' AS ts
+        |       FROM customer WHERE c_custkey % 3 = 0
+        |       UNION ALL
+        |       SELECT c_custkey + 10000000, 'NEWSEG', DATE '2024-06-01'
+        |       FROM customer WHERE c_custkey % 1000 = 1),
+        |j AS (SELECT COALESCE(cur.c_custkey, ch.c_custkey) AS k,
+        |       cur.c_mktsegment AS o_seg, cur.o_vf, ch.seg, ch.ts
+        |      FROM cur FULL OUTER JOIN ch ON cur.c_custkey = ch.c_custkey)
+        |SELECT k AS c_custkey, c_mktsegment,
+        | strftime(vf, '%Y-%m-%d') AS valid_from, strftime(vt, '%Y-%m-%d') AS valid_to
+        |FROM (
+        | SELECT k, o_seg AS c_mktsegment, o_vf AS vf, CAST(NULL AS DATE) AS vt
+        | FROM j WHERE ts IS NULL OR (o_vf IS NOT NULL AND o_seg = seg)
+        | UNION ALL
+        | SELECT k, seg, ts, CAST(NULL AS DATE) FROM j WHERE o_vf IS NULL
+        | UNION ALL
+        | SELECT k, o_seg, o_vf, ts
+        | FROM j WHERE ts IS NOT NULL AND o_vf IS NOT NULL AND o_seg <> seg
+        | UNION ALL
+        | SELECT k, seg, ts, CAST(NULL AS DATE)
+        | FROM j WHERE ts IS NOT NULL AND o_vf IS NOT NULL AND o_seg <> seg)
+        |ORDER BY c_custkey, valid_from""".stripMargin)),
+    Q("pack_sequences_bfd", packSequencesBfdQ),
     // the per-doc subword oracle rides inside a derived table; the rollup
     // joins back to documents for the source and whitespace word count
-    "subword_coverage" -> {
+    Q("subword_coverage", subwordCoverage, Some({
       val inner = TextAnalysis.subwordsOracleSql(TextAnalysis.demoSubwordVocab)
       s"""SELECT d.source, COUNT(*) AS n_docs,
          | CAST(SUM(o.n_subwords) AS BIGINT) AS n_pieces,
@@ -7720,453 +7961,29 @@ object SparkEntry {
          |   x -> x <> ''))) AS BIGINT) AS n_words
          |FROM ($inner) o JOIN documents d USING (doc_id)
          |GROUP BY d.source ORDER BY d.source""".stripMargin
-    },
-    "text_fingerprint" ->
-      """WITH toks AS (SELECT doc_id, regexp_split_to_array(text, '\s+') w FROM documents),
-        |sh AS (SELECT DISTINCT doc_id, md5(array_to_string(w[i.i:i.i+2], ' ')) AS sh_hash
-        |       FROM toks, unnest(generate_series(1, len(w)-2)) i(i) WHERE len(w) >= 3)
-        |SELECT doc_id,
-        | CAST(row_number() OVER (PARTITION BY doc_id ORDER BY sh_hash) AS BIGINT) AS rk,
-        | sh_hash
-        |FROM sh
-        |QUALIFY row_number() OVER (PARTITION BY doc_id ORDER BY sh_hash) <= 8
-        |ORDER BY doc_id, rk""".stripMargin,
-    "sample_stratified" ->
-      """SELECT source, doc_id, md5(concat_ws('|', doc_id, text)) AS rnd
-        |FROM documents
-        |QUALIFY row_number() OVER (PARTITION BY source
-        |  ORDER BY md5(concat_ws('|', doc_id, text)), doc_id) <= 3
-        |ORDER BY source, rnd, doc_id""".stripMargin,
-    "text_repetition" ->
-      // ratios are single IEEE divides of integer counts — bit-identical
-      // across engines, no rounding convention needed; docs with no n-gram
-      // of a length yield NULL on both sides
-      """WITH t AS (SELECT doc_id, regexp_split_to_array(text, '\s+') w FROM documents),
-        |g AS (SELECT doc_id, w,
-        |  [array_to_string(w[i:i+1], ' ') for i in generate_series(1, len(w)-1)] AS g2,
-        |  [array_to_string(w[i:i+2], ' ') for i in generate_series(1, len(w)-2)] AS g3
-        |  FROM t)
-        |SELECT doc_id,
-        | CAST(len(w) AS BIGINT) AS n_tokens_r,
-        | CAST(len(w) - len(list_distinct(w)) AS DOUBLE) / NULLIF(CAST(len(w) AS DOUBLE), 0) AS dup_token_frac,
-        | CAST(len(g2) - len(list_distinct(g2)) AS DOUBLE) / NULLIF(CAST(len(g2) AS DOUBLE), 0) AS dup_2gram_frac,
-        | CAST(len(g3) - len(list_distinct(g3)) AS DOUBLE) / NULLIF(CAST(len(g3) AS DOUBLE), 0) AS dup_3gram_frac
-        |FROM g ORDER BY doc_id""".stripMargin,
-    "text_entropy" ->
-      // the lm_score parity convention: 6-dp-rounded lns, DECIMAL
-      // accumulation (10,0)×(18,6) stays inside DuckDB's exact 38-digit
-      // multiply, final subtract/divide in IEEE double on identical operands
-      """WITH toks AS (SELECT doc_id, u.w AS w
-        |  FROM (SELECT doc_id, regexp_split_to_array(text, '\s+') w FROM documents) t,
-        |       unnest(t.w) u(w)),
-        |c AS (SELECT doc_id, w, COUNT(*) AS c FROM toks GROUP BY 1, 2)
-        |SELECT doc_id, CAST(SUM(c) AS BIGINT) AS n_tokens, COUNT(*) AS n_distinct,
-        | round(ln(CAST(SUM(c) AS DOUBLE)), 6)
-        |  - CAST(SUM(CAST(c AS DECIMAL(10,0))
-        |      * CAST(round(ln(CAST(c AS DOUBLE)), 6) AS DECIMAL(18,6))) AS DOUBLE)
-        |    / SUM(c) AS entropy
-        |FROM c GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "tfidf_top_terms" ->
-      // round(.., 6) on BOTH sides: ln may differ in the last ulp between
-      // engines; the ranking compares the rounded score so rank sets agree
-      """WITH toks AS (SELECT doc_id, unnest(regexp_split_to_array(lower(text), '\s+')) AS term
-        |              FROM documents),
-        |tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM toks GROUP BY 1, 2),
-        |dfreq AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY 1),
-        |n AS (SELECT COUNT(*) AS n FROM documents),
-        |s AS (SELECT doc_id, term, tf, df,
-        |        round(tf * (ln((n + 1.0) / (df + 1)) + 1), 6) AS tfidf
-        |      FROM tf JOIN dfreq USING (term) CROSS JOIN n)
-        |SELECT doc_id, term, tf, df, tfidf FROM s
-        |QUALIFY row_number() OVER (PARTITION BY doc_id ORDER BY tfidf DESC, term) <= 3
-        |ORDER BY doc_id, tfidf DESC, term""".stripMargin,
-    "distinct_users" ->
-      """SELECT event_type, COUNT(DISTINCT user_id) AS n_users, COUNT(*) AS n_events
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "split_assign" ->
-      """WITH g AS (SELECT doc_id, min(doc_id) OVER (PARTITION BY md5(text)) AS canon
-        |           FROM documents),
-        |b AS (SELECT doc_id, canon,
-        |       CAST(concat('0x', substr(md5(CAST(canon AS VARCHAR)), 1, 8)) AS BIGINT) % 10 AS bucket
-        |      FROM g)
-        |SELECT doc_id, canon AS split_key, CAST(bucket AS BIGINT) AS bucket,
-        | CASE WHEN bucket < 8 THEN 'train' WHEN bucket < 9 THEN 'val' ELSE 'test' END AS split
-        |FROM b ORDER BY doc_id""".stripMargin,
-    "pii_scrub" ->
-      // replacement order mirrors TextAnalysis.piiPatterns (email, ipv4,
-      // ssn, phone); each pattern is COUNTED on the text after the earlier
-      // patterns were replaced (progressive count = replacements actually
-      // made), exactly like scrubPii. DuckDB needs the explicit 'g' flag
-      // where Spark's regexp_replace is always global
-      """WITH base AS (
-        | SELECT doc_id, text || ' contact user' || CAST(doc_id AS VARCHAR)
-        |   || '@mail.example.com from 192.168.' || CAST(doc_id % 256 AS VARCHAR)
-        |   || '.17 call 555-867-5309' AS s0
-        | FROM documents),
-        |r1 AS (SELECT doc_id, s0,
-        |        regexp_replace(s0, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '[PII]', 'g') AS s1
-        |       FROM base),
-        |r2 AS (SELECT doc_id, s0, s1,
-        |        regexp_replace(s1, '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b', '[PII]', 'g') AS s2
-        |       FROM r1),
-        |r3 AS (SELECT doc_id, s0, s1, s2,
-        |        regexp_replace(s2, '\b\d{3}-\d{2}-\d{4}\b', '[PII]', 'g') AS s3
-        |       FROM r2),
-        |s AS (
-        | SELECT doc_id,
-        |  regexp_replace(s3, '\b\d{3}[- ]\d{3}[- ]\d{4}\b', '[PII]', 'g') AS scrubbed,
-        |  len(regexp_extract_all(s0, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}'))
-        |   + len(regexp_extract_all(s1, '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b'))
-        |   + len(regexp_extract_all(s2, '\b\d{3}-\d{2}-\d{4}\b'))
-        |   + len(regexp_extract_all(s3, '\b\d{3}[- ]\d{3}[- ]\d{4}\b')) AS n_pii
-        | FROM r3)
-        |SELECT doc_id, md5(scrubbed) AS scrub_hash, CAST(n_pii AS BIGINT) AS n_pii
-        |FROM s ORDER BY doc_id""".stripMargin,
-    // DuckDB // == Spark DIV on non-negative BIGINTs (the §6 rule);
-    // SUM casts back to BIGINT (DuckDB widens BIGINT sums to HUGEINT)
-    "k_anonymity" ->
-      """WITH g1 AS (SELECT lang, source, n_chars // 100 AS b, COUNT(*) AS g
-        |            FROM documents GROUP BY 1, 2, 3),
-        |g2 AS (SELECT lang, source, n_chars // 1000 AS b, COUNT(*) AS g
-        |       FROM documents GROUP BY 1, 2, 3),
-        |b1 AS (SELECT 'chars_100' AS level,
-        |        CASE WHEN g = 1 THEN 'k=1' WHEN g < 5 THEN 'k<5'
-        |             WHEN g < 10 THEN 'k<10' ELSE 'k>=10' END AS band,
-        |        COUNT(*) AS n_classes, CAST(SUM(g) AS BIGINT) AS n_rows
-        |       FROM g1 GROUP BY 1, 2),
-        |b2 AS (SELECT 'chars_1000' AS level,
-        |        CASE WHEN g = 1 THEN 'k=1' WHEN g < 5 THEN 'k<5'
-        |             WHEN g < 10 THEN 'k<10' ELSE 'k>=10' END AS band,
-        |        COUNT(*) AS n_classes, CAST(SUM(g) AS BIGINT) AS n_rows
-        |       FROM g2 GROUP BY 1, 2)
-        |SELECT * FROM b1 UNION ALL SELECT * FROM b2
-        |ORDER BY level, band""".stripMargin,
-    "corpus_mix" ->
-      // FLOOR mirrors Spark's double->long truncation of weight * 2^32 (a
-      // bare CAST would round-to-nearest in DuckDB); weights are eighths so
-      // the product is exact in double on both engines anyway
-      """SELECT doc_id, source FROM documents
-        |WHERE CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT)
-        |  < CAST(FLOOR((CASE source WHEN 'src0' THEN 1.0 WHEN 'src1' THEN 0.75
-        |                 WHEN 'src2' THEN 0.5 WHEN 'src3' THEN 0.25
-        |                 ELSE 0.375 END) * 4294967296) AS BIGINT)
-        |ORDER BY doc_id""".stripMargin,
-    "pack_sequences" ->
-      """WITH t AS (SELECT doc_id, source, regexp_split_to_array(text, '\s+') w FROM documents),
-        |c AS (SELECT doc_id, source, s, array_to_string(w[s:s+31], ' ') AS chunk
-        |      FROM t, unnest(generate_series(1, greatest(len(w) - 32 + 1, 1), 24)) st(s)),
-        |x AS (SELECT source, doc_id, CAST((s - 1) // 24 AS BIGINT) AS chunk_id,
-        |       CAST(len(regexp_split_to_array(chunk, '\s+')) AS BIGINT) AS n_chunk_tokens
-        |      FROM c),
-        |p AS (SELECT source, doc_id, chunk_id, n_chunk_tokens,
-        |       SUM(n_chunk_tokens) OVER (PARTITION BY source ORDER BY doc_id, chunk_id
-        |         ROWS UNBOUNDED PRECEDING) AS cum
-        |      FROM x)
-        |SELECT source, doc_id, chunk_id, n_chunk_tokens,
-        | CAST(FLOOR((cum - n_chunk_tokens) / 512) AS BIGINT) AS seq_id
-        |FROM p ORDER BY source, doc_id, chunk_id""".stripMargin,
-    "pack_sequences_sharded" ->
-      // shard = big-endian parse of the first 8 md5 hex chars of doc_id,
-      // mod 8 — the hex-prefix parse equals Spark's conv(..., 16, 10)
-      """WITH t AS (SELECT doc_id, source, regexp_split_to_array(text, '\s+') w FROM documents),
-        |c AS (SELECT doc_id, source, s, array_to_string(w[s:s+31], ' ') AS chunk
-        |      FROM t, unnest(generate_series(1, greatest(len(w) - 32 + 1, 1), 24)) st(s)),
-        |x AS (SELECT source, doc_id,
-        |       CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) % 8 AS shard,
-        |       CAST((s - 1) // 24 AS BIGINT) AS chunk_id,
-        |       CAST(len(regexp_split_to_array(chunk, '\s+')) AS BIGINT) AS n_chunk_tokens
-        |      FROM c),
-        |p AS (SELECT source, shard, doc_id, chunk_id, n_chunk_tokens,
-        |       SUM(n_chunk_tokens) OVER (PARTITION BY source, shard ORDER BY doc_id, chunk_id
-        |         ROWS UNBOUNDED PRECEDING) AS cum
-        |      FROM x)
-        |SELECT source, shard, doc_id, chunk_id, n_chunk_tokens,
-        | CAST(FLOOR((cum - n_chunk_tokens) / 512) AS BIGINT) AS seq_id
-        |FROM p ORDER BY source, shard, doc_id, chunk_id""".stripMargin,
-    "doc_chunks" ->
-      """WITH t AS (SELECT doc_id, regexp_split_to_array(text, '\s+') w FROM documents),
-        |c AS (SELECT doc_id, s, array_to_string(w[s:s+31], ' ') AS chunk
-        |      FROM t, unnest(generate_series(1, greatest(len(w) - 32 + 1, 1), 24)) st(s))
-        |SELECT doc_id, CAST((s - 1) // 24 AS BIGINT) AS chunk_id,
-        | CAST(len(regexp_split_to_array(chunk, '\s+')) AS BIGINT) AS n_chunk_tokens,
-        | md5(chunk) AS chunk_hash
-        |FROM c ORDER BY doc_id, chunk_id""".stripMargin,
-    "text_heavy_hitters" ->
-      """WITH toks AS (SELECT unnest(regexp_split_to_array(text, '\s+')) AS tok FROM documents),
-        |tot AS (SELECT COUNT(*) AS t FROM toks)
-        |SELECT tok, COUNT(*) AS n FROM toks GROUP BY tok
-        |HAVING COUNT(*) > (SELECT t FROM tot) / 50.0
-        |ORDER BY n DESC, tok""".stripMargin,
-    "multimodal_features" ->
-      // header = big-endian fold of the first (up to) 4 PAYLOAD BYTES,
-      // byte-exact as a hex-prefix parse — no ASCII or length->=4
-      // assumption (the old ascii(substr(...)) formulation diverged on
-      // multibyte chars and on documents shorter than 4 chars)
-      """WITH b AS (
-        | SELECT doc_id, source, octet_length(encode(text)) AS byte_len, md5(text) AS digest,
-        |  CASE WHEN length(text) = 0 THEN 0
-        |       ELSE CAST(concat('0x', substr(hex(encode(text)), 1, 8)) AS BIGINT) END AS header
-        | FROM documents)
-        |SELECT doc_id, 'text/plain' AS media_type, source,
-        | CAST(byte_len AS BIGINT) AS byte_len, digest,
-        | CAST(header AS BIGINT) AS header,
-        | CAST(64 + header % 1857 AS BIGINT) AS width,
-        | CAST(64 + byte_len % 1017 AS BIGINT) AS height
-        |FROM b ORDER BY doc_id""".stripMargin,
-    "multimodal_resize" ->
-      """WITH b AS (
-        | SELECT doc_id, octet_length(encode(text)) AS byte_len,
-        |  CASE WHEN length(text) = 0 THEN 0
-        |       ELSE CAST(concat('0x', substr(hex(encode(text)), 1, 8)) AS BIGINT) END AS header
-        | FROM documents),
-        |d AS (SELECT doc_id, 64 + header % 1857 AS width, 64 + byte_len % 1017 AS height FROM b)
-        |SELECT doc_id, CAST(width AS BIGINT) AS width, CAST(height AS BIGINT) AS height,
-        | CAST(CASE WHEN greatest(width, height) <= 256 THEN width
-        |      ELSE width * 256 // greatest(width, height) END AS BIGINT) AS rs_width,
-        | CAST(CASE WHEN greatest(width, height) <= 256 THEN height
-        |      ELSE height * 256 // greatest(width, height) END AS BIGINT) AS rs_height
-        |FROM d ORDER BY doc_id""".stripMargin,
-    "multimodal_frames" ->
-      """WITH b AS (
-        | SELECT doc_id, octet_length(encode(text)) AS byte_len,
-        |  CASE WHEN length(text) = 0 THEN 0
-        |       ELSE CAST(concat('0x', substr(hex(encode(text)), 1, 8)) AS BIGINT) END AS header
-        | FROM documents),
-        |f AS (SELECT doc_id, header, 1 + byte_len % 240 AS n_frames FROM b),
-        |s AS (SELECT doc_id, header, n_frames,
-        |       CAST(ceil(CAST(n_frames AS DOUBLE) / 8) AS BIGINT) AS stride FROM f)
-        |SELECT doc_id, CAST(g.g AS BIGINT) AS frame_idx,
-        | CAST(g.g * 33 AS BIGINT) AS ts_ms,
-        | CAST((header + g.g * 2654435761) % 256 AS BIGINT) AS luma
-        |FROM s, unnest(generate_series(0, n_frames - 1, stride)) g(g)
-        |ORDER BY doc_id, frame_idx""".stripMargin,
-    "staged_partitioned_write" ->
-      """SELECT CAST(year(ts) AS BIGINT) AS y, CAST(month(ts) AS BIGINT) AS m,
-        | CAST(day(ts) AS BIGINT) AS d, COUNT(*) AS n,
-        | CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total
-        |FROM events GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin,
-    "csv_roundtrip" ->
-      // parquet truth + the 3 injected bad lines as the "(corrupt)" row:
-      // hash equality proves the CSV round trip loses nothing and the
-      // corrupt capture is exact
-      """SELECT c_mktsegment AS segment, COUNT(*) AS n,
-        | CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS total_bal
-        |FROM customer GROUP BY 1
-        |UNION ALL SELECT '(corrupt)', 3, NULL
-        |ORDER BY 1""".stripMargin,
-    // parquet truth over the same pushed date predicate: hash equality
-    // proves longs/doubles/strings/timestamps survived the ORC round trip
-    "orc_roundtrip" ->
-      """SELECT o_orderpriority, COUNT(*) AS n,
-        | CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_price
-        |FROM orders WHERE o_orderdate >= TIMESTAMP '1997-01-01'
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    // parquet truth + the 2 injected bad lines; the 32-bit md5-prefix
-    // hash sum (the proven hex-prefix fragment) proves every text byte
-    // survived JSON string escaping
-    "jsonl_roundtrip" ->
-      """SELECT source, COUNT(*) AS n,
-        | CAST(SUM(CAST(concat('0x', substr(md5(text), 1, 8)) AS BIGINT)) AS BIGINT)
-        |  AS text_hash_sum
-        |FROM documents GROUP BY 1
-        |UNION ALL SELECT '(corrupt)', 2, NULL
-        |ORDER BY 1""".stripMargin,
-    // the synthesized JSON is integer-rendered-only, so the text is
-    // byte-identical in both engines; the heterogeneous field `x`
-    // surfaces as TRY_CAST value-or-null on both sides
-    "variant_extract" ->
-      """WITH j AS (
-        | SELECT '{"u":{"id":' || user_id || ',"seg":"' || event_type ||
-        |  '"},"m":[' || json_extract_string(props, '$.k') || ',' ||
-        |  (event_id % 7) || '],"x":' ||
-        |  CASE WHEN event_id % 2 = 1 THEN CAST(user_id AS VARCHAR)
-        |       ELSE '"' || event_type || '"' END || '}' AS js
-        | FROM events)
-        |SELECT json_extract_string(js, '$.u.seg') AS seg, COUNT(*) AS n,
-        | CAST(SUM(CAST(json_extract(js, '$.u.id') AS BIGINT)) AS BIGINT) AS sum_uid,
-        | CAST(SUM(CAST(json_extract(js, '$.m[0]') AS BIGINT)) AS BIGINT) AS sum_k,
-        | CAST(SUM(CAST(json_extract(js, '$.m[1]') AS BIGINT)) AS BIGINT) AS sum_m1,
-        | COUNT(TRY_CAST(json_extract_string(js, '$.x') AS BIGINT)) AS n_x_numeric,
-        | CAST(SUM(TRY_CAST(json_extract_string(js, '$.x') AS BIGINT)) AS BIGINT)
-        |  AS sum_x_numeric
-        |FROM j GROUP BY 1 ORDER BY 1""".stripMargin,
-    // parquet truth recomputed by the same parity split: batch 1 landed
-    // without o_orderpriority, so its column stats must be null/zero
-    "schema_evolution" ->
-      """SELECT CAST(CASE WHEN o_orderkey % 2 = 0 THEN 1 ELSE 2 END AS BIGINT) AS batch,
-        | COUNT(*) AS n,
-        | CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_price,
-        | COUNT(CASE WHEN o_orderkey % 2 = 1 THEN o_orderpriority END) AS n_priority,
-        | COUNT(DISTINCT CASE WHEN o_orderkey % 2 = 1 THEN o_orderpriority END)
-        |  AS n_priorities
-        |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin,
-    "scrape_profiles" ->
-      """SELECT c_custkey AS profile_id, 'player_' || c_custkey AS name,
-        | c_custkey % 3 AS visibility, c_custkey % 100 AS steam_level
-        |FROM customer WHERE c_custkey % 97 != 0 ORDER BY profile_id""".stripMargin,
-    "decontaminate" -> decontaminateOracle,
-    // bit-identical by construction (bloom prunes, the exact join
-    // decides) — the SAME oracle checks the scale path
-    "decontaminate_bloom" -> decontaminateOracle,
-    "doc_chunks_cdc" ->
-      """WITH t AS (SELECT doc_id, regexp_split_to_array(text, '\s+') w FROM documents),
-        |tok AS (SELECT doc_id, g.i - 1 AS pos, w[g.i] AS tok
-        |        FROM t, unnest(generate_series(1, len(w))) g(i)),
-        |b AS (SELECT doc_id, pos, tok,
-        |       CASE WHEN CAST(concat('0x', substr(md5(tok), 1, 8)) AS BIGINT) % 16 = 0
-        |            THEN 1 ELSE 0 END AS f
-        |      FROM tok),
-        |c AS (SELECT doc_id, pos, tok,
-        |       SUM(f) OVER (PARTITION BY doc_id ORDER BY pos
-        |                    ROWS UNBOUNDED PRECEDING) AS chunk_id
-        |      FROM b)
-        |SELECT doc_id, CAST(chunk_id AS BIGINT) AS chunk_id,
-        | md5(string_agg(tok, ' ' ORDER BY pos)) AS chunk_hash,
-        | COUNT(*) AS n_chunk_tokens
-        |FROM c GROUP BY doc_id, chunk_id ORDER BY doc_id, chunk_id""".stripMargin,
-    "corpus_stats" ->
-      """WITH s AS (
-        | SELECT doc_id, source,
-        |  CAST(length(text) AS BIGINT) AS n_chars_q,
-        |  CAST(len(regexp_split_to_array(text, '\s+')) AS BIGINT) AS n_tokens,
-        |  CAST(len(list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |    x -> x IN ('the','a','of','and','to','in','is','was','for','on'))) AS BIGINT) AS n_stopwords,
-        |  CAST(len(list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |    x -> x IN ('der','die','das','und','zu','ein','eine','mit','von','nicht'))) AS BIGINT) AS hits_de,
-        |  CAST(len(list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |    x -> x IN ('the','a','of','and','to','in','is','was','for','on'))) AS BIGINT) AS hits_en,
-        |  CAST(len(list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |    x -> x IN ('el','la','de','y','que','un','una','por','con','los'))) AS BIGINT) AS hits_es,
-        |  CAST(len(list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |    x -> x IN ('le','la','de','et','que','un','une','pour','dans','les'))) AS BIGINT) AS hits_fr
-        | FROM documents),
-        |q AS (SELECT source, n_chars_q, n_tokens,
-        |  least(CAST(n_tokens AS DOUBLE) / 50.0, 1.0) * 0.5
-        |    + CAST(n_stopwords AS DOUBLE) / CAST(n_tokens AS DOUBLE) * 0.5 AS quality_score,
-        |  CASE WHEN greatest(hits_de, hits_en, hits_es, hits_fr) = 0 THEN 'und'
-        |       WHEN hits_de = greatest(hits_de, hits_en, hits_es, hits_fr) THEN 'de'
-        |       WHEN hits_en = greatest(hits_de, hits_en, hits_es, hits_fr) THEN 'en'
-        |       WHEN hits_es = greatest(hits_de, hits_en, hits_es, hits_fr) THEN 'es'
-        |       ELSE 'fr' END AS pred_lang
-        | FROM s)
-        |SELECT source, COUNT(*) AS n_docs,
-        | CAST(SUM(n_tokens) AS BIGINT) AS n_tokens,
-        | CAST(SUM(n_chars_q) AS BIGINT) AS n_chars,
-        | CAST(SUM(CAST(CAST(quality_score AS VARCHAR) AS DECIMAL(28,12))) AS DOUBLE)
-        |   / COUNT(*) AS mean_quality,
-        | CAST(COUNT(DISTINCT pred_lang) AS BIGINT) AS n_langs
-        |FROM q GROUP BY source ORDER BY source""".stripMargin,
-    "text_winnow" ->
-      """WITH toks AS (SELECT doc_id, regexp_split_to_array(text, '\s+') w FROM documents),
-        |g AS (SELECT doc_id, CAST(i.i AS BIGINT) AS pos,
-        |        CAST(concat('0x', substr(md5(array_to_string(w[i.i:i.i+3], ' ')), 1, 8)) AS BIGINT) AS h
-        |      FROM toks, unnest(generate_series(1, len(w)-3)) i(i) WHERE len(w) >= 4),
-        |x AS (SELECT doc_id, pos, h,
-        |  (CASE WHEN LAG(h,1) OVER dw >= h THEN 1 ELSE 0 END
-        |   + CASE WHEN LAG(h,1) OVER dw >= h AND LAG(h,2) OVER dw >= h THEN 1 ELSE 0 END
-        |   + CASE WHEN LAG(h,1) OVER dw >= h AND LAG(h,2) OVER dw >= h
-        |          AND LAG(h,3) OVER dw >= h THEN 1 ELSE 0 END) AS llen,
-        |  (CASE WHEN LEAD(h,1) OVER dw > h THEN 1 ELSE 0 END
-        |   + CASE WHEN LEAD(h,1) OVER dw > h AND LEAD(h,2) OVER dw > h THEN 1 ELSE 0 END
-        |   + CASE WHEN LEAD(h,1) OVER dw > h AND LEAD(h,2) OVER dw > h
-        |          AND LEAD(h,3) OVER dw > h THEN 1 ELSE 0 END) AS rlen,
-        |  MAX(pos) OVER (PARTITION BY doc_id) AS m
-        |  FROM g WINDOW dw AS (PARTITION BY doc_id ORDER BY pos))
-        |SELECT doc_id, pos, h AS gram_hash FROM x
-        |WHERE GREATEST(1, pos - 3, pos - llen) <= LEAST(pos + rlen, m) - 3
-        |ORDER BY doc_id, pos""".stripMargin,
-    "decontaminate_winnow" ->
-      """WITH toks AS (SELECT doc_id, regexp_split_to_array(text, '\s+') w FROM documents),
-        |g AS (SELECT doc_id, CAST(i.i AS BIGINT) AS pos,
-        |        CAST(concat('0x', substr(md5(array_to_string(w[i.i:i.i+3], ' ')), 1, 8)) AS BIGINT) AS h
-        |      FROM toks, unnest(generate_series(1, len(w)-3)) i(i) WHERE len(w) >= 4),
-        |x AS (SELECT doc_id, pos, h,
-        |  (CASE WHEN LAG(h,1) OVER dw >= h THEN 1 ELSE 0 END
-        |   + CASE WHEN LAG(h,1) OVER dw >= h AND LAG(h,2) OVER dw >= h THEN 1 ELSE 0 END
-        |   + CASE WHEN LAG(h,1) OVER dw >= h AND LAG(h,2) OVER dw >= h
-        |          AND LAG(h,3) OVER dw >= h THEN 1 ELSE 0 END) AS llen,
-        |  (CASE WHEN LEAD(h,1) OVER dw > h THEN 1 ELSE 0 END
-        |   + CASE WHEN LEAD(h,1) OVER dw > h AND LEAD(h,2) OVER dw > h THEN 1 ELSE 0 END
-        |   + CASE WHEN LEAD(h,1) OVER dw > h AND LEAD(h,2) OVER dw > h
-        |          AND LEAD(h,3) OVER dw > h THEN 1 ELSE 0 END) AS rlen,
-        |  MAX(pos) OVER (PARTITION BY doc_id) AS m
-        |  FROM g WINDOW dw AS (PARTITION BY doc_id ORDER BY pos)),
-        |wf AS (SELECT DISTINCT doc_id, h FROM x
-        |       WHERE GREATEST(1, pos - 3, pos - llen) <= LEAST(pos + rlen, m) - 3),
-        |t AS (SELECT doc_id AS t_id, h FROM wf WHERE doc_id % 10 != 0),
-        |b AS (SELECT doc_id AS b_id, h FROM wf WHERE doc_id % 10 = 0),
-        |bs AS (SELECT b_id, COUNT(*) AS nb FROM b GROUP BY b_id),
-        |p AS (SELECT t_id, b_id, COUNT(*) AS shared
-        |      FROM t JOIN b USING (h) GROUP BY t_id, b_id)
-        |SELECT p.t_id, p.b_id, p.shared,
-        | CAST(p.shared AS DOUBLE) / CAST(bs.nb AS DOUBLE) AS containment
-        |FROM p JOIN bs USING (b_id) WHERE p.shared >= 2
-        |ORDER BY p.t_id, p.b_id""".stripMargin,
-    "bm25_topk" ->
-      """WITH toks AS (SELECT doc_id, regexp_split_to_array(lower(text), '\s+') w FROM documents),
-        |tok AS (SELECT doc_id, u.g AS term FROM toks, unnest(w) u(g)),
-        |tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM tok GROUP BY doc_id, term),
-        |dl AS (SELECT doc_id, COUNT(*) AS dl FROM tok GROUP BY doc_id),
-        |s AS (SELECT COUNT(*) AS n, SUM(dl) AS toks FROM dl),
-        |dfq AS (SELECT term, COUNT(*) AS df FROM tf GROUP BY term),
-        |q AS (SELECT DISTINCT doc_id AS q_id, term FROM tok WHERE doc_id < 8),
-        |sc AS (SELECT q.q_id, tf.doc_id,
-        |        ROUND((ln((CAST(s.n AS DOUBLE) - CAST(dfq.df AS DOUBLE) + CAST(0.5 AS DOUBLE))
-        |              / (CAST(dfq.df AS DOUBLE) + CAST(0.5 AS DOUBLE)) + CAST(1.0 AS DOUBLE))
-        |           * (CAST(tf.tf AS DOUBLE) * (CAST(1.2 AS DOUBLE) + CAST(1.0 AS DOUBLE))))
-        |          / (CAST(tf.tf AS DOUBLE) + CAST(1.2 AS DOUBLE)
-        |             * ((CAST(1.0 AS DOUBLE) - CAST(0.75 AS DOUBLE)) + CAST(0.75 AS DOUBLE)
-        |                * (CAST(dl.dl AS DOUBLE) / (CAST(s.toks AS DOUBLE) / CAST(s.n AS DOUBLE))))), 6) AS sv
-        |       FROM tf JOIN q USING (term) JOIN dl USING (doc_id)
-        |        JOIN dfq ON tf.term = dfq.term, s),
-        |agg AS (SELECT q_id, doc_id, CAST(SUM(CAST(sv AS DECIMAL(28,12))) AS DOUBLE) AS score
-        |        FROM sc GROUP BY q_id, doc_id),
-        |r AS (SELECT q_id, doc_id, score,
-        |        ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY score DESC, doc_id) AS rn FROM agg)
-        |SELECT q_id, doc_id, score FROM r WHERE rn <= 10
-        |ORDER BY q_id, score DESC, doc_id""".stripMargin,
-    // the six stage fragments are each proven by their own oracle rows;
-    // here they chain as CTEs in deployment order
-    "curation_pipeline" ->
-      """WITH n AS (SELECT doc_id, text, source,
-        |        md5(trim(regexp_replace(regexp_replace(lower(text), '[[:punct:]]', ' ', 'g'), '\s+', ' ', 'g'))) AS h
-        |       FROM documents),
-        |corpus AS (SELECT * FROM n WHERE doc_id % 50 <> 0),
-        |bench AS (SELECT DISTINCT h FROM n WHERE doc_id % 50 = 0),
-        |ded AS (SELECT * FROM corpus QUALIFY doc_id = MIN(doc_id) OVER (PARTITION BY h)),
-        |clean AS (SELECT d.* FROM ded d
-        |          WHERE NOT EXISTS (SELECT 1 FROM bench b WHERE b.h = d.h)),
-        |q AS (SELECT doc_id, text, source,
-        |       least(CAST(len(regexp_split_to_array(text, '\s+')) AS DOUBLE) / 50.0, 1.0) * 0.5
-        |        + CAST(len(list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |            x -> x IN ('the','a','of','and','to','in','is','was','for','on'))) AS DOUBLE)
-        |          / CAST(len(regexp_split_to_array(text, '\s+')) AS DOUBLE) * 0.5 AS qs
-        |      FROM clean),
-        |t AS (SELECT quantile_cont(qs, 0.25) AS thr FROM q),
-        |gated AS (SELECT doc_id, text, source FROM q, t WHERE qs >= thr),
-        |mixed AS (SELECT doc_id, text, source FROM gated
-        |          WHERE CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT)
-        |            < CAST(FLOOR((CASE source WHEN 'src0' THEN 1.0 WHEN 'src1' THEN 0.75
-        |                    WHEN 'src2' THEN 0.5 WHEN 'src3' THEN 0.25
-        |                    ELSE 0.375 END) * 4294967296) AS BIGINT)),
-        |tk AS (SELECT doc_id, source, regexp_split_to_array(text, '\s+') w FROM mixed),
-        |c AS (SELECT doc_id, source, s, array_to_string(w[s:s+31], ' ') AS chunk
-        |      FROM tk, unnest(generate_series(1, greatest(len(w) - 32 + 1, 1), 24)) st(s)),
-        |x AS (SELECT source, doc_id, CAST((s - 1) // 24 AS BIGINT) AS chunk_id,
-        |       CAST(len(regexp_split_to_array(chunk, '\s+')) AS BIGINT) AS n_chunk_tokens
-        |      FROM c),
-        |p AS (SELECT source, doc_id, chunk_id, n_chunk_tokens,
-        |       SUM(n_chunk_tokens) OVER (PARTITION BY source ORDER BY doc_id, chunk_id
-        |         ROWS UNBOUNDED PRECEDING) AS cum
-        |      FROM x)
-        |SELECT source, CAST(FLOOR((cum - n_chunk_tokens) / 512) AS BIGINT) AS seq_id,
-        | COUNT(*) AS n_chunks, CAST(SUM(n_chunk_tokens) AS BIGINT) AS seq_tokens
-        |FROM p GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
+    })),
+    // the oracle rebuilds the SCD2 dim directly, closing ONLY genuinely
+    // changed rows (already-MACHINERY customers keep their single open
+    // version — scd2Apply's unchanged-keep semantics)
+    Q("fact_scd2_lookup", factScd2Lookup, Some(
+      """WITH dim AS (
+        | SELECT c_custkey, c_mktsegment, DATE '1990-01-01' AS valid_from,
+        |  CASE WHEN c_custkey % 3 = 0 AND c_mktsegment <> 'MACHINERY'
+        |       THEN DATE '1998-01-01' END AS valid_to
+        | FROM customer
+        | UNION ALL
+        | SELECT c_custkey, 'MACHINERY', DATE '1998-01-01', CAST(NULL AS DATE)
+        | FROM customer WHERE c_custkey % 3 = 0 AND c_mktsegment <> 'MACHINERY')
+        |SELECT o.o_orderkey, d.c_mktsegment AS segment_at_order,
+        | strftime(d.valid_from, '%Y-%m-%d') AS version_from
+        |FROM orders o JOIN dim d ON o.o_custkey = d.c_custkey
+        | AND CAST(o.o_orderdate AS DATE) >= d.valid_from
+        | AND (d.valid_to IS NULL OR CAST(o.o_orderdate AS DATE) < d.valid_to)
+        |ORDER BY o.o_orderkey""".stripMargin)),
     // the two sub-rankings reuse the bm25_topk and cross-jaccard oracle
     // constructions verbatim; the fusion arithmetic is integer-input IEEE
     // division in a fixed term order
-    "hybrid_topk" ->
+    Q("hybrid_topk", hybridTopK, Some(
       """WITH toks AS (SELECT doc_id, regexp_split_to_array(lower(text), '\s+') w FROM documents),
         |tok AS (SELECT doc_id, u.g AS term FROM toks, unnest(w) u(g)),
         |tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM tok GROUP BY doc_id, term),
@@ -8209,10 +8026,10 @@ object SparkEntry {
         | SELECT q_id, doc_id, rrf,
         |  ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY rrf DESC, doc_id) AS rank
         | FROM f) WHERE rank <= 10
-        |ORDER BY q_id, rank""".stripMargin,
+        |ORDER BY q_id, rank""".stripMargin)),
     // the hybrid_topk chain's two proven sub-ranking CTEs (bm / jf),
     // reduced to a Kendall-tau tail over each query's common docs
-    "ranking_agreement" ->
+    Q("ranking_agreement", rankingAgreement, Some(
       """WITH toks AS (SELECT doc_id, regexp_split_to_array(lower(text), '\s+') w FROM documents),
         |tok AS (SELECT doc_id, u.g AS term FROM toks, unnest(w) u(g)),
         |tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM tok GROUP BY doc_id, term),
@@ -8260,452 +8077,474 @@ object SparkEntry {
         | CAST(COALESCE(cd.n_conc, 0) - COALESCE(cd.n_disc, 0) AS DOUBLE)
         |   / NULLIF(CAST(nc.n_common * (nc.n_common - 1) // 2 AS DOUBLE), 0.0) AS tau
         |FROM nc LEFT JOIN cd ON nc.q_id = cd.q_id
-        |ORDER BY nc.q_id""".stripMargin,
-
-    "lm_score" ->
-      """WITH toks AS (SELECT doc_id, regexp_split_to_array(text, '\s+') w FROM documents),
-        |bi AS (SELECT doc_id, array_to_string(w[i.i:i.i+1], ' ') AS bg
-        |       FROM toks, unnest(generate_series(1, len(w)-1)) i(i) WHERE len(w) >= 2),
-        |uni AS (SELECT u.w AS w FROM toks, unnest(w) u(w)),
-        |c2 AS (SELECT bg, COUNT(*) AS c2 FROM bi GROUP BY bg),
-        |c1 AS (SELECT w, COUNT(*) AS c1 FROM uni GROUP BY w),
-        |v AS (SELECT COUNT(*) AS v FROM c1)
-        |SELECT b.doc_id, COUNT(*) AS n_bigrams,
-        | CAST(SUM(CAST(round(-ln((COALESCE(c2.c2, 0) + 0.5)
-        |     / (COALESCE(c1.c1, 0) + 0.5 * v.v)), 6) AS DECIMAL(28,12))) AS DOUBLE)
-        |   / COUNT(*) AS nll
-        |FROM bi b LEFT JOIN c2 ON b.bg = c2.bg
-        | LEFT JOIN c1 ON split_part(b.bg, ' ', 1) = c1.w, v
-        |GROUP BY b.doc_id ORDER BY b.doc_id""".stripMargin,
-    "decontaminate_jaccard" ->
+        |ORDER BY nc.q_id""".stripMargin)),
+    // the six stage fragments are each proven by their own oracle rows;
+    // here they chain as CTEs in deployment order
+    Q("curation_pipeline", curationPipeline, Some(
+      """WITH n AS (SELECT doc_id, text, source,
+        |        md5(trim(regexp_replace(regexp_replace(lower(text), '[[:punct:]]', ' ', 'g'), '\s+', ' ', 'g'))) AS h
+        |       FROM documents),
+        |corpus AS (SELECT * FROM n WHERE doc_id % 50 <> 0),
+        |bench AS (SELECT DISTINCT h FROM n WHERE doc_id % 50 = 0),
+        |ded AS (SELECT * FROM corpus QUALIFY doc_id = MIN(doc_id) OVER (PARTITION BY h)),
+        |clean AS (SELECT d.* FROM ded d
+        |          WHERE NOT EXISTS (SELECT 1 FROM bench b WHERE b.h = d.h)),
+        |q AS (SELECT doc_id, text, source,
+        |       least(CAST(len(regexp_split_to_array(text, '\s+')) AS DOUBLE) / 50.0, 1.0) * 0.5
+        |        + CAST(len(list_filter(regexp_split_to_array(lower(text), '\s+'),
+        |            x -> x IN ('the','a','of','and','to','in','is','was','for','on'))) AS DOUBLE)
+        |          / CAST(len(regexp_split_to_array(text, '\s+')) AS DOUBLE) * 0.5 AS qs
+        |      FROM clean),
+        |t AS (SELECT quantile_cont(qs, 0.25) AS thr FROM q),
+        |gated AS (SELECT doc_id, text, source FROM q, t WHERE qs >= thr),
+        |mixed AS (SELECT doc_id, text, source FROM gated
+        |          WHERE CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT)
+        |            < CAST(FLOOR((CASE source WHEN 'src0' THEN 1.0 WHEN 'src1' THEN 0.75
+        |                    WHEN 'src2' THEN 0.5 WHEN 'src3' THEN 0.25
+        |                    ELSE 0.375 END) * 4294967296) AS BIGINT)),
+        |tk AS (SELECT doc_id, source, regexp_split_to_array(text, '\s+') w FROM mixed),
+        |c AS (SELECT doc_id, source, s, array_to_string(w[s:s+31], ' ') AS chunk
+        |      FROM tk, unnest(generate_series(1, greatest(len(w) - 32 + 1, 1), 24)) st(s)),
+        |x AS (SELECT source, doc_id, CAST((s - 1) // 24 AS BIGINT) AS chunk_id,
+        |       CAST(len(regexp_split_to_array(chunk, '\s+')) AS BIGINT) AS n_chunk_tokens
+        |      FROM c),
+        |p AS (SELECT source, doc_id, chunk_id, n_chunk_tokens,
+        |       SUM(n_chunk_tokens) OVER (PARTITION BY source ORDER BY doc_id, chunk_id
+        |         ROWS UNBOUNDED PRECEDING) AS cum
+        |      FROM x)
+        |SELECT source, CAST(FLOOR((cum - n_chunk_tokens) / 512) AS BIGINT) AS seq_id,
+        | COUNT(*) AS n_chunks, CAST(SUM(n_chunk_tokens) AS BIGINT) AS seq_tokens
+        |FROM p GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
+    // session_window semantics: a gap of exactly the duration starts a
+    // NEW session ([start, last+gap) half-open) -> `>=` here where the
+    // lag-form oracle uses `>`; session_end = last event + gap
+    Q("sessionize_native", sessionizeNative, Some(
+      """WITH x AS (
+        | SELECT user_id, ts,
+        |  epoch_us(ts) - lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts) AS gap
+        | FROM events),
+        |s AS (
+        | SELECT user_id, ts,
+        |  SUM(CASE WHEN gap IS NULL OR gap >= 1800000000 THEN 1 ELSE 0 END)
+        |   OVER (PARTITION BY user_id ORDER BY ts ROWS UNBOUNDED PRECEDING) AS sid
+        | FROM x),
+        |g AS (SELECT user_id, sid, COUNT(*) AS n_events, MIN(ts) AS t0,
+        |       MAX(ts) + INTERVAL 30 MINUTE AS t1
+        |      FROM s GROUP BY user_id, sid)
+        |SELECT user_id, strftime(t0, '%Y-%m-%d %H:%M:%S') AS session_start,
+        | strftime(t1, '%Y-%m-%d %H:%M:%S') AS session_end, n_events
+        |FROM g ORDER BY user_id, session_start""".stripMargin)),
+    // slope is shift-invariant, so x = hours since the key's own first
+    // bucket (keeps every product far inside BIGINT); numerator and
+    // denominator emitted exactly, slope the one shared IEEE division
+    Q("events_trend", eventsTrend, Some(
+      """WITH h AS (
+        | SELECT event_type, date_trunc('hour', ts) AS b, COUNT(*) AS n
+        | FROM events GROUP BY 1, 2),
+        |x AS (
+        | SELECT event_type, n,
+        |  CAST(epoch(b) AS BIGINT) // 3600
+        |   - MIN(CAST(epoch(b) AS BIGINT) // 3600)
+        |      OVER (PARTITION BY event_type) AS x
+        | FROM h),
+        |s AS (
+        | SELECT event_type, COUNT(*) AS nb,
+        |  CAST(SUM(x) AS BIGINT) AS sx, CAST(SUM(n) AS BIGINT) AS sy,
+        |  CAST(SUM(x*x) AS BIGINT) AS sxx, CAST(SUM(x*n) AS BIGINT) AS sxy
+        | FROM x GROUP BY 1)
+        |SELECT event_type, nb AS n_hours,
+        | CAST(nb*sxy - sx*sy AS BIGINT) AS slope_num,
+        | CAST(nb*sxx - sx*sx AS BIGINT) AS slope_den,
+        | CASE WHEN nb*sxx - sx*sx = 0 THEN NULL
+        |      ELSE CAST(nb*sxy - sx*sy AS DOUBLE)
+        |           / CAST(nb*sxx - sx*sx AS DOUBLE) END AS slope,
+        | CAST(nb*sxy - sx*sy < 0 AS BIGINT) AS declining
+        |FROM s ORDER BY event_type""".stripMargin)),
+    // Theil–Sen: the same per-key hour shift as events_trend, one IEEE
+    // division per pair, interpolated median (quantile_cont == Spark
+    // percentile — the price_percentiles parity pattern)
+    Q("events_trend_robust", eventsTrendRobust, Some(
+      """WITH h AS (
+        | SELECT event_type, date_trunc('hour', ts) AS b, COUNT(*) AS n
+        | FROM events GROUP BY 1, 2),
+        |x AS (
+        | SELECT event_type, CAST(n AS BIGINT) AS y,
+        |  CAST(epoch(b) AS BIGINT) // 3600
+        |   - MIN(CAST(epoch(b) AS BIGINT) // 3600)
+        |      OVER (PARTITION BY event_type) AS x
+        | FROM h),
+        |p AS (
+        | SELECT a.event_type,
+        |  CAST(b.y - a.y AS DOUBLE) / CAST(b.x - a.x AS DOUBLE) AS sl
+        | FROM x a JOIN x b ON a.event_type = b.event_type AND a.x < b.x)
+        |SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_pairs,
+        | quantile_cont(sl, 0.5) AS slope,
+        | CAST(quantile_cont(sl, 0.5) < 0 AS BIGINT) AS declining
+        |FROM p GROUP BY event_type ORDER BY event_type""".stripMargin)),
+    // exact integer KS: D_num = max |nb_tot*ca - na_tot*cb| over the
+    // union of distinct values; the one shared division lands last
+    Q("value_ks", valueKs, Some(
+      """WITH c1 AS (SELECT value AS v,
+        |  SUM(CASE WHEN event_type='click' THEN 1 ELSE 0 END) AS na,
+        |  SUM(CASE WHEN event_type='view' THEN 1 ELSE 0 END) AS nb
+        | FROM events WHERE event_type IN ('click','view') AND value IS NOT NULL
+        | GROUP BY 1),
+        |cum1 AS (SELECT CAST(SUM(na) OVER (ORDER BY v) AS BIGINT) AS ca,
+        |                CAST(SUM(nb) OVER (ORDER BY v) AS BIGINT) AS cb FROM c1),
+        |t1 AS (SELECT CAST(SUM(na) AS BIGINT) AS n_a,
+        |              CAST(SUM(nb) AS BIGINT) AS n_b FROM c1),
+        |d1 AS (SELECT n_a, n_b,
+        |        CAST(MAX(ABS(n_b*ca - n_a*cb)) AS BIGINT) AS d_num
+        |       FROM cum1, t1 GROUP BY 1, 2),
+        |c2 AS (SELECT value AS v,
+        |  SUM(CASE WHEN event_type='click' THEN 1 ELSE 0 END) AS na,
+        |  SUM(CASE WHEN event_type='error' THEN 1 ELSE 0 END) AS nb
+        | FROM events WHERE event_type IN ('click','error') AND value IS NOT NULL
+        | GROUP BY 1),
+        |cum2 AS (SELECT CAST(SUM(na) OVER (ORDER BY v) AS BIGINT) AS ca,
+        |                CAST(SUM(nb) OVER (ORDER BY v) AS BIGINT) AS cb FROM c2),
+        |t2 AS (SELECT CAST(SUM(na) AS BIGINT) AS n_a,
+        |              CAST(SUM(nb) AS BIGINT) AS n_b FROM c2),
+        |d2 AS (SELECT n_a, n_b,
+        |        CAST(MAX(ABS(n_b*ca - n_a*cb)) AS BIGINT) AS d_num
+        |       FROM cum2, t2 GROUP BY 1, 2)
+        |SELECT * FROM (
+        | SELECT 'click' AS type_a, 'view' AS type_b, n_a, n_b, d_num,
+        |  CASE WHEN n_a = 0 OR n_b = 0 THEN NULL
+        |       ELSE CAST(d_num AS DOUBLE) / CAST(n_a*n_b AS DOUBLE) END AS ks
+        | FROM d1
+        | UNION ALL
+        | SELECT 'click' AS type_a, 'error' AS type_b, n_a, n_b, d_num,
+        |  CASE WHEN n_a = 0 OR n_b = 0 THEN NULL
+        |       ELSE CAST(d_num AS DOUBLE) / CAST(n_a*n_b AS DOUBLE) END AS ks
+        | FROM d2)
+        |ORDER BY type_b""".stripMargin)),
+    // binned KS: the identical integer-KS machinery over the fixed-bin
+    // domain; the quantizer (width 8 = 2^3, IEEE-exact division, clamp
+    // to under/overflow sinks) is the same formula text ksBinCol compiles
+    Q("value_ks_binned", valueKsBinned, Some(
+      """WITH q AS (SELECT event_type,
+        |  CAST(LEAST(GREATEST(FLOOR((value - 0.0) / 8.0), -1.0), 16.0) AS BIGINT) AS v
+        | FROM events WHERE value IS NOT NULL AND NOT isnan(value)),
+        |c1 AS (SELECT v,
+        |  SUM(CASE WHEN event_type='click' THEN 1 ELSE 0 END) AS na,
+        |  SUM(CASE WHEN event_type='view' THEN 1 ELSE 0 END) AS nb
+        | FROM q WHERE event_type IN ('click','view')
+        | GROUP BY 1),
+        |cum1 AS (SELECT CAST(SUM(na) OVER (ORDER BY v) AS BIGINT) AS ca,
+        |                CAST(SUM(nb) OVER (ORDER BY v) AS BIGINT) AS cb FROM c1),
+        |t1 AS (SELECT CAST(SUM(na) AS BIGINT) AS n_a,
+        |              CAST(SUM(nb) AS BIGINT) AS n_b FROM c1),
+        |d1 AS (SELECT n_a, n_b,
+        |        CAST(MAX(ABS(n_b*ca - n_a*cb)) AS BIGINT) AS d_num
+        |       FROM cum1, t1 GROUP BY 1, 2),
+        |c2 AS (SELECT v,
+        |  SUM(CASE WHEN event_type='click' THEN 1 ELSE 0 END) AS na,
+        |  SUM(CASE WHEN event_type='error' THEN 1 ELSE 0 END) AS nb
+        | FROM q WHERE event_type IN ('click','error')
+        | GROUP BY 1),
+        |cum2 AS (SELECT CAST(SUM(na) OVER (ORDER BY v) AS BIGINT) AS ca,
+        |                CAST(SUM(nb) OVER (ORDER BY v) AS BIGINT) AS cb FROM c2),
+        |t2 AS (SELECT CAST(SUM(na) AS BIGINT) AS n_a,
+        |              CAST(SUM(nb) AS BIGINT) AS n_b FROM c2),
+        |d2 AS (SELECT n_a, n_b,
+        |        CAST(MAX(ABS(n_b*ca - n_a*cb)) AS BIGINT) AS d_num
+        |       FROM cum2, t2 GROUP BY 1, 2)
+        |SELECT * FROM (
+        | SELECT 'click' AS type_a, 'view' AS type_b, n_a, n_b, d_num,
+        |  CASE WHEN n_a = 0 OR n_b = 0 THEN NULL
+        |       ELSE CAST(d_num AS DOUBLE) / CAST(n_a*n_b AS DOUBLE) END AS ks
+        | FROM d1
+        | UNION ALL
+        | SELECT 'click' AS type_a, 'error' AS type_b, n_a, n_b, d_num,
+        |  CASE WHEN n_a = 0 OR n_b = 0 THEN NULL
+        |       ELSE CAST(d_num AS DOUBLE) / CAST(n_a*n_b AS DOUBLE) END AS ks
+        | FROM d2)
+        |ORDER BY type_a, type_b""".stripMargin)),
+    Q("numeric_corr", numericCorr, Some(Quality.corrMatrixSql("lineitem", corrCols))),
+    Q("token_cms", tokenCms),
+    Q("diverse_sample", diverseSample),
+    // the proven q5 decimal-volume fragment, two-level: nation share of
+    // the region x part-type market per year
+    Q("q8_market_share", q8MarketShare, Some(
+      """WITH base AS (
+        | SELECT EXTRACT(year FROM o_orderdate) AS o_year,
+        |  CAST(l_extendedprice*(1-l_discount) AS DECIMAL(28,6)) AS vol,
+        |  n2.n_name AS supp_nation
+        | FROM part, supplier, lineitem, orders, customer,
+        |      nation n1, nation n2, region
+        | WHERE p_partkey = l_partkey AND s_suppkey = l_suppkey
+        |  AND l_orderkey = o_orderkey AND o_custkey = c_custkey
+        |  AND c_nationkey = n1.n_nationkey AND n1.n_regionkey = r_regionkey
+        |  AND r_name = 'AMERICA' AND s_nationkey = n2.n_nationkey
+        |  AND o_orderdate >= TIMESTAMP '1995-01-01'
+        |  AND o_orderdate < TIMESTAMP '1997-01-01'
+        |  AND p_type = 'PROMO')
+        |SELECT o_year,
+        | CAST(SUM(CASE WHEN supp_nation = 'NATION_3' THEN vol
+        |               ELSE CAST(0 AS DECIMAL(28,6)) END) AS DOUBLE) AS nation_volume,
+        | CAST(SUM(vol) AS DOUBLE) AS total_volume,
+        | CASE WHEN SUM(vol) = 0 THEN NULL
+        |  ELSE CAST(SUM(CASE WHEN supp_nation = 'NATION_3' THEN vol
+        |                     ELSE CAST(0 AS DECIMAL(28,6)) END) AS DOUBLE)
+        |       / CAST(SUM(vol) AS DOUBLE) END AS mkt_share
+        |FROM base GROUP BY o_year ORDER BY o_year""".stripMargin)),
+    Q("q14_promo_share", q14PromoShare, Some(
+      """SELECT
+        | CAST(SUM(CASE WHEN p_type = 'PROMO'
+        |   THEN CAST(l_extendedprice*(1-l_discount) AS DECIMAL(28,6))
+        |   ELSE CAST(0 AS DECIMAL(28,6)) END) AS DOUBLE) AS promo_revenue,
+        | CAST(SUM(CAST(l_extendedprice*(1-l_discount) AS DECIMAL(28,6))) AS DOUBLE) AS total_revenue,
+        | CAST(SUM(CASE WHEN p_type = 'PROMO'
+        |   THEN CAST(l_extendedprice*(1-l_discount) AS DECIMAL(28,6))
+        |   ELSE CAST(0 AS DECIMAL(28,6)) END) AS DOUBLE)
+        |  / CAST(SUM(CAST(l_extendedprice*(1-l_discount) AS DECIMAL(28,6))) AS DOUBLE) AS promo_share
+        |FROM lineitem, part
+        |WHERE l_partkey = p_partkey
+        | AND l_shipdate >= TIMESTAMP '1997-01-01'
+        | AND l_shipdate < TIMESTAMP '1997-04-01'""".stripMargin)),
+    Q("q17_small_qty", q17SmallQty, Some(
+      """WITH li AS (
+        | SELECT l_partkey, l_quantity, l_extendedprice
+        | FROM lineitem, part
+        | WHERE l_partkey = p_partkey AND p_brand = 'Brand#11'),
+        |a AS (
+        | SELECT l_partkey AS ak,
+        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE)/COUNT(l_quantity) AS avg_qty
+        | FROM li GROUP BY 1)
+        |SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(28,6))) AS DOUBLE) / 7.0 AS avg_yearly
+        |FROM li JOIN a ON li.l_partkey = a.ak
+        |WHERE l_quantity < 0.5 * avg_qty""".stripMargin)),
+    Q("q18_big_orders", q18BigOrders, Some(
+      """WITH q AS (
+        | SELECT l_orderkey,
+        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
+        | FROM lineitem GROUP BY 1
+        | HAVING CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) > 250)
+        |SELECT c_name, c_custkey, o_orderkey,
+        | strftime(o_orderdate, '%Y-%m-%d %H:%M:%S') AS orderdate,
+        | o_totalprice, sum_qty
+        |FROM q JOIN orders ON l_orderkey = o_orderkey
+        | JOIN customer ON o_custkey = c_custkey
+        |ORDER BY o_totalprice DESC, o_orderkey LIMIT 100""".stripMargin)),
+    Q("q19_disjunctive", q19Disjunctive, Some(
+      """SELECT CAST(SUM(CAST(l_extendedprice*(1-l_discount) AS DECIMAL(28,6))) AS DOUBLE) AS revenue
+        |FROM lineitem, part
+        |WHERE l_partkey = p_partkey AND (
+        | (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 5 AND l_quantity BETWEEN 1 AND 11)
+        | OR (p_brand = 'Brand#13' AND p_size BETWEEN 1 AND 10 AND l_quantity BETWEEN 10 AND 20)
+        | OR (p_brand = 'Brand#14' AND p_size BETWEEN 1 AND 15 AND l_quantity BETWEEN 20 AND 30))""".stripMargin)),
+    Q("q21_waiting_suppliers", q21WaitingSuppliers, Some(
+      """SELECT s_name, count(*) AS numwait
+        |FROM supplier, lineitem l1, orders
+        |WHERE s_suppkey = l1.l_suppkey AND o_orderkey = l1.l_orderkey
+        | AND o_orderstatus = 'F'
+        | AND l1.l_shipdate > o_orderdate + INTERVAL 60 DAY
+        | AND EXISTS (SELECT 1 FROM lineitem l2
+        |   WHERE l2.l_orderkey = l1.l_orderkey AND l2.l_suppkey <> l1.l_suppkey)
+        | AND NOT EXISTS (SELECT 1 FROM lineitem l3
+        |   WHERE l3.l_orderkey = l1.l_orderkey AND l3.l_suppkey <> l1.l_suppkey
+        |    AND l3.l_shipdate > o_orderdate + INTERVAL 60 DAY)
+        |GROUP BY s_name ORDER BY numwait DESC, s_name LIMIT 20""".stripMargin)),
+    Q("q22_idle_customers", q22IdleCustomers, Some(
+      """WITH a AS (
+        | SELECT CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE)/COUNT(c_acctbal) AS avg_bal
+        | FROM customer WHERE c_acctbal > 0)
+        |SELECT CAST(c_nationkey AS BIGINT) AS nationkey, COUNT(*) AS numcust,
+        | CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS totacctbal
+        |FROM customer, a
+        |WHERE c_acctbal > a.avg_bal
+        | AND NOT EXISTS (SELECT 1 FROM orders
+        |   WHERE o_custkey = c_custkey AND o_orderdate >= TIMESTAMP '2000-01-01')
+        |GROUP BY 1 ORDER BY 1""".stripMargin)),
+    Q("q9_product_profit", q9ProductProfit, Some(
+      """SELECT n_name AS nation, EXTRACT(year FROM o_orderdate) AS o_year,
+        | CAST(SUM(CAST(l_extendedprice*(1-l_discount) - p_retailprice*l_quantity*0.6 AS DECIMAL(28,6))) AS DOUBLE) AS sum_profit
+        |FROM lineitem, part, supplier, nation, orders
+        |WHERE l_partkey = p_partkey AND l_suppkey = s_suppkey
+        | AND s_nationkey = n_nationkey AND l_orderkey = o_orderkey
+        | AND p_name LIKE '%widget%'
+        |GROUP BY 1, 2 ORDER BY nation, o_year DESC""".stripMargin)),
+    Q("q10_returns", q10Returns, Some(
+      """WITH pc AS (
+        | SELECT o_custkey,
+        |  CAST(SUM(CAST(l_extendedprice*(1-l_discount) AS DECIMAL(28,6))) AS DOUBLE) AS revenue
+        | FROM lineitem, orders
+        | WHERE l_orderkey = o_orderkey AND l_returnflag = 'R'
+        |  AND o_orderdate >= TIMESTAMP '1998-01-01'
+        |  AND o_orderdate < TIMESTAMP '1998-07-01'
+        | GROUP BY 1)
+        |SELECT c_custkey, c_name, revenue, c_acctbal, n_name
+        |FROM pc JOIN customer ON o_custkey = c_custkey
+        | JOIN nation ON c_nationkey = n_nationkey
+        |ORDER BY revenue DESC, c_custkey LIMIT 20""".stripMargin)),
+    Q("q16_supplier_counts", q16SupplierCounts, Some(
+      """SELECT p_brand, p_type, (p_size - 1) // 10 AS size_band,
+        | COUNT(DISTINCT l_suppkey) AS supplier_cnt
+        |FROM lineitem, part
+        |WHERE l_partkey = p_partkey AND p_type <> 'STANDARD'
+        | AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
+        |GROUP BY 1, 2, 3
+        |ORDER BY supplier_cnt DESC, p_brand, p_type, size_band""".stripMargin)),
+    // MIN over doubles has no accumulation and the tie compare is IEEE
+    // equality on identical operands — engine-exact, no decimal dance
+    Q("q2_min_cost_region", q2MinCostRegion, Some(
+      """WITH rs AS (
+        | SELECT s_suppkey, s_name, s_acctbal, n_name
+        | FROM supplier, nation, region
+        | WHERE s_nationkey = n_nationkey AND n_regionkey = r_regionkey
+        |  AND r_name = 'EUROPE'),
+        |pp AS (SELECT p_partkey FROM part WHERE p_size <= 10 AND p_type = 'LARGE'),
+        |cost AS (
+        | SELECT l_partkey, l_suppkey, MIN(l_extendedprice) AS min_cost
+        | FROM lineitem JOIN pp ON l_partkey = p_partkey
+        |  JOIN rs ON l_suppkey = s_suppkey
+        | GROUP BY 1, 2),
+        |best AS (SELECT l_partkey, MIN(min_cost) AS best_cost FROM cost GROUP BY 1)
+        |SELECT s_acctbal, s_name, n_name, l_partkey AS p_partkey, min_cost
+        |FROM cost JOIN best USING (l_partkey) JOIN rs ON l_suppkey = s_suppkey
+        |WHERE min_cost = best_cost
+        |ORDER BY s_acctbal DESC, n_name, s_name, p_partkey LIMIT 100""".stripMargin)),
+    // the gate compares exact DECIMALs (value·1000 > total — integer
+    // cents both engines); the emitted value is the one decimal→double cast
+    Q("q11_important_parts", q11ImportantParts, Some(
+      """WITH rs AS (
+        | SELECT s_suppkey FROM supplier, nation, region
+        | WHERE s_nationkey = n_nationkey AND n_regionkey = r_regionkey
+        |  AND r_name = 'AFRICA'),
+        |v AS (
+        | SELECT l_partkey, SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS val
+        | FROM lineitem JOIN rs ON l_suppkey = s_suppkey GROUP BY 1),
+        |t AS (SELECT SUM(val) AS total FROM v)
+        |SELECT l_partkey AS p_partkey, CAST(val AS DOUBLE) AS value
+        |FROM v, t WHERE val * 1000 > total
+        |ORDER BY value DESC, p_partkey""".stripMargin)),
+    // both conditional quantity sums are BIGINT (quantities are
+    // integer-valued doubles; CAST agrees on integers) — pure integer gate
+    Q("q20_excess_shippers", q20ExcessShippers, Some(
+      """WITH pp AS (SELECT p_partkey FROM part WHERE p_size <= 25),
+        |pair AS (
+        | SELECT l_partkey, l_suppkey,
+        |  SUM(CASE WHEN year(l_shipdate) = 1997 THEN CAST(l_quantity AS BIGINT)
+        |      ELSE 0 END) AS q97,
+        |  SUM(CAST(l_quantity AS BIGINT)) AS qall
+        | FROM lineitem JOIN pp ON l_partkey = p_partkey GROUP BY 1, 2),
+        |ex AS (SELECT l_suppkey, COUNT(*) AS n_excess FROM pair
+        |       WHERE q97 > 0 AND 2 * q97 > qall GROUP BY 1)
+        |SELECT s_suppkey, s_name, n_excess
+        |FROM ex JOIN supplier ON l_suppkey = s_suppkey
+        | JOIN nation ON s_nationkey = n_nationkey
+        | JOIN region ON n_regionkey = r_regionkey
+        |WHERE r_name = 'ASIA'
+        |ORDER BY s_suppkey""".stripMargin)),
+    Q("q6_forecast_revenue", q6ForecastRevenue, Some(
+      """SELECT CAST(SUM(CAST(l_extendedprice*l_discount AS DECIMAL(28,6))) AS DOUBLE) AS revenue
+        |FROM lineitem
+        |WHERE l_shipdate >= TIMESTAMP '1997-01-01'
+        | AND l_shipdate < TIMESTAMP '1998-01-01'
+        | AND l_discount BETWEEN 0.05 AND 0.07
+        | AND l_quantity < 24""".stripMargin)),
+    Q("q12_late_priority", q12LatePriority, Some(
+      """SELECT l_returnflag,
+        | CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
+        |   THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
+        | CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
+        |   THEN 0 ELSE 1 END) AS BIGINT) AS low_line_count
+        |FROM lineitem, orders
+        |WHERE l_orderkey = o_orderkey
+        | AND l_shipdate >= TIMESTAMP '1997-01-01'
+        | AND l_shipdate < TIMESTAMP '1998-01-01'
+        | AND l_shipdate > o_orderdate + INTERVAL 45 DAY
+        |GROUP BY 1 ORDER BY l_returnflag""".stripMargin)),
+    Q("q13_order_distribution", q13OrderDistribution, Some(
+      """WITH pc AS (
+        | SELECT o_custkey, COUNT(*) AS c_count FROM orders
+        | WHERE o_orderpriority <> '1-URGENT' GROUP BY 1)
+        |SELECT COALESCE(c_count, 0) AS c_count, COUNT(*) AS custdist
+        |FROM customer LEFT JOIN pc ON c_custkey = o_custkey
+        |GROUP BY 1 ORDER BY custdist DESC, c_count DESC""".stripMargin)),
+    Q("q15_top_supplier", q15TopSupplier, Some(
+      """WITH rev AS (
+        | SELECT l_suppkey,
+        |  SUM(CAST(l_extendedprice*(1-l_discount) AS DECIMAL(28,6))) AS total_revenue_d
+        | FROM lineitem
+        | WHERE l_shipdate >= TIMESTAMP '1997-01-01'
+        |  AND l_shipdate < TIMESTAMP '1997-04-01'
+        | GROUP BY 1)
+        |SELECT l_suppkey AS suppkey, s_name,
+        | CAST(total_revenue_d AS DOUBLE) AS total_revenue
+        |FROM rev JOIN supplier ON l_suppkey = s_suppkey
+        |WHERE total_revenue_d = (SELECT MAX(total_revenue_d) FROM rev)
+        |ORDER BY suppkey""".stripMargin)),
+    // bounds = the proven percentile<->quantile_cont parity; the clipped
+    // sum casts only 2-dp money to decimal, bounds enter via the fixed
+    // IEEE tail mid + n_lo*lo + n_hi*hi in this exact written order
+    Q("price_winsorize", priceWinsorize, Some(
+      """WITH b AS (
+        | SELECT o_orderpriority,
+        |  quantile_cont(o_totalprice, 0.05) AS lo,
+        |  quantile_cont(o_totalprice, 0.95) AS hi
+        | FROM orders GROUP BY 1),
+        |w AS (
+        | SELECT o.o_orderpriority, lo, hi,
+        |  CASE WHEN o_totalprice < lo THEN 1 ELSE 0 END AS cl,
+        |  CASE WHEN o_totalprice > hi THEN 1 ELSE 0 END AS ch,
+        |  CASE WHEN o_totalprice >= lo AND o_totalprice <= hi
+        |       THEN o_totalprice ELSE 0.0 END AS mid
+        | FROM orders o JOIN b USING (o_orderpriority))
+        |SELECT o_orderpriority, COUNT(*) AS n,
+        | CAST(SUM(cl) AS BIGINT) AS n_clipped_lo,
+        | CAST(SUM(ch) AS BIGINT) AS n_clipped_hi,
+        | CAST(SUM(CAST(mid AS DECIMAL(28,6))) AS DOUBLE)
+        |  + CAST(SUM(cl) AS DOUBLE) * lo
+        |  + CAST(SUM(ch) AS DOUBLE) * hi AS sum_winsorized,
+        | lo AS p_lo, hi AS p_hi
+        |FROM w GROUP BY o_orderpriority, lo, hi
+        |ORDER BY o_orderpriority""".stripMargin)),
+    Q("multimodal_phash", multimodalPhash),
+    Q("dq_rules", dqRules, Some(Quality.checkRulesSql("orders", orderRules))),
+    // three NTILE windows with custkey tie-breaks — the proven
+    // feature_ntile parity; monetary ranks on the decimal-exact sum
+    Q("customer_rfm", customerRfm, Some(
+      """WITH c AS (
+        | SELECT o_custkey, MAX(o_orderdate) AS last_d, COUNT(*) AS frequency,
+        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(28,6))) AS DOUBLE) AS monetary
+        | FROM orders GROUP BY 1),
+        |m AS (SELECT MAX(o_orderdate) AS max_d FROM orders),
+        |b AS (
+        | SELECT o_custkey,
+        |  CAST(DATE_DIFF('day', last_d, max_d) AS BIGINT) AS recency_days,
+        |  frequency, monetary
+        | FROM c, m),
+        |sc AS (
+        | SELECT o_custkey, recency_days, frequency, monetary,
+        |  CAST(6 - NTILE(5) OVER (ORDER BY recency_days, o_custkey) AS BIGINT) AS r_score,
+        |  CAST(NTILE(5) OVER (ORDER BY frequency, o_custkey) AS BIGINT) AS f_score,
+        |  CAST(NTILE(5) OVER (ORDER BY monetary, o_custkey) AS BIGINT) AS m_score
+        | FROM b)
+        |SELECT o_custkey, recency_days, frequency, monetary,
+        | r_score, f_score, m_score,
+        | r_score*100 + f_score*10 + m_score AS rfm
+        |FROM sc ORDER BY o_custkey""".stripMargin)),
+    // the proven jaccard fragment verbatim + a band-bounded rollup;
+    // floor(j*10) on identical doubles is identical in both engines
+    Q("dedup_tau_curve", dedupTauCurve, Some(
       """WITH toks AS (SELECT doc_id, regexp_split_to_array(text, '\s+') w FROM documents),
         |sh AS (SELECT DISTINCT doc_id, array_to_string(w[i.i:i.i+2], ' ') AS sh
         |       FROM toks, unnest(generate_series(1, len(w)-2)) i(i) WHERE len(w) >= 3),
-        |sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-        |c AS (SELECT t.doc_id AS t_id, b.doc_id AS b_id, COUNT(*) AS common
-        |      FROM sh t JOIN sh b ON t.sh = b.sh
-        |      WHERE t.doc_id % 10 != 0 AND b.doc_id % 10 = 0
-        |      GROUP BY 1, 2)
-        |SELECT c.t_id, c.b_id, CAST(c.common AS BIGINT) AS common,
-        | CAST(c.common AS DOUBLE) / (st.n + sb.n - c.common) AS jaccard
-        |FROM c JOIN sz st ON c.t_id = st.doc_id JOIN sz sb ON c.b_id = sb.doc_id
-        |WHERE CAST(c.common AS DOUBLE) / (st.n + sb.n - c.common) >= 0.5
-        |ORDER BY c.t_id, c.b_id""".stripMargin,
-    "boilerplate_passages" ->
-      """WITH t AS (SELECT doc_id, regexp_split_to_array(text, '\s+') w FROM documents),
-        |p AS (SELECT doc_id, CAST((s-1)//3 AS BIGINT) AS pid,
-        |        array_to_string(w[s:s+2], ' ') AS ptext
-        |      FROM t, unnest(generate_series(1, greatest(len(w), 1), 3)) st(s)),
-        |hot AS (SELECT ptext FROM p GROUP BY ptext
-        |        HAVING COUNT(DISTINCT doc_id) > 3)
-        |SELECT p.doc_id,
-        | COALESCE(string_agg(CASE WHEN h.ptext IS NULL THEN p.ptext END,
-        |   ' ' ORDER BY p.pid), '') AS text_clean,
-        | CAST(SUM(CASE WHEN h.ptext IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-        | CAST(SUM(CASE WHEN h.ptext IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_dropped
-        |FROM p LEFT JOIN hot h ON p.ptext = h.ptext
-        |GROUP BY p.doc_id ORDER BY p.doc_id""".stripMargin,
-    "ngram_contamination" ->
-      """WITH toks AS (SELECT doc_id, regexp_split_to_array(text, '\s+') w FROM documents),
-        |sh AS (SELECT DISTINCT doc_id, array_to_string(w[i.i:i.i+2], ' ') AS g
-        |       FROM toks, unnest(generate_series(1, len(w)-2)) i(i) WHERE len(w) >= 3),
-        |train AS (SELECT DISTINCT g FROM sh WHERE doc_id % 50 != 0),
-        |bench AS (SELECT doc_id, g FROM sh WHERE doc_id % 50 = 0)
-        |SELECT b.doc_id, COUNT(*) AS n_ngrams,
-        | CAST(SUM(CASE WHEN t.g IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hit,
-        | CAST(CAST(SUM(CASE WHEN t.g IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE)
-        |   / CAST(COUNT(*) AS DOUBLE) AS DOUBLE) AS contamination
-        |FROM bench b LEFT JOIN train t ON b.g = t.g
-        |GROUP BY b.doc_id ORDER BY b.doc_id""".stripMargin,
-    "repeated_spans" ->
-      """WITH toks AS (SELECT doc_id, regexp_split_to_array(text, '\s+') w FROM documents),
-        |win AS (SELECT doc_id, CAST(i.i AS BIGINT) AS pos,
-        |          array_to_string(w[i.i:i.i+5], ' ') AS g
-        |        FROM toks, unnest(generate_series(1, len(w)-5)) i(i) WHERE len(w) >= 6),
-        |hot AS (SELECT g FROM win GROUP BY g HAVING COUNT(DISTINCT doc_id) >= 2),
-        |f AS (SELECT win.doc_id, win.pos FROM win JOIN hot USING (g)),
-        |pe AS (SELECT doc_id, pos,
-        |         MAX(pos + 6) OVER (PARTITION BY doc_id ORDER BY pos
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_end
-        |       FROM f),
-        |isl AS (SELECT doc_id, pos,
-        |          SUM(CASE WHEN prev_end IS NULL OR pos > prev_end THEN 1 ELSE 0 END)
-        |            OVER (PARTITION BY doc_id ORDER BY pos) AS island
-        |        FROM pe)
-        |SELECT doc_id, MIN(pos) AS span_start, MAX(pos) + 6 AS span_end,
-        | COUNT(*) AS n_windows
-        |FROM isl GROUP BY doc_id, island ORDER BY doc_id, span_start""".stripMargin,
-    "repeated_spans_w3" ->
-      """WITH toks AS (SELECT doc_id, regexp_split_to_array(text, '\s+') w FROM documents),
-        |win AS (SELECT doc_id, CAST(i.i AS BIGINT) AS pos,
-        |          array_to_string(w[i.i:i.i+2], ' ') AS g
-        |        FROM toks, unnest(generate_series(1, len(w)-2)) i(i) WHERE len(w) >= 3),
-        |hot AS (SELECT g FROM win GROUP BY g HAVING COUNT(DISTINCT doc_id) >= 2),
-        |f AS (SELECT win.doc_id, win.pos FROM win JOIN hot USING (g)),
-        |pe AS (SELECT doc_id, pos,
-        |         MAX(pos + 3) OVER (PARTITION BY doc_id ORDER BY pos
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_end
-        |       FROM f),
-        |isl AS (SELECT doc_id, pos,
-        |          SUM(CASE WHEN prev_end IS NULL OR pos > prev_end THEN 1 ELSE 0 END)
-        |            OVER (PARTITION BY doc_id ORDER BY pos) AS island
-        |        FROM pe)
-        |SELECT doc_id, MIN(pos) AS span_start, MAX(pos) + 3 AS span_end,
-        | COUNT(*) AS n_windows
-        |FROM isl GROUP BY doc_id, island ORDER BY doc_id, span_start""".stripMargin,
-    "bucketed_join" ->
-      """SELECT o_orderkey, COUNT(*) AS n_items,
-        | CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-        | CAST(SUM(CAST(l_extendedprice*(1-l_discount) AS DECIMAL(28,6))) AS DOUBLE) AS revenue
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY o_orderkey ORDER BY o_orderkey""".stripMargin,
-    "dedup_substring" ->
-      """WITH toks AS (SELECT doc_id, regexp_split_to_array(text, '\s+') w FROM documents),
-        |win AS (SELECT doc_id, CAST(i.i AS BIGINT) AS pos,
-        |          array_to_string(w[i.i:i.i+5], ' ') AS g
-        |        FROM toks, unnest(generate_series(1, len(w)-5)) i(i) WHERE len(w) >= 6),
-        |hot AS (SELECT g FROM win GROUP BY g HAVING COUNT(DISTINCT doc_id) >= 2),
-        |f AS (SELECT win.doc_id, win.pos FROM win JOIN hot USING (g)),
-        |pe AS (SELECT doc_id, pos,
-        |         MAX(pos + 6) OVER (PARTITION BY doc_id ORDER BY pos
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_end
-        |       FROM f),
-        |isl AS (SELECT doc_id, pos,
-        |          SUM(CASE WHEN prev_end IS NULL OR pos > prev_end THEN 1 ELSE 0 END)
-        |            OVER (PARTITION BY doc_id ORDER BY pos) AS island
-        |        FROM pe),
-        |spans AS (SELECT doc_id, MIN(pos) AS s, MAX(pos) + 6 AS e
-        |          FROM isl GROUP BY doc_id, island),
-        |agg AS (SELECT doc_id, COUNT(*) AS ns, SUM(e - s) AS nm
-        |        FROM spans GROUP BY doc_id)
-        |SELECT t.doc_id, CAST(len(t.w) AS BIGINT) AS n_tokens,
-        | CAST(COALESCE(a.ns, 0) AS BIGINT) AS n_spans,
-        | CAST(COALESCE(a.nm, 0) AS BIGINT) AS n_masked,
-        | CAST(COALESCE(a.nm, 0) AS DOUBLE) / CAST(len(t.w) AS DOUBLE) AS masked_frac
-        |FROM toks t LEFT JOIN agg a USING (doc_id) ORDER BY t.doc_id""".stripMargin,
-    "dsir_weights" ->
-      """WITH toks AS (SELECT doc_id, source, regexp_split_to_array(text, '\s+') w FROM documents),
-        |uni AS (SELECT doc_id, source, u.g AS g FROM toks, unnest(w) u(g)),
-        |bi AS (SELECT doc_id, source, array_to_string(w[i.i:i.i+1], ' ') AS g
-        |       FROM toks, unnest(generate_series(1, len(w)-1)) i(i) WHERE len(w) >= 2),
-        |g AS (SELECT doc_id, source, g FROM uni UNION ALL SELECT doc_id, source, g FROM bi),
-        |gb AS (SELECT doc_id,
-        |         source IN ('src0','src1','src2','src3') AS t,
-        |         CAST(concat('0x', substr(md5(g), 1, 8)) AS BIGINT) % 4096 AS b
-        |       FROM g),
-        |cnt AS (SELECT b, SUM(CASE WHEN t THEN 1 ELSE 0 END) AS ct,
-        |               SUM(CASE WHEN NOT t THEN 1 ELSE 0 END) AS cr
-        |        FROM gb GROUP BY b),
-        |tot AS (SELECT SUM(ct) AS nt, SUM(cr) AS nr FROM cnt)
-        |SELECT gb.doc_id, COUNT(*) AS n_feats,
-        | CAST(SUM(CAST(round(ln(
-        |     (CAST(cnt.ct + 1 AS DOUBLE) / CAST(tot.nt + 4096 AS DOUBLE))
-        |   / (CAST(cnt.cr + 1 AS DOUBLE) / CAST(tot.nr + 4096 AS DOUBLE))), 6)
-        |   AS DECIMAL(28,12))) AS DOUBLE) AS dsir_score
-        |FROM gb JOIN cnt ON gb.b = cnt.b, tot
-        |GROUP BY gb.doc_id ORDER BY gb.doc_id""".stripMargin,
-    "embedding_centroids" ->
-      // the double -> VARCHAR -> DECIMAL route makes DuckDB round the
-      // shortest-roundtrip decimal repr like Spark's Cast does; DuckDB's
-      // native double->decimal goes through double arithmetic and can be
-      // off by 1 ulp at the 12th decimal
-      """SELECT label, CAST(pos - 1 AS BIGINT) AS pos,
-        | CAST(SUM(CAST(CAST(CAST(x AS DOUBLE) AS VARCHAR) AS DECIMAL(28,12))) AS DOUBLE) / COUNT(x) AS centroid
-        |FROM (SELECT label, unnest(embedding) AS x,
-        |      generate_subscripts(embedding, 1) AS pos FROM embeddings)
-        |GROUP BY label, pos ORDER BY label, pos""".stripMargin,
-    "asof_join" ->
-      """WITH c AS (SELECT user_id, ts, event_id AS click_id FROM events WHERE event_type = 'click'
-        |           QUALIFY row_number() OVER (PARTITION BY user_id, ts ORDER BY event_id DESC) = 1),
-        |p AS (SELECT event_id, user_id, ts, value FROM events WHERE event_type = 'purchase')
-        |SELECT p.event_id, p.user_id, strftime(p.ts, '%Y-%m-%d %H:%M:%S') AS ts,
-        | strftime(c.ts, '%Y-%m-%d %H:%M:%S') AS asof_ts, c.click_id AS asof_click_id
-        |FROM p ASOF LEFT JOIN c ON p.user_id = c.user_id AND p.ts >= c.ts
-        |ORDER BY p.event_id""".stripMargin,
-    "dim_scd2" ->
-      """WITH cur AS (SELECT c_custkey, c_mktsegment,
-        |              DATE '1990-01-01' AS o_vf FROM customer),
-        |ch AS (SELECT c_custkey, 'MACHINERY' AS seg, DATE '2024-06-01' AS ts
-        |       FROM customer WHERE c_custkey % 3 = 0
-        |       UNION ALL
-        |       SELECT c_custkey + 10000000, 'NEWSEG', DATE '2024-06-01'
-        |       FROM customer WHERE c_custkey % 1000 = 1),
-        |j AS (SELECT COALESCE(cur.c_custkey, ch.c_custkey) AS k,
-        |       cur.c_mktsegment AS o_seg, cur.o_vf, ch.seg, ch.ts
-        |      FROM cur FULL OUTER JOIN ch ON cur.c_custkey = ch.c_custkey)
-        |SELECT k AS c_custkey, c_mktsegment,
-        | strftime(vf, '%Y-%m-%d') AS valid_from, strftime(vt, '%Y-%m-%d') AS valid_to
-        |FROM (
-        | SELECT k, o_seg AS c_mktsegment, o_vf AS vf, CAST(NULL AS DATE) AS vt
-        | FROM j WHERE ts IS NULL OR (o_vf IS NOT NULL AND o_seg = seg)
-        | UNION ALL
-        | SELECT k, seg, ts, CAST(NULL AS DATE) FROM j WHERE o_vf IS NULL
-        | UNION ALL
-        | SELECT k, o_seg, o_vf, ts
-        | FROM j WHERE ts IS NOT NULL AND o_vf IS NOT NULL AND o_seg <> seg
-        | UNION ALL
-        | SELECT k, seg, ts, CAST(NULL AS DATE)
-        | FROM j WHERE ts IS NOT NULL AND o_vf IS NOT NULL AND o_seg <> seg)
-        |ORDER BY c_custkey, valid_from""".stripMargin,
-
-    // the oracle rebuilds the SCD2 dim directly, closing ONLY genuinely
-    // changed rows (already-MACHINERY customers keep their single open
-    // version — scd2Apply's unchanged-keep semantics)
-    "fact_scd2_lookup" ->
-      """WITH dim AS (
-        | SELECT c_custkey, c_mktsegment, DATE '1990-01-01' AS valid_from,
-        |  CASE WHEN c_custkey % 3 = 0 AND c_mktsegment <> 'MACHINERY'
-        |       THEN DATE '1998-01-01' END AS valid_to
-        | FROM customer
-        | UNION ALL
-        | SELECT c_custkey, 'MACHINERY', DATE '1998-01-01', CAST(NULL AS DATE)
-        | FROM customer WHERE c_custkey % 3 = 0 AND c_mktsegment <> 'MACHINERY')
-        |SELECT o.o_orderkey, d.c_mktsegment AS segment_at_order,
-        | strftime(d.valid_from, '%Y-%m-%d') AS version_from
-        |FROM orders o JOIN dim d ON o.o_custkey = d.c_custkey
-        | AND CAST(o.o_orderdate AS DATE) >= d.valid_from
-        | AND (d.valid_to IS NULL OR CAST(o.o_orderdate AS DATE) < d.valid_to)
-        |ORDER BY o.o_orderkey""".stripMargin,
-
-    // forward direction: DuckDB ASOF with p.ts <= c.ts picks the earliest
-    // click at-or-after the purchase, matching the forward window frame
-    "asof_join_forward" ->
-      """WITH c AS (SELECT user_id, ts, event_id AS click_id FROM events WHERE event_type = 'click'
-        |           QUALIFY row_number() OVER (PARTITION BY user_id, ts ORDER BY event_id ASC) = 1),
-        |p AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase')
-        |SELECT p.event_id, p.user_id, strftime(p.ts, '%Y-%m-%d %H:%M:%S') AS ts,
-        | strftime(c.ts, '%Y-%m-%d %H:%M:%S') AS asof_ts, c.click_id AS asof_click_id
-        |FROM p ASOF LEFT JOIN c ON p.user_id = c.user_id AND p.ts <= c.ts
-        |ORDER BY p.event_id""".stripMargin,
-
-    // nearest: both directional ASOF picks computed, the closer (exact
-    // integer microseconds) wins, equal distance resolves backward
-    "asof_join_nearest" ->
-      """WITH c AS (SELECT user_id, ts, event_id AS click_id FROM events WHERE event_type = 'click'
-        |           QUALIFY row_number() OVER (PARTITION BY user_id, ts ORDER BY event_id DESC) = 1),
-        |p AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase'),
-        |b AS (SELECT p.event_id, c.ts AS b_ts, c.click_id AS b_id
-        |      FROM p ASOF LEFT JOIN c ON p.user_id = c.user_id AND p.ts >= c.ts),
-        |f AS (SELECT p.event_id, c.ts AS f_ts, c.click_id AS f_id
-        |      FROM p ASOF LEFT JOIN c ON p.user_id = c.user_id AND p.ts < c.ts),
-        |j AS (SELECT p.event_id, p.user_id, p.ts, b.b_ts, b.b_id, f.f_ts, f.f_id,
-        |       (f_ts IS NULL OR (b_ts IS NOT NULL AND
-        |        epoch_us(p.ts) - epoch_us(b_ts) <= epoch_us(f_ts) - epoch_us(p.ts))) AS use_b
-        |      FROM p JOIN b USING (event_id) JOIN f USING (event_id))
-        |SELECT event_id, user_id, strftime(ts, '%Y-%m-%d %H:%M:%S') AS ts,
-        | strftime(CASE WHEN use_b THEN b_ts ELSE f_ts END, '%Y-%m-%d %H:%M:%S') AS asof_ts,
-        | CASE WHEN use_b THEN b_id ELSE f_id END AS asof_click_id
-        |FROM j ORDER BY event_id""".stripMargin,
-
-    "asof_join_tolerance" ->
-      """WITH c AS (SELECT user_id, ts, event_id AS click_id FROM events WHERE event_type = 'click'
-        |           QUALIFY row_number() OVER (PARTITION BY user_id, ts ORDER BY event_id DESC) = 1),
-        |p AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase')
-        |SELECT p.event_id, p.user_id, strftime(p.ts, '%Y-%m-%d %H:%M:%S') AS ts,
-        | CASE WHEN c.ts >= p.ts - INTERVAL 30 MINUTE THEN strftime(c.ts, '%Y-%m-%d %H:%M:%S') END AS asof_ts,
-        | CASE WHEN c.ts >= p.ts - INTERVAL 30 MINUTE THEN c.click_id END AS asof_click_id
-        |FROM p ASOF LEFT JOIN c ON p.user_id = c.user_id AND p.ts >= c.ts
-        |ORDER BY p.event_id""".stripMargin,
-
-    "range_join" ->
-      """WITH c AS (SELECT user_id, event_id AS click_id, ts AS start_ts,
-        |            ts + INTERVAL 30 MINUTE AS end_ts
-        |           FROM events WHERE event_type = 'click'),
-        |p AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase')
-        |SELECT p.event_id, p.user_id, strftime(p.ts, '%Y-%m-%d %H:%M:%S') AS ts,
-        | c.click_id, strftime(c.start_ts, '%Y-%m-%d %H:%M:%S') AS click_ts
-        |FROM p JOIN c ON p.user_id = c.user_id
-        |  AND p.ts >= c.start_ts AND p.ts < c.end_ts
-        |ORDER BY p.event_id, c.click_id""".stripMargin,
-
-    // the interleave expression is generated by the SAME code path the
-    // Spark side documents (Layout.zvalueSql) — dialect-common BIGINT
-    // bit ops only, so both engines evaluate the identical formula
-    "zorder_layout" ->
-      s"""SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey,
-         | ${Layout.zvalueSql(Seq("l_partkey", "l_suppkey"), 20)} AS zval
-         |FROM lineitem
-         |ORDER BY zval, l_orderkey, l_linenumber""".stripMargin,
-
-    // the Hilbert automaton as generated chained CTEs (Layout.hilbertSql)
-    // — same formula-parity trick, per-level state columns instead of one
-    // scalar expression (the state chain would blow up 2^bits inlined)
-    "hilbert_layout" ->
-      (Layout.hilbertSql("lineitem",
-        Seq("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey"),
-        "l_partkey", "l_suppkey", bits = 20) +
-        "\nORDER BY hval, l_orderkey, l_linenumber"),
-
-    // k=3: the generated-automaton CTE chain with the 12-state row
-    // lookup rendered as a CASE ladder (same BIGINT bit ops both
-    // engines compute identically)
-    "hilbert_layout_3d" ->
-      (Layout.hilbert3Sql("lineitem",
-        Seq("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey"),
-        "l_partkey", "l_suppkey", "l_orderkey", bits = 20) +
-        "\nORDER BY hval, l_orderkey, l_linenumber"),
-
-    // the z-order READ path is layout-invisible: the same box over the
-    // RAW table (the Spark side read it back from the z-clustered files)
-    "zorder_scan" ->
-      """WITH dims AS (
-        | SELECT l_orderkey, l_linenumber,
-        |  CAST(concat('0x', substr(md5(concat(CAST(l_orderkey AS VARCHAR), ':', CAST(l_linenumber AS VARCHAR), ':a')), 1, 8)) AS BIGINT) % 1024 AS a,
-        |  CAST(concat('0x', substr(md5(concat(CAST(l_orderkey AS VARCHAR), ':', CAST(l_linenumber AS VARCHAR), ':b')), 1, 8)) AS BIGINT) % 1024 AS b
-        | FROM lineitem)
-        |SELECT l_orderkey, l_linenumber, a, b FROM dims
-        |WHERE a BETWEEN 384 AND 639 AND b BETWEEN 256 AND 511
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-
-    // the 3-D Hilbert READ path is layout-invisible too: the same 3-D
-    // box over the RAW table (the Spark side read it back from the
-    // hilbert3-clustered files)
-    "hilbert_scan_3d" ->
-      """WITH dims AS (
-        | SELECT l_orderkey, l_linenumber,
-        |  CAST(concat('0x', substr(md5(concat(CAST(l_orderkey AS VARCHAR), ':', CAST(l_linenumber AS VARCHAR), ':a')), 1, 8)) AS BIGINT) % 128 AS a,
-        |  CAST(concat('0x', substr(md5(concat(CAST(l_orderkey AS VARCHAR), ':', CAST(l_linenumber AS VARCHAR), ':b')), 1, 8)) AS BIGINT) % 128 AS b,
-        |  CAST(concat('0x', substr(md5(concat(CAST(l_orderkey AS VARCHAR), ':', CAST(l_linenumber AS VARCHAR), ':c')), 1, 8)) AS BIGINT) % 128 AS c
-        | FROM lineitem)
-        |SELECT l_orderkey, l_linenumber, a, b, c FROM dims
-        |WHERE a BETWEEN 32 AND 63 AND b BETWEEN 64 AND 95 AND c BETWEEN 96 AND 127
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-
-    // SQ8: min/max of FLOATs are exact, and the scale/floor arithmetic is
-    // IEEE double with the association order written identically on both
-    // sides — integer codes, no decimal dance needed
-    "embedding_quantize" ->
-      """WITH e AS (SELECT vec_id, unnest(embedding) AS x,
-        |             generate_subscripts(embedding, 1) AS pos FROM embeddings),
-        |s AS (SELECT pos, MIN(x) AS mn, MAX(x) AS mx FROM e GROUP BY pos)
-        |SELECT e.vec_id, CAST(e.pos - 1 AS BIGINT) AS pos,
-        | CASE WHEN s.mx = s.mn THEN CAST(0 AS BIGINT)
-        |      ELSE CAST(LEAST(FLOOR(((CAST(e.x AS DOUBLE) - CAST(s.mn AS DOUBLE)) * 255.0) / (CAST(s.mx AS DOUBLE) - CAST(s.mn AS DOUBLE))), 255.0) AS BIGINT) END AS code
-        |FROM e JOIN s USING (pos)
-        |ORDER BY vec_id, pos""".stripMargin,
-
-    // lift ranks identically to PMI (log is monotone) without a log()
-    // whose libm rounding could differ between engines; the double
-    // arithmetic has integer inputs and a fixed association order
-    "collocations_pmi" ->
-      """WITH t AS (SELECT list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |             x -> x <> '') AS w FROM documents),
-        |uni AS (SELECT tok, COUNT(*) AS c_tok
-        |        FROM (SELECT unnest(w) AS tok FROM t) GROUP BY tok),
-        |bg AS (SELECT w1, w2, COUNT(*) AS c_bg FROM (
-        |         SELECT w[i.i] AS w1, w[i.i + 1] AS w2
-        |         FROM t, unnest(generate_series(1, len(w) - 1)) i(i)
-        |         WHERE len(w) >= 2)
-        |       GROUP BY w1, w2 HAVING COUNT(*) >= 5),
-        |tot AS (SELECT CAST(SUM(len(w)) AS BIGINT) AS n_tok,
-        |               CAST(SUM(GREATEST(len(w) - 1, 0)) AS BIGINT) AS m_big FROM t)
-        |SELECT bg.w1, bg.w2, bg.c_bg, u1.c_tok AS c1, u2.c_tok AS c2,
-        | ((CAST(bg.c_bg AS DOUBLE) * tot.n_tok) * tot.n_tok) / ((CAST(tot.m_big AS DOUBLE) * u1.c_tok) * u2.c_tok) AS lift
-        |FROM bg JOIN uni u1 ON bg.w1 = u1.tok JOIN uni u2 ON bg.w2 = u2.tok
-        |CROSS JOIN tot
-        |ORDER BY lift DESC, w1, w2 LIMIT 50""".stripMargin,
-    "skipgram_pairs" ->
-      """WITH t AS (SELECT list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |             x -> x <> '') AS w FROM documents),
-        |pairs AS (SELECT w[i.i] AS w1, w[i.i + d.d] AS w2
-        |          FROM t, unnest(generate_series(1, 3)) d(d),
-        |               unnest(generate_series(1, len(w) - d.d)) i(i)
-        |          WHERE len(w) > d.d)
-        |SELECT w1, w2, COUNT(*) AS n FROM pairs
-        |GROUP BY 1, 2 ORDER BY n DESC, w1, w2 LIMIT 30""".stripMargin,
-
-    "snapshot_diff" ->
-      """WITH base AS (SELECT doc_id, md5(concat_ws(chr(1), text, source)) AS fp
-        |              FROM documents WHERE doc_id % 7 <> 0),
-        |cur AS (SELECT doc_id, md5(concat_ws(chr(1),
-        |          CASE WHEN doc_id % 3 = 0 THEN concat(text, ' [rev2]') ELSE text END,
-        |          source)) AS fp
-        |        FROM documents WHERE doc_id % 5 <> 0)
-        |SELECT doc_id, status FROM (
-        | SELECT COALESCE(base.doc_id, cur.doc_id) AS doc_id,
-        |  CASE WHEN base.fp IS NULL THEN 'added'
-        |       WHEN cur.fp IS NULL THEN 'removed'
-        |       WHEN base.fp <> cur.fp THEN 'changed'
-        |       ELSE 'unchanged' END AS status
-        | FROM base FULL OUTER JOIN cur ON base.doc_id = cur.doc_id)
-        |WHERE status <> 'unchanged'
-        |ORDER BY doc_id""".stripMargin,
-    // the erasure report recomputed arithmetically from raw events — the
-    // Spark side counts REAL lake partitions before/after the rewrite, so
-    // any pruning/overwrite defect lands as a count mismatch here
-    "staged_delete" ->
-      """WITH e AS (
-        | SELECT year(ts) AS yy, month(ts) AS mm, day(ts) AS dd, user_id
-        | FROM events),
-        |a AS (
-        | SELECT yy, mm, dd, CAST(COUNT(*) AS BIGINT) AS rows_before,
-        |  CAST(SUM(CASE WHEN user_id % 97 = 0 THEN 1 ELSE 0 END) AS BIGINT)
-        |   AS rows_deleted
-        | FROM e GROUP BY 1, 2, 3)
-        |SELECT yy AS y, mm AS m, dd AS d, rows_before, rows_deleted,
-        | rows_before - rows_deleted AS rows_after
-        |FROM a WHERE rows_deleted > 0 ORDER BY y, m, d""".stripMargin,
-    // replay the three lake versions arithmetically: v1 = everything,
-    // v2 = post-erasure survivors, v3 = v2 minus the upsert batch's keys
-    // plus the batch (updates with user_id+1, inserts re-keyed +1e9);
-    // SUM(BIGINT) is HUGEINT in DuckDB -> cast back (the proven rule)
-    "time_travel" ->
-      """WITH e AS (
-        | SELECT event_id, user_id, year(ts) AS yy, month(ts) AS mm,
-        |  day(ts) AS dd
-        | FROM events WHERE ts < TIMESTAMP '2024-01-08'),
-        |v2 AS (SELECT * FROM e WHERE user_id % 97 <> 0),
-        |b AS (SELECT event_id, user_id + 1 AS user_id, yy, mm, dd
-        |      FROM e WHERE event_id % 1000 = 0
-        |      UNION ALL
-        |      SELECT event_id + 1000000000, user_id, yy, mm, dd
-        |      FROM e WHERE event_id % 1000 = 0),
-        |v3 AS (SELECT * FROM v2
-        |       WHERE event_id NOT IN (SELECT event_id FROM b)
-        |       UNION ALL SELECT * FROM b),
-        |u AS (SELECT 1 AS version, yy, mm, dd, user_id FROM e
-        |      UNION ALL SELECT 2, yy, mm, dd, user_id FROM v2
-        |      UNION ALL SELECT 3, yy, mm, dd, user_id FROM v3)
-        |SELECT CAST(version AS BIGINT) AS version, yy AS y, mm AS m,
-        | dd AS d, COUNT(*) AS n_rows, CAST(SUM(user_id) AS BIGINT) AS sum_uid
-        |FROM u GROUP BY 1, 2, 3, 4 ORDER BY version, y, m, d""".stripMargin,
-    // the merge-on-read survivors: both accumulated delete vectors applied
-    "mor_delete" ->
-      """WITH e AS (
-        | SELECT year(ts) AS yy, month(ts) AS mm, day(ts) AS dd, user_id
-        | FROM events)
-        |SELECT yy AS y, mm AS m, dd AS d, CAST(COUNT(*) AS BIGINT) AS n_rows
-        |FROM e WHERE user_id % 97 <> 0 AND user_id % 89 <> 0
-        |GROUP BY 1, 2, 3 ORDER BY y, m, d""".stripMargin,
-
-    "length_buckets" ->
-      """WITH d AS (SELECT len(regexp_split_to_array(text, '\s+')) AS n FROM documents),
-        |b AS (SELECT n,
-        |  CASE WHEN n <= 16 THEN 16 WHEN n <= 32 THEN 32 WHEN n <= 64 THEN 64
-        |       WHEN n <= 128 THEN 128 WHEN n <= 256 THEN 256 WHEN n <= 512 THEN 512
-        |       ELSE 1024 END AS bucket FROM d)
-        |SELECT CAST(bucket AS BIGINT) AS bucket, COUNT(*) AS n_docs,
-        | CAST(SUM(LEAST(n, 1024)) AS BIGINT) AS kept_tokens,
-        | CAST(COUNT(*) * bucket AS BIGINT) AS padded_tokens,
-        | CAST(SUM(bucket - LEAST(n, 1024)) AS BIGINT) AS waste_tokens,
-        | CAST(SUM(GREATEST(n - 1024, 0)) AS BIGINT) AS truncated_tokens
-        |FROM b GROUP BY bucket ORDER BY bucket""".stripMargin,
-
-    // same decimal-parity route as embedding_centroids: VARCHAR-mediated
-    // double->DECIMAL casts make DuckDB round like Spark's Cast
-    "embedding_outliers" ->
-      """WITH e AS (SELECT vec_id, unnest(embedding) AS x,
-        |             generate_subscripts(embedding, 1) AS pos FROM embeddings),
-        |m AS (SELECT pos,
-        |        CAST(SUM(CAST(CAST(CAST(x AS DOUBLE) AS VARCHAR) AS DECIMAL(28,12))) AS DOUBLE) / COUNT(x) AS mu
-        |      FROM e GROUP BY pos),
-        |d AS (SELECT e.vec_id,
-        |        CAST(SUM(CAST(CAST((CAST(e.x AS DOUBLE) - m.mu) * (CAST(e.x AS DOUBLE) - m.mu) AS VARCHAR) AS DECIMAL(28,12))) AS DOUBLE) AS dist2
-        |      FROM e JOIN m USING (pos) GROUP BY e.vec_id)
-        |SELECT vec_id, dist2 FROM d
-        |ORDER BY dist2 DESC, vec_id LIMIT 20""".stripMargin,
-
-    "dedup_keep_best" ->
+        |sz AS (SELECT doc_id, COUNT(*) n_sh FROM sh GROUP BY 1),
+        |pairs AS (SELECT a.doc_id d1, b.doc_id d2, COUNT(*) common
+        |          FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id GROUP BY 1, 2),
+        |j AS (SELECT CAST(common AS DOUBLE) / (x.n_sh + y.n_sh - common) AS jaccard
+        |      FROM pairs JOIN sz x ON d1 = x.doc_id JOIN sz y ON d2 = y.doc_id
+        |      WHERE CAST(common AS DOUBLE) / (x.n_sh + y.n_sh - common) >= 0.5)
+        |SELECT CAST(FLOOR(jaccard * 10) AS BIGINT) AS bucket,
+        | COUNT(*) AS n_pairs, MIN(jaccard) AS j_min, MAX(jaccard) AS j_max
+        |FROM j GROUP BY 1 ORDER BY bucket""".stripMargin)),
+    Q("dedup_minhash_incremental", dedupMinhashIncremental),
+    // row 52's proven component CTE + two rollups; singletons = docs in
+    // no pair, emitted as the size-1 row
+    Q("dedup_cluster_sizes", dedupClusterSizes, Some(
       """WITH RECURSIVE toks AS (SELECT doc_id, regexp_split_to_array(text, '\s+') w FROM documents),
         |sh AS (SELECT DISTINCT doc_id, array_to_string(w[i.i:i.i+2], ' ') AS sh
         |       FROM toks, unnest(generate_series(1, len(w)-2)) i(i) WHERE len(w) >= 3),
@@ -8721,108 +8560,36 @@ object SparkEntry {
         | SELECT reach.id, edges.b FROM reach JOIN edges ON reach.r = edges.a
         |),
         |comp AS (SELECT id AS doc_id, MIN(r) AS canonical_id FROM reach GROUP BY id),
-        |q AS (SELECT doc_id,
-        |  least(CAST(len(regexp_split_to_array(text, '\s+')) AS DOUBLE) / 50.0, 1.0) * 0.5
-        |   + CAST(len(list_filter(regexp_split_to_array(lower(text), '\s+'),
-        |       x -> x IN ('the','a','of','and','to','in','is','was','for','on'))) AS DOUBLE)
-        |     / CAST(len(regexp_split_to_array(text, '\s+')) AS DOUBLE) * 0.5 AS quality_score
-        | FROM documents),
-        |j AS (SELECT comp.canonical_id, comp.doc_id, q.quality_score
-        |      FROM comp JOIN q USING (doc_id)),
-        |w AS (SELECT canonical_id, doc_id, quality_score,
-        |       row_number() OVER (PARTITION BY canonical_id
-        |         ORDER BY quality_score DESC, doc_id) AS rn,
-        |       max(quality_score) OVER (PARTITION BY canonical_id) AS best_score,
-        |       count(*) OVER (PARTITION BY canonical_id) AS cluster_size
-        |      FROM j)
-        |SELECT canonical_id, doc_id AS best_id, best_score,
-        | CAST(cluster_size AS BIGINT) AS cluster_size
-        |FROM w WHERE rn = 1 ORDER BY canonical_id""".stripMargin,
-
-    "dedup_incremental" ->
-      """WITH t AS (SELECT doc_id, regexp_split_to_array(text, '\s+') w FROM documents),
-        |c AS (SELECT doc_id, CAST((s - 1) // 8 AS BIGINT) AS chunk_id,
-        |       md5(array_to_string(w[s:s+15], ' ')) AS chunk_hash
-        |      FROM t, unnest(generate_series(1, greatest(len(w) - 16 + 1, 1), 8)) st(s)),
-        |new AS (SELECT * FROM c WHERE doc_id % 5 < 2),
-        |idx AS (SELECT DISTINCT chunk_hash FROM c WHERE doc_id % 5 >= 2)
-        |SELECT doc_id, chunk_id, chunk_hash,
-        | CASE WHEN chunk_hash IN (SELECT chunk_hash FROM idx) THEN 'dup_of_index'
-        |      WHEN row_number() OVER (PARTITION BY chunk_hash ORDER BY doc_id, chunk_id) > 1
-        |        THEN 'dup_in_batch'
-        |      ELSE 'kept' END AS status
-        |FROM new ORDER BY doc_id, chunk_id""".stripMargin,
-
-    // the RANGE frame is anchored on integer epoch seconds in both
-    // engines, so peer groups match exactly; the windowed sum uses the
-    // hourly_rollup DECIMAL(18,2) parity convention
-    "events_rolling" ->
-      """SELECT event_id, user_id, epoch_us(ts) // 1000000 AS unix_sec,
-        | COUNT(*) OVER w AS n_trailing,
-        | CAST(SUM(CAST(value AS DECIMAL(18,2))) OVER w AS DOUBLE) AS total_trailing
-        |FROM events
-        |WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts) // 1000000
-        | RANGE BETWEEN 86399 PRECEDING AND CURRENT ROW)
-        |ORDER BY event_id""".stripMargin,
-
-    // the z-test evaluated in exact BIGINT arithmetic (see
-    // Quality.spikes) — no float mean/stddev to diverge between engines
-    "events_mad" ->
-      """WITH h AS (
-        | SELECT date_trunc('hour', ts) AS hour_ts, event_type, COUNT(*) AS cnt
-        | FROM events GROUP BY 1, 2),
-        |r AS (
-        | SELECT h.*, row_number() OVER (PARTITION BY event_type ORDER BY hour_ts) AS rn
-        | FROM h),
-        |p AS (
-        | SELECT c.hour_ts, c.event_type, c.cnt, pr.cnt AS p_cnt
-        | FROM r c LEFT JOIN r pr ON pr.event_type = c.event_type
-        |  AND pr.rn BETWEEN c.rn - 24 AND c.rn - 1),
-        |m AS (
-        | SELECT hour_ts, event_type, cnt, COUNT(p_cnt) AS n_prior,
-        |  CAST(2 * median(p_cnt) AS BIGINT) AS med2
-        | FROM p GROUP BY 1, 2, 3),
-        |f AS (
-        | SELECT p.hour_ts, p.event_type,
-        |  CAST(2 * median(abs(2 * p.p_cnt - m.med2)) AS BIGINT) AS mad4
-        | FROM p JOIN m ON p.hour_ts = m.hour_ts AND p.event_type = m.event_type
-        | GROUP BY 1, 2)
-        |SELECT strftime(m.hour_ts, '%Y-%m-%d %H:%M:%S') AS hour_start,
-        | m.event_type, m.cnt, m.n_prior, m.med2, f.mad4,
-        | CAST(m.n_prior >= 8 AND 4 * m.cnt > 2 * m.med2 + 5 * f.mad4 AS BIGINT)
-        |  AS is_anomaly
-        |FROM m JOIN f ON m.hour_ts = f.hour_ts AND m.event_type = f.event_type
-        |ORDER BY hour_start, m.event_type""".stripMargin,
-    // the CUSUM recurrence closed to prefix-sum − running-min (see
-    // Quality.cusum) — all BIGINT in the ×2-median scale, no float to
-    // diverge between engines
-    "events_cusum" ->
-      """WITH h AS (
-        | SELECT date_trunc('hour', ts) AS hour_ts, event_type, COUNT(*) AS cnt
-        | FROM events GROUP BY 1, 2),
-        |m AS (
-        | SELECT hour_ts, event_type, cnt,
-        |  CAST(2 * median(cnt) OVER (PARTITION BY event_type) AS BIGINT) AS med2
-        | FROM h),
-        |p AS (
-        | SELECT hour_ts, event_type, cnt, med2,
-        |  CAST(SUM(2 * cnt - med2 - 2) OVER w AS BIGINT) AS p2
-        | FROM m
-        | WINDOW w AS (PARTITION BY event_type ORDER BY hour_ts
-        |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-        |s AS (
-        | SELECT hour_ts, event_type, cnt, med2,
-        |  p2 - LEAST(MIN(p2) OVER w, 0) AS cusum2
-        | FROM p
-        | WINDOW w AS (PARTITION BY event_type ORDER BY hour_ts
-        |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
-        |SELECT strftime(hour_ts, '%Y-%m-%d %H:%M:%S') AS hour_start,
-        | event_type, cnt, med2, cusum2, CAST(cusum2 > 12 AS BIGINT) AS is_shift
-        |FROM s ORDER BY event_type, hour_start""".stripMargin,
+        |sizes AS (SELECT canonical_id, CAST(COUNT(*) AS BIGINT) AS cluster_size
+        |          FROM comp GROUP BY 1),
+        |hist AS (SELECT cluster_size, CAST(COUNT(*) AS BIGINT) AS n_clusters
+        |         FROM sizes GROUP BY 1),
+        |singles AS (SELECT CAST(1 AS BIGINT) AS cluster_size,
+        |  CAST((SELECT COUNT(*) FROM documents) - (SELECT COUNT(*) FROM comp) AS BIGINT) AS n_clusters)
+        |SELECT * FROM (SELECT * FROM hist UNION ALL SELECT * FROM singles)
+        |ORDER BY cluster_size""".stripMargin)),
+    // the proven decimal-volume + INTERVAL fragments; LIMIT after the
+    // deterministic (revenue DESC, suppkey) order
+    Q("supplier_scorecard", supplierScorecard, Some(
+      """WITH j AS (
+        | SELECT l_suppkey,
+        |  CAST(l_extendedprice*(1-l_discount) AS DECIMAL(28,6)) AS vol,
+        |  CASE WHEN l_shipdate > o_orderdate + INTERVAL 60 DAY
+        |       THEN 1 ELSE 0 END AS late
+        | FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
+        |a AS (
+        | SELECT l_suppkey AS s_suppkey, COUNT(*) AS n_lines,
+        |  CAST(SUM(vol) AS DOUBLE) AS revenue,
+        |  CAST(SUM(late) AS BIGINT) AS n_late
+        | FROM j GROUP BY 1)
+        |SELECT a.s_suppkey, s.s_name, n_lines, revenue, n_late,
+        | CAST(n_late AS DOUBLE) / CAST(n_lines AS DOUBLE) AS late_frac
+        |FROM a JOIN supplier s ON a.s_suppkey = s.s_suppkey
+        |ORDER BY revenue DESC, a.s_suppkey LIMIT 20""".stripMargin)),
     // the three PROVEN monitor fragments (events_spike / events_mad /
     // events_ewma oracles) verbatim over one shared hourly CTE, joined
     // into the triage view — the oracle-chaining rule
-    "monitor_report" ->
+    Q("monitor_report", monitorReport, Some(
       """WITH RECURSIVE h AS (
         | SELECT event_type, date_trunc('hour', ts) AS hour_ts, COUNT(*) AS cnt
         | FROM events GROUP BY 1, 2),
@@ -8880,276 +8647,299 @@ object SparkEntry {
         |JOIN mf m ON z.event_type = m.event_type AND z.hour_ts = m.hour_ts
         |JOIN ef e ON z.event_type = e.event_type AND z.hour_ts = e.hour_ts
         |WHERE z.z_flag + m.mad_flag + e.ewma_flag >= 1
-        |ORDER BY z.event_type, hour_start""".stripMargin,
-
-    "events_spike" ->
-      """WITH h AS (
-        | SELECT date_trunc('hour', ts) AS hour_ts, event_type, COUNT(*) AS cnt
-        | FROM events GROUP BY 1, 2),
-        |x AS (
-        | SELECT hour_ts, event_type, cnt,
-        |  COUNT(*) OVER w AS n_prior,
-        |  SUM(cnt) OVER w AS s_prior,
-        |  SUM(cnt * cnt) OVER w AS q_prior
-        | FROM h
-        | WINDOW w AS (PARTITION BY event_type ORDER BY hour_ts
-        |  ROWS BETWEEN 24 PRECEDING AND 1 PRECEDING))
-        |SELECT strftime(hour_ts, '%Y-%m-%d %H:%M:%S') AS hour_start,
-        | event_type, cnt, n_prior, s_prior, q_prior,
-        | CAST(n_prior >= 8 AND n_prior * cnt > s_prior
-        |  AND (n_prior - 1) * (n_prior * cnt - s_prior) * (n_prior * cnt - s_prior)
-        |      > 9 * n_prior * (n_prior * q_prior - s_prior * s_prior)
-        |  AS BIGINT) AS is_spike
-        |FROM x ORDER BY hour_start, event_type""".stripMargin,
-    // replays Quality.ewmaFromBuckets' integer recurrence exactly:
-    // s' = (7*s + n*256) // 8 with every operand non-negative (// floors,
-    // JVM division truncates — they agree only on non-negatives)
-    "events_ewma" ->
-      """WITH RECURSIVE h AS (
-        | SELECT event_type, date_trunc('hour', ts) AS b, COUNT(*) AS n
-        | FROM events GROUP BY 1, 2),
-        |idx AS (
-        | SELECT event_type, b, n,
-        |  ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY b) AS i
-        | FROM h),
-        |walk AS (
-        | SELECT event_type, b, n, i, CAST(n * 256 AS BIGINT) AS s, FALSE AS spike
-        | FROM idx WHERE i = 1
-        | UNION ALL
-        | SELECT x.event_type, x.b, x.n, x.i,
-        |  CAST((7 * w.s + x.n * 256) // 8 AS BIGINT),
-        |  x.n * 256 > 2 * w.s
-        | FROM walk w JOIN idx x ON x.event_type = w.event_type AND x.i = w.i + 1)
-        |SELECT event_type, strftime(b, '%Y-%m-%d %H:%M:%S') AS hour_start,
-        | n, s AS ewma_scaled, CAST(spike AS BIGINT) AS is_spike
-        |FROM walk ORDER BY event_type, hour_start""".stripMargin,
-
-    // containment shares the jaccard CTE skeleton; only the denominator
-    // (LEAST of the two distinct-shingle counts) and threshold change
-    "dedup_containment" ->
-      """WITH toks AS (SELECT doc_id, regexp_split_to_array(text, '\s+') w FROM documents),
-        |sh AS (SELECT DISTINCT doc_id, array_to_string(w[i.i:i.i+2], ' ') AS sh
-        |       FROM toks, unnest(generate_series(1, len(w)-2)) i(i) WHERE len(w) >= 3),
-        |sz AS (SELECT doc_id, COUNT(*) n_sh FROM sh GROUP BY 1),
-        |pairs AS (SELECT a.doc_id d1, b.doc_id d2, COUNT(*) common
-        |          FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id GROUP BY 1, 2)
-        |SELECT d1, d2, common,
-        | CAST(common AS DOUBLE) / LEAST(x.n_sh, y.n_sh) AS containment
-        |FROM pairs JOIN sz x ON d1 = x.doc_id JOIN sz y ON d2 = y.doc_id
-        |WHERE CAST(common AS DOUBLE) / LEAST(x.n_sh, y.n_sh) >= 0.8
-        |ORDER BY d1, d2""".stripMargin,
-
-    // the same md5 hex-prefix uniform draw as split_assign, keyed on
-    // (doc_id ':' seed) so a different seed is an independent permutation
-    "shuffle_shards" ->
-      """WITH h AS (
-        | SELECT doc_id, source,
-        |  CAST(concat('0x', substr(md5(concat(CAST(doc_id AS VARCHAR), ':42')), 1, 8)) AS BIGINT) AS k
-        | FROM documents)
-        |SELECT doc_id, source, k % 8 AS shard,
-        | CAST(row_number() OVER (PARTITION BY k % 8 ORDER BY k, doc_id) AS BIGINT) AS pos
-        |FROM h ORDER BY shard, pos""".stripMargin,
-
-    // TV distance with the divisions cleared: the numerator
-    // Σ|o·N − c·ng| + ng·(N − Σc_present) is pure BIGINT on both
-    // engines; only the final ratio is a double (identical operands →
-    // identical IEEE result). Token stream and md5 bucketing mirror the
-    // dsir oracle idiom.
-    "corpus_drift" ->
-      """WITH tok AS (
-        | SELECT source, unnest(regexp_split_to_array(text, '\s+')) AS t FROM documents),
-        |bk AS (
-        | SELECT source,
-        |  CAST(concat('0x', substr(md5(t), 1, 8)) AS BIGINT) % 4096 AS b
-        | FROM tok),
-        |cnt AS (SELECT source, b, COUNT(*) AS o FROM bk GROUP BY 1, 2),
-        |x AS (
-        | SELECT source, b, o,
-        |  SUM(o) OVER (PARTITION BY b) AS c,
-        |  SUM(o) OVER (PARTITION BY source) AS ng,
-        |  SUM(o) OVER () AS N
-        | FROM cnt)
-        |SELECT source, CAST(MAX(ng) AS BIGINT) AS n_tokens,
-        | CAST(SUM(ABS(o*N - c*ng)) + MAX(ng) * (MAX(N) - SUM(c)) AS DOUBLE)
-        |   / (2.0 * MAX(ng) * MAX(N)) AS tv_distance
-        |FROM x GROUP BY source ORDER BY source""".stripMargin,
-
-    // same TV skeleton as corpus_drift over fixed-width numeric bins:
-    // floor(value·16) on identical doubles is identical in both engines
-    "value_drift" ->
-      """WITH bk AS (
-        | SELECT event_type, CAST(FLOOR(value * 16) AS BIGINT) AS b FROM events),
-        |cnt AS (SELECT event_type, b, COUNT(*) AS o FROM bk GROUP BY 1, 2),
-        |x AS (
-        | SELECT event_type, b, o,
-        |  SUM(o) OVER (PARTITION BY b) AS c,
-        |  SUM(o) OVER (PARTITION BY event_type) AS ng,
-        |  SUM(o) OVER () AS N
-        | FROM cnt)
-        |SELECT event_type, CAST(MAX(ng) AS BIGINT) AS n_obs,
-        | CAST(SUM(ABS(o*N - c*ng)) + MAX(ng) * (MAX(N) - SUM(c)) AS DOUBLE)
-        |   / (2.0 * MAX(ng) * MAX(N)) AS tv_distance
-        |FROM x GROUP BY event_type ORDER BY event_type""".stripMargin,
-    // PSI with cleared denominators (see Quality.psiFromCounts): BIGINT
-    // u/v cross-products, 6-dp-rounded ln of their double ratio, DECIMAL
-    // accumulation, one final IEEE division per source
-    "value_psi" ->
-      """WITH bk AS (
-        | SELECT event_type, CAST(FLOOR(value * 16) AS BIGINT) AS b FROM events),
-        |cnt AS (SELECT event_type, b, CAST(COUNT(*) AS BIGINT) AS o
-        |        FROM bk GROUP BY 1, 2),
-        |pool AS (SELECT b, CAST(SUM(o) AS BIGINT) AS c FROM cnt GROUP BY 1),
-        |srcs AS (SELECT event_type, CAST(SUM(o) AS BIGINT) AS ng FROM cnt GROUP BY 1),
-        |tot AS (SELECT CAST(SUM(c) AS BIGINT) AS N, COUNT(*) AS B FROM pool),
-        |grid AS (
-        | SELECT s.event_type, s.ng, p.c, COALESCE(cnt.o, 0) AS o, t.N, t.B
-        | FROM srcs s CROSS JOIN pool p
-        |  LEFT JOIN cnt ON cnt.event_type = s.event_type AND cnt.b = p.b
-        |  CROSS JOIN tot t),
-        |term AS (
-        | SELECT event_type, ng, N, B,
-        |  CAST((o+1)*(N+B) - (c+1)*(ng+B) AS DECIMAL(18,0))
-        |   * CAST(round(ln(CAST((o+1)*(N+B) AS DOUBLE)
-        |                   / CAST((c+1)*(ng+B) AS DOUBLE)), 6)
-        |       AS DECIMAL(18,6)) AS t
-        | FROM grid)
-        |SELECT event_type, MAX(ng) AS n_obs,
-        | CAST(SUM(t) AS DOUBLE)
-        |   / CAST((MAX(ng)+MAX(B)) * (MAX(N)+MAX(B)) AS DOUBLE) AS psi,
-        | CAST(CAST(SUM(t) AS DOUBLE)
-        |   / CAST((MAX(ng)+MAX(B)) * (MAX(N)+MAX(B)) AS DOUBLE) > 0.2 AS BIGINT)
-        |  AS is_shifted
-        |FROM term GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    // slope is shift-invariant, so x = hours since the key's own first
-    // bucket (keeps every product far inside BIGINT); numerator and
-    // denominator emitted exactly, slope the one shared IEEE division
-    "events_trend" ->
-      """WITH h AS (
-        | SELECT event_type, date_trunc('hour', ts) AS b, COUNT(*) AS n
-        | FROM events GROUP BY 1, 2),
-        |x AS (
-        | SELECT event_type, n,
-        |  CAST(epoch(b) AS BIGINT) // 3600
-        |   - MIN(CAST(epoch(b) AS BIGINT) // 3600)
-        |      OVER (PARTITION BY event_type) AS x
-        | FROM h),
-        |s AS (
-        | SELECT event_type, COUNT(*) AS nb,
-        |  CAST(SUM(x) AS BIGINT) AS sx, CAST(SUM(n) AS BIGINT) AS sy,
-        |  CAST(SUM(x*x) AS BIGINT) AS sxx, CAST(SUM(x*n) AS BIGINT) AS sxy
-        | FROM x GROUP BY 1)
-        |SELECT event_type, nb AS n_hours,
-        | CAST(nb*sxy - sx*sy AS BIGINT) AS slope_num,
-        | CAST(nb*sxx - sx*sx AS BIGINT) AS slope_den,
-        | CASE WHEN nb*sxx - sx*sx = 0 THEN NULL
-        |      ELSE CAST(nb*sxy - sx*sy AS DOUBLE)
-        |           / CAST(nb*sxx - sx*sx AS DOUBLE) END AS slope,
-        | CAST(nb*sxy - sx*sy < 0 AS BIGINT) AS declining
-        |FROM s ORDER BY event_type""".stripMargin,
-
-    // Theil–Sen: the same per-key hour shift as events_trend, one IEEE
-    // division per pair, interpolated median (quantile_cont == Spark
-    // percentile — the price_percentiles parity pattern)
-    "events_trend_robust" ->
-      """WITH h AS (
-        | SELECT event_type, date_trunc('hour', ts) AS b, COUNT(*) AS n
-        | FROM events GROUP BY 1, 2),
-        |x AS (
-        | SELECT event_type, CAST(n AS BIGINT) AS y,
-        |  CAST(epoch(b) AS BIGINT) // 3600
-        |   - MIN(CAST(epoch(b) AS BIGINT) // 3600)
-        |      OVER (PARTITION BY event_type) AS x
-        | FROM h),
-        |p AS (
-        | SELECT a.event_type,
-        |  CAST(b.y - a.y AS DOUBLE) / CAST(b.x - a.x AS DOUBLE) AS sl
-        | FROM x a JOIN x b ON a.event_type = b.event_type AND a.x < b.x)
-        |SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_pairs,
-        | quantile_cont(sl, 0.5) AS slope,
-        | CAST(quantile_cont(sl, 0.5) < 0 AS BIGINT) AS declining
-        |FROM p GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    // exact integer KS: D_num = max |nb_tot*ca - na_tot*cb| over the
-    // union of distinct values; the one shared division lands last
-    "value_ks" ->
-      """WITH c1 AS (SELECT value AS v,
-        |  SUM(CASE WHEN event_type='click' THEN 1 ELSE 0 END) AS na,
-        |  SUM(CASE WHEN event_type='view' THEN 1 ELSE 0 END) AS nb
-        | FROM events WHERE event_type IN ('click','view') AND value IS NOT NULL
-        | GROUP BY 1),
-        |cum1 AS (SELECT CAST(SUM(na) OVER (ORDER BY v) AS BIGINT) AS ca,
-        |                CAST(SUM(nb) OVER (ORDER BY v) AS BIGINT) AS cb FROM c1),
-        |t1 AS (SELECT CAST(SUM(na) AS BIGINT) AS n_a,
-        |              CAST(SUM(nb) AS BIGINT) AS n_b FROM c1),
-        |d1 AS (SELECT n_a, n_b,
-        |        CAST(MAX(ABS(n_b*ca - n_a*cb)) AS BIGINT) AS d_num
-        |       FROM cum1, t1 GROUP BY 1, 2),
-        |c2 AS (SELECT value AS v,
-        |  SUM(CASE WHEN event_type='click' THEN 1 ELSE 0 END) AS na,
-        |  SUM(CASE WHEN event_type='error' THEN 1 ELSE 0 END) AS nb
-        | FROM events WHERE event_type IN ('click','error') AND value IS NOT NULL
-        | GROUP BY 1),
-        |cum2 AS (SELECT CAST(SUM(na) OVER (ORDER BY v) AS BIGINT) AS ca,
-        |                CAST(SUM(nb) OVER (ORDER BY v) AS BIGINT) AS cb FROM c2),
-        |t2 AS (SELECT CAST(SUM(na) AS BIGINT) AS n_a,
-        |              CAST(SUM(nb) AS BIGINT) AS n_b FROM c2),
-        |d2 AS (SELECT n_a, n_b,
-        |        CAST(MAX(ABS(n_b*ca - n_a*cb)) AS BIGINT) AS d_num
-        |       FROM cum2, t2 GROUP BY 1, 2)
+        |ORDER BY z.event_type, hour_start""".stripMargin)),
+    Q("events_acf", eventsAcf, Some(Quality.acfSql("events", "ts", "event_type", acfLags))),
+    Q("source_concentration", sourceConcentration, Some(
+      Quality.concentrationSql("documents", "source"))),
+    Q("blocklist_hits", blocklistHits, Some(blocklistOracle)),
+    Q("url_dedup", urlDedup, Some(urlDedupOracle)),
+    Q("parquet_stats_agg", parquetStatsAgg, Some(
+      """SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
+        | CAST(MIN(l_orderkey) AS BIGINT) AS min_orderkey,
+        | CAST(MAX(l_orderkey) AS BIGINT) AS max_orderkey,
+        | CAST(MIN(l_suppkey) AS BIGINT) AS min_suppkey,
+        | CAST(MAX(l_suppkey) AS BIGINT) AS max_suppkey,
+        | CAST(MIN(l_linenumber) AS BIGINT) AS min_linenumber,
+        | CAST(MAX(l_linenumber) AS BIGINT) AS max_linenumber
+        |FROM lineitem""".stripMargin)),
+    Q("value_mwu", valueMwu, Some(Quality.mwuSql("events", "event_type", "value",
+      Seq(("click", "view"), ("click", "error"))))),
+    Q("decontaminate_url", decontaminateUrl, Some(decontaminateUrlOracle)),
+    Q("events_changepoint", eventsChangepoint, Some(
+      Quality.changepointSql("events", "ts", "event_type"))),
+    // the blobs ARE the text bytes (deterministic staging), so the
+    // oracle recomputes file counts and byte totals from the parquet
+    // truth; n_match == n_files is the integrity assertion
+    Q("binary_ingest", binaryIngest, Some(
+      """SELECT source, COUNT(*) AS n_files,
+        | CAST(SUM(strlen(text)) AS BIGINT) AS total_bytes,
+        | COUNT(*) AS n_match
+        |FROM documents GROUP BY source ORDER BY source""".stripMargin)),
+    Q("sim_ivf_filtered", simIvfFiltered),
+    Q("sim_ivf_incremental", simIvfIncremental,
+      // the standing coarse quantizer the incremental ingest assigns
+      // into (trained by a slow-cadence batch stage in production)
+      prepare = Some((s: SparkSession, d: String) => {
+        val c = Similarity.kmeansCentroids(
+          embeddings(s, d).filter(col("vec_id") % 5 =!= 0),
+          "vec_id", "embedding", k = 8, iters = 3).persist()
+        c.count()
+        c.createOrReplaceTempView(ivfIncCacheView)
+      })),
+    Q("events_xcorr", eventsXcorr, Some(Quality.xcorrSql("events", "ts", "event_type",
+      "purchase", "click", maxLag = 6))),
+    Q("schema_drift", schemaDrift, Some(
+      """WITH s1 AS (SELECT COUNT(*) n FROM orders WHERE o_orderkey % 2 = 0),
+        |s2 AS (SELECT COUNT(*) n FROM orders WHERE o_orderkey % 2 = 1)
         |SELECT * FROM (
-        | SELECT 'click' AS type_a, 'view' AS type_b, n_a, n_b, d_num,
-        |  CASE WHEN n_a = 0 OR n_b = 0 THEN NULL
-        |       ELSE CAST(d_num AS DOUBLE) / CAST(n_a*n_b AS DOUBLE) END AS ks
-        | FROM d1
-        | UNION ALL
-        | SELECT 'click' AS type_a, 'error' AS type_b, n_a, n_b, d_num,
-        |  CASE WHEN n_a = 0 OR n_b = 0 THEN NULL
-        |       ELSE CAST(d_num AS DOUBLE) / CAST(n_a*n_b AS DOUBLE) END AS ks
-        | FROM d2)
-        |ORDER BY type_b""".stripMargin,
-
-    // binned KS: the identical integer-KS machinery over the fixed-bin
-    // domain; the quantizer (width 8 = 2^3, IEEE-exact division, clamp
-    // to under/overflow sinks) is the same formula text ksBinCol compiles
-    "value_ks_binned" ->
-      """WITH q AS (SELECT event_type,
-        |  CAST(LEAST(GREATEST(FLOOR((value - 0.0) / 8.0), -1.0), 16.0) AS BIGINT) AS v
-        | FROM events WHERE value IS NOT NULL AND NOT isnan(value)),
-        |c1 AS (SELECT v,
-        |  SUM(CASE WHEN event_type='click' THEN 1 ELSE 0 END) AS na,
-        |  SUM(CASE WHEN event_type='view' THEN 1 ELSE 0 END) AS nb
-        | FROM q WHERE event_type IN ('click','view')
-        | GROUP BY 1),
-        |cum1 AS (SELECT CAST(SUM(na) OVER (ORDER BY v) AS BIGINT) AS ca,
-        |                CAST(SUM(nb) OVER (ORDER BY v) AS BIGINT) AS cb FROM c1),
-        |t1 AS (SELECT CAST(SUM(na) AS BIGINT) AS n_a,
-        |              CAST(SUM(nb) AS BIGINT) AS n_b FROM c1),
-        |d1 AS (SELECT n_a, n_b,
-        |        CAST(MAX(ABS(n_b*ca - n_a*cb)) AS BIGINT) AS d_num
-        |       FROM cum1, t1 GROUP BY 1, 2),
-        |c2 AS (SELECT v,
-        |  SUM(CASE WHEN event_type='click' THEN 1 ELSE 0 END) AS na,
-        |  SUM(CASE WHEN event_type='error' THEN 1 ELSE 0 END) AS nb
-        | FROM q WHERE event_type IN ('click','error')
-        | GROUP BY 1),
-        |cum2 AS (SELECT CAST(SUM(na) OVER (ORDER BY v) AS BIGINT) AS ca,
-        |                CAST(SUM(nb) OVER (ORDER BY v) AS BIGINT) AS cb FROM c2),
-        |t2 AS (SELECT CAST(SUM(na) AS BIGINT) AS n_a,
-        |              CAST(SUM(nb) AS BIGINT) AS n_b FROM c2),
-        |d2 AS (SELECT n_a, n_b,
-        |        CAST(MAX(ABS(n_b*ca - n_a*cb)) AS BIGINT) AS d_num
-        |       FROM cum2, t2 GROUP BY 1, 2)
-        |SELECT * FROM (
-        | SELECT 'click' AS type_a, 'view' AS type_b, n_a, n_b, d_num,
-        |  CASE WHEN n_a = 0 OR n_b = 0 THEN NULL
-        |       ELSE CAST(d_num AS DOUBLE) / CAST(n_a*n_b AS DOUBLE) END AS ks
-        | FROM d1
-        | UNION ALL
-        | SELECT 'click' AS type_a, 'error' AS type_b, n_a, n_b, d_num,
-        |  CASE WHEN n_a = 0 OR n_b = 0 THEN NULL
-        |       ELSE CAST(d_num AS DOUBLE) / CAST(n_a*n_b AS DOUBLE) END AS ks
-        | FROM d2)
-        |ORDER BY type_a, type_b""".stripMargin
-  )
+        |SELECT 'o_orderkey' AS col_name, 'bigint' AS dtype_v1,
+        | 'bigint' AS dtype_v2, s1.n AS n_v1, CAST(0 AS BIGINT) AS nulls_v1,
+        | s2.n AS n_v2, CAST(0 AS BIGINT) AS nulls_v2, 'stable' AS status
+        |FROM s1, s2
+        |UNION ALL
+        |SELECT 'o_totalprice', 'double', 'double', s1.n, 0, s2.n, 0, 'stable'
+        |FROM s1, s2
+        |UNION ALL
+        |SELECT 'o_orderpriority', NULL, 'string', NULL, NULL, s2.n,
+        | (SELECT CAST(SUM(CASE WHEN o_orderpriority IS NULL THEN 1 ELSE 0 END) AS BIGINT)
+        |  FROM orders WHERE o_orderkey % 2 = 1), 'added'
+        |FROM s1, s2
+        |) ORDER BY col_name""".stripMargin)),
+    Q("bootstrap_stats", bootstrapStats, Some(bootstrapOracle)),
+    Q("pseudonymize", pseudonymizeQ, Some(
+      """SELECT substr(sha256('pepper-v1:' || CAST(user_id AS VARCHAR)), 1, 16) AS user_pseudo,
+        | COUNT(*) AS n_events,
+        | CAST(COUNT(DISTINCT event_type) AS BIGINT) AS n_types
+        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin)),
+    Q("token_spectrum", tokenSpectrum, Some(
+      """WITH toks AS (SELECT unnest(regexp_split_to_array(text, '\s+')) AS t FROM documents),
+        |tok AS (SELECT t, COUNT(*) c FROM toks WHERE t <> '' GROUP BY t),
+        |b AS (SELECT CASE WHEN c = 1 THEN 1 WHEN c <= 10 THEN 2
+        |       WHEN c <= 100 THEN 11 WHEN c <= 1000 THEN 101
+        |       WHEN c <= 10000 THEN 1001 ELSE 10001 END AS band_lo, c FROM tok)
+        |SELECT CAST(band_lo AS BIGINT) AS band_lo, COUNT(*) AS n_types,
+        | CAST(SUM(c) AS BIGINT) AS n_occurrences
+        |FROM b GROUP BY 1 ORDER BY 1""".stripMargin)),
+    Q("dataset_card", datasetCard, Some(
+      """WITH base AS (SELECT COUNT(*) AS n_docs,
+        | CAST(SUM(len(regexp_split_to_array(text, '\s+'))) AS BIGINT) AS n_tokens,
+        | CAST(SUM(n_chars) AS BIGINT) AS n_chars,
+        | quantile_cont(n_chars, 0.5) AS p50_chars,
+        | CAST(COUNT(DISTINCT source) AS BIGINT) AS n_sources,
+        | CAST(COUNT(DISTINCT lang) AS BIGINT) AS n_langs FROM documents),
+        |c AS (SELECT source, COUNT(*) c FROM documents GROUP BY 1),
+        |r AS (SELECT c, row_number() OVER (ORDER BY c, source) i FROM c),
+        |s AS (SELECT CAST(COUNT(*) AS BIGINT) n, SUM(CAST(c AS HUGEINT)) t,
+        |      SUM(CAST(i AS HUGEINT)*c) sic, SUM(CAST(c AS HUGEINT)*c) scc FROM r),
+        |conc AS (SELECT
+        | CASE WHEN n*t = 0 THEN NULL
+        |  ELSE CAST(CAST(2*sic-(n+1)*t AS VARCHAR) AS DOUBLE)
+        |       / CAST(CAST(n*t AS VARCHAR) AS DOUBLE) END AS gini_source,
+        | CASE WHEN t*t = 0 THEN NULL
+        |  ELSE CAST(CAST(scc AS VARCHAR) AS DOUBLE)
+        |       / CAST(CAST(t*t AS VARCHAR) AS DOUBLE) END AS hhi_source FROM s),
+        |top AS (SELECT source AS top_source, c AS tc FROM c
+        |        ORDER BY c DESC, source LIMIT 1)
+        |SELECT n_docs, n_tokens, n_chars, p50_chars, n_sources, n_langs,
+        | gini_source, hhi_source, top_source,
+        | CAST(tc AS DOUBLE) / CAST(n_docs AS DOUBLE) AS top_source_share
+        |FROM base, conc, top""".stripMargin)),
+    Q("l_diversity", lDiversity, Some(
+      """WITH c1 AS (SELECT source, n_chars // 100 AS b, COUNT(*) g,
+        |            CAST(COUNT(DISTINCT lang) AS BIGINT) l
+        |           FROM documents GROUP BY 1, 2),
+        |c2 AS (SELECT source, n_chars // 1000 AS b, COUNT(*) g,
+        |       CAST(COUNT(DISTINCT lang) AS BIGINT) l
+        |      FROM documents GROUP BY 1, 2),
+        |a1 AS (SELECT 'chars_100' AS level, COUNT(*) n_classes,
+        |       CAST(MIN(l) AS BIGINT) min_l,
+        |       CAST(SUM(CASE WHEN l = 1 THEN 1 ELSE 0 END) AS BIGINT) n_l1_classes,
+        |       CAST(SUM(CASE WHEN l = 1 THEN g ELSE 0 END) AS BIGINT) n_l1_rows,
+        |       CAST(SUM(l) AS BIGINT) sum_l FROM c1),
+        |a2 AS (SELECT 'chars_1000' AS level, COUNT(*) n_classes,
+        |       CAST(MIN(l) AS BIGINT) min_l,
+        |       CAST(SUM(CASE WHEN l = 1 THEN 1 ELSE 0 END) AS BIGINT) n_l1_classes,
+        |       CAST(SUM(CASE WHEN l = 1 THEN g ELSE 0 END) AS BIGINT) n_l1_rows,
+        |       CAST(SUM(l) AS BIGINT) sum_l FROM c2)
+        |SELECT level, n_classes, min_l, n_l1_classes, n_l1_rows, sum_l,
+        | CAST(sum_l AS DOUBLE) / CAST(n_classes AS DOUBLE) AS mean_l
+        |FROM (SELECT * FROM a1 UNION ALL SELECT * FROM a2)
+        |ORDER BY level""".stripMargin)),
+    Q("t_closeness", tCloseness, Some({
+      // one generated fragment per generalization level, tag-suffixed
+      // CTE names hoisted into ONE top-level WITH (DuckDB rejects WITH
+      // inside a FROM-subquery — the value_mwu layout rule)
+      def lvl(b: Int, tag: String, name: String): String =
+        s"""cells$tag AS (SELECT source, n_chars // $b AS sb, lang,
+           |              COUNT(*) c FROM documents GROUP BY 1, 2, 3),
+           |cls$tag AS (SELECT source, sb, CAST(SUM(c) AS BIGINT) g
+           |           FROM cells$tag GROUP BY 1, 2),
+           |lg$tag AS (SELECT lang, CAST(SUM(c) AS BIGINT) nv
+           |          FROM cells$tag GROUP BY 1),
+           |tot$tag AS (SELECT CAST(SUM(nv) AS BIGINT) nn FROM lg$tag),
+           |grid$tag AS (SELECT k.source, k.sb, k.g, l.lang, l.nv, t.nn,
+           |             COALESCE(ce.c, 0) AS c
+           |            FROM cls$tag k CROSS JOIN lg$tag l
+           |            CROSS JOIN tot$tag t
+           |            LEFT JOIN cells$tag ce ON ce.source = k.source
+           |             AND ce.sb = k.sb AND ce.lang = l.lang),
+           |pc$tag AS (SELECT source, sb, g, nn,
+           |           SUM(ABS(c*nn - nv*g)) num
+           |          FROM grid$tag GROUP BY 1, 2, 3, 4),
+           |a$tag AS (SELECT '$name' AS level, COUNT(*) n_classes,
+           |          CAST(SUM(CASE WHEN 5*num > 2*g*nn THEN 1 ELSE 0 END)
+           |            AS BIGINT) n_breach,
+           |          MAX(CAST(num AS DOUBLE) /
+           |            (CAST(g AS DOUBLE)*CAST(nn AS DOUBLE)*2.0)) max_t
+           |         FROM pc$tag)""".stripMargin
+      s"""WITH ${lvl(100, "h", "chars_100")},
+         |${lvl(1000, "k", "chars_1000")}
+         |SELECT * FROM (SELECT * FROM ah UNION ALL SELECT * FROM ak)
+         |ORDER BY level""".stripMargin
+      })),
+    Q("dpp_scan", dppScan, Some(
+      """WITH cal AS (SELECT CAST(year(ts) AS BIGINT) y,
+        |             CAST(month(ts) AS BIGINT) m,
+        |             CAST(day(ts) AS BIGINT) d, COUNT(*) n
+        |            FROM events GROUP BY 1, 2, 3),
+        |tot AS (SELECT CAST(SUM(n) AS BIGINT) nn, COUNT(*) nd FROM cal),
+        |busy AS (SELECT y, m, d FROM cal CROSS JOIN tot
+        |         WHERE n * nd > nn)
+        |SELECT e.y, e.m, e.d, COUNT(*) AS n,
+        | CAST(SUM(CAST(e.value AS DECIMAL(18,2))) AS DOUBLE) AS total
+        |FROM (SELECT CAST(year(ts) AS BIGINT) y, CAST(month(ts) AS BIGINT) m,
+        |      CAST(day(ts) AS BIGINT) d, value FROM events) e
+        |JOIN busy ON e.y = busy.y AND e.m = busy.m AND e.d = busy.d
+        |GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin)),
+    Q("bloom_join", bloomJoin, Some(
+      """SELECT l_returnflag, COUNT(*) AS n,
+        | CAST(SUM(CAST(l_extendedprice*(1-l_discount) AS DECIMAL(28,6)))
+        |   AS DOUBLE) AS revenue
+        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+        |WHERE o_orderpriority = '1-URGENT'
+        |GROUP BY 1 ORDER BY 1""".stripMargin)),
+    Q("source_keyness", sourceKeyness, Some(
+      // every float expression mirrors the Spark column order exactly;
+      // only ln carries engine ulp risk, absorbed by round(z, 6) (the
+      // tfidf convention)
+      """WITH st AS (SELECT source,
+        |            unnest(regexp_split_to_array(lower(text), '\s+')) AS term
+        |           FROM documents),
+        |tf AS (SELECT source, term, COUNT(*) c FROM st GROUP BY 1, 2),
+        |tot AS (SELECT term, CAST(SUM(c) AS BIGINT) cw FROM tf
+        |        GROUP BY 1 HAVING CAST(SUM(c) AS BIGINT) >= 5),
+        |stot AS (SELECT source, CAST(SUM(c) AS BIGINT) nst FROM tf GROUP BY 1),
+        |gtot AS (SELECT CAST(SUM(nst) AS BIGINT) nnt FROM stot),
+        |s AS (SELECT tf.source, tf.term, tf.c, tot.cw, stot.nst, gtot.nnt,
+        |       100.0 * CAST(tot.cw AS DOUBLE) / CAST(gtot.nnt AS DOUBLE) AS aw,
+        |       CAST(tot.cw - tf.c AS DOUBLE) AS rest_c,
+        |       CAST(gtot.nnt - stot.nst AS DOUBLE) AS rest_n
+        |      FROM tf JOIN tot USING (term) JOIN stot USING (source)
+        |      CROSS JOIN gtot),
+        |z AS (SELECT source, term, c, cw, round(
+        |       (ln((CAST(c AS DOUBLE) + aw)
+        |           / (CAST(nst AS DOUBLE) + 100.0 - CAST(c AS DOUBLE) - aw))
+        |      - ln((rest_c + aw) / (rest_n + 100.0 - rest_c - aw)))
+        |      / sqrt(1.0 / (CAST(c AS DOUBLE) + aw)
+        |           + 1.0 / (rest_c + aw)), 6) AS z
+        |      FROM s)
+        |SELECT source, term, c, cw, z FROM z
+        |QUALIFY row_number() OVER (PARTITION BY source
+        |                           ORDER BY z DESC, term) <= 15
+        |ORDER BY source, z DESC, term""".stripMargin)),
+    Q("skew_join", skewJoin, Some(
+      """WITH e AS (SELECT CASE WHEN user_id % 10 < 6 THEN 0
+        |                  ELSE user_id END AS k, value FROM events),
+        |dim AS (SELECT c_custkey AS k, c_nationkey FROM customer)
+        |SELECT e.k % 7 AS kb, COUNT(*) AS n,
+        | CAST(SUM(CAST(e.value AS DECIMAL(18,2))) AS DOUBLE) AS total,
+        | CAST(SUM(CAST(dim.c_nationkey AS BIGINT)) AS BIGINT) AS nation_weight
+        |FROM e JOIN dim ON e.k = dim.k
+        |GROUP BY 1 ORDER BY 1""".stripMargin)),
+    Q("dp_release", dpRelease, Some(
+      """WITH c AS (SELECT source, COUNT(*) n_true FROM documents GROUP BY 1),
+        |h AS (SELECT source, n_true,
+        |      (CAST(CAST(concat('0x', substr(md5('dp-v1:' || source), 1, 8))
+        |         AS BIGINT) AS DOUBLE) + 0.5) / 4294967296.0 AS u
+        |      FROM c)
+        |SELECT source, n_true,
+        | round(CAST(n_true AS DOUBLE)
+        |   + (-1.0) * sign(u - 0.5) * ln(1.0 - 2.0 * abs(u - 0.5)), 6)
+        |   AS released_eps1,
+        | round(CAST(n_true AS DOUBLE)
+        |   + (-10.0) * sign(u - 0.5) * ln(1.0 - 2.0 * abs(u - 0.5)), 6)
+        |   AS released_eps01
+        |FROM h ORDER BY source""".stripMargin)),
+    Q("crypto_shred", cryptoShred),
+    Q("crypto_shred_gcm", cryptoShredGcm),
+    Q("cbo_reorder", cboReorder, Some(
+      """SELECT o_orderpriority, COUNT(*) AS n,
+        | CAST(SUM(CAST(l_extendedprice*(1-l_discount) AS DECIMAL(28,6)))
+        |   AS DOUBLE) AS revenue
+        |FROM lineitem
+        |JOIN orders ON l_orderkey = o_orderkey
+        |JOIN customer ON o_custkey = c_custkey
+        |WHERE c_mktsegment = 'BUILDING'
+        |GROUP BY 1 ORDER BY 1""".stripMargin)),
+    Q("observed_load", observedLoad, Some(
+      """SELECT COUNT(*) AS n_rows,
+        | CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value,
+        | CAST(SUM(CASE WHEN user_id IS NULL THEN 1 ELSE 0 END) AS BIGINT)
+        |   AS null_users,
+        | strftime(MIN(ts), '%Y-%m-%d %H:%M:%S') AS min_ts,
+        | strftime(MAX(ts), '%Y-%m-%d %H:%M:%S') AS max_ts
+        |FROM events""".stripMargin)),
+    Q("events_interpolate", eventsInterpolate, Some(
+      """WITH hourly AS (
+        | SELECT date_trunc('hour', ts) h, event_type, COUNT(*) n
+        | FROM events GROUP BY 1, 2),
+        |gapped AS (SELECT * FROM hourly
+        |           WHERE (epoch(h)::BIGINT // 3600) % 5 != 2),
+        |bounds AS (SELECT MIN(h) lo, MAX(h) hi FROM gapped),
+        |spine AS (SELECT unnest(generate_series(lo, hi, INTERVAL 1 HOUR)) AS h
+        |          FROM bounds),
+        |grid AS (SELECT s.h, t.event_type FROM spine s
+        |         CROSS JOIN (SELECT DISTINCT event_type FROM gapped) t),
+        |j AS (SELECT g.h, g.event_type, hh.n,
+        |       last_value(hh.n IGNORE NULLS) OVER
+        |        (PARTITION BY g.event_type ORDER BY g.h
+        |         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS pv,
+        |       last_value(CASE WHEN hh.n IS NOT NULL THEN g.h END IGNORE NULLS)
+        |        OVER (PARTITION BY g.event_type ORDER BY g.h
+        |         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS pt,
+        |       first_value(hh.n IGNORE NULLS) OVER
+        |        (PARTITION BY g.event_type ORDER BY g.h
+        |         ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS nv,
+        |       first_value(CASE WHEN hh.n IS NOT NULL THEN g.h END IGNORE NULLS)
+        |        OVER (PARTITION BY g.event_type ORDER BY g.h
+        |         ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS nt
+        |      FROM grid g LEFT JOIN gapped hh
+        |       ON g.h = hh.h AND g.event_type = hh.event_type)
+        |SELECT strftime(h, '%Y-%m-%d %H:%M:%S') AS hour_start, event_type,
+        | n AS observed,
+        | CASE WHEN n IS NOT NULL THEN CAST(n AS DOUBLE)
+        |      WHEN pv IS NOT NULL AND nv IS NOT NULL THEN
+        |       CAST(pv AS DOUBLE)
+        |        + CAST((nv - pv) * date_diff('hour', pt, h) AS DOUBLE)
+        |          / CAST(date_diff('hour', pt, nt) AS DOUBLE)
+        |      ELSE NULL END AS v_interp
+        |FROM j ORDER BY hour_start, event_type""".stripMargin)),
+    Q("ann_dim_tradeoff", annDimTradeoff),
+    Q("text_nfc", textNfc, Some(
+      // generated from the SAME planted-form constants the query embeds
+      s"""WITH e AS (SELECT doc_id, source,
+         |           text || CASE WHEN doc_id % 3 = 0 THEN '$nfcDecomposed'
+         |                        WHEN doc_id % 3 = 1 THEN '$nfcPrecomposed'
+         |                        ELSE '' END AS text
+         |          FROM documents),
+         |n AS (SELECT source, text, nfc_normalize(text) AS nfc FROM e)
+         |SELECT source, COUNT(*) AS n_docs,
+         | CAST(SUM(CASE WHEN nfc <> text THEN 1 ELSE 0 END) AS BIGINT)
+         |   AS n_changed,
+         | CAST(SUM(CAST(concat('0x', substr(md5(nfc), 1, 8)) AS BIGINT))
+         |   AS BIGINT) AS nfc_hash_sum,
+         | CAST(COUNT(DISTINCT text) AS BIGINT) AS n_raw_distinct,
+         | CAST(COUNT(DISTINCT nfc) AS BIGINT) AS n_nfc_distinct
+         |FROM n GROUP BY 1 ORDER BY 1""".stripMargin))
+  ))
 }

@@ -1040,6 +1040,30 @@ class OperatorsSpec extends AnyFunSuite {
   test("oracle keys are a subset of query keys") {
     assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
     assert(SparkEntry.prepares.keySet.subsetOf(SparkEntry.queries.keySet))
+    // the frozen contract: the registry's names are the 263 of the last
+    // correctness report, and the oracle-backed ones are exactly its
+    // rows that had an oracle
+    import scala.jdk.CollectionConverters._
+    val report = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(new java.io.File("CORRECTNESS_r15.json"))
+    val frozen = report.fieldNames().asScala.toSet
+    assert(SparkEntry.registry.map(_.name).toSet == frozen)
+    assert(SparkEntry.queries.keySet == frozen)
+    assert(SparkEntry.oracleSql.keySet ==
+      frozen.filter(n => report.get(n).path("err").asText() != "no_oracle"))
+    assert(SparkEntry.oracleSql.size == 226 && SparkEntry.prepares.size == 3)
+    // a repeated name fails registry construction instead of shadowing
+    val q1 = SparkEntry.registry.head
+    val dup = intercept[IllegalArgumentException](
+      SparkEntry.distinctNames(Seq(q1, q1.copy(oracle = None))))
+    assert(dup.getMessage.contains(q1.name))
+    // the oracle SQL itself, byte for byte
+    val lines = SparkEntry.oracleSql.toSeq.sorted
+      .map { case (n, sql) => s"$n\t$sql\n" }.mkString
+    val digest = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(lines.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      .map(b => f"${b & 0xff}%02x").mkString
+    assert(digest == "354f843ceb2b616d7843c8694078e185fae265411089b908dedf40850b07d96d")
   }
 
   test("dedup_keep_best_cached equals dedup_keep_best with AND without the prepared cluster view") {
