@@ -2,10 +2,14 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Plan auditor: prints the formatted physical plan for each named query
-  * (or all) so scan pruning (`ReadSchema`), filter pushdown
+/** Plan auditor: runs each named query (or all) once and prints its FINAL
+  * formatted physical plan, so scan pruning (`ReadSchema`), filter pushdown
   * (`PushedFilters`), join strategies and `WholeStageCodegen` spans can be
-  * reviewed. Usage: runMain graft.Explain [sfDir] [query ...] */
+  * reviewed together with AQE's runtime decisions — coalesced shuffle reads
+  * (`AQEShuffleRead coalesced`), reused exchanges and joins re-planned at
+  * runtime, none of which the initial adaptive plan shows. The run executes
+  * the plan without collecting its rows. Usage:
+  * runMain graft.Explain [sfDir] [query ...] */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
@@ -13,7 +17,10 @@ object Explain {
     val spark = GraftSession.local(4, "graft-explain")
     names.foreach { n =>
       println(s"\n========== $n ==========")
-      SparkEntry.queries(n)(spark, sfDir).explain("formatted")
+      val df = SparkEntry.queries(n)(spark, sfDir)
+      // executing the plan object the frame holds finalizes it in place
+      df.queryExecution.executedPlan.execute().foreach(_ => ())
+      df.explain("formatted")
     }
     spark.stop()
   }

@@ -257,20 +257,31 @@ object Dedup {
     // query (the multi-consumer re-scan rule; measured 1.95 → 1.52 s for
     // dedup_ngram_jaccard at sf0.1). The materialized rows are (id, hash)
     // pairs — 16 B/shingle, far smaller than the text they derive from.
-    // A pre-explode repartition of the docs was ALSO tried and measured
-    // SLOWER (1.52 → 1.71 s — the round-1 extra-shuffle lesson holds even
-    // with the explode now single-pass); the serial explode stays.
-    // Re-measured round 15 with the explicit non-AQE-coalescible
-    // repartition(parallelism) that won 3.6x on ngram_diversity: NET
-    // ZERO across the 10-query family (sum-of-mins 20.55 → 20.46 s;
-    // dedup_cluster_sizes −0.84 cancelled by +0.1–0.2 on the light
-    // consumers) — the map side here is hash-and-shuffle, too cheap to
-    // parallelize, unlike ngram_diversity's string-keyed aggregation.
+    // A pre-explode repartition of the DOCUMENTS was tried twice and lost:
+    // an AQE-coalescible one measured SLOWER (1.52 → 1.71 s), and the
+    // explicit round-robin repartition(parallelism) that won 3.6x on
+    // ngram_diversity measured NET ZERO across the 10-query family
+    // (sum-of-mins 20.55 → 20.46 s) — the map side here is
+    // hash-and-shuffle, too cheap to parallelize. The serial explode stays.
+    //
+    // What DOES pay is width at the JOIN: the heavy part is the self-join's
+    // output (1.37M pair rows from 287k shingle rows at sf0.1), but AQE
+    // sizes post-shuffle partitions by the exchange's INPUT bytes and
+    // coalesced the join to 2 tasks on 4 cores. Repartitioning the
+    // checkpoint on the join key to a fixed count (REPARTITION_BY_NUM, which
+    // AQE never coalesces) keeps the join at the planner's width; it already
+    // satisfies the sort-merge join's distribution, so both sides read ONE
+    // shuffle of the shingle frame (runtime stage reuse; PlanShapeSpec pins
+    // the shape). Measured on the benchmark's seed-1 documents, 4 cores:
+    // the join stage ran 4 tasks instead of 2, in 0.59/0.32 s of wall
+    // instead of 0.80/0.90 s (two warm runs each).
     val shh = org.apache.spark.sql.graft.Bridge.resetStats(
       sh.select(col(idCol), xxhash64(col("sh")).as("shh")).localCheckpoint(true))
     val sizes = shh.groupBy(idCol).agg(count(lit(1)).as("n_sh"))
-    val common = shh.as("a")
-      .join(shh.as("b"),
+    val byShh = shh.repartition(
+      docs.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt, col("shh"))
+    val common = byShh.as("a")
+      .join(byShh.as("b"),
         col("a.shh") === col("b.shh") && col(s"a.$idCol") < col(s"b.$idCol"))
       .groupBy(col(s"a.$idCol").as("d1"), col(s"b.$idCol").as("d2"))
       .agg(count(lit(1)).as("common"))
@@ -366,10 +377,16 @@ object Dedup {
     // CollapseProject (615 s at sf0.1); numPerm min-aggregates over
     // exploded shingles fixed that but still shuffled every shingle row
     // (6.5 s); the kernel removes the shuffle entirely.
-    // the repartition spreads the kernel's numPerm-hashes-per-shingle work
-    // across cores even when the input is a single-row-group file (one scan
-    // task); it shuffles raw text once — far less than the old
-    // every-shingle-row shuffle
+    // The repartition shuffles raw text once, far less than the old
+    // every-shingle-row shuffle. It is AQE-coalescible, so it does NOT
+    // spread the kernel at small scale: at sf0.1 (5000 docs) each kernel
+    // stage runs as ONE task; it widens only once the text outgrows the
+    // advisory partition size. A fixed-width repartition(shuffle.partitions,
+    // id) was measured at 4 cores: 4 tasks per kernel stage (mean task
+    // time per stage 233 → 399 ms), and in Bench (min of 5, three
+    // interleaved sessions a side) dedup_minhash 1.21–1.27 → 1.02–1.17 s
+    // but dedup_eval 3.05–3.33 → 3.31–3.87 s, with the four minhash
+    // queries' sum no better (8.33–8.81 vs 8.16–9.13 s). Kept as is.
     val banded0 = docs
       .select(col(idCol), col(textCol))
       .repartition(col(idCol))
@@ -480,8 +497,13 @@ object Dedup {
     // carried BigInt has millions of digits and the driver stalls inside
     // statistics arithmetic (Bridge.resetStats has the full story)
     def ckpt(df: DataFrame): DataFrame = Bridge.resetStats(df.localCheckpoint(true))
-    var edges = ckpt(pairs.select(col(d1).as("a"), col(d2).as("b"))
-      .unionByName(pairs.select(col(d2).as("a"), col(d1).as("b")))
+    // both orientations from ONE pass over `pairs`: a union of two
+    // projections would run the whole upstream pair plan (self-join,
+    // rollup, size joins, similarity filter) once per side
+    var edges = ckpt(pairs
+      .select(inline(array(
+        struct(col(d1).as("a"), col(d2).as("b")),
+        struct(col(d2).as("a"), col(d1).as("b")))))
       .distinct())
     var labels = ckpt(edges.select(col("a").as("id")).distinct()
       .withColumn("label", col("id")))
@@ -511,6 +533,12 @@ object Dedup {
       // PROJECTION over the same blocks (a second `next` checkpoint was
       // measured pure overhead — it re-wrote the identical row set)
       val updated = ckpt(folded.select(col("id"), col("label"), col("l").as("next")))
+      // The probe is a job of its own each round. Fusing it into the
+      // checkpoint job (`Dataset.observe` counting changed labels), plus
+      // an un-checkpointed initial labels frame, was measured on
+      // dedup_clusters at sf0.1, 4 cores: 34 → 29 jobs, but Bench min of 5
+      // over three interleaved sessions a side read 1.89–2.00 s before and
+      // 1.80–2.12 s after — no gain beyond noise. Kept as is.
       converged = updated.filter(col("next") =!= col("label")).isEmpty
       labels = updated.select(col("id"), col("next").as("label"))
       // CONTRACT the graph: rewrite edges over current labels, dropping

@@ -1214,6 +1214,38 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(p.contains("EqualTo(p_type,LARGE)"), p)
   }
 
+  test("dedup_ngram_jaccard: ONE fixed-width shingle shuffle feeds both self-join sides") {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, AdaptiveSparkPlanHelper, ShuffleQueryStageExec}
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ReusedExchangeExec, ShuffleExchangeExec}
+    // the scale contract: AQE sizes post-shuffle partitions by the
+    // exchange's INPUT (shingle rows), not the join's pair-row output, so a
+    // coalescible shuffle narrowed the explosive join below the core count
+    object aqe extends AdaptiveSparkPlanHelper
+    val df = SparkEntry.queries("dedup_ngram_jaccard")(spark, sf)
+    df.collect() // AQE decides at runtime — the final plan needs a run
+    val plan = df.queryExecution.executedPlan
+    val width = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    def onShh(e: ShuffleExchangeExec): Boolean = e.outputPartitioning match {
+      case h: HashPartitioning => h.expressions.flatMap(_.references).map(_.name) == Seq("shh")
+      case _ => false
+    }
+    val shh = aqe.collect(plan) { case e: ShuffleExchangeExec if onShh(e) => e }
+    assert(shh.size == 1, plan.toString)
+    assert(shh.head.shuffleOrigin == REPARTITION_BY_NUM, plan.toString)
+    assert(shh.head.outputPartitioning.numPartitions == width, plan.toString)
+    // both join sides read that one shuffle: the second as a reused stage
+    val reads = aqe.collect(plan) {
+      case s: ShuffleQueryStageExec if s.shuffle.eq(shh.head) => s
+    }
+    assert(reads.size == 2 && reads.count(_.plan.isInstanceOf[ReusedExchangeExec]) == 1,
+      plan.toString)
+    // and no runtime read narrows it
+    assert(aqe.collect(plan) {
+      case r: AQEShuffleReadExec if reads.exists(_.eq(r.child)) => r
+    }.isEmpty, plan.toString)
+  }
+
   test("q11: the corpus rollup runs ONCE — AQE reuses the stage under the scalar total") {
     val df = SparkEntry.queries("q11_important_parts")(spark, sf)
     df.collect()

@@ -405,6 +405,19 @@ class PropertiesSpec extends AnyFunSuite {
     assert((sc.getPersistentRDDs.keySet -- baseline).isEmpty)
   }
 
+  test("clusterPairs evaluates its input pair plan once") {
+    // both edge orientations must come from ONE pass: a union of two
+    // projections re-runs the whole upstream pair plan per side, which
+    // for the n-gram family is the self-join, rollup and size joins
+    val rows = spark.sparkContext.longAccumulator("pairRows")
+    val tick = udf { (d: Long) => rows.add(1); d }.asNondeterministic()
+    val base = (0L until 30L).map(i => (i, (i * 7 + 3) % 31)).filter(p => p._1 != p._2)
+    val pairs = base.toDF("d1", "d2").select(tick(col("d1")).as("d1"), col("d2"))
+    val clusters = Dedup.clusterPairs(pairs)
+    assert(rows.value == base.size.toLong)
+    Dedup.releaseClusters(clusters)
+  }
+
   test("bucketized interval join equals the naive range join exactly") {
     import java.sql.Timestamp
     val ptsGen = Gen.listOfN(40, Gen.choose(0L, 100_000L))
@@ -772,6 +785,11 @@ class PropertiesSpec extends AnyFunSuite {
 
     assert(Dedup.exact(noDocs, "doc_id", "text").count() == 0)
     assert(Dedup.ngramJaccardPairs(noDocs, "doc_id", "text", tau = 0.5).count() == 0)
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val noClusters = Dedup.clusterPairs(Seq.empty[(Long, Long)].toDF("d1", "d2"))
+    assert(noClusters.count() == 0)
+    Dedup.releaseClusters(noClusters)
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- persisted).isEmpty)
     assert(TextAnalysis.collocations(noDocs, "text").count() == 0)
     assert(TextAnalysis.heavyHitters(noDocs, "text", k = 5).count() == 0)
     assert(Curation.lengthBuckets(noDocs, "text").count() == 0)
