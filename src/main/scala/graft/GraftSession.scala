@@ -92,4 +92,16 @@ object GraftSession {
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  /** Run `f` with the session confs `pairs` set, then restore each key's
+    * previous value (or unset it), also when `f` throws. Plans read the
+    * session conf when they execute, not when they are built, so `f` must
+    * materialize whatever the confs are meant to shape. */
+  def withConfs[T](spark: SparkSession, pairs: Seq[(String, String)])(f: => T): T = {
+    val conf = spark.conf
+    val prev = pairs.map { case (k, _) => k -> conf.getOption(k) }
+    pairs.foreach { case (k, v) => conf.set(k, v) }
+    try f
+    finally prev.foreach { case (k, v) => v.fold(conf.unset(k))(conf.set(k, _)) }
+  }
 }

@@ -2554,17 +2554,12 @@ object SparkEntry {
     * convention); reordering is semantically invisible — the oracle is
     * the plain join over the parquet truth the tables were created
     * from. */
-  private def cboReorder(s: SparkSession, d: String): DataFrame = {
-    val conf = s.conf
-    val keys = Seq(
-      "spark.sql.cbo.enabled" -> "true",
-      "spark.sql.cbo.joinReorder.enabled" -> "true")
-    val prev = keys.map { case (k, _) => k -> conf.getOption(k) }
-    keys.foreach { case (k, v) => conf.set(k, v) }
-    try cboFrame(s, d).localCheckpoint(true)
-    finally prev.foreach { case (k, v) =>
-      v.fold(conf.unset(k))(conf.set(k, _)) }
-  }
+  private def cboReorder(s: SparkSession, d: String): DataFrame =
+    GraftSession.withConfs(s, Seq(
+        "spark.sql.cbo.enabled" -> "true",
+        "spark.sql.cbo.joinReorder.enabled" -> "true")) {
+      cboFrame(s, d).localCheckpoint(true)
+    }
 
   /** The skew-join frame, pre-materialization — shared with the
     * PlanShapeSpec guard. A deterministic hot key (60% of event rows
@@ -2609,24 +2604,19 @@ object SparkEntry {
     * parquet_stats_agg convention): the defaults are tuned for 256 MB
     * partitions a laptop-scale corpus never reaches. The split is
     * semantically invisible — the oracle recomputes the plain join. */
-  private def skewJoin(s: SparkSession, d: String): DataFrame = {
-    val conf = s.conf
-    val keys = Seq(
-      "spark.sql.adaptive.skewJoin.enabled" -> "true",
-      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2.0",
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "1KB",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1KB",
-      // the split only applies to shuffle joins; the dim would broadcast
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-      // coalescing would re-merge the split partitions' neighbors and
-      // muddy the guard; keep the demonstration to the skew path
-      "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
-    val prev = keys.map { case (k, _) => k -> conf.getOption(k) }
-    keys.foreach { case (k, v) => conf.set(k, v) }
-    try skewJoinFrame(s, d).localCheckpoint(true)
-    finally prev.foreach { case (k, v) =>
-      v.fold(conf.unset(k))(conf.set(k, _)) }
-  }
+  private def skewJoin(s: SparkSession, d: String): DataFrame =
+    GraftSession.withConfs(s, Seq(
+        "spark.sql.adaptive.skewJoin.enabled" -> "true",
+        "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2.0",
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "1KB",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1KB",
+        // the split only applies to shuffle joins; the dim would broadcast
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        // coalescing would re-merge the split partitions' neighbors and
+        // muddy the guard; keep the demonstration to the skew path
+        "spark.sql.adaptive.coalescePartitions.enabled" -> "false")) {
+      skewJoinFrame(s, d).localCheckpoint(true)
+    }
 
   /** Runtime bloom-filter semi-join reduction — the shuffle-join twin of
     * `dpp_scan`'s partition pruning, and the mechanism that keeps a
@@ -2642,18 +2632,13 @@ object SparkEntry {
     * the result while the confs hold (plans read conf at execution — the
     * parquet_stats_agg convention); the filter is semantically invisible,
     * so the oracle is the plain join. */
-  private def bloomJoin(s: SparkSession, d: String): DataFrame = {
-    val conf = s.conf
-    val keys = Seq(
-      "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
-      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val prev = keys.map { case (k, _) => k -> conf.getOption(k) }
-    keys.foreach { case (k, v) => conf.set(k, v) }
-    try bloomJoinFrame(s, d).localCheckpoint(true)
-    finally prev.foreach { case (k, v) =>
-      v.fold(conf.unset(k))(conf.set(k, _)) }
-  }
+  private def bloomJoin(s: SparkSession, d: String): DataFrame =
+    GraftSession.withConfs(s, Seq(
+        "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
+        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1")) {
+      bloomJoinFrame(s, d).localCheckpoint(true)
+    }
 
   /** SQ8 scalar quantization of the embedding corpus, exploded audit form
     * ([[Similarity.sq8Encode]]): per-dim corpus [mn,mx] broadcast back
@@ -3326,8 +3311,7 @@ object SparkEntry {
     // the exact baseline's scoring pass rides the same pool: annEvalFrom
     // sees it already checkpoint-backed and skips the second copy
     val built = parallelBuilt(("exact" -> (() =>
-      org.apache.spark.sql.graft.Bridge.resetStats(
-        b.exact().localCheckpoint(true)))) +: b.families)
+      org.apache.spark.sql.graft.Bridge.checkpoint(b.exact()))) +: b.families)
     annEvalFrom(annK, built.head._2, built.tail)
   }
 
@@ -3387,10 +3371,9 @@ object SparkEntry {
     // through untouched, so this is the ONLY copy). Deliberately NOT
     // repartitioned: the family builds run concurrently (parallelBuilt),
     // so the cores are already busy and a wide base was measured SLOWER
-    // (ann_eval 5.01 -> 6.95 s — the materializedOwned note).
+    // (ann_eval 5.01 -> 6.95 s — the Similarity.materialized note).
     private lazy val base: DataFrame = org.apache.spark.sql.graft.Bridge
-      .resetStats(emb.select(col("vec_id"), col("embedding"))
-        .localCheckpoint(true))
+      .checkpoint(emb.select(col("vec_id"), col("embedding")))
     private lazy val baseQ: DataFrame = base.filter(col("vec_id") < 8)
     private lazy val pqBooks: (Array[Array[Array[Double]]], Int) =
       Similarity.pqTrainBooks(base, "vec_id", "embedding",
@@ -3439,8 +3422,7 @@ object SparkEntry {
     // pool) passes through without a second copy.
     val exact =
       if (org.apache.spark.sql.graft.Bridge.isCheckpointBacked(exact0)) exact0
-      else org.apache.spark.sql.graft.Bridge.resetStats(
-        exact0.localCheckpoint(true))
+      else org.apache.spark.sql.graft.Bridge.checkpoint(exact0)
     def eval(name: String, fam: DataFrame): DataFrame =
       exact
         .join(fam.select(col("q_id"), col("vec_id"), lit(1L).as("__hit")),
@@ -3818,11 +3800,10 @@ object SparkEntry {
     // (integer division composes: n DIV 1000 == (n DIV 100) DIV 10);
     // eager-checkpointed so the two level derivations share the single
     // scan (the psiFromCounts posture) — the frame is class-bounded
-    val cells = org.apache.spark.sql.graft.Bridge.resetStats(doc
+    val cells = org.apache.spark.sql.graft.Bridge.checkpoint(doc
       .groupBy(col("lang"), col("source"),
         expr("n_chars DIV 100").as("size_band"))
-      .agg(count(lit(1)).as("g"))
-      .localCheckpoint(true))
+      .agg(count(lit(1)).as("g")))
     val coarse = cells
       .groupBy(col("lang"), col("source"),
         expr("size_band DIV 10").as("size_band"))
@@ -3852,11 +3833,10 @@ object SparkEntry {
     // size g = sum of cell counts, l-diversity l = cell count per class
     // (count_distinct over raw rows == COUNT of non-empty lang cells);
     // the coarse level re-aggregates the fine cells (DIV composes)
-    val cells = org.apache.spark.sql.graft.Bridge.resetStats(doc
+    val cells = org.apache.spark.sql.graft.Bridge.checkpoint(doc
       .groupBy(col("source"), expr("n_chars DIV 100").as("size_band"),
         col("lang"))
-      .agg(count(lit(1)).as("c"))
-      .localCheckpoint(true))
+      .agg(count(lit(1)).as("c")))
     val coarse = cells
       .groupBy(col("source"), expr("size_band DIV 10").as("size_band"),
         col("lang"))
@@ -3903,11 +3883,10 @@ object SparkEntry {
     // cell frame is eager-checkpointed because SIX derivations consume
     // it (classes/langs/grid × 2 levels) — without it each re-scans the
     // corpus (the psiFromCounts posture); classes×langs-bounded.
-    val cells100 = org.apache.spark.sql.graft.Bridge.resetStats(doc
+    val cells100 = org.apache.spark.sql.graft.Bridge.checkpoint(doc
       .groupBy(col("source"), expr("n_chars DIV 100").as("size_band"),
         col("lang"))
-      .agg(count(lit(1)).as("c"))
-      .localCheckpoint(true))
+      .agg(count(lit(1)).as("c")))
     val cells1000 = cells100
       .groupBy(col("source"), expr("size_band DIV 10").as("size_band"),
         col("lang"))
@@ -5520,22 +5499,12 @@ object SparkEntry {
     * (plans read session conf at execution, not construction — a lazy
     * return would escape the scope), so nothing leaks.
     * PlanShapeSpec pins `PushedAggregation` on the scan. */
-  private def parquetStatsAgg(s: SparkSession, d: String): DataFrame = {
-    val conf = s.conf
-    val prevAgg = conf.getOption("spark.sql.parquet.aggregatePushdown")
-    val prevV1 = conf.getOption("spark.sql.sources.useV1SourceList")
-    conf.set("spark.sql.parquet.aggregatePushdown", "true")
-    conf.set("spark.sql.sources.useV1SourceList",
-      "avro,csv,json,kafka,orc,text")
-    try {
+  private def parquetStatsAgg(s: SparkSession, d: String): DataFrame =
+    GraftSession.withConfs(s, Seq(
+        "spark.sql.parquet.aggregatePushdown" -> "true",
+        "spark.sql.sources.useV1SourceList" -> "avro,csv,json,kafka,orc,text")) {
       parquetStatsFrame(s, d).localCheckpoint(true)
-    } finally {
-      prevAgg.fold(conf.unset("spark.sql.parquet.aggregatePushdown"))(
-        conf.set("spark.sql.parquet.aggregatePushdown", _))
-      prevV1.fold(conf.unset("spark.sql.sources.useV1SourceList"))(
-        conf.set("spark.sql.sources.useV1SourceList", _))
     }
-  }
 
   /** Rank-based distribution-shift monitor: exact Mann–Whitney U / AUC
     * between event-type value distributions ([[Quality.mwuStatistic]]) —

@@ -74,13 +74,6 @@ object Stress {
       Dedup.ngramJaccardPairs(docs, "doc_id", "text", tau = 0.5,
         maxShingleFreq = Some(1000L)).count()
     }
-    // opt-in only (name it explicitly): on this dense synthetic corpus
-    // (40-word vocab, near-dup replica cliques) prefix filtering does NOT
-    // beat the naive join — "rare" prefix shingles still have df ~ 140 —
-    // while on natural zipfian corpora it is the standard exact-join win
-    if (only.contains("ngram_prefix_t08")) time("ngram_prefix_t08") {
-      Dedup.ngramJaccardPairsPrefix(docs, "doc_id", "text", tau = 0.8).count()
-    }
     time("minhash_lsh") { Dedup.minhashLshPairs(docs, "doc_id", "text").count() }
     time("simhash") { Dedup.simhashPairs(docs, "doc_id", "text").count() }
     time("fingerprint") { TextAnalysis.fingerprint(docs, "doc_id", "text").count() }
@@ -1356,14 +1349,6 @@ object Stress {
     }
 
     // ---- round-11 session-4 additions ----
-    def withConfs(pairs: Seq[(String, String)])(f: => Long): Long = {
-      val conf = spark.conf
-      val prev = pairs.map { case (k, _) => k -> conf.getOption(k) }
-      pairs.foreach { case (k, v) => conf.set(k, v) }
-      try f
-      finally prev.foreach { case (k, v) =>
-        v.fold(conf.unset(k))(conf.set(k, _)) }
-    }
     def checksum(out: DataFrame): Long =
       out.agg(bit_xor(xxhash64(out.columns.map(col): _*)), count(lit(1)))
         .head().getLong(1)
@@ -1436,11 +1421,11 @@ object Stress {
       checksum(out)
     }
     time("skew_join") {
-      withConfs(skewConfs :+
+      GraftSession.withConfs(spark, skewConfs :+
         ("spark.sql.adaptive.skewJoin.enabled" -> "true"))(skewJoinBody())
     }
     time("skew_join_nosplit") {
-      withConfs(skewConfs :+
+      GraftSession.withConfs(spark, skewConfs :+
         ("spark.sql.adaptive.skewJoin.enabled" -> "false"))(skewJoinBody())
     }
 
@@ -1467,27 +1452,21 @@ object Stress {
     // long before any saturation question arises, and a disqualified
     // "bloom" run silently times the PLAIN join.
     def bloomProbe(tag: String, confs: Seq[(String, String)]): Unit =
-      if (only.isEmpty || only.contains(tag)) {
-        val conf = spark.conf
-        val prev = confs.map { case (k, _) => k -> conf.getOption(k) }
-        confs.foreach { case (k, v) => conf.set(k, v) }
-        try {
-          val o = ordR.filter(col("o_orderpriority") === "1-URGENT")
-            .select("o_orderkey")
-          val plan = li.join(o, col("l_orderkey") === col("o_orderkey"))
-            .queryExecution.optimizedPlan
-          val inj = plan.toString.contains("might_contain")
-          val est = o.queryExecution.optimizedPlan.stats.sizeInBytes
-          println(s"[stress] $tag injected=$inj creation_est_bytes=$est")
-        } finally prev.foreach { case (k, v) =>
-          v.fold(conf.unset(k))(conf.set(k, _)) }
+      if (only.isEmpty || only.contains(tag)) GraftSession.withConfs(spark, confs) {
+        val o = ordR.filter(col("o_orderpriority") === "1-URGENT")
+          .select("o_orderkey")
+        val plan = li.join(o, col("l_orderkey") === col("o_orderkey"))
+          .queryExecution.optimizedPlan
+        val inj = plan.toString.contains("might_contain")
+        val est = o.queryExecution.optimizedPlan.stats.sizeInBytes
+        println(s"[stress] $tag injected=$inj creation_est_bytes=$est")
       }
     val bloomOn = bloomConfs :+
       ("spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true")
     bloomProbe("bloom_join", bloomOn)
-    time("bloom_join") { withConfs(bloomOn)(bloomBody()) }
+    time("bloom_join") { GraftSession.withConfs(spark, bloomOn)(bloomBody()) }
     time("bloom_join_off") {
-      withConfs(bloomConfs :+
+      GraftSession.withConfs(spark, bloomConfs :+
         ("spark.sql.optimizer.runtime.bloomFilter.enabled" -> "false"))(bloomBody())
     }
     // the SIZED bloom path: expectedNumItems/numBits sized to the ~3M-key
@@ -1505,7 +1484,7 @@ object Stress {
       "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "8GB")
     bloomProbe("bloom_join_sized", sizedConfs)
     time("bloom_join_sized") {
-      withConfs(sizedConfs)(bloomBody())
+      GraftSession.withConfs(spark, sizedConfs)(bloomBody())
     }
     // DEFAULT sizing (1M items / 8.4M bits) with only the creation
     // threshold forced — the configuration the round-11 "saturated
@@ -1517,7 +1496,7 @@ object Stress {
       ("spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "8GB")
     bloomProbe("bloom_join_forced", forcedConfs)
     time("bloom_join_forced") {
-      withConfs(forcedConfs)(bloomBody())
+      GraftSession.withConfs(spark, forcedConfs)(bloomBody())
     }
 
     // DPP over a y/m/d lake staged from the replicated events: the write

@@ -1,6 +1,6 @@
 package graft.functions
 
-import java.math.{BigDecimal => JBigDecimal, RoundingMode}
+import java.math.{BigDecimal => JBigDecimal}
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Add, BinaryExpression, Cast, EvalMode,
@@ -18,18 +18,21 @@ import org.apache.spark.sql.types._
   *     CAST(0 AS DECIMAL(28,12)),
   *     (acc, p) -> CAST(acc + p AS DECIMAL(28,12))) AS DOUBLE)
   * }}}
-  * and equal to it bit for bit, nulls and ANSI overflow errors included
-  * (pinned in DotExactSpec against that fold). Higher-order functions run
+  * with one difference: each product rounds as DuckDB rounds it, not by
+  * Spark's cast. Nulls and ANSI overflow errors are the fold's (pinned in
+  * DotExactSpec against that fold). Higher-order functions run
   * interpreted and built 64 `Decimal` objects per 64-dim pair; this runs
   * one primitive loop inside whole-stage codegen.
   *
   * Per element the product `p` is rounded to 12 decimals as an unscaled
-  * `long` (see [[DotExact.scaled]]) and summed exactly in a `long`; the
-  * sum converts to DOUBLE once, as the fold's final cast does. Whatever
-  * the fast path cannot decide — a null array element, unequal lengths
-  * (`zip_with` pads with nulls), NaN or infinity, `|p| >= 2^43 / 10^12`,
-  * a `long` overflow — sends the whole pair to [[replay]], which
-  * evaluates Spark's own `Cast`/`Add` in the fold's order.
+  * `long` the way DuckDB's `CAST(p AS DECIMAL(28,12))` rounds it (see
+  * [[DotExact.scaled]]; the oracle computes every exact vector result),
+  * and summed exactly in a `long`; the sum converts to DOUBLE once, as
+  * the fold's final cast does. Whatever the fast path cannot decide — a
+  * null array element, unequal lengths (`zip_with` pads with nulls), NaN
+  * or infinity, `|p * 10^12| >= 2^62`, a `long` overflow — sends the
+  * whole pair to [[replay]], which evaluates Spark's own `Cast`/`Add` in
+  * the fold's order with the same per-product rounding.
   *
   * `evalMode` is captured when the expression is built, as `Cast` does,
   * so the replay raises (ANSI) or nulls (legacy) exactly where the fold
@@ -113,15 +116,17 @@ case class DotExact(left: Expression, right: Expression,
     * literals in the fold's order — every product cast first (`zip_with`
     * pads the shorter side with nulls), then the additions — so nulls and
     * `NUMERIC_VALUE_OUT_OF_RANGE` errors match the fold by construction.
-    * Returns null or a boxed Double. */
+    * A product the cast accepts takes DuckDB's rounding
+    * ([[DotExact.rounded]]) in place of the cast's. Returns null or a
+    * boxed Double. */
   def replay(x: ArrayData, y: ArrayData): Any = {
     def present(arr: ArrayData, i: Int) = i < arr.numElements() && !arr.isNullAt(i)
     val products = (0 until math.max(x.numElements(), y.numElements())).map { i =>
-      val p =
-        if (present(x, i) && present(y, i))
-          DotExact.element(x, i, leftFloat) * DotExact.element(y, i, rightFloat)
-        else null
-      Cast(Literal.create(p, DoubleType), DotExact.Acc, None, evalMode).eval()
+      if (present(x, i) && present(y, i)) {
+        val p = DotExact.element(x, i, leftFloat) * DotExact.element(y, i, rightFloat)
+        val cast = Cast(Literal(p), DotExact.Acc, None, evalMode).eval()
+        if (cast == null) null else Decimal(DotExact.rounded(p), 28, 12)
+      } else null
     }
     val zero = Cast(Literal(JBigDecimal.ZERO), DotExact.Acc, None, evalMode).eval()
     val sum = products.foldLeft(zero) { (acc, p) =>
@@ -141,14 +146,9 @@ object DotExact {
   /** The fold's per-product and accumulator type. */
   private val Acc: DecimalType = DecimalType(28, 12)
 
-  /** `|p * 10^12|` bound of the fast path: below 2^43 the ulp of
-    * `p * 10^12` is at most 2^-10, and `|p| < 8.8`. */
-  private final val FastLimit = 8.796093022208e12 // 2^43
-
-  /** Distance from a .5 boundary under which one element is rounded
-    * exactly: 1/256, well above the <= 9e-4 that the shortest decimal of
-    * `p` can differ from `p` itself once scaled by 10^12. */
-  private final val NearHalf = 0.5 - 1.0 / 256
+  /** `|p * 10^12|` bound of the fast path: the rounded value fits a `long`
+    * with room to spare. */
+  private final val FastLimit = 4.611686018427388e18 // 2^62
 
   private def isFloat(e: Expression): Boolean =
     e.dataType.asInstanceOf[ArrayType].elementType == FloatType
@@ -156,37 +156,30 @@ object DotExact {
   private def element(arr: ArrayData, i: Int, isFloat: Boolean): Double =
     if (isFloat) arr.getFloat(i).toDouble else arr.getDouble(i)
 
-  /** The product `p` as `CAST(p AS DECIMAL(28,12))` would hold it, as an
-    * unscaled `long` (the value times 10^12), or `Long.MinValue` when the
-    * fast path cannot decide it (NaN, infinity, `|p * 10^12| >= 2^43`).
-    * Called from generated code.
-    *
-    * Spark's cast rounds the decimal `Double.toString(p)` HALF_UP at 12
-    * decimals. That decimal lies within half an ulp of `p`, so unless the
-    * exact `p * 10^12` (split as `hi + lo`, `lo` from one fma) is within
-    * 1/256 of a .5 boundary, both round to the same nearest integer.
-    * Near a boundary this one element is rounded exactly from the
-    * string, as the cast does.
-    *
-    * Known oracle gap, kept on purpose: DuckDB instead rounds `p * 10^12`
-    * half-to-even, so a product whose shortest decimal ends on a 13th-
-    * decimal 5 (0.0699387749725 -> ...973 here, ...972 in DuckDB) can
-    * differ from the oracle in the 12th decimal. This is why the
-    * benchmark's dedup_embedding oracle check fails on seed 11 and
-    * sim_topk's on seed 308, identically with the interpreted fold this
-    * kernel replaced. Matching DuckDB would change query results, so it
-    * is a separate change. */
-  def scaled(p: Double): Long = {
-    val hi = p * 1e12
-    if (!(math.abs(hi) < FastLimit)) Long.MinValue
-    else {
-      val n = math.rint(hi)
-      val r = (hi - n) + Math.fma(p, 1e12, -hi)
-      if (math.abs(r) < NearHalf) n.toLong
-      else new JBigDecimal(java.lang.Double.toString(p))
-        .setScale(12, RoundingMode.HALF_UP).unscaledValue.longValue
-    }
+  /** `p * 10^12` rounded as DuckDB's `CAST(p AS DECIMAL(28,12))` rounds
+    * it: scaled in double, nudged by 1e-9 away from zero, then rounded
+    * half-to-even (`rint`). The nudge makes an exact .5 round away from
+    * zero (0.5e-12 -> 1e-12, 2.5e-12 -> 3e-12); once `|p * 10^12|`
+    * passes 2^24 the nudge is below half an ulp and a tie goes to even
+    * (0.0699387749725 -> 0.069938774972). Spark's cast instead rounds the shortest decimal of
+    * `p` half-up (0.069938774973), which left results one unit off the
+    * oracle in the 12th decimal. */
+  private def rint12(p: Double): Double = {
+    val v = p * 1e12
+    math.rint(v + math.signum(v) * 1e-9)
   }
+
+  /** The product `p` rounded to 12 decimals ([[rint12]]) as an unscaled
+    * `long` (the value times 10^12), or `Long.MinValue` when the fast path
+    * cannot hold it (NaN, infinity, `|p * 10^12| >= 2^62`). Called from
+    * generated code. */
+  def scaled(p: Double): Long = {
+    val r = rint12(p)
+    if (math.abs(r) < FastLimit) r.toLong else Long.MinValue
+  }
+
+  /** [[scaled]] at any finite magnitude, as a decimal of scale 12. */
+  def rounded(p: Double): JBigDecimal = new JBigDecimal(rint12(p)).movePointLeft(12)
 
   /** The exact sum (unscaled at 12 decimals) as DOUBLE: Spark's
     * `Decimal.toDouble` is `BigDecimal.doubleValue`. Called from generated

@@ -302,13 +302,12 @@ object Curation {
     // tokenize->gram-explode->md5 pipeline runs once, not per consumer
     // (the multi-consumer re-scan rule). Rows are (id, bool, bucket) —
     // ~17 B/gram, far narrower than the text they derive from.
-    val grams = org.apache.spark.sql.graft.Bridge.resetStats(docs
+    val grams = org.apache.spark.sql.graft.Bridge.checkpoint(docs
       .select(col(idCol), isTarget.as("__t"),
         explode(concat(shingles(toks, 1), shingles(toks, 2))).as("__g"))
       .withColumn("__b",
         conv(substring(md5(col("__g")), 1, 8), 16, 10).cast(LongType) % buckets)
-      .select(col(idCol), col("__t"), col("__b"))
-      .localCheckpoint(true))
+      .select(col(idCol), col("__t"), col("__b")))
     val cnt = grams.groupBy("__b").agg(
       sum(when(col("__t"), 1L).otherwise(0L)).as("__ct"),
       sum(when(!col("__t"), 1L).otherwise(0L)).as("__cr"))

@@ -203,13 +203,12 @@ object Dedup {
     // THREE consumers (the size rollup and both self-join sides), each
     // otherwise re-running tokenize→shingle→explode→distinct from the
     // single-task scan
-    val sh = org.apache.spark.sql.graft.Bridge.resetStats(docs
+    val sh = org.apache.spark.sql.graft.Bridge.checkpoint(docs
       .repartition(docs.sparkSession.sparkContext.defaultParallelism)
       .select(
         col(sourceCol).as("source"),
         explode(shinglesDistinct(wsTokens(col(textCol)), n)).as("sh"))
-      .distinct()
-      .localCheckpoint(true))
+      .distinct())
     val sz = sh.groupBy("source").agg(count(lit(1)).as("n_sh"))
     sh.select(col("source").as("s1"), col("sh"))
       .join(sh.select(col("source").as("s2"), col("sh")), "sh")
@@ -275,8 +274,8 @@ object Dedup {
     // the shape). Measured on the benchmark's seed-1 documents, 4 cores:
     // the join stage ran 4 tasks instead of 2, in 0.59/0.32 s of wall
     // instead of 0.80/0.90 s (two warm runs each).
-    val shh = org.apache.spark.sql.graft.Bridge.resetStats(
-      sh.select(col(idCol), xxhash64(col("sh")).as("shh")).localCheckpoint(true))
+    val shh = org.apache.spark.sql.graft.Bridge.checkpoint(
+      sh.select(col(idCol), xxhash64(col("sh")).as("shh")))
     val sizes = shh.groupBy(idCol).agg(count(lit(1)).as("n_sh"))
     val byShh = shh.repartition(
       docs.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt, col("shh"))
@@ -288,57 +287,6 @@ object Dedup {
     common
       .join(sizes.withColumnRenamed(idCol, "d1").withColumnRenamed("n_sh", "n1"), "d1")
       .join(sizes.withColumnRenamed(idCol, "d2").withColumnRenamed("n_sh", "n2"), "d2")
-  }
-
-  /** Exact Jaccard pairs via PPJoin-style PREFIX FILTERING: for
-    * |A∩B|/|A∪B| >= tau, A and B must share a shingle within each one's
-    * prefix of its (|d| - ceil(tau*|d|) + 1) rarest shingles under a
-    * global order (document frequency asc, hash tiebreak). The candidate
-    * join touches only prefix rows — rare shingles — so the sum(f^2)
-    * blow-up on hot shingles disappears while the result stays EXACT
-    * (verification recomputes true Jaccard on the full shingle arrays).
-    * Property-tested equal to [[ngramJaccardPairs]]. Corpus-shape caveat
-    * (measured, see SURVEY §8): pruning power depends on prefix shingles
-    * being genuinely rare — on natural zipfian vocabularies it is the
-    * standard exact-join win; on the dense synthetic test corpus (tiny
-    * vocabulary, df >= 140 even in prefixes) the naive hash join is
-    * faster and MinHash+LSH is the scale path. */
-  def ngramJaccardPairsPrefix(docs: DataFrame, idCol: String, textCol: String,
-      n: Int = 3, tau: Double = 0.5): DataFrame = {
-    val withSh = docs
-      .select(col(idCol), shinglesDistinct(wsTokens(col(textCol)), n).as("shs"))
-      .filter(size(col("shs")) > 0)
-    val sh = withSh.select(col(idCol), explode(col("shs")).as("sh"))
-      .withColumn("shh", xxhash64(col("sh")))
-      .select(idCol, "shh")
-    // global rarity order
-    val df = sh.groupBy("shh").agg(count(lit(1)).as("df"))
-    val ranked = sh.join(df, "shh")
-    // prefix length per doc: L = |d| - ceil(tau*|d|) + 1
-    val byDoc = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(idCol)).orderBy(col("df"), col("shh"))
-    val prefix = ranked
-      .withColumn("__rn", row_number().over(byDoc))
-      .withColumn("__sz", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col(idCol))))
-      .filter(col("__rn") <= col("__sz") - ceil(col("__sz") * tau) + 1)
-      .select(idCol, "shh")
-    val cand = prefix.as("a")
-      .join(prefix.as("b"),
-        col("a.shh") === col("b.shh") && col(s"a.$idCol") < col(s"b.$idCol"))
-      .select(col(s"a.$idCol").as("d1"), col(s"b.$idCol").as("d2"))
-      .distinct()
-    // exact verification on the full shingle arrays
-    val withA = withSh.select(col(idCol).as("d1"), col("shs").as("shs1"))
-    val withB = withSh.select(col(idCol).as("d2"), col("shs").as("shs2"))
-    cand.join(withA, "d1").join(withB, "d2")
-      .withColumn("common",
-        size(array_intersect(col("shs1"), col("shs2"))).cast(LongType))
-      .withColumn("jaccard",
-        col("common").cast(DoubleType) /
-          (size(col("shs1")) + size(col("shs2")) - col("common")))
-      .filter(col("jaccard") >= tau)
-      .select("d1", "d2", "common", "jaccard")
   }
 
   /** MinHash+LSH near-dup (the approximate scale path): per-doc 128-slot
@@ -482,101 +430,97 @@ object Dedup {
     *
     * Storage bookkeeping: each round's checkpoint supersedes the previous
     * round's, and the superseded blocks are unpersisted IMMEDIATELY (as are
-    * the edges once the loop converges) — without this, rounds x
-    * full-label-set of storage accumulates for the life of the session,
-    * which at billions of nodes and ~30 pointer-jumping rounds floods
-    * executor storage. Exactly ONE checkpoint (the final label set) backs
-    * the returned DataFrame; call [[releaseClusters]] when done with it. */
+    * the edges once the loop converges, and every checkpoint if a round
+    * fails) — without this, rounds x full-label-set of storage accumulates
+    * for the life of the session, which at billions of nodes and ~30
+    * pointer-jumping rounds floods executor storage. Exactly ONE
+    * checkpoint (the final label set) backs the returned DataFrame; call
+    * [[releaseClusters]] when done with it. */
   def clusterPairs(pairs: DataFrame, d1: String = "d1", d2: String = "d2",
-      onRound: (Int, Double) => Unit = (_, _) => (), jumps: Int = 1): DataFrame = {
-    require(jumps >= 0, s"need jumps >= 0, got $jumps")
-    import org.apache.spark.sql.graft.Bridge
-    // every checkpoint resets plan statistics: the size-only estimator
-    // multiplies through each round's joins, and localCheckpoint would
-    // carry the product into the next round — after ~12 rounds the
-    // carried BigInt has millions of digits and the driver stalls inside
-    // statistics arithmetic (Bridge.resetStats has the full story)
-    def ckpt(df: DataFrame): DataFrame = Bridge.resetStats(df.localCheckpoint(true))
-    // both orientations from ONE pass over `pairs`: a union of two
-    // projections would run the whole upstream pair plan (self-join,
-    // rollup, size joins, similarity filter) once per side
-    var edges = ckpt(pairs
-      .select(inline(array(
-        struct(col(d1).as("a"), col(d2).as("b")),
-        struct(col(d2).as("a"), col(d1).as("b")))))
-      .distinct())
-    var labels = ckpt(edges.select(col("a").as("id")).distinct()
-      .withColumn("label", col("id")))
-    var backing = labels // the checkpoint whose blocks hold `labels`
-    var converged = false
-    var round = 0
-    while (!converged) {
-      val t0 = System.nanoTime()
-      val neighborMin = edges
-        .join(labels.select(col("id").as("b"), col("label").as("nlabel")), Seq("b"))
-        .groupBy(col("a").as("id"))
-        .agg(min(col("nlabel")).as("nmin"))
-      // FastSV-shaped round: fold the neighbor min into the label FIRST,
-      // then shortcut the FRESH forest (l := l∘l) `jumps` times inside
-      // the same plan (shortcutting STALE parents was measured a no-op).
-      var folded = labels
-        .join(neighborMin, Seq("id"), "left")
-        .select(col("id"), col("label"),
-          least(col("label"), coalesce(col("nmin"), col("label"))).as("l"))
-      for (_ <- 1 to jumps)
-        folded = folded
-          .join(folded.select(col("id").as("l"), col("l").as("__l2")), Seq("l"), "left")
+      onRound: (Int, Double) => Unit = (_, _) => ()): DataFrame =
+    org.apache.spark.sql.graft.Bridge.withCheckpoints { ck =>
+      // every checkpoint resets plan statistics: the size-only estimator
+      // multiplies through each round's joins, and a plain localCheckpoint
+      // would carry the product into the next round — after ~12 rounds the
+      // carried BigInt has millions of digits and the driver stalls inside
+      // statistics arithmetic (Bridge.checkpoint has the full story)
+      //
+      // both orientations from ONE pass over `pairs`: a union of two
+      // projections would run the whole upstream pair plan (self-join,
+      // rollup, size joins, similarity filter) once per side
+      var edges = ck(pairs
+        .select(inline(array(
+          struct(col(d1).as("a"), col(d2).as("b")),
+          struct(col(d2).as("a"), col(d1).as("b")))))
+        .distinct())
+      var labels = ck(edges.select(col("a").as("id")).distinct()
+        .withColumn("label", col("id")))
+      var converged = false
+      var round = 0
+      while (!converged) {
+        val t0 = System.nanoTime()
+        val neighborMin = edges
+          .join(labels.select(col("id").as("b"), col("label").as("nlabel")), Seq("b"))
+          .groupBy(col("a").as("id"))
+          .agg(min(col("nlabel")).as("nmin"))
+        // FastSV-shaped round: fold the neighbor min into the label FIRST,
+        // then shortcut the FRESH forest (l := l∘l) inside the same plan
+        // (shortcutting STALE parents was measured a no-op).
+        val folded = labels
+          .join(neighborMin, Seq("id"), "left")
           .select(col("id"), col("label"),
-            coalesce(col("__l2"), col("l")).as("l"))
-      // ONE eager materialization per round: the convergence probe reads
-      // this checkpoint, and the next round's labels are a narrow
-      // PROJECTION over the same blocks (a second `next` checkpoint was
-      // measured pure overhead — it re-wrote the identical row set)
-      val updated = ckpt(folded.select(col("id"), col("label"), col("l").as("next")))
-      // The probe is a job of its own each round. Fusing it into the
-      // checkpoint job (`Dataset.observe` counting changed labels), plus
-      // an un-checkpointed initial labels frame, was measured on
-      // dedup_clusters at sf0.1, 4 cores: 34 → 29 jobs, but Bench min of 5
-      // over three interleaved sessions a side read 1.89–2.00 s before and
-      // 1.80–2.12 s after — no gain beyond noise. Kept as is.
-      converged = updated.filter(col("next") =!= col("label")).isEmpty
-      labels = updated.select(col("id"), col("next").as("label"))
-      // CONTRACT the graph: rewrite edges over current labels, dropping
-      // intra-cluster self-loops. Without this, a local-minimum plateau
-      // stalls the frontier to ONE edge-hop per round (measured: rounds
-      // == eccentricity ~14-19 on sf0.1's path-like components, however
-      // deep the forest shortcuts). Contraction merges each plateau into
-      // its rep, so the next neighbor hop crosses the whole merged
-      // region — rounds drop to ~log(diameter) — AND the edge set
-      // shrinks geometrically, so later rounds are cheaper, not just
-      // fewer. Both orientations survive contraction by symmetry.
-      // Deferred past round 1: dense clique-ish graphs (exact-dup
-      // clusters) converge in 2-3 rounds, and contracting the full edge
-      // set in round 1 — the most expensive distinct of the loop — buys
-      // them nothing (measured +0.5 s on dedup_clusters); path-like
-      // graphs still contract from round 2 and keep the ~log rounds.
-      if (!converged && round >= 1) {
-        val lmap = labels
-        val newEdges = ckpt(edges
-          .join(lmap.select(col("id").as("a"), col("label").as("__la")), Seq("a"))
-          .join(lmap.select(col("id").as("b"), col("label").as("__lb")), Seq("b"))
-          .select(col("__la").as("a"), col("__lb").as("b"))
-          .filter(col("a") =!= col("b"))
-          .distinct())
-        Bridge.unpersistCheckpoints(edges)
-        edges = newEdges
+            least(col("label"), coalesce(col("nmin"), col("label"))).as("l"))
+        // one shortcut per round: two and three were measured slower
+        val jumped = folded
+          .join(folded.select(col("id").as("l"), col("l").as("__l2")), Seq("l"), "left")
+          .select(col("id"), col("label"), coalesce(col("__l2"), col("l")).as("l"))
+        // ONE eager materialization per round: the convergence probe reads
+        // this checkpoint, and the next round's labels are a narrow
+        // PROJECTION over the same blocks (a second `next` checkpoint was
+        // measured pure overhead — it re-wrote the identical row set)
+        val updated = ck(jumped.select(col("id"), col("label"), col("l").as("next")))
+        // The probe is a job of its own each round. Fusing it into the
+        // checkpoint job (`Dataset.observe` counting changed labels), plus
+        // an un-checkpointed initial labels frame, was measured on
+        // dedup_clusters at sf0.1, 4 cores: 34 → 29 jobs, but Bench min of 5
+        // over three interleaved sessions a side read 1.89–2.00 s before and
+        // 1.80–2.12 s after — no gain beyond noise. Kept as is.
+        converged = updated.filter(col("next") =!= col("label")).isEmpty
+        // CONTRACT the graph: rewrite edges over current labels, dropping
+        // intra-cluster self-loops. Without this, a local-minimum plateau
+        // stalls the frontier to ONE edge-hop per round (measured: rounds
+        // == eccentricity ~14-19 on sf0.1's path-like components, however
+        // deep the forest shortcuts). Contraction merges each plateau into
+        // its rep, so the next neighbor hop crosses the whole merged
+        // region — rounds drop to ~log(diameter) — AND the edge set
+        // shrinks geometrically, so later rounds are cheaper, not just
+        // fewer. Both orientations survive contraction by symmetry.
+        // Deferred past round 1: dense clique-ish graphs (exact-dup
+        // clusters) converge in 2-3 rounds, and contracting the full edge
+        // set in round 1 — the most expensive distinct of the loop — buys
+        // them nothing (measured +0.5 s on dedup_clusters); path-like
+        // graphs still contract from round 2 and keep the ~log rounds.
+        val prev = labels
+        labels = updated.select(col("id"), col("next").as("label"))
+        if (!converged && round >= 1) {
+          val newEdges = ck(edges
+            .join(labels.select(col("id").as("a"), col("label").as("__la")), Seq("a"))
+            .join(labels.select(col("id").as("b"), col("label").as("__lb")), Seq("b"))
+            .select(col("__la").as("a"), col("__lb").as("b"))
+            .filter(col("a") =!= col("b"))
+            .distinct())
+          ck.free(edges)
+          edges = newEdges
+        }
+        // previous round's label blocks are superseded — free before looping
+        ck.free(prev)
+        round += 1
+        onRound(round, (System.nanoTime() - t0) / 1e9)
       }
-      // previous round's label blocks are superseded — free before looping
-      Bridge.unpersistCheckpoints(backing)
-      backing = updated
-      round += 1
-      onRound(round, (System.nanoTime() - t0) / 1e9)
+      // the result reads only the final label checkpoint; the scope frees
+      // the edge blocks, dead weight once the loop converges
+      labels.select(col("id").as("doc_id"), col("label").as("canonical_id"))
     }
-    // the result reads only the final label checkpoint — the edge blocks
-    // are dead weight once the loop converges
-    Bridge.unpersistCheckpoints(edges)
-    labels.select(col("id").as("doc_id"), col("label").as("canonical_id"))
-  }
 
   /** Free the checkpoint blocks backing a [[clusterPairs]] result once the
     * caller has consumed (written/collected) it. The frame is not

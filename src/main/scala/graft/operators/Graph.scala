@@ -33,35 +33,23 @@ object Graph {
     * and ONE map-side-combined aggregate on dst collects them — the
     * classic pregel alternation with no per-round rank⋈degree join;
     * nothing larger than the edge list ever shuffles, and the iteration
-    * count is a constant of the operator, not of the data. For long chains on huge graphs,
-    * checkpoint every few rounds (the clusterPairs playbook — stats
-    * reset included); at the fixed small `iters` typical for authority
-    * scoring the plan tree stays shallow enough to skip it.
+    * count is a constant of the operator, not of the data.
     *
     * Overflow headroom: Σ shares ≤ N·scale, so dampNum·Σ needs
     * N·scale·dampNum < 2^63 — with defaults, ~10^11 nodes.
     *
-    * `checkpointEvery > 0` materializes the rank frame every that many
-    * rounds (the clusterPairs playbook: `localCheckpoint` truncates the
-    * deepening join lineage, `Bridge.resetStats` stops the size-only
-    * estimator from compounding through the rounds, and each superseded
-    * checkpoint's blocks unpersist immediately). Results are identical
-    * either way (spec-pinned); reach for it on long chains over huge
-    * graphs, skip it for the shallow authority-scoring defaults. The
-    * final backing checkpoint stays persisted while the result is in
-    * use — `Bridge.unpersistCheckpoints(result)` frees it. */
+    * The rounds run un-checkpointed: at the small fixed `iters` typical
+    * for authority scoring the plan tree stays shallow. The edge and node
+    * frames are checkpointed at entry and freed on return (or on failure);
+    * exactly one checkpoint, the final ranks, backs the result while it
+    * is in use — `Bridge.unpersistCheckpoints(result)` frees it. */
   def pageRankInt(edges: DataFrame, srcCol: String, dstCol: String,
       iters: Int, scale: Long = 1000000L,
-      dampNum: Long = 85L, dampDen: Long = 100L,
-      checkpointEvery: Int = 0): DataFrame = {
+      dampNum: Long = 85L, dampDen: Long = 100L): DataFrame = {
     require(iters >= 1, s"need iters >= 1, got $iters")
     require(scale >= 1L, s"need scale >= 1, got $scale")
     require(dampDen >= 1L && dampNum >= 0L && dampNum <= dampDen,
       s"need 0 <= dampNum <= dampDen, got $dampNum/$dampDen")
-    require(checkpointEvery >= 0, s"need checkpointEvery >= 0, got $checkpointEvery")
-    import org.apache.spark.sql.graft.Bridge
-    def ckpt(df: DataFrame): DataFrame =
-      Bridge.resetStats(df.localCheckpoint(true))
     val base = scale * (dampDen - dampNum) / dampDen
     // materialize the loop-invariant frames ONCE: every round's plan
     // otherwise re-embeds the caller's whole edge derivation plus the
@@ -76,7 +64,7 @@ object Graph {
     // checkpoint cost outweighed the removed re-derivations at small
     // scale (measured 4.45–4.71 s vs the 3.97 s un-checkpointed base at
     // sf0.1 despite the 64→0 scan plan). The result below is itself
-    // checkpointed so these can be freed before returning.
+    // checkpointed so these are freed on return.
     // the edge checkpoint deliberately keeps its origin's partitioning:
     // a repartition(parallelism)-widened copy was A/B'd interleaved at
     // sf0.1 and LOST (warm totals 6.19/6.83 wide vs 3.65/4.67 narrow —
@@ -84,41 +72,32 @@ object Graph {
     // 5 rounds' map-side parallelism saves; rounds 3.2 wide vs 2.3-3.0
     // narrow). At cluster scale the caller's edge frame arrives
     // many-partitioned anyway.
-    val e = ckpt(edges.select(col(srcCol).cast(LongType).as("__src"),
-      col(dstCol).cast(LongType).as("__dst")))
-    val dn = ckpt(e.select(col("__src").as("node"))
-      .union(e.select(col("__dst").as("node"))).distinct()
-      .join(e.groupBy(col("__src").as("node"))
-        .agg(count(lit(1)).as("__deg")), Seq("node"), "left"))
-    var r = dn.withColumn("pr", lit(scale))
-    var backing: Option[DataFrame] = None
-    for (i <- 1 to iters) {
-      // inner-join semantics of the old rank⋈degree: sink nodes (__deg
-      // null) contribute no shares
-      val shares = r.filter(col("__deg").isNotNull)
-        .select(col("node"), expr("pr div __deg").as("__share"))
-      val contrib = e.join(shares, e("__src") === shares("node"))
-        .groupBy(col("__dst").as("node"))
-        .agg(sum(col("__share")).as("__s"))
-      r = dn.join(contrib, Seq("node"), "left")
-        .select(col("node"), col("__deg"),
-          (lit(base) +
-            expr(s"($dampNum * coalesce(__s, 0L)) div $dampDen")).as("pr"))
-      if (checkpointEvery > 0 && i % checkpointEvery == 0 && i < iters) {
-        val ck = ckpt(r)
-        backing.foreach(Bridge.unpersistCheckpoints)
-        backing = Some(ck)
-        r = ck
+    org.apache.spark.sql.graft.Bridge.withCheckpoints { ck =>
+      val e = ck(edges.select(col(srcCol).cast(LongType).as("__src"),
+        col(dstCol).cast(LongType).as("__dst")))
+      val dn = ck(e.select(col("__src").as("node"))
+        .union(e.select(col("__dst").as("node"))).distinct()
+        .join(e.groupBy(col("__src").as("node"))
+          .agg(count(lit(1)).as("__deg")), Seq("node"), "left"))
+      var r = dn.withColumn("pr", lit(scale))
+      for (_ <- 1 to iters) {
+        // inner-join semantics of the old rank⋈degree: sink nodes (__deg
+        // null) contribute no shares
+        val shares = r.filter(col("__deg").isNotNull)
+          .select(col("node"), expr("pr div __deg").as("__share"))
+        val contrib = e.join(shares, e("__src") === shares("node"))
+          .groupBy(col("__dst").as("node"))
+          .agg(sum(col("__share")).as("__s"))
+        r = dn.join(contrib, Seq("node"), "left")
+          .select(col("node"), col("__deg"),
+            (lit(base) +
+              expr(s"($dampNum * coalesce(__s, 0L)) div $dampDen")).as("pr"))
       }
+      // materialize the final ranks so the scope frees the loop-invariant
+      // checkpoints NOW — the caller reads one node-sized checkpoint;
+      // nothing upstream stays persisted.
+      ck(r.select(col("node"), col("pr")))
     }
-    // materialize the final ranks so the loop-invariant checkpoints (and
-    // any last round backing) can be freed NOW — the caller reads one
-    // node-sized checkpoint; nothing upstream stays persisted.
-    val out = ckpt(r.select(col("node"), col("pr")))
-    backing.foreach(Bridge.unpersistCheckpoints)
-    Bridge.unpersistCheckpoints(e)
-    Bridge.unpersistCheckpoints(dn)
-    out
   }
 
   /** Minimum hop distance from a seed set (multi-source BFS, bounded at
@@ -133,56 +112,52 @@ object Graph {
     * set), dedups, and anti-joins the accumulated distances so the
     * frontier holds exactly the newly-reached nodes; work per round is
     * proportional to the frontier's out-edges, total work to the
-    * reachable edge set. Rounds localCheckpoint (eager) with stats reset
-    * and superseded checkpoints unpersist immediately — the clusterPairs
-    * storage playbook. The empty-frontier test is a driver scalar
+    * reachable edge set. Rounds checkpoint eagerly with stats reset
+    * (`Bridge.checkpoint`) and superseded checkpoints unpersist
+    * immediately, all of them on failure — the clusterPairs storage
+    * playbook. The empty-frontier test is a driver scalar
     * (iteration control, not data collection). The final distance
     * checkpoint stays persisted while the result is in use —
     * `Bridge.unpersistCheckpoints(result)` frees it. */
   def hopDistance(edges: DataFrame, srcCol: String, dstCol: String,
       seeds: DataFrame, seedCol: String, maxHops: Int): DataFrame = {
     require(maxHops >= 0, s"need maxHops >= 0, got $maxHops")
-    import org.apache.spark.sql.graft.Bridge
-    def ckpt(df: DataFrame): DataFrame =
-      Bridge.resetStats(df.localCheckpoint(true))
-    // materialize the edge list ONCE: every hop round is its own
-    // checkpointed job, so a lazy `e` re-runs the caller's whole edge
-    // derivation (scan + distinct + union for the registered query) per
-    // round — maxHops re-derivations of a frame the loop only reads.
-    // Freed when the loop ends (the result reads only the final distance
-    // checkpoint, so the edge blocks are dead weight after convergence).
-    val e = ckpt(edges.select(col(srcCol).cast(LongType).as("src"),
-      col(dstCol).cast(LongType).as("dst")))
-    var dist = ckpt(seeds.select(col(seedCol).cast(LongType).as("node"))
-      .distinct().withColumn("hops", lit(0L)))
-    var frontier = dist.select("node")
-    var frontierBacking: Option[DataFrame] = None
-    var hop = 1
-    var done = maxHops == 0
-    while (!done) {
-      val next = ckpt(e
-        .join(frontier.withColumnRenamed("node", "src"), Seq("src"))
-        .select(col("dst").as("node")).distinct()
-        .join(dist, Seq("node"), "left_anti")
-        .withColumn("hops", lit(hop.toLong)))
-      frontierBacking.foreach(Bridge.unpersistCheckpoints)
-      frontierBacking = None
-      if (next.isEmpty) {
-        Bridge.unpersistCheckpoints(next)
-        done = true
-      } else {
-        val newDist = ckpt(dist.unionByName(next))
-        Bridge.unpersistCheckpoints(dist)
-        dist = newDist
-        frontier = next.select("node")
-        frontierBacking = Some(next)
-        hop += 1
-        if (hop > maxHops) done = true
+    org.apache.spark.sql.graft.Bridge.withCheckpoints { ck =>
+      // materialize the edge list ONCE: every hop round is its own
+      // checkpointed job, so a lazy `e` re-runs the caller's whole edge
+      // derivation (scan + distinct + union for the registered query) per
+      // round — maxHops re-derivations of a frame the loop only reads.
+      // Freed when the loop ends (the result reads only the final distance
+      // checkpoint, so the edge blocks are dead weight after convergence).
+      val e = ck(edges.select(col(srcCol).cast(LongType).as("src"),
+        col(dstCol).cast(LongType).as("dst")))
+      var dist = ck(seeds.select(col(seedCol).cast(LongType).as("node"))
+        .distinct().withColumn("hops", lit(0L)))
+      var frontier: Option[DataFrame] = None // the last round's checkpoint
+      var hop = 1
+      var done = maxHops == 0
+      while (!done) {
+        val next = ck(e
+          .join(frontier.getOrElse(dist).select(col("node").as("src")), Seq("src"))
+          .select(col("dst").as("node")).distinct()
+          .join(dist, Seq("node"), "left_anti")
+          .withColumn("hops", lit(hop.toLong)))
+        frontier.foreach(ck.free)
+        frontier = None
+        if (next.isEmpty) {
+          ck.free(next)
+          done = true
+        } else {
+          val newDist = ck(dist.unionByName(next))
+          ck.free(dist)
+          dist = newDist
+          frontier = Some(next)
+          hop += 1
+          if (hop > maxHops) done = true
+        }
       }
+      dist
     }
-    frontierBacking.foreach(Bridge.unpersistCheckpoints)
-    Bridge.unpersistCheckpoints(e)
-    dist
   }
 
   /** The DuckDB oracle for [[hopDistance]]: a recursive CTE whose UNION
@@ -253,11 +228,10 @@ object Graph {
     // that is the full n-gram pair join; measured 3.26 s → the
     // checkpointed form below). Edge-list-sized, the psiFromCounts
     // posture; the result detaches via its final aggregate.
-    val e = Bridge.resetStats(edges0.select(
+    val e = Bridge.checkpoint(edges0.select(
         least(col(aCol), col(bCol)).as("a"),
         greatest(col(aCol), col(bCol)).as("b"))
-      .filter(col("a") < col("b")).distinct()
-      .localCheckpoint(true))
+      .filter(col("a") < col("b")).distinct())
     val deg = e.select(col("a").as("v")).unionAll(e.select(col("b").as("v")))
       .groupBy("v").agg(count(lit(1)).as("d"))
     val nEdges = e.agg(count(lit(1)).as("n_edges"))
@@ -271,11 +245,10 @@ object Graph {
       (col("da") === col("db") && col("a") < col("b"))
     // same posture for the oriented list: three consumers (both wedge
     // sides + the closing semi-join) over an edges-sized frame
-    val o = Bridge.resetStats(ed.select(
+    val o = Bridge.checkpoint(ed.select(
         when(srcIsA, col("a")).otherwise(col("b")).as("src"),
         when(srcIsA, col("b")).otherwise(col("a")).as("dst"),
-        when(srcIsA, col("db")).otherwise(col("da")).as("dd"))
-      .localCheckpoint(true))
+        when(srcIsA, col("db")).otherwise(col("da")).as("dd")))
     // ordered out-neighbor pairs at each source, closed by the oriented
     // (v, w) edge — v precedes w in the order, so if the undirected edge
     // exists it is oriented exactly v→w

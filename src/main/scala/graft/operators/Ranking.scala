@@ -37,10 +37,9 @@ object Ranking {
     * `Bridge.unpersistCheckpoints` frees it when the caller is done. */
   private def rangeSorted(df: DataFrame, order: Seq[Column]): DataFrame = {
     val p = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    Bridge.resetStats(
+    Bridge.checkpoint(
       df.repartitionByRange(p, order: _*)
-        .sortWithinPartitions(order: _*)
-        .localCheckpoint(true))
+        .sortWithinPartitions(order: _*))
   }
 
   /** One small job over the sorted checkpoint: per-partition totals of

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types._
 
 import graft.functions._
@@ -26,16 +27,12 @@ object Similarity {
     * re-read their input, and without a checkpoint each pass re-runs the
     * caller's full input pipeline from the source scan (the multi-consumer
     * re-scan rule). A frame that is already checkpoint-backed passes
-    * through untouched so shared-build callers never pay a second copy. */
-  private def materialized(df: DataFrame): DataFrame = materializedOwned(df)._1
-
-  /** [[materialized]] that also reports whether THIS call created the
-    * checkpoint. Builders that fully consume their input driver-side
-    * (training loops returning arrays) unpersist an owned copy before
-    * returning — callers get no handle to it, so leaving it persisted
-    * accumulates corpus-sized block-manager storage across calls in a
-    * long-lived session (the round-4 storage-pressure class). A
-    * passthrough (caller-owned checkpoint) is NEVER freed here.
+    * through untouched so shared-build callers never pay a second copy.
+    * Builders that consume their input driver-side (training loops
+    * returning arrays) take the copy through `ck.shared` instead, so the
+    * copy is freed when they return — callers get no handle to it, and a
+    * persisted copy per call would accumulate corpus-sized storage in a
+    * long-lived session (the round-4 storage-pressure class).
     *
     * The copy keeps its origin's partitioning (usually ONE task here —
     * single-row-group scans). A repartition-to-parallelism variant was
@@ -48,11 +45,8 @@ object Similarity {
     * ann_eval 5.01 → 6.95 — its thread pool already fills the cores
     * with independent builds, so intra-build parallelism bought
     * nothing). */
-  private def materializedOwned(df: DataFrame): (DataFrame, Boolean) = {
-    import org.apache.spark.sql.graft.Bridge
-    if (Bridge.isCheckpointBacked(df)) (df, false)
-    else (Bridge.resetStats(df.localCheckpoint(true)), true)
-  }
+  private def materialized(df: DataFrame): DataFrame =
+    if (Bridge.isCheckpointBacked(df)) df else Bridge.checkpoint(df)
 
   /** cosine(a, b) with norms precomputed on both sides. */
   private def cosineWithNorms(va: Column, na: Column, vb: Column, nb: Column): Column =
@@ -114,12 +108,11 @@ object Similarity {
     // means + the final margin join) — checkpoint it so the batch x
     // corpus scoring pass runs once, not per consumer (the multi-consumer
     // re-scan rule). |batch| x |corpus| rows, batch-bounded by contract.
-    val c = org.apache.spark.sql.graft.Bridge.resetStats(
+    val c = Bridge.checkpoint(
       t.join(s, col("src_id") =!= col("tgt_id"))
         .select(col("src_id"), col("tgt_id"),
           cosineWithNorms(col("__sv"), col("__snrm"), col("__tv"), col("__tnrm"))
-            .as("cosine"))
-        .localCheckpoint(true))
+            .as("cosine")))
     def topMean(part: String, tie: String, out: String): DataFrame = {
       val w = Window.partitionBy(col(part))
         .orderBy(col("cosine").desc, col(tie))
@@ -172,41 +165,40 @@ object Similarity {
       k: Int, iters: Int): DataFrame = {
     require(k >= 1, s"need k >= 1, got $k")
     require(iters >= 1, s"need iters >= 1, got $iters")
-    // the seed scan + every Lloyd iteration + the final assignment each
-    // re-read the input: materialize the (id, vec) projection once
-    val (base, ownsBase) = materializedOwned(emb.select(col(idCol), col(vecCol)))
-    var cents: Array[Array[Double]] = base
-      .withColumn("__r", md5(col(idCol).cast(StringType)))
-      .orderBy(col("__r"), col(idCol))
-      .limit(k)
-      .select(col(vecCol))
-      .collect()
-      .map(_.getSeq[Float](0).toArray.map(_.toDouble))
-    val cellNames = cents.indices.map(i => f"c$i%03d").toArray
-
-    def assign(): DataFrame = base.select(
-      col(vecCol),
-      graft.functions.nearestCells(col(vecCol), cents, cellNames, 1)
-        .getItem(0).as("cell"))
-
-    for (_ <- 1 until iters) {
-      val updated = groupCentroids(assign(), "cell", vecCol)
+    Bridge.withCheckpoints { ck =>
+      // the seed scan + every Lloyd iteration + the final assignment each
+      // re-read the input: materialize the (id, vec) projection once
+      val base = ck.shared(emb.select(col(idCol), col(vecCol)))
+      var cents: Array[Array[Double]] = base
+        .withColumn("__r", md5(col(idCol).cast(StringType)))
+        .orderBy(col("__r"), col(idCol))
+        .limit(k)
+        .select(col(vecCol))
         .collect()
-        .groupBy(_.getString(0))
-        .map { case (cell, rows) =>
-          cell -> rows.sortBy(_.getLong(1)).map(_.getDouble(2))
-        }
-      cents = cellNames.zipWithIndex.map { case (n, i) => updated.getOrElse(n, cents(i)) }
+        .map(_.getSeq[Float](0).toArray.map(_.toDouble))
+      val cellNames = cents.indices.map(i => f"c$i%03d").toArray
+
+      def assign(): DataFrame = base.select(
+        col(vecCol),
+        graft.functions.nearestCells(col(vecCol), cents, cellNames, 1)
+          .getItem(0).as("cell"))
+
+      for (_ <- 1 until iters) {
+        val updated = groupCentroids(assign(), "cell", vecCol)
+          .collect()
+          .groupBy(_.getString(0))
+          .map { case (cell, rows) =>
+            cell -> rows.sortBy(_.getLong(1)).map(_.getDouble(2))
+          }
+        cents = cellNames.zipWithIndex.map { case (n, i) => updated.getOrElse(n, cents(i)) }
+      }
+      // the (cell, pos, centroid) result is index-sized (k x dim rows) but
+      // consumers collect it more than once (centroidMatrix + assignCells,
+      // and shared-coarse callers fan it out further): checkpoint it so the
+      // final assignment pass runs once, not per collect. It no longer
+      // reads base, so the scope frees an owned copy on return.
+      ck(groupCentroids(assign(), "cell", vecCol))
     }
-    // the (cell, pos, centroid) result is index-sized (k x dim rows) but
-    // consumers collect it more than once (centroidMatrix + assignCells,
-    // and shared-coarse callers fan it out further): checkpoint it so the
-    // final assignment pass runs once, not per collect
-    val out = org.apache.spark.sql.graft.Bridge.resetStats(
-      groupCentroids(assign(), "cell", vecCol).localCheckpoint(true))
-    // the eager result checkpoint no longer reads base — free an owned copy
-    if (ownsBase) org.apache.spark.sql.graft.Bridge.unpersistCheckpoints(base)
-    out
   }
 
   /** Collect a (cell, pos, centroid) table into the driver-side matrix the
@@ -520,62 +512,63 @@ object Similarity {
       m: Int, ksub: Int, iters: Int): (Array[Array[Array[Double]]], Int) = {
     require(m >= 1, s"need m >= 1, got $m")
     require(ksub >= 2, s"need ksub >= 2, got $ksub")
-    // dim probe + seed scan + every joint-Lloyd iteration re-read the
-    // corpus: materialize the (id, vec) projection once
-    val (corpus, ownsCorpus) = materializedOwned(corpus0.select(col(idCol), col(vecCol)))
+    Bridge.withCheckpoints { ck =>
+      // dim probe + seed scan + every joint-Lloyd iteration re-read the
+      // corpus: materialize the (id, vec) projection once; the books are
+      // driver arrays, so the scope frees an owned copy on return
+      val corpus = ck.shared(corpus0.select(col(idCol), col(vecCol)))
 
-    // Joint Lloyd's over ALL m subspaces: each iteration is ONE corpus
-    // scan (m codegen'd NearestCells exprs in one projection) + ONE
-    // keyed shuffle of (subspace, cell, pos, x) scalars — per-iteration
-    // cost is independent of m, unlike m separate kmeansCentroids runs
-    // (measured 29 s -> ~5 s at sf0.1 from the job-count cut alone).
-    // Seeds are the ksub smallest-md5 vectors sliced per subspace (the
-    // kmeansCentroids convention: deterministic, partitioning-free).
-    // dim comes from the collected seeds — a separate dim-probe job per
-    // training call was a pure job-count tax (two calls per ann_eval).
-    val seedVecs = corpus.select(col(idCol), col(vecCol))
-      .withColumn("__r", md5(col(idCol).cast(StringType)))
-      .orderBy(col("__r"), col(idCol)).limit(ksub)
-      .select(col(vecCol)).collect()
-      .map(_.getSeq[Float](0).toArray.map(_.toDouble))
-    require(seedVecs.length >= 2, s"need >= 2 vectors, got ${seedVecs.length}")
-    val dim = seedVecs(0).length
-    require(dim % m == 0, s"need dim % m == 0, got dim=$dim m=$m")
-    val d = dim / m
-    var books: Array[Array[Array[Double]]] =
-      (0 until m).toArray.map(j => seedVecs.map(_.slice(j * d, (j + 1) * d)))
+      // Joint Lloyd's over ALL m subspaces: each iteration is ONE corpus
+      // scan (m codegen'd NearestCells exprs in one projection) + ONE
+      // keyed shuffle of (subspace, cell, pos, x) scalars — per-iteration
+      // cost is independent of m, unlike m separate kmeansCentroids runs
+      // (measured 29 s -> ~5 s at sf0.1 from the job-count cut alone).
+      // Seeds are the ksub smallest-md5 vectors sliced per subspace (the
+      // kmeansCentroids convention: deterministic, partitioning-free).
+      // dim comes from the collected seeds — a separate dim-probe job per
+      // training call was a pure job-count tax (two calls per ann_eval).
+      val seedVecs = corpus.select(col(idCol), col(vecCol))
+        .withColumn("__r", md5(col(idCol).cast(StringType)))
+        .orderBy(col("__r"), col(idCol)).limit(ksub)
+        .select(col(vecCol)).collect()
+        .map(_.getSeq[Float](0).toArray.map(_.toDouble))
+      require(seedVecs.length >= 2, s"need >= 2 vectors, got ${seedVecs.length}")
+      val dim = seedVecs(0).length
+      require(dim % m == 0, s"need dim % m == 0, got dim=$dim m=$m")
+      val d = dim / m
+      var books: Array[Array[Array[Double]]] =
+        (0 until m).toArray.map(j => seedVecs.map(_.slice(j * d, (j + 1) * d)))
 
-    // all m assignments in ONE PqCodes kernel call: m separate
-    // NearestCells expressions put ~m inlined kernel bodies into a single
-    // whole-stage-codegen method, blowing the JIT huge-method limit so
-    // the hot loop ran INTERPRETED (~425 us/row measured at m=16) — the
-    // MinHashBands lesson again
-    def codesCol = graft.functions.pqCodes(col(vecCol), books).as("__codes")
-    for (_ <- 1 until iters) {
-      val updated = corpus
-        .select(col(vecCol), codesCol)
-        .select(posexplode(col(vecCol)).as(Seq("__i", "__x")), col("__codes"))
-        .withColumn("__j", floor(col("__i") / d).cast(IntegerType))
-        .select(col("__j"),
-          element_at(col("__codes"), col("__j") + 1).as("__code"),
-          (col("__i") % d).cast(LongType).as("__pos"), col("__x"))
-        .groupBy(col("__j"), col("__code"), col("__pos"))
-        .agg((sum(col("__x").cast(DoubleType).cast(DecimalType(28, 12)))
-          .cast(DoubleType) / count(col("__x"))).as("__c"))
-        .collect()
-        .groupBy(r => (r.getInt(0), r.getInt(1)))
-        .map { case (k2, rows) =>
-          k2 -> rows.sortBy(_.getLong(2)).map(_.getDouble(3))
-        }
-      books = (0 until m).toArray.map { j =>
-        books(j).indices.toArray.map { ci =>
-          updated.getOrElse((j, ci), books(j)(ci)) // empty cell carries forward
+      // all m assignments in ONE PqCodes kernel call: m separate
+      // NearestCells expressions put ~m inlined kernel bodies into a single
+      // whole-stage-codegen method, blowing the JIT huge-method limit so
+      // the hot loop ran INTERPRETED (~425 us/row measured at m=16) — the
+      // MinHashBands lesson again
+      def codesCol = graft.functions.pqCodes(col(vecCol), books).as("__codes")
+      for (_ <- 1 until iters) {
+        val updated = corpus
+          .select(col(vecCol), codesCol)
+          .select(posexplode(col(vecCol)).as(Seq("__i", "__x")), col("__codes"))
+          .withColumn("__j", floor(col("__i") / d).cast(IntegerType))
+          .select(col("__j"),
+            element_at(col("__codes"), col("__j") + 1).as("__code"),
+            (col("__i") % d).cast(LongType).as("__pos"), col("__x"))
+          .groupBy(col("__j"), col("__code"), col("__pos"))
+          .agg((sum(col("__x").cast(DoubleType).cast(DecimalType(28, 12)))
+            .cast(DoubleType) / count(col("__x"))).as("__c"))
+          .collect()
+          .groupBy(r => (r.getInt(0), r.getInt(1)))
+          .map { case (k2, rows) =>
+            k2 -> rows.sortBy(_.getLong(2)).map(_.getDouble(3))
+          }
+        books = (0 until m).toArray.map { j =>
+          books(j).indices.toArray.map { ci =>
+            updated.getOrElse((j, ci), books(j)(ci)) // empty cell carries forward
+          }
         }
       }
+      (books, d)
     }
-    // the books are driver arrays — an owned input copy has no readers left
-    if (ownsCorpus) org.apache.spark.sql.graft.Bridge.unpersistCheckpoints(corpus)
-    (books, d)
   }
 
   /** IVFADC residual refinement — the standard IVF-PQ recall lever at
@@ -792,36 +785,37 @@ object Similarity {
     // aggregation), so a 1-partition checkpoint (single-row-group scan)
     // serialized all 15 iterations (measured 3.09 -> 2.06 s at sf0.1;
     // the pq/kmeans builders deliberately stay narrow, see
-    // materializedOwned)
-    val (base, ownsBase) = materializedOwned(emb.select(col(vecCol))
-      .repartition(emb.sparkSession.sparkContext.defaultParallelism))
-    val mu = exactMean(base, vecCol)
-    val d = mu.length
-    val muLit = array(mu.map(lit): _*)
-    var v = Array.fill(d)(1.0 / math.sqrt(d.toDouble))
-    var lambda = 0.0
-    for (_ <- 1 to iters) {
-      val vLit = array(v.map(lit): _*)
-      val diff = zip_with(col(vecCol), muLit, (x, m) => x.cast(DoubleType) - m)
-      val p = aggregate(zip_with(diff, vLit, (a, b) => a * b),
-        lit(0.0), (acc, e) => acc + e)
-      val av = base
-        .select(diff.as("__diff"), p.as("__p"))
-        .select(posexplode(transform(col("__diff"), x => x * col("__p")))
-          .as(Seq("pos", "c")))
-        .groupBy(col("pos"))
-        .agg(sum(col("c").cast(DecimalType(38, 12))).cast(DoubleType).as("s"))
-        .orderBy("pos")
-        .collect().map(_.getDouble(1))
-      lambda = math.sqrt(av.map(x => x * x).sum)
-      if (lambda > 0.0) v = av.map(_ / lambda)
+    // materialized)
+    Bridge.withCheckpoints { ck =>
+      val base = ck.shared(emb.select(col(vecCol))
+        .repartition(emb.sparkSession.sparkContext.defaultParallelism))
+      val mu = exactMean(base, vecCol)
+      val d = mu.length
+      val muLit = array(mu.map(lit): _*)
+      var v = Array.fill(d)(1.0 / math.sqrt(d.toDouble))
+      var lambda = 0.0
+      for (_ <- 1 to iters) {
+        val vLit = array(v.map(lit): _*)
+        val diff = zip_with(col(vecCol), muLit, (x, m) => x.cast(DoubleType) - m)
+        val p = aggregate(zip_with(diff, vLit, (a, b) => a * b),
+          lit(0.0), (acc, e) => acc + e)
+        val av = base
+          .select(diff.as("__diff"), p.as("__p"))
+          .select(posexplode(transform(col("__diff"), x => x * col("__p")))
+            .as(Seq("pos", "c")))
+          .groupBy(col("pos"))
+          .agg(sum(col("c").cast(DecimalType(38, 12))).cast(DoubleType).as("s"))
+          .orderBy("pos")
+          .collect().map(_.getDouble(1))
+        lambda = math.sqrt(av.map(x => x * x).sum)
+        if (lambda > 0.0) v = av.map(_ / lambda)
+      }
+      // canonical sign: the largest-|coordinate| is positive
+      val pivot = v.indices.maxBy(i => math.abs(v(i)))
+      if (v(pivot) < 0.0) v = v.map(-_)
+      // (mean, v, lambda) are driver arrays: the scope frees an owned copy
+      (mu, v, lambda)
     }
-    // canonical sign: the largest-|coordinate| is positive
-    val pivot = v.indices.maxBy(i => math.abs(v(i)))
-    if (v(pivot) < 0.0) v = v.map(-_)
-    // (mean, v, lambda) are driver arrays — free an owned input copy
-    if (ownsBase) org.apache.spark.sql.graft.Bridge.unpersistCheckpoints(base)
-    (mu, v, lambda)
   }
 
   /** Per-vector projection onto a (plan-embedded) direction after mean

@@ -324,8 +324,7 @@ object Temporal {
     // (bounds, key domain, the grid join) — eager-checkpoint so the
     // upstream rollup's corpus scan runs ONCE (the psiFromCounts
     // posture; 3 scans measured without it)
-    val src = org.apache.spark.sql.graft.Bridge.resetStats(
-      df.localCheckpoint(true))
+    val src = org.apache.spark.sql.graft.Bridge.checkpoint(df)
     val bounds = src.agg(min(col(bucketCol)).as("lo"), max(col(bucketCol)).as("hi"))
     val spine = bounds
       .select(explode(sequence(col("lo"), col("hi"), expr(step))).as(bucketCol))
@@ -360,8 +359,7 @@ object Temporal {
       valueCol: String, step: String = "interval 1 hour",
       stepSeconds: Long = 3600L): DataFrame = {
     // same triple-consumer checkpoint as gapFill
-    val src = org.apache.spark.sql.graft.Bridge.resetStats(
-      df.localCheckpoint(true))
+    val src = org.apache.spark.sql.graft.Bridge.checkpoint(df)
     val bounds = src.agg(min(col(bucketCol)).as("lo"), max(col(bucketCol)).as("hi"))
     val spine = bounds
       .select(explode(sequence(col("lo"), col("hi"), expr(step))).as(bucketCol))

@@ -1202,11 +1202,10 @@ object TextAnalysis {
     // totals, the scored join) — eager-checkpoint the reduced frame so
     // the corpus tokenize runs ONCE (the psiFromCounts posture; measured
     // 3x at 20x without it). The frame is vocabulary×sources-bounded.
-    val st = org.apache.spark.sql.graft.Bridge.resetStats(docs
+    val st = org.apache.spark.sql.graft.Bridge.checkpoint(docs
       .select(col(srcCol).as("source"),
         explode(wsTokens(lower(col(textCol)))).as("term"))
-      .groupBy("source", "term").agg(count(lit(1)).as("c"))
-      .localCheckpoint(true))
+      .groupBy("source", "term").agg(count(lit(1)).as("c")))
     val tot = st.groupBy("term").agg(sum(col("c")).as("cw"))
       .filter(col("cw") >= minCount)
     val stot = st.groupBy("source").agg(sum(col("c")).as("nst"))

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types._
 
 /** The reference's year/month/day partitioned staging layout (reference:
@@ -98,7 +99,7 @@ object Staging {
     * against the partition listing, so untouched partitions are never
     * read — at 100 TB the rewrite cost is proportional to the data that
     * actually contains the keys). Survivors are materialized
-    * (localCheckpoint) BEFORE the dynamic-partition-overwrite write —
+    * (`Bridge.checkpoint`) BEFORE the dynamic-partition-overwrite write —
     * Spark refuses a self-overwrite whose plan still reads the target
     * path — and partitions left EMPTY by the delete are removed
     * explicitly: dynamic overwrite only replaces partitions it writes
@@ -116,13 +117,12 @@ object Staging {
       .collect().map(_.getLong(0)).sorted
     val schema = reportSchema
     if (affected.isEmpty)
-      return spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
-    val slice = lake.filter(enc.isInCollection(affected.toSeq))
-    val before = slice.groupBy(enc.as("__p")).agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val survivors = slice.join(k, Seq(keyCol), "left_anti")
-      .localCheckpoint()
-    try {
+      spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
+    else Bridge.withCheckpoints { ck =>
+      val slice = lake.filter(enc.isInCollection(affected.toSeq))
+      val before = slice.groupBy(enc.as("__p")).agg(count(lit(1)).as("n"))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val survivors = ck(slice.join(k, Seq(keyCol), "left_anti"))
       val after = survivors.groupBy(enc.as("__p")).agg(count(lit(1)).as("n"))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       survivors
@@ -145,7 +145,7 @@ object Staging {
       }
       spark.createDataFrame(
         java.util.Arrays.asList(rows: _*), schema)
-    } finally org.apache.spark.sql.graft.Bridge.unpersistCheckpoints(survivors)
+    }
   }
 
   /** Merge-on-read erasure — the Iceberg/Delta delete-vector posture
@@ -189,18 +189,16 @@ object Staging {
     val del = new org.apache.hadoop.fs.Path(s"$path/_deletes")
     val fs = del.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(del))
-      return spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](), reportSchema)
-    // materialize the vector BEFORE deleteKeys rewrites anything (the
-    // sidecar itself is never part of the lake read, but being explicit
-    // costs nothing and keeps the sequencing obvious)
-    val keys = spark.read.parquet(del.toString).select(col(keyCol))
-      .localCheckpoint()
-    try {
+      spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), reportSchema)
+    else Bridge.withCheckpoints { ck =>
+      // materialize the vector BEFORE deleteKeys rewrites anything (the
+      // sidecar itself is never part of the lake read, but being explicit
+      // costs nothing and keeps the sequencing obvious)
+      val keys = ck(spark.read.parquet(del.toString).select(col(keyCol)))
       val report = deleteKeys(spark, path, keyCol, keys, format)
       fs.delete(del, true)
       report
-    } finally org.apache.spark.sql.graft.Bridge.unpersistCheckpoints(keys)
+    }
   }
 
   /** Keyed snapshot diff — the CDC step between two corpus/table

@@ -1,9 +1,14 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.{classic, Column, DataFrame, SparkSession}
+import scala.collection.mutable
+
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{classic, Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.storage.StorageLevel
 
 /** Minimal bridge into `private[sql]` Column <-> Expression conversion, the
   * standard pattern for libraries that ship custom Catalyst expressions
@@ -22,25 +27,32 @@ object Bridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
-  /** Rewrap a local-checkpointed DataFrame around its ALREADY-MATERIALIZED
-    * RDD with FRESH (default) statistics. `Dataset.localCheckpoint` carries
-    * the origin plan's estimated `sizeInBytes` forward; in an iterative
-    * loop whose round is a few self-joins, the size-only estimator
-    * MULTIPLIES the inputs' estimates, so the carried BigInt grows as
-    * ~3^rounds DIGITS — by round ~12 the driver spends its time in
-    * Karatsuba/Toom-Cook BigInteger multiplication inside plan statistics
-    * (measured: 122 s for one 1379-row round) and AQE never broadcasts the
-    * tiny joins because their estimated size is astronomical. The rewrap
-    * keeps the SAME persisted RDD (so [[unpersistCheckpoints]] still frees
-    * it) but the new LogicalRDD reports default stats, and runtime (AQE)
-    * sizes take over from there. */
-  def resetStats(df: DataFrame): DataFrame = {
-    val ds = df.asInstanceOf[classic.Dataset[_]]
-    ds.queryExecution.logical match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        ds.sparkSession.internalCreateDataFrame(lr.rdd, df.schema)
-      case _ => df
+  /** Eager local checkpoint with FRESH (default) statistics: the frame's
+    * rows are computed once and held in the block manager, and the result
+    * reads only those blocks. `Dataset.localCheckpoint` carries the origin
+    * plan's estimated `sizeInBytes` forward; in an iterative loop whose
+    * round is a few self-joins, the size-only estimator MULTIPLIES the
+    * inputs' estimates, so the carried BigInt grows as ~3^rounds DIGITS —
+    * by round ~12 the driver spends its time in Karatsuba/Toom-Cook
+    * BigInteger multiplication inside plan statistics (measured: 122 s for
+    * one 1379-row round) and AQE never broadcasts the tiny joins because
+    * their estimated size is astronomical. The result is a new LogicalRDD
+    * over the same persisted RDD that reports default stats, so runtime
+    * (AQE) sizes take over, and [[unpersistCheckpoints]] still frees it.
+    *
+    * If the materializing job fails, the half-written RDD is unpersisted
+    * before the error propagates: nothing else holds it. Lives here, not in
+    * package `graft`, so Spark names the job after the operator that asked
+    * for it (the first stack frame outside `org.apache.spark.sql`). */
+  def checkpoint(df: DataFrame): DataFrame = {
+    val marked = df.asInstanceOf[classic.Dataset[_]].localCheckpoint(false)
+    val rdd = marked.queryExecution.logical match {
+      case lr: LogicalRDD => lr.rdd
+      case other => throw new IllegalStateException(s"not a LogicalRDD: $other")
     }
+    try rdd.count()
+    catch { case e: Throwable => rdd.unpersist(blocking = false); throw e }
+    marked.sparkSession.internalCreateDataFrame(rdd, df.schema)
   }
 
   /** True when a DataFrame is already backed by a materialized
@@ -53,27 +65,13 @@ object Bridge {
     * unpersist loop) must NOT pass through, or multi-pass builders
     * re-execute per pass / fail on missing checkpoint blocks. The walk
     * mirrors [[unpersistCheckpoints]]: the wrapped RDD may be a narrow
-    * derivative of the persisted one. It is breadth-first, visits each
-    * RDD once (a diamond-shaped lineage would otherwise be walked once
-    * per path, exponential in its depth) and stops
-    * [[CheckpointWalkDepth]] levels down: a persisted ancestor deeper
-    * than that reads as "not backed", and the caller makes its own copy. */
+    * derivative of the persisted one. It stops [[CheckpointWalkDepth]]
+    * levels down: a persisted ancestor deeper than that reads as "not
+    * backed", and the caller makes its own copy. */
   def isCheckpointBacked(df: DataFrame): Boolean = {
     import org.apache.spark.sql.catalyst.plans.logical.{Filter, Project}
-    def persisted(root: org.apache.spark.rdd.RDD[_]): Boolean = {
-      val seen = scala.collection.mutable.HashSet(root.id)
-      var level: Seq[org.apache.spark.rdd.RDD[_]] = Seq(root)
-      var depth = 0
-      var found = false
-      while (!found && level.nonEmpty && depth <= CheckpointWalkDepth) {
-        found = level.exists(_.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE)
-        level = level.flatMap(_.dependencies.map(_.rdd)).filter(r => seen.add(r.id))
-        depth += 1
-      }
-      found
-    }
     def walk(p: LogicalPlan): Boolean = p match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => persisted(lr.rdd)
+      case lr: LogicalRDD => lineage(Seq(lr.rdd), CheckpointWalkDepth).exists(persisted)
       case pr: Project => walk(pr.child)
       case f: Filter => walk(f.child)
       case _ => false
@@ -146,22 +144,78 @@ object Bridge {
     * checkpoint per round (e.g. connected components) would otherwise
     * retain every superseded round's blocks for the life of the session.
     * After this call the DataFrame is NOT recomputable (a local checkpoint
-    * truncates lineage); only release frames that will never be read again. */
-  def unpersistCheckpoints(df: DataFrame): Unit = {
-    // A LogicalRDD may wrap the persisted checkpoint RDD itself OR a
-    // narrow derivative of it (mapPartitionsInternal results) — walk the
-    // dependency chain and release every persisted ancestor. The walk
-    // cannot escape into still-needed upstream frames: localCheckpoint
-    // truncates lineage at materialization, so the chain ends at the
-    // checkpoint this frame was built on.
-    def walk(r: org.apache.spark.rdd.RDD[_]): Unit = {
-      if (r.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE)
-        r.unpersist(blocking = false)
-      r.dependencies.foreach(d => walk(d.rdd))
+    * truncates lineage); only release frames that will never be read again.
+    *
+    * A LogicalRDD may wrap the persisted checkpoint RDD itself OR a narrow
+    * derivative of it (mapPartitionsInternal results), so every persisted
+    * ancestor is released. The walk cannot escape into still-needed
+    * upstream frames: localCheckpoint truncates lineage at
+    * materialization, so the chain ends at the checkpoint this frame was
+    * built on. */
+  def unpersistCheckpoints(df: DataFrame): Unit =
+    lineage(scanned(df)).filter(persisted).foreach(_.unpersist(blocking = false))
+
+  /** Every RDD in the lineage of `roots` down to `maxDepth` dependency
+    * levels, breadth-first and each RDD once: a diamond-shaped lineage
+    * would otherwise be walked once per PATH, exponential in its depth. */
+  private def lineage(roots: Seq[RDD[_]], maxDepth: Int = Int.MaxValue): Seq[RDD[_]] = {
+    val seen = mutable.HashSet.empty[Int]
+    val out = mutable.ArrayBuffer.empty[RDD[_]]
+    var level = roots.filter(r => seen.add(r.id))
+    var depth = 0
+    while (level.nonEmpty && depth <= maxDepth) {
+      out ++= level
+      level = level.flatMap(_.dependencies.map(_.rdd)).filter(r => seen.add(r.id))
+      depth += 1
     }
-    df.asInstanceOf[classic.Dataset[_]].queryExecution.logical.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => walk(lr.rdd)
-      case _ => ()
+    out.toSeq
+  }
+
+  private def persisted(r: RDD[_]): Boolean = r.getStorageLevel != StorageLevel.NONE
+
+  /** The RDDs a frame's logical plan scans directly. */
+  private def scanned(ds: Dataset[_]): Seq[RDD[_]] =
+    ds.asInstanceOf[classic.Dataset[_]].queryExecution.logical.collect {
+      case lr: LogicalRDD => lr.rdd
     }
+
+  /** Run one operator call that owns the checkpoints it takes. The body
+    * checkpoints through `ck(df)` ([[checkpoint]], recorded), frees a
+    * superseded one at once with `ck.free(df)`, and passes a caller's
+    * checkpoint-backed frame through `ck.shared(df)` (never recorded, so
+    * never freed here). When the body returns, every recorded checkpoint
+    * the returned frame does not read is freed; when it returns no frame,
+    * or throws, all of them are. The scope keeps its own list and never
+    * diffs the context's persisted RDDs, so builds running concurrently
+    * in one session (`parallelBuilt`) cannot free each other's blocks. */
+  def withCheckpoints[T](body: Checkpoints => T): T = {
+    val ck = new Checkpoints
+    val out = try body(ck) catch { case e: Throwable => ck.release(Set.empty); throw e }
+    ck.release(out match {
+      case ds: Dataset[_] => lineage(scanned(ds)).map(_.id).toSet
+      case _ => Set.empty
+    })
+    out
+  }
+
+  /** The checkpoints of one [[withCheckpoints]] call. */
+  final class Checkpoints private[Bridge] () {
+    private val taken = mutable.ArrayBuffer.empty[RDD[_]]
+
+    def apply(df: DataFrame): DataFrame = {
+      val c = checkpoint(df)
+      taken ++= scanned(c)
+      c
+    }
+
+    def shared(df: DataFrame): DataFrame = if (isCheckpointBacked(df)) df else apply(df)
+
+    def free(df: DataFrame): Unit = {
+      unpersistCheckpoints(df)
+      taken.filterInPlace(persisted)
+    }
+
+    private[Bridge] def release(keep: Set[Int]): Unit =
+      taken.filterNot(r => keep(r.id)).foreach(_.unpersist(blocking = false))
   }
 }

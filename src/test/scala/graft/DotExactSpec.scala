@@ -1,5 +1,6 @@
 package graft
 
+import scala.jdk.CollectionConverters._
 import scala.util.Random
 
 import org.apache.spark.SparkThrowable
@@ -13,24 +14,34 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.{dotExact, DotExact}
 
 /** The [[DotExact]] kernel against the interpreted decimal fold it
-  * replaced: equal bit for bit on random and adversarial vectors, nulls
-  * and ANSI overflow errors included. */
+  * replaced: equal bit for bit on random and adversarial vectors once each
+  * product is rounded as DuckDB's cast rounds it, and equal to the plain
+  * fold (Spark's cast) in its nulls and ANSI overflow errors. */
 class DotExactSpec extends AnyFunSuite {
+  import DotExactSpec.duckCast
   lazy val spark: SparkSession = GraftSession.local(4, "graft-dotexact-test")
   import spark.implicits._
 
-  /** The reference: `dotExact` as the interpreted higher-order fold. It
-    * accumulates at (28,12): the add is exact at (29,12) and the cast
-    * back only trims integer headroom. */
-  def dotExactFold(a: Column, b: Column): Column = {
+  /** The interpreted higher-order fold with `product` as the per-element
+    * step. It accumulates at (28,12): the add is exact at (29,12) and the
+    * cast back only trims integer headroom. */
+  def fold(product: Column => Column)(a: Column, b: Column): Column = {
     val products = zip_with(a, b, (x, y) =>
-      (x.cast(DoubleType) * y.cast(DoubleType)).cast(DecimalType(28, 12)))
+      product(x.cast(DoubleType) * y.cast(DoubleType)).cast(DecimalType(28, 12)))
     aggregate(
       products,
       lit(java.math.BigDecimal.ZERO).cast(DecimalType(28, 12)),
       (acc, x) => (acc + x).cast(DecimalType(28, 12))
     ).cast(DoubleType)
   }
+
+  /** The fold as `dotExact` was first defined: Spark's cast per product.
+    * The reference for nulls and errors. */
+  def dotExactFold(a: Column, b: Column): Column = fold(identity)(a, b)
+
+  /** The fold with DuckDB's rounding per product: the reference for values. */
+  def dotExactDuck(a: Column, b: Column): Column =
+    fold(udf((p: Double) => duckCast(p)).apply(_))(a, b)
 
   /** (id, a, b) rows over an RDD scan, so the projection runs in
     * whole-stage codegen rather than being folded into a local relation. */
@@ -40,11 +51,12 @@ class DotExactSpec extends AnyFunSuite {
       StructField("a", ArrayType(ta, containsNull = true)),
       StructField("b", ArrayType(tb, containsNull = true)))))
 
-  /** Every row: kernel <=> fold, and the same double string (so -0.0 vs
-    * 0.0 or a 1-ulp difference would show). Returns the kernel's values. */
-  def assertBitEqual(df: DataFrame): Map[Long, Option[Double]] = {
+  /** Every row: kernel <=> reference, and the same double string (so -0.0
+    * vs 0.0 or a 1-ulp difference would show). Returns the kernel's values. */
+  def assertBitEqual(df: DataFrame,
+      ref: (Column, Column) => Column = dotExactDuck): Map[Long, Option[Double]] = {
     val out = df.select(col("id"),
-      dotExactFold(col("a"), col("b")).as("ref"),
+      ref(col("a"), col("b")).as("ref"),
       dotExact(col("a"), col("b")).as("got"))
       .select(col("id"), col("ref"), col("got"), (col("ref") <=> col("got")).as("same"))
       .collect()
@@ -55,10 +67,9 @@ class DotExactSpec extends AnyFunSuite {
     out.map(r => r.getLong(0) -> (if (r.isNullAt(2)) None else Some(r.getDouble(2)))).toMap
   }
 
-  /** Products whose shortest decimal ends on a 13th-decimal 5: HALF_UP on
-    * that string rounds away from zero even where the exact binary
-    * product lies just below the half (0.0699387749725 is the product
-    * behind the known DuckDB gap). */
+  /** Products whose shortest decimal ends on a 13th-decimal 5, where
+    * DuckDB's and Spark's casts part ways (0.0699387749725: DuckDB
+    * 0.069938774972, Spark 0.069938774973). */
   def halfway(rnd: Random): Double = {
     val k = if (rnd.nextBoolean()) rnd.nextInt(2000000) - 1000000L
       else (rnd.nextDouble() * 1.6e13).toLong - 8000000000000L
@@ -115,8 +126,8 @@ class DotExactSpec extends AnyFunSuite {
       Row(20002L, Seq(-0.0), Seq(0.0)),
       Row(20003L, Seq(1e-300, 1e6), Seq(1e-300, 1e6)))
     val got = assertBitEqual(pairs(DoubleType, DoubleType, rows))
-    // HALF_UP on the shortest decimal, not on the binary product
-    assert(got(20000L).contains(0.069938774973))
+    // DuckDB's rounding, not HALF_UP on the shortest decimal
+    assert(got(20000L).contains(0.069938774972))
     assert(got(20001L).contains(0.0))
     assert(got(20002L).contains(0.0) && got(20002L).get.toString == "0.0")
     assert(got(20003L).contains(1e12))
@@ -129,24 +140,35 @@ class DotExactSpec extends AnyFunSuite {
     assertBitEqual(pairs(FloatType, DoubleType, mixed))
   }
 
-  test("the per-element rounding equals Spark's CAST(p AS DECIMAL(28,12))") {
+  test("the per-element rounding equals DuckDB's CAST(p AS DECIMAL(28,12))") {
+    // values measured in DuckDB 1.0.0
+    val pinned = Seq(0.5e-12 -> "1E-12", 2.5e-12 -> "3E-12", -2.5e-12 -> "-3E-12",
+      0.0699387749725 -> "0.069938774972", -0.0699387749725 -> "-0.069938774972")
+    for ((p, want) <- pinned) {
+      assert(DotExact.rounded(p).compareTo(new java.math.BigDecimal(want)) == 0, p)
+      assert(DotExact.scaled(p) == new java.math.BigDecimal(want).movePointRight(12)
+        .longValueExact, p)
+    }
     val rnd = new Random(14L)
-    val acc = DecimalType(28, 12)
-    val ps = Seq(0.0699387749725, -0.0699387749725, 0.0001220703125, 8.7, -8.79) ++
+    val ps = Seq(0.0001220703125, 8.7, -8.79, 1e7, -4.6e6, 1e14) ++
       Seq.fill(200000)(rnd.nextInt(4) match {
         case 0 => halfway(rnd)
-        case 1 => rnd.nextGaussian() * math.pow(10, rnd.nextInt(16) - 14)
+        case 1 => rnd.nextGaussian() * math.pow(10, rnd.nextInt(22) - 14)
         case 2 => elemF(rnd).toDouble * elemF(rnd).toDouble
         case _ => rnd.nextDouble() * 17.6 - 8.8
       })
     val bad = ps.filter { p =>
+      val want = duckCast(p)
+      val unscaled = want.movePointRight(12)
       val v = DotExact.scaled(p)
-      if (math.abs(p * 1e12) < 8.796093022208e12) {
-        val cast = Cast(Literal(p), acc).eval().asInstanceOf[Decimal]
-        v != cast.toJavaBigDecimal.unscaledValue.longValueExact
-      } else v != Long.MinValue // past 2^43: the whole pair replays
+      DotExact.rounded(p).compareTo(want) != 0 ||
+        (if (unscaled.abs.compareTo(new java.math.BigDecimal(1L << 62)) < 0)
+          v != unscaled.longValueExact
+        else v != Long.MinValue) // past 2^62: the whole pair replays
     }
     if (bad.nonEmpty) fail(s"${bad.length} products differ, e.g. ${bad.take(5).mkString(", ")}")
+    assert(Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity)
+      .forall(DotExact.scaled(_) == Long.MinValue))
   }
 
   test("nulls, unequal lengths and the long-overflow replay match the fold") {
@@ -159,7 +181,7 @@ class DotExactSpec extends AnyFunSuite {
       Row(6L, Seq(Double.NaN), Seq(1.0)),
       Row(7L, Seq(Double.PositiveInfinity, 1.0), Seq(0.0, 1.0)),
       Row(8L, Seq(1e7, 0.5), Seq(1e7, 0.5))) // |p| past the fast path
-    val got = assertBitEqual(pairs(DoubleType, DoubleType, rows))
+    val got = assertBitEqual(pairs(DoubleType, DoubleType, rows), dotExactFold)
     assert(Seq(1L, 2L, 3L, 4L).forall(got(_).isEmpty))
     assert(got(5L).contains(0.0))
     assert(got(8L).contains(1e14 + 0.25))
@@ -168,7 +190,7 @@ class DotExactSpec extends AnyFunSuite {
     val big = spark.range(9, 11).select(col("id"),
       array_repeat(lit(2.9), 1100000).as("a"),
       array_repeat(when(col("id") === 9, 2.9).otherwise(-2.9), 1100000).as("b"))
-    val sums = assertBitEqual(big)
+    val sums = assertBitEqual(big, dotExactFold)
     assert(sums(9L).contains(9251000.0) && sums(10L).contains(-9251000.0))
   }
 
@@ -183,16 +205,23 @@ class DotExactSpec extends AnyFunSuite {
     val rows = Seq(
       Row(1L, Seq(1e9, 1e9), Seq(1e9, 1e9)), // a product cast overflows
       Row(2L, Seq(8e7, 8e7), Seq(8e7, 8e7))) // the fold's cast overflows
-    for (r <- rows) {
+    val errors = rows.map { r =>
       val df = pairs(DoubleType, DoubleType, Seq(r))
       val ref = condition(df.select(dotExactFold(col("a"), col("b"))).collect())
       val got = condition(df.select(dotExact(col("a"), col("b"))).collect())
       assert(ref._1.startsWith("NUMERIC_VALUE_OUT_OF_RANGE"), ref)
-      assert(got == ref)
+      assert(got._1 == ref._1)
+      (got._2.asScala.toMap, ref._2.asScala.toMap)
     }
+    // the product cast's error is the fold's own
+    assert(errors(0)._1 == errors(0)._2)
+    // the sum's error reports the sum of the products as DuckDB rounds them
+    val duckSum = duckCast(6.4e15).add(duckCast(6.4e15)).toPlainString
+    assert(errors(1)._1 == errors(1)._2 + ("value" -> duckSum))
+    assert(duckSum != errors(1)._2("value"))
     val ansi = spark.conf.get("spark.sql.ansi.enabled")
     spark.conf.set("spark.sql.ansi.enabled", "false")
-    try assertBitEqual(pairs(DoubleType, DoubleType, rows)).values
+    try assertBitEqual(pairs(DoubleType, DoubleType, rows), dotExactFold).values
       .foreach(v => assert(v.isEmpty))
     finally spark.conf.set("spark.sql.ansi.enabled", ansi)
   }
@@ -220,5 +249,16 @@ class DotExactSpec extends AnyFunSuite {
       val v = DotExact(lit(r.get(1)), lit(r.get(2))).eval(null)
       assert(Option(v).map(_.toString) == codegen(r.getLong(0)).map(_.toString), r)
     }
+  }
+}
+
+object DotExactSpec {
+  /** DuckDB 1.0's `CAST(p AS DECIMAL(28,12))` of a finite double: scale by
+    * 10^12 in double, add 1e-9 times the sign, round half-to-even; the
+    * result is that integer over 10^12. */
+  def duckCast(p: Double): java.math.BigDecimal = {
+    val v = p * 1e12
+    val sign = if (v > 0) 1.0 else if (v < 0) -1.0 else 0.0
+    new java.math.BigDecimal(Math.rint(v + 1e-9 * sign)).scaleByPowerOfTen(-12)
   }
 }

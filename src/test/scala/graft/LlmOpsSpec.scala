@@ -394,7 +394,6 @@ class LlmOpsSpec extends AnyFunSuite {
     val emb = Seq.empty[(Long, Array[Float], String)].toDF("vec_id", "embedding", "label")
     assert(Dedup.exact(docs, "doc_id", "text").count() == 0)
     assert(Dedup.ngramJaccardPairs(docs, "doc_id", "text").count() == 0)
-    assert(Dedup.ngramJaccardPairsPrefix(docs, "doc_id", "text").count() == 0)
     assert(Dedup.minhashLshPairs(docs, "doc_id", "text").count() == 0)
     assert(Dedup.simhashPairs(docs, "doc_id", "text").count() == 0)
     assert(Dedup.embeddingPairs(emb, "vec_id", "embedding", "label", 0.5).count() == 0)
